@@ -4,9 +4,10 @@ Single-query path (SURVEY.md §3.2): runs fully in-process — analyze the
 query with the SAME chain used at index time (plain-Python functions),
 pyarrow-fetch the terms' dictionary rows + posting blocks, run block-max
 WAND. No Spark session needed (the reference's always-warm Solr core
-analog). Batch path: distribute queries over executors; each executor
-opens the same index (local FS here, object store at scale) — queries are
-embarrassingly parallel once the index is immutable.
+analog). Batch path (``search_batch``): the one-shard case of the one
+distributed executor, ``sharded.search_sharded`` — executors open the same
+immutable index (local FS here, object store at scale) and score their
+slice of the queries with the per-query scorers above.
 
 Positional modes (SURVEY.md §2.9 / §3.3 — the Tesserae comparison
 re-expressed over positional postings):
@@ -31,9 +32,7 @@ import numpy as np
 from tesserae_ng_spark.functions.analysis import analyze_query
 from tesserae_ng_spark.query.reader import IndexReader, TermPostings
 from tesserae_ng_spark.query.wand import (
-    BATCH_ACC_MAX_CELLS,
     StatsFreeBoundsUnavailable,
-    bm25_batch_global_topk,
     bm25_dense_topk,
     bm25_global_topk,
     wand_topk,
@@ -499,7 +498,10 @@ def phrase_topk(ordered_tps: list[TermPostings], n_docs: int, avg_dl: float,
         return []
     df = docs.size
     idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-    scores = idf * tfs / (tfs + k1 * (1.0 - b + b * dls / avg_dl))
+    # idf·(tf/den), the order the sharded merge applies idf in (it ranks
+    # shards by the tf-part and multiplies the global idf in last), so
+    # union and sharded phrase scores are bit-identical
+    scores = idf * (tfs / (tfs + k1 * (1.0 - b + b * dls / avg_dl)))
     top = np.lexsort((docs, -scores))[:k]
     return [(int(docs[i]), float(scores[i])) for i in top]
 
@@ -564,7 +566,7 @@ def proximity_topk(tps: list[TermPostings], window: int, k: int):
 # ---------------------------------------------------------------------------
 
 
-_SEARCHER_CACHE: dict[tuple[str, str], "Searcher"] = {}
+_SEARCHER_CACHE: dict[tuple[str, str], tuple[int, "Searcher"]] = {}
 
 
 def get_searcher(index_dir: str, lang: str = "en") -> "Searcher":
@@ -573,83 +575,18 @@ def get_searcher(index_dir: str, lang: str = "en") -> "Searcher":
     whole batch instead of being rebuilt per task. Keyed by (dir, lang) so
     a non-en deployment gets a searcher whose analysis chain matches the
     index (the reader/dataset handles are per-searcher; two langs over one
-    dir is a test-only shape, not worth sharing the reader)."""
-    s = _SEARCHER_CACHE.get((index_dir, lang))
-    if s is None:
-        s = _SEARCHER_CACHE[(index_dir, lang)] = Searcher(index_dir, lang)
-    return s
-
-
-# the term-at-a-time batch scorer needs enough queries to amortize its
-# per-term passes, and a chunk tall enough that the 2D scatter beats
-# per-query accumulators; below either bound the per-query scorers (which
-# can also WAND-skip on huge indexes) stay the better plan
-BATCH_MIN_QUERIES = 4
-BATCH_MIN_CHUNK = 8
-
-
-def _use_batch_scorer() -> bool:
-    """Opt-in switch for the term-at-a-time batch scorer in the batch /
-    sharded executors. Default OFF — measured on the production query mix
-    (enriched Zipf vocabulary, 2000 queries vs a 60k-doc shard, 8
-    concurrent worker processes): per-query ADAPTIVE dispatch (tail
-    queries → small dense-union scorer, head queries → global
-    accumulator) runs the task in 3.3 s where the always-dense batch
-    scorer takes 22 s, because the batch path pays O(n_docs) accumulator
-    traffic for every query while ~90% of real queries touch only a few
-    thousand postings — and memory traffic is exactly what contended
-    workers fight over. The batch scorer wins only on head-term-heavy
-    workloads whose rows are dense anyway (it measured ~15% faster there);
-    results are bit-identical either way (hypothesis-pinned)."""
-    import os
-
-    return os.environ.get("TNG_BATCH_SCORER", "").strip().lower() in (
-        "1", "true", "yes", "on",
-    )
-
-
-def batch_bm25_hits(
-    searcher: "Searcher",
-    qs: list[dict],
-    default_k: int,
-    global_stats: dict | None = None,
-) -> list[list[Hit]] | None:
-    """Term-at-a-time batch scoring of a slice's bm25 queries (VERDICT r3
-    #1) → per-query Hit lists aligned with ``qs``, bit-identical to
-    per-query ``searcher.search``. Returns None when the shape doesn't fit
-    the batch plan (few queries, or an index too large for a dense
-    accumulator chunk) — callers fall back to the per-query path."""
-    nd = searcher.reader.n_docs
-    if (
-        len(qs) < BATCH_MIN_QUERIES
-        or nd > GLOBAL_ACC_MAX_DOCS
-        or BATCH_ACC_MAX_CELLS // max(nd, 1) < BATCH_MIN_CHUNK
-    ):
-        return None
-    if global_stats is not None:
-        n_docs = global_stats["n_docs"]
-        avg_dl = global_stats["avg_dl"]
-        dfo = global_stats.get("df") or {}
-    else:
-        n_docs = searcher.reader.n_docs
-        avg_dl = searcher.reader.avg_dl
-        dfo = None
-    qterms = [analyze_query(q["query_text"], searcher.lang) for q in qs]
-    all_terms = sorted({t for ts in qterms for t in ts})
-    fetched = searcher.reader.fetch(all_terms) if all_terms else {}
-    if fetched:
-        # exhaustive batch decodes every used block anyway → one bulk
-        # payload scan, no df cap (ids/tfs/dls only — never positions)
-        searcher.reader.ensure_payloads(fetched.values())
-    ks = [int(q.get("k", default_k)) for q in qs]
-    topks = bm25_batch_global_topk(
-        fetched, qterms, ks, searcher.reader.global_doc_ids(),
-        n_docs, avg_dl, df_override=dfo,
-    )
-    return [
-        [Hit(rank=i + 1, doc_id=d, score=s) for i, (d, s) in enumerate(top)]
-        for top in topks
-    ]
+    dir is a test-only shape, not worth sharing the reader). Each entry
+    carries the stats.json mtime it was opened at: an in-place rebuild
+    (``build_index(..., resume=False)``) rewrites stats.json, so a process
+    that outlives it reopens the index instead of serving the old
+    dictionary."""
+    mtime = os.stat(os.path.join(index_dir, "stats.json")).st_mtime_ns
+    ent = _SEARCHER_CACHE.get((index_dir, lang))
+    if ent is None or ent[0] != mtime:
+        ent = _SEARCHER_CACHE[(index_dir, lang)] = (
+            mtime, Searcher(index_dir, lang)
+        )
+    return ent[1]
 
 
 # minimum queries per slice in batch mode: below this, extra workers cost
@@ -743,133 +680,20 @@ def affinity_slices(
     return [[queries[qi] for qi in b] for b in bins if b]
 
 
+
+
 def search_batch(
     spark,
     index_dir: str,
     queries: list[dict],
     k: int = 10,
     lang: str = "en",
-    use_batch_scorer: bool | None = None,
 ):
-    """Run many queries distributed: each executor opens the immutable index
-    and serves its partition of queries (broadcast-free — queries are data,
-    the index is shared storage). Returns DataFrame(query_id, rank, doc_id,
-    score).
+    """Run many queries distributed over one index → DataFrame(query_id,
+    rank, doc_id, score). One index is the one-shard case of the sharded
+    executor (Solr serves a single core as a one-shard distributed search
+    the same way): same phase-1 stats, affinity slicing, per-slice prefetch
+    and per-query scoring, with no cross-shard merge."""
+    from tesserae_ng_spark.query.sharded import search_sharded
 
-    Cold-start costs are amortized two ways: (a) slice count scales with
-    batch size (≥MIN_QUERIES_PER_SLICE per slice), so small batches use few
-    workers with warm caches while 10k-query batches still fan out to every
-    core; (b) each slice prefetches the UNION of its queries' terms in one
-    pyarrow scan instead of one scan per query."""
-    sc = spark.sparkContext
-    n_slices = max(
-        1,
-        min(
-            sc.defaultParallelism,
-            (len(queries) + MIN_QUERIES_PER_SLICE - 1) // MIN_QUERIES_PER_SLICE,
-        ),
-    )
-    # term-affinity slicing (affinity_slices): exact dfs from a driver-side
-    # dictionary lookup — the driver reaches index storage by construction
-    # (the latency path and sharded phase 1 already read it in-process).
-    # Fallback to batch occurrence counts if the lookup fails.
-    df_est = None
-    if n_slices > 1:
-        try:
-            terms: set[str] = set()
-            for q in queries:
-                terms.update(analyze_query(q.get("query_text", ""), lang))
-            rows = get_searcher(index_dir, lang).reader.lookup(sorted(terms))
-            df_est = {t: int(r["df"]) for t, r in rows.items()}
-        except Exception:
-            df_est = None
-    slices = affinity_slices(queries, n_slices, lang, df=df_est)
-
-    def run_part(qs):
-        import time as _time
-
-        # TNG_BATCH_PROFILE=1: per-slice stage timings to /tmp (round-6
-        # diagnosis of the in-suite local[8] slowdown) — off in production
-        _prof = os.environ.get("TNG_BATCH_PROFILE") == "1"
-        _t = {"t_start": _time.time()}
-        qs = list(qs)
-        _t0 = _time.time()
-        searcher = get_searcher(index_dir, lang)
-        _t["open_s"] = _time.time() - _t0
-        bm25_qs = [q for q in qs if q.get("mode", "bm25") == "bm25"]
-        other_qs = [q for q in qs if q.get("mode", "bm25") != "bm25"]
-        done = set()
-        batch_on = (
-            _use_batch_scorer()
-            if use_batch_scorer is None
-            else bool(use_batch_scorer)
-        )
-        if bm25_qs and batch_on:
-            # opt-in term-at-a-time batch scoring (see _use_batch_scorer
-            # for why per-query adaptive dispatch is the default). The
-            # explicit parameter rides the task closure, so it works from
-            # a test/driver without needing the env var to reach executor
-            # python workers (ADVICE r4 #2).
-            hits_per_q = batch_bm25_hits(searcher, bm25_qs, k)
-            if hits_per_q is not None:
-                for q, hits in zip(bm25_qs, hits_per_q):
-                    done.add(id(q))
-                    for hit in hits:
-                        yield (q["query_id"], hit.rank, hit.doc_id, hit.score)
-        rest = other_qs + [q for q in bm25_qs if id(q) not in done]
-        if rest:
-            terms: set[str] = set()
-            for q in rest:
-                terms.update(analyze_query(q["query_text"], searcher.lang))
-            if terms:
-                # one metadata scan + one payload scan for the rest (union
-                # of their terms); head terms past PREFETCH_MAX_DF stay
-                # lazy so WAND can skip their blocks without the I/O having
-                # happened. Positions are never prefetched — positional
-                # queries load them candidate-only
-                # (TermPostings.candidate_positions).
-                _t0 = _time.time()
-                fetched = searcher.reader.fetch(sorted(terms))
-                _t["fetch_s"] = _time.time() - _t0
-                _t0 = _time.time()
-                searcher.reader.ensure_payloads(
-                    fetched.values(), max_df=PREFETCH_MAX_DF
-                )
-                _t["payloads_s"] = _time.time() - _t0
-        _t0 = _time.time()
-        _qtimes = []
-        for q in rest:
-            _q0 = _time.time()
-            for hit in searcher.search(
-                q["query_text"], k=q.get("k", k), mode=q.get("mode", "bm25"),
-                window=q.get("window", 5),
-            ):
-                yield (q["query_id"], hit.rank, hit.doc_id, hit.score)
-            _qtimes.append(round(_time.time() - _q0, 4))
-        if _prof:
-            import json as _json
-
-            _t["score_s"] = _time.time() - _t0
-            _t["n_queries"] = len(qs)
-            _t["pid"] = os.getpid()
-            _t["wall_s"] = _time.time() - _t["t_start"]
-            _t["q_times"] = _qtimes
-            import tempfile as _tf
-
-            fd, _ = _tf.mkstemp(
-                prefix=f"tng_batch_prof_{os.getpid()}_", suffix=".json",
-                dir=os.environ.get("TNG_PROFILE_DIR") or None,
-            )  # mkstemp = O_EXCL private file (ADVICE r6)
-            with os.fdopen(fd, "w") as f:
-                f.write(_json.dumps({k2: v for k2, v in _t.items()}))
-
-    # one slice (a list of queries) per partition: parallelize over the
-    # slice lists keeps the affinity grouping intact across partitions
-    from itertools import chain
-
-    rdd = sc.parallelize(slices, max(1, len(slices))).mapPartitions(
-        lambda parts: run_part(chain.from_iterable(parts))
-    )
-    return spark.createDataFrame(
-        rdd, "query_id long, rank int, doc_id long, score double"
-    )
+    return search_sharded(spark, [index_dir], queries, k=k, lang=lang)

@@ -14,8 +14,14 @@ shape (public Solr semantics — the reference's deployment model):
     bounds (TermIterator recomputes per-block bounds from max_tf/min_dl
     under the global stats).
   merge: per query, rank candidates by (score desc, doc_id asc) and keep
-    k — rank-identical to a single index over the union of the shards
-    (pinned by tests/test_sharded.py for bm25 AND phrase AND proximity).
+    k — rank- and score-identical to a single index over the union of the
+    shards (pinned by tests/test_sharded.py for bm25 AND phrase AND
+    proximity).
+
+This is the one distributed query executor: a single index
+(``search.search_batch``) is its one-shard case, where the shard's own
+stats are the global stats, so tasks score with the plain per-query path
+and emit final rows without a merge.
 
 Positional modes (SURVEY.md §2.9) need one twist each:
 
@@ -25,7 +31,8 @@ Positional modes (SURVEY.md §2.9) need one twist each:
     is already rank-identical to the final ranking. Each task therefore
     emits its top-k candidates' tf-parts plus ONE df row (its shard's match
     count); the merge sums match counts into the exact global phrase-df and
-    multiplies idf in — no second distributed pass.
+    multiplies idf in — no second distributed pass. phrase_topk computes
+    idf·(tf/den) in the same order, so the scores are bit-identical.
   proximity: the Tesserae distance-weighted score has no corpus-stats
     dependence at all, so per-shard top-k merges directly.
 
@@ -51,7 +58,7 @@ import numpy as np
 from tesserae_ng_spark.functions.analysis import analyze_query
 from tesserae_ng_spark.query.search import (
     MIN_QUERIES_PER_SLICE,
-    batch_bm25_hits,
+    PREFETCH_MAX_DF,
     get_searcher,
     phrase_match_arrays,
     proximity_match_arrays,
@@ -68,7 +75,7 @@ _DF = 1    # (query_id, _DF, shard_ordinal, phrase match count)
 # KB-sized dictionary lookups beats a job's fixed scheduling cost; above it
 # (the 10^3-10^4 shards a 10^12-doc deployment implies) a serial driver
 # loop would serialize the head of every batch (VERDICT r4 #1).
-PHASE1_DISTRIBUTE_MIN = int(os.environ.get("TNG_PHASE1_DISTRIBUTE_MIN", "16"))
+PHASE1_DISTRIBUTE_MIN = 16
 
 # observability for tests/bench: how phase 1 was computed
 PHASE1_COUNTERS = {"jobs": 0, "serial_shards": 0, "memo_hits": 0}
@@ -127,7 +134,7 @@ def global_shard_stats(
     zero phase-1 I/O, and only terms not yet covered ship to the job.
     """
     key = tuple(
-        (d, os.path.getmtime(os.path.join(d, "stats.json")))
+        (d, os.stat(os.path.join(d, "stats.json")).st_mtime_ns)
         for d in index_dirs
     )
     ent = _STATS_MEMO.get(key)
@@ -228,7 +235,7 @@ def prime_shard_workers(
     every shard — the sharded-service analog of ``warm_top_terms`` (Solr
     replica-warming semantics), run once at service start.
 
-    Why it exists (measured, tools/profile_sharded_warm.py): Spark assigns
+    Why it exists (measured with per-task worker traces): Spark assigns
     tasks to its reusable python workers from an idle POOL with no
     affinity, so a "warm" repeat batch only hits a worker's per-process
     searcher cache when the lottery sends a shard's task back to a worker
@@ -274,11 +281,6 @@ def prime_shard_workers(
     n = int(n_tasks or sc.defaultParallelism)
 
     def prime(_):
-        from tesserae_ng_spark.query.search import (
-            PREFETCH_MAX_DF,
-            get_searcher,
-        )
-
         for d in dirs:
             s = get_searcher(d, lang)
             if terms:
@@ -310,21 +312,23 @@ def search_sharded(
     queries: list[dict],
     k: int = 10,
     lang: str = "en",
-    use_batch_scorer: bool | None = None,
 ):
     """Distributed bm25/phrase/proximity over sharded indexes → DataFrame
     (query_id, rank, doc_id, score), rank-identical to a single union
-    index. ``lang`` selects the analysis chain END-TO-END: phase-1 term
-    analysis, the global-df lookup, and phase-2 shard searchers all use the
-    same stemmer (VERDICT r4: a lang mismatch between phases would compute
-    global df over differently-stemmed terms and silently fall back to
-    shard-local df, breaking cross-shard score comparability)."""
+    index. The one distributed query executor: ``search.search_batch`` is
+    its one-shard case. ``lang`` selects the analysis chain END-TO-END:
+    phase-1 term analysis, the global-df lookup, and phase-2 shard
+    searchers all use the same stemmer (VERDICT r4: a lang mismatch
+    between phases would compute global df over differently-stemmed terms
+    and silently fall back to shard-local df, breaking cross-shard score
+    comparability)."""
+    from tesserae_ng_spark.query import search as search_mod
+
     sc = spark.sparkContext
     all_terms: set[str] = set()
     for q in queries:
         all_terms.update(analyze_query(q["query_text"], lang))
     stats = global_shard_stats(index_dirs, sorted(all_terms), sc=sc, lang=lang)
-    stats_bc = sc.broadcast(stats)
 
     n_slices = max(
         1,
@@ -333,57 +337,54 @@ def search_sharded(
             (len(queries) + MIN_QUERIES_PER_SLICE - 1) // MIN_QUERIES_PER_SLICE,
         ),
     )
-    # term-affinity slicing (search.affinity_slices) with the exact global
-    # dfs phase 1 just computed — cuts per-(shard, slice) decode-union
-    # duplication the same way it does in search_batch
-    from tesserae_ng_spark.query.search import affinity_slices
-
-    slices = affinity_slices(queries, n_slices, lang, df=stats.get("df"))
+    # term-affinity slicing with the exact global dfs phase 1 just computed
+    # — queries sharing a head term decode its postings on one worker per
+    # shard instead of on every worker
+    slices = search_mod.affinity_slices(
+        queries, n_slices, lang, df=stats.get("df")
+    )
     tasks = [(d, s) for d in index_dirs for s in slices if s]
+    # One shard: its own stats ARE the global stats, so each task scores
+    # with the plain per-query path (bm25 keeps WAND on the stored block
+    # bounds, phrase multiplies its own idf in) and its rows are already
+    # final — no merge. Several shards: score under the GLOBAL stats and
+    # merge per query. The stats and the k map ride the task closure;
+    # PySpark broadcasts a pickled command over 1 MB by itself.
+    gs = stats if len(index_dirs) > 1 else None
 
     def run_task(task):
         index_dir, qs = task
         searcher = get_searcher(index_dir, lang)
-        gs = stats_bc.value
-        bm25_qs = [q for q in qs if q.get("mode", "bm25") == "bm25"]
-        other_qs = [q for q in qs if q.get("mode", "bm25") != "bm25"]
-        done = set()
-        from tesserae_ng_spark.query.search import _use_batch_scorer
+        terms: set[str] = set()
+        for q in qs:
+            terms.update(analyze_query(q["query_text"], searcher.lang))
+        if terms:
+            # one metadata scan + one payload scan for the slice (union of
+            # its terms); head terms past PREFETCH_MAX_DF stay lazy so WAND
+            # can skip their blocks without the I/O having happened.
+            # Positions are never prefetched — positional queries load
+            # them candidate-only (TermPostings.candidate_positions).
+            fetched = searcher.reader.fetch(sorted(terms))
+            searcher.reader.ensure_payloads(
+                fetched.values(), max_df=PREFETCH_MAX_DF
+            )
+        for q in qs:
+            if gs is None:
+                for hit in searcher.search(
+                    q["query_text"], k=q.get("k", k),
+                    mode=q.get("mode", "bm25"), window=q.get("window", 5),
+                ):
+                    yield (q["query_id"], hit.rank, hit.doc_id, hit.score)
+            else:
+                yield from _shard_query_rows(searcher, q, gs, k)
 
-        batch_on = (
-            _use_batch_scorer()
-            if use_batch_scorer is None
-            else bool(use_batch_scorer)
-        )
-        if bm25_qs and batch_on:
-            # opt-in term-at-a-time batch scoring under the GLOBAL stats
-            # (VERDICT r3 #1 — implemented, measured, and left opt-in:
-            # per-query ADAPTIVE dispatch moves ~10× fewer bytes on the
-            # realistic Zipf query mix and scales far better across
-            # contended workers; see search._use_batch_scorer)
-            hits_per_q = batch_bm25_hits(searcher, bm25_qs, k, global_stats=gs)
-            if hits_per_q is not None:
-                for q, hits in zip(bm25_qs, hits_per_q):
-                    done.add(id(q))
-                    for h in hits:
-                        yield (q["query_id"], _CAND, h.doc_id, h.score)
-        rest = other_qs + [q for q in bm25_qs if id(q) not in done]
-        if rest:
-            terms: set[str] = set()
-            for q in rest:
-                terms.update(analyze_query(q["query_text"], searcher.lang))
-            if terms:
-                # one metadata + one payload scan for the rest (lazy above
-                # the prefetch df cap; positions load candidate-only —
-                # same shape as search_batch)
-                fetched = searcher.reader.fetch(sorted(terms))
-                from tesserae_ng_spark.query.search import PREFETCH_MAX_DF
-
-                searcher.reader.ensure_payloads(
-                    fetched.values(), max_df=PREFETCH_MAX_DF
-                )
-        for q in rest:
-            yield from _shard_query_rows(searcher, q, gs, k)
+    # one task (shard × slice) per partition keeps the affinity grouping
+    rows = sc.parallelize(tasks, max(1, len(tasks))).mapPartitions(
+        lambda ts: (r for t in ts for r in run_task(t))
+    )
+    schema = "query_id long, rank int, doc_id long, score double"
+    if gs is None:
+        return spark.createDataFrame(rows, schema)
 
     # associative per-query top-k merge (reduceByKey): each task packs ONE
     # numpy payload per query (its shard's top-k_q docs + values, plus the
@@ -399,6 +400,8 @@ def search_sharded(
     # phrase the merge order (tf-part) is the final order because
     # idf(global df) is one positive scalar per query, applied after the
     # exact global match-count sum.
+    kmap = {q["query_id"]: int(q.get("k", k)) for q in queries}
+
     def to_payloads(task_rows):
         per_q: dict = {}
         for qid, kind, a, b in task_rows:
@@ -409,7 +412,6 @@ def search_sharded(
             else:
                 ent[2] += b
                 ent[3] = True
-        kmap = kmap_bc.value
         for qid, (docs, vals, df_sum, is_phrase) in per_q.items():
             yield (
                 qid,
@@ -419,43 +421,6 @@ def search_sharded(
                     df_sum if is_phrase else None,
                     kmap.get(qid, k),
                 ),
-            )
-
-    kmap = {q["query_id"]: int(q.get("k", k)) for q in queries}
-    kmap_bc = sc.broadcast(kmap)
-
-    def run_task_packed(task):
-        # TNG_SHARDED_PROFILE=<dir>: per-task trace (pid, shard, wall,
-        # searcher-cache hit) appended worker-side — diagnoses task→worker
-        # affinity (a "warm" batch whose tasks land on workers caching a
-        # DIFFERENT shard re-pays the per-process decode) vs true scoring
-        # time. Local-mode / shared-fs diagnostic, same spirit as
-        # TNG_GROUPED_PROFILE.
-        prof_dir = os.environ.get("TNG_SHARDED_PROFILE")
-        if not prof_dir:
-            yield from to_payloads(run_task(task))
-            return
-        import time as _time
-
-        from tesserae_ng_spark.query.search import _SEARCHER_CACHE
-
-        pid = os.getpid()
-        shard = os.path.basename(task[0].rstrip("/"))
-        hit = (task[0], lang) in _SEARCHER_CACHE
-        t0 = _time.time()
-        yield from to_payloads(run_task(task))
-        with open(os.path.join(prof_dir, f"task_{pid}_{shard}"), "a") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "pid": pid,
-                        "shard": shard,
-                        "nq": len(task[1]),
-                        "cache_hit": hit,
-                        "wall_s": round(_time.time() - t0, 3),
-                    }
-                )
-                + "\n"
             )
 
     def merge(pa, pb):
@@ -480,22 +445,16 @@ def search_sharded(
         order = np.lexsort((docs, -vals))[:k_q]
         docs, vals = docs[order], vals[order]
         if df is not None:
-            # math.log, not np.log: phrase_topk's idf uses libm, and the
-            # two can differ by an ULP. Ordering is identical to the union
-            # index; scores are equal to within one rounding step (union
-            # computes (idf·tf)/den, sharded idf·(tf/den) — test_sharded
-            # pins 1e-9 closeness, not bit identity)
+            # the same libm idf and idf·(tf/den) order as phrase_topk, so
+            # phrase scores are bit-identical to the union index
             idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
             vals = idf * vals
         for r in range(docs.size):
             yield (qid, r + 1, int(docs[r]), float(vals[r]))
 
     merged = (
-        sc.parallelize(tasks, len(tasks))
-        .mapPartitions(lambda ts: (p for t in ts for p in run_task_packed(t)))
+        rows.mapPartitions(to_payloads)
         .reduceByKey(merge, numPartitions=max(1, sc.defaultParallelism))
         .flatMap(finalize)
     )
-    return spark.createDataFrame(
-        merged, "query_id long, rank int, doc_id long, score double"
-    )
+    return spark.createDataFrame(merged, schema)

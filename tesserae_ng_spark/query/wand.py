@@ -402,140 +402,6 @@ def bm25_global_topk(
     return dense_row_topk(acc, global_docs, k)
 
 
-# per-chunk accumulator budget for the batched scorer: chunk_rows × n_docs
-# float64 cells. 2^22 cells = 32 MiB — measured optimum: the chunk (plus
-# argpartition's index output of the same size) stays cache/TLB-friendly.
-# A 128 MiB chunk measured 8-10× SLOWER end-to-end on the same workload
-# (fill + scatter + 2D argpartition all go DRAM-bound), and several
-# executor python workers share one node's memory bandwidth.
-BATCH_ACC_MAX_CELLS = 1 << 22
-
-
-def bm25_batch_global_topk(
-    fetched: dict,
-    qterms: list[list[str]],
-    ks: list[int],
-    global_docs: np.ndarray,
-    n_docs: int,
-    avg_dl: float,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    df_override: dict | None = None,
-) -> list[list[tuple[int, float]]]:
-    """Term-at-a-time batch BM25 (VERDICT r3 #1): score MANY queries
-    against one index in per-term passes instead of per-query loops.
-
-    For each term (sorted order), the per-term (rows, scores) arrays are
-    computed once, then added to every query containing the term with ONE
-    2D outer-indexed scatter ``acc[np.ix_(query_rows, rows)] += scores`` —
-    the sparse (queries × terms) · (terms × docs) product the batch is.
-    Queries chunk so the accumulator stays ≤ BATCH_ACC_MAX_CELLS.
-
-    EXHAUSTIVE-EQUIVALENT per query to bm25_global_topk bit-for-bit: each
-    query's doc sums accumulate in global sorted-term order (a subset of
-    the term passes), the same float-addition order as every other scorer,
-    and top-k extraction shares dense_row_topk.
-
-    ``qterms``: per-query term lists — only terms present in ``fetched``
-    with blocks contribute (absent terms live on other shards / nowhere).
-    """
-    nq = len(qterms)
-    out: list = [[] for _ in range(nq)]
-    if nq == 0 or global_docs.size == 0:
-        return out
-    term_q: dict[str, list[int]] = {}
-    for qi, ts in enumerate(qterms):
-        for t in set(ts):
-            tp = fetched.get(t)
-            if tp is not None and tp.n_blocks:
-                term_q.setdefault(t, []).append(qi)
-    if not term_q:
-        return out
-    terms_sorted = sorted(term_q)
-    chunk = max(1, min(nq, BATCH_ACC_MAX_CELLS // max(global_docs.size, 1)))
-    acc = np.zeros((min(chunk, nq), global_docs.size), dtype=np.float64)
-    for lo in range(0, nq, chunk):
-        hi = min(lo + chunk, nq)
-        acc[: hi - lo].fill(0.0)
-        for term in terms_sorted:
-            qis = [qi - lo for qi in term_q[term] if lo <= qi < hi]
-            if not qis:
-                continue
-            tp = fetched[term]
-            df_t = df_override.get(term, tp.df) if df_override else tp.df
-            rows, scores = term_rows_scores(
-                tp, global_docs, n_docs, avg_dl, df_t, k1, b
-            )
-            if len(qis) == 1:
-                acc[qis[0], rows] += scores
-            else:
-                acc[np.ix_(np.asarray(qis, dtype=np.int64), rows)] += scores
-        _chunk_topk(acc[: hi - lo], ks[lo:hi], global_docs, out, lo)
-    return out
-
-
-def _chunk_topk(
-    A: np.ndarray,
-    ks_sub: list[int],
-    global_docs: np.ndarray,
-    out: list,
-    base: int,
-) -> None:
-    """Top-k extraction for a whole accumulator chunk at once.
-
-    Per-row nonzero/argpartition/tie-check were ~85% of batch wall (each an
-    O(n_docs) numpy call per query). Instead: ONE 2D ascending argpartition
-    selects each row's top-C score columns (C = 2·max k — partitioning
-    ascending at nd−C avoids negating the chunk), then exact (score desc,
-    doc_id asc) ordering runs on ≤C candidates per row.
-
-    Exactness: if fewer than C candidates are positive, every matching doc
-    is inside the candidate set (top-C ⊇ all positives). If all C are
-    positive, docs outside can only TIE the partition boundary min(cs), so
-    kth > min(cs) proves the global top-k is inside; otherwise (ties reach
-    the boundary — rare) the row falls back to the exact full-row path.
-    Candidate column order == doc_id order (global_docs is sorted), so the
-    lexsort tie-break matches dense_row_topk bit-for-bit.
-    """
-    nrows, nd = A.shape
-    K = min(max(ks_sub), nd)
-    C = min(max(2 * K, K + 8), nd)
-    if C >= nd:
-        for j in range(nrows):
-            out[base + j] = dense_row_topk(A[j], global_docs, ks_sub[j])
-        return
-    cand = np.argpartition(A, nd - C, axis=1)[:, nd - C :]
-    cs = np.take_along_axis(A, cand, axis=1)
-    for j in range(nrows):
-        cj, sj = cand[j], cs[j]
-        pos = sj > 0.0
-        n_pos = int(np.count_nonzero(pos))
-        if n_pos == 0:
-            out[base + j] = []
-            continue
-        if n_pos < C:
-            cj, sj = cj[pos], sj[pos]
-        k = min(ks_sub[j], nd)
-        order = np.lexsort((cj, -sj))
-        top = order[:k]
-        kth = sj[top[-1]]
-        if n_pos >= C and not kth > sj[order[-1]] and k < C:
-            # k-th score ties the partition boundary, so docs outside the
-            # candidate set may tie it too. kth is still the TRUE k-th
-            # largest score (all C candidates ≥ every outside value), so
-            # the exact top-k is inside {score ≥ kth} — order just those.
-            row = A[j]
-            idx = np.nonzero(row >= kth)[0]
-            o2 = np.lexsort((idx, -row[idx]))[:k]
-            out[base + j] = [
-                (int(global_docs[i]), float(row[i])) for i in idx[o2]
-            ]
-            continue
-        out[base + j] = [
-            (int(global_docs[cj[i]]), float(sj[i])) for i in top
-        ]
-
-
 def bm25_dense_topk(
     term_postings: dict,
     n_docs: int,

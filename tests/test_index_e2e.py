@@ -89,14 +89,33 @@ def test_batch_search_matches_single(spark, index_dir):
     searcher = Searcher(index_dir)
     queries = [
         {"query_id": i, "query_text": q, "k": 5} for i, q in enumerate(QUERIES)
+    ] + [
+        {"query_id": 100 + i, "query_text": q, "k": 5, "mode": mode,
+         "window": 6}
+        for i, (q, mode) in enumerate([
+            ("sort merge", "phrase"),
+            ("hash join", "phrase"),
+            ("join zzmissing", "phrase"),
+            ("hash join", "proximity"),
+            ("sort merge join", "proximity"),
+        ])
     ]
     batch = search_batch(spark, index_dir, queries, k=5).collect()
     by_q = {}
     for r in batch:
         by_q.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
-    for i, q in enumerate(QUERIES):
-        single = [(h.rank, h.doc_id, h.score) for h in searcher.search(q, k=5)]
-        assert sorted(by_q.get(i, [])) == single, q
+    n_hits = 0
+    for q in queries:
+        single = [
+            (h.rank, h.doc_id, h.score)
+            for h in searcher.search(
+                q["query_text"], k=5, mode=q.get("mode", "bm25"),
+                window=q.get("window", 5),
+            )
+        ]
+        n_hits += len(single)
+        assert sorted(by_q.get(q["query_id"], [])) == single, q
+    assert n_hits == len(batch)
 
 
 def test_phrase_and_proximity(spark, index_dir, corpus):

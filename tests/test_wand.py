@@ -8,7 +8,6 @@ from hypothesis import strategies as st
 
 from tesserae_ng_spark.index.inmem import build_term_postings, exhaustive_topk
 from tesserae_ng_spark.query.wand import (
-    bm25_batch_global_topk,
     bm25_dense_topk,
     bm25_global_topk,
     wand_topk,
@@ -64,63 +63,11 @@ def test_wand_equals_exhaustive(corpus, qsize, k, block_size, seed):
         ("wand", wand_topk(fetched, n_docs, avg_dl, k)),
         ("dense", bm25_dense_topk(fetched, n_docs, avg_dl, k)),
         ("global", bm25_global_topk(fetched, global_docs, n_docs, avg_dl, k)),
-        (
-            "batch",
-            bm25_batch_global_topk(
-                fetched, [query], [k], global_docs, n_docs, avg_dl
-            )[0],
-        ),
     ]
     for name, got in results:
         assert [d for d, _ in got] == [d for d, _ in want], name
         for (gd, gs), (wd, ws) in zip(got, want):
             assert math.isclose(gs, ws, rel_tol=0, abs_tol=1e-9), (name, gd, gs, ws)
-
-
-@given(
-    corpus=corpus_strategy,
-    nq=st.integers(min_value=1, max_value=12),
-    seed=st.integers(min_value=0, max_value=10_000),
-    dup=st.integers(min_value=1, max_value=8),
-)
-@settings(max_examples=150, deadline=None)
-def test_batch_topk_equals_per_query(corpus, nq, seed, dup):
-    """Term-at-a-time batch scorer ≡ per-query global accumulator —
-    bit-identical docs AND scores, per-query k, including tie-heavy score
-    distributions (``dup`` replicas of every doc force score runs, the
-    _chunk_topk boundary-tie fallback's worst case)."""
-    import tesserae_ng_spark.query.wand as wand_mod
-
-    rng = np.random.RandomState(seed)
-    # replicate docs: identical (tf, dl) rows at distinct doc ids ⇒ every
-    # score appears `dup` times, so k-th almost always ties the boundary
-    big = {}
-    for i, d in enumerate(sorted(corpus)):
-        for r in range(dup):
-            big[i * dup + r] = dict(corpus[d])
-    dls = {d: sum(tfs.values()) for d, tfs in big.items()}
-    tps, n_docs, avg_dl = make_index(big, dls, 4)
-    global_docs = np.array(sorted(big), dtype=np.int64)
-    vocab = [f"t{i}" for i in range(8)]
-    qterms = [
-        [vocab[i] for i in rng.choice(8, size=rng.randint(1, 5), replace=False)]
-        for _ in range(nq)
-    ]
-    ks = [int(rng.choice([1, 3, 10, 100])) for _ in range(nq)]
-    fetched = {t: tp for t, tp in tps.items()}
-    # tiny chunk budget → several chunks even at toy sizes
-    old = wand_mod.BATCH_ACC_MAX_CELLS
-    wand_mod.BATCH_ACC_MAX_CELLS = max(len(big) * 2, 8)
-    try:
-        got = bm25_batch_global_topk(
-            fetched, qterms, ks, global_docs, n_docs, avg_dl
-        )
-    finally:
-        wand_mod.BATCH_ACC_MAX_CELLS = old
-    for i, terms in enumerate(qterms):
-        sub = {t: tps[t] for t in set(terms) if t in tps}
-        want = bm25_global_topk(sub, global_docs, n_docs, avg_dl, ks[i])
-        assert got[i] == want, (i, terms, ks[i])
 
 
 def test_wand_absent_and_empty():
