@@ -23,34 +23,43 @@ verbatim to ``pyspark.daemon.manager``.
 
 from __future__ import annotations
 
+import contextlib
+import sys
+
+PREIMPORTS = (
+    "numpy",
+    "pandas",
+    "pyarrow",
+    "pyarrow.dataset",
+    "pyarrow.compute",
+    "pyspark.serializers",
+    "pyspark.worker",
+    "tesserae_ng_spark.functions.analysis",
+    "tesserae_ng_spark.index.codec",
+    "tesserae_ng_spark.index.encode",
+    "tesserae_ng_spark.query.search",
+    "tesserae_ng_spark.query.sharded",
+)
+
 
 def _preimport() -> None:
-    try:
-        from tesserae_ng_spark.memtune import tune_allocator
-
-        # opt-in via TNG_MALLOC_TUNE (get_spark exports it before the JVM
-        # launches, so the daemon sees it); forks inherit the tuned state
-        tune_allocator()
-    except Exception:
-        pass
-    for mod in (
-        "numpy",
-        "pandas",
-        "pyarrow",
-        "pyarrow.dataset",
-        "pyarrow.compute",
-        "pyspark.serializers",
-        "pyspark.worker",
-        "tesserae_ng_spark.functions.analysis",
-        "tesserae_ng_spark.index.codec",
-        "tesserae_ng_spark.index.encode",
-        "tesserae_ng_spark.query.search",
-        "tesserae_ng_spark.query.sharded",
-    ):
+    # the JVM reads the daemon's listening port from its stdout, so an
+    # import-time print must not land there before manager() writes it
+    with contextlib.redirect_stdout(sys.stderr):
         try:
-            __import__(mod)
+            from tesserae_ng_spark.memtune import tune_allocator
+
+            # opt-in via TNG_MALLOC_TUNE (get_spark exports it before the
+            # JVM launches, so the daemon sees it); forks inherit the
+            # tuned state
+            tune_allocator()
         except Exception:
             pass
+        for mod in PREIMPORTS:
+            try:
+                __import__(mod)
+            except Exception:
+                pass
 
 
 if __name__ == "__main__":

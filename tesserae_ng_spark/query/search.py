@@ -77,6 +77,18 @@ class Searcher:
             self.reader.warm_top_terms(warm_mb) if warm_mb > 0 else None
         )
 
+    def prefetch(self, terms) -> None:
+        """One metadata scan + one payload scan for a batch's terms (their
+        union); head terms past PREFETCH_MAX_DF stay lazy so WAND can skip
+        their blocks without the I/O having happened. Positions are never
+        prefetched — positional queries load them candidate-only
+        (TermPostings.candidate_positions)."""
+        if terms:
+            fetched = self.reader.fetch(sorted(terms))
+            self.reader.ensure_payloads(
+                fetched.values(), max_df=PREFETCH_MAX_DF
+            )
+
     def search(self, query_text: str, k: int = 10, mode: str = "bm25",
                window: int = 5, global_stats: dict | None = None) -> list[Hit]:
         """``global_stats`` (sharded/distributed search — the Solr

@@ -13,15 +13,15 @@ shape (public Solr semantics — the reference's deployment model):
     top-k candidates flow back. bm25 runs block-max WAND on stats-free
     bounds (TermIterator recomputes per-block bounds from max_tf/min_dl
     under the global stats).
-  merge: per query, rank candidates by (score desc, doc_id asc) and keep
-    k — rank- and score-identical to a single index over the union of the
-    shards (pinned by tests/test_sharded.py for bm25 AND phrase AND
+  driver cut: per query, rank candidates by (score desc, doc_id asc) and
+    keep k — rank- and score-identical to a single index over the union of
+    the shards (pinned by tests/test_sharded.py for bm25 AND phrase AND
     proximity).
 
 This is the one distributed query executor: a single index
 (``search.search_batch``) is its one-shard case, where the shard's own
 stats are the global stats, so tasks score with the plain per-query path
-and emit final rows without a merge.
+and their candidates are already final scores.
 
 Positional modes (SURVEY.md §2.9) need one twist each:
 
@@ -29,22 +29,29 @@ Positional modes (SURVEY.md §2.9) need one twist each:
     shard knows alone. But idf(df) is one positive scalar per query, so
     per-shard ranking by the tf-part tf/(tf + k1·(1−b + b·dl/avg_dl_global))
     is already rank-identical to the final ranking. Each task therefore
-    emits its top-k candidates' tf-parts plus ONE df row (its shard's match
-    count); the merge sums match counts into the exact global phrase-df and
-    multiplies idf in — no second distributed pass. phrase_topk computes
-    idf·(tf/den) in the same order, so the scores are bit-identical.
+    returns its top-k candidates' tf-parts plus ONE match-count row (its
+    shard's phrase matches); the driver cut sums match counts into the
+    exact global phrase-df and multiplies idf in — no second distributed
+    pass. phrase_topk computes idf·(tf/den) in the same order, so the
+    scores are bit-identical.
   proximity: the Tesserae distance-weighted score has no corpus-stats
     dependence at all, so per-shard top-k merges directly.
 
 Scale shape: phase 1 touches dictionaries only (KB per shard); phase 2 is
-embarrassingly parallel (shards × slices tasks over immutable indexes);
-the merge is an ASSOCIATIVE reduceByKey over packed per-(query, task)
-numpy payloads — map-side combine keeps the shuffle ≤ queries × k packed
-rows per task, mid-merge payloads stay ≤ k_q rows no matter how many
-shards participate, and only the final queries × k result rows cross the
-Python→JVM DataFrame bridge. Never a global sort, never per-candidate
-Row conversion (the previous DataFrame window merge moved shards ×
-queries × k individual rows and measured ~half the batch wall).
+embarrassingly parallel (shards × slices tasks over immutable indexes) and
+is the batch's ONE Spark job: ``parallelize(tasks).map(run_task)
+.collect()``, one stage, no shuffle, for any shard count. Each task returns
+one packed numpy payload (per candidate: query_id, doc_id, value, k_q; per
+phrase query with matches: query_id, match count), and the driver runs one
+vectorized cut over all of them (``cut_topk``) — Solr's coordinator merge
+of per-shard top-k, without a shuffle stage for it (a merge stage cost
+about as much as the scoring: a Spark job that does no work takes ~0.5 s
+of wall on a 4-core host, about the whole 60-query batch).
+Driver memory: at most shards × Σk_q candidate rows of 32 B each — the
+result size with one shard, under 4 MB for 2000 queries on 4 shards at
+k ≤ 100. The result DataFrame is built from an Arrow table, so it is a
+``LocalRelation``: the scoring job runs inside the call, and the caller's
+``collect()``/``count()`` starts no further job and pickles no row.
 """
 
 from __future__ import annotations
@@ -54,20 +61,22 @@ import math
 import os
 
 import numpy as np
+import pyarrow as pa
 
 from tesserae_ng_spark.functions.analysis import analyze_query
 from tesserae_ng_spark.query.search import (
     MIN_QUERIES_PER_SLICE,
-    PREFETCH_MAX_DF,
     get_searcher,
     phrase_match_arrays,
     proximity_match_arrays,
 )
 from tesserae_ng_spark.schemas import BM25_B, BM25_K1
 
-# candidate-row kinds in the phase-2 output
-_CAND = 0  # (query_id, _CAND, doc_id, score-or-tf-part)
-_DF = 1    # (query_id, _DF, shard_ordinal, phrase match count)
+_NO_DOCS = np.empty(0, dtype=np.int64)
+_NO_VALS = np.empty(0, dtype=np.float64)
+# a task's packed output: (query_id, doc_id, value, k_q) per candidate and
+# (query_id, match count) per phrase query with matches on the shard
+_EMPTY_PAYLOAD = (_NO_DOCS, _NO_DOCS, _NO_VALS, _NO_DOCS, _NO_DOCS, _NO_VALS)
 
 
 # Phase-1 shard count above which the per-shard stats work runs as a Spark
@@ -178,49 +187,104 @@ def global_shard_stats(
     }
 
 
-def _shard_query_rows(searcher, q, gs: dict, default_k: int):
-    """Phase-2 scoring of ONE query on ONE shard → tagged candidate rows.
-    Per-query ``k`` is honored (same contract as search_batch): each shard
-    emits its own top-k_q, and the merge window cuts at the same k_q —
-    any global top-k_q doc is in its shard's top-k_q, so the cut is exact."""
+def _query_topk(searcher, q, k: int, gs: dict | None):
+    """ONE query on ONE shard → (doc_ids int64, values float64, phrase
+    match count or None), ordered by (value desc, doc_id asc) and cut at
+    ``k`` — the query's own k_q. Any global top-k_q doc is in its shard's
+    top-k_q, so the driver cut at the same k_q is exact.
+
+    ``gs is None`` (one shard): the shard's own stats are the global stats,
+    so the plain per-query path returns final scores (bm25 keeps WAND on
+    the stored block bounds, phrase multiplies its own idf in). Otherwise
+    score under the GLOBAL stats; phrase returns tf-parts plus this shard's
+    match count, and the driver multiplies the global idf in."""
     mode = q.get("mode", "bm25")
-    k = q.get("k", default_k)
-    if mode == "bm25":
-        for hit in searcher.search(q["query_text"], k=k, global_stats=gs):
-            yield (q["query_id"], _CAND, hit.doc_id, hit.score)
-        return
+    if gs is None or mode == "bm25":
+        hits = searcher.search(
+            q["query_text"], k=k, mode=mode, window=q.get("window", 5),
+            global_stats=gs,
+        )
+        return (
+            np.array([h.doc_id for h in hits], dtype=np.int64),
+            np.array([h.score for h in hits], dtype=np.float64),
+            None,
+        )
+    none = (_NO_DOCS, _NO_VALS, None)
     terms = analyze_query(q["query_text"], searcher.lang)
     if not terms:
-        return
+        return none
     fetched = searcher.reader.fetch(terms)
     if mode == "phrase":
         if any(t not in fetched for t in terms):
-            return  # this shard's docs cannot contain the phrase
+            return none  # this shard's docs cannot contain the phrase
         docs, tfs, dls = phrase_match_arrays([fetched[t] for t in terms])
         if docs.size == 0:
-            return
+            return none
         # tf-part under GLOBAL avg_dl; idf(global phrase-df) multiplies in
-        # at the merge — same positive scalar per query, so this order is
+        # on the driver — same positive scalar per query, so this order is
         # already the final order
         part = tfs / (
             tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * dls / gs["avg_dl"])
         )
-        yield (q["query_id"], _DF, 0, float(docs.size))
-        for i in np.lexsort((docs, -part))[:k]:
-            yield (q["query_id"], _CAND, int(docs[i]), float(part[i]))
-    elif mode == "proximity":
+        top = np.lexsort((docs, -part))[:k]
+        return docs[top], part[top], float(docs.size)
+    if mode == "proximity":
         uniq = sorted(set(terms))
         if any(t not in fetched for t in uniq):
-            return
+            return none
         docs, scores = proximity_match_arrays(
             [fetched[t] for t in uniq], q.get("window", 5)
         )
-        if docs.size == 0:
-            return
-        for i in np.lexsort((docs, -scores))[:k]:
-            yield (q["query_id"], _CAND, int(docs[i]), float(scores[i]))
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
+        top = np.lexsort((docs, -scores))[:k]
+        return docs[top], scores[top], None
+    raise ValueError(f"unknown mode {mode!r}")
+
+
+def cut_topk(payloads: list[tuple], n_docs: float) -> dict:
+    """Driver cut: per-task packed payloads → the batch's final rows.
+
+    A payload is ``(query_id, doc_id, value, k_q, match_query_id,
+    match_count)`` arrays: one candidate row per (query, doc) and one
+    match-count row per phrase query with matches on the task's shard.
+    One ``lexsort`` by (query_id, value desc, doc_id asc) orders every
+    candidate; a row's rank within its query comes from the group starts
+    and rows with rank ≥ k_q go. Phrase queries then get the global idf:
+    match counts are integer-valued, so their per-query float sum is the
+    exact global phrase-df, and the idf multiplies each kept tf-part with
+    the same libm call in the same idf·(tf/den) order as ``phrase_topk`` —
+    bit-identical to a single union index. The result does not depend on
+    payload order (rows equal in every sort key are equal rows).
+
+    → {"query_id", "rank" (1-based, int32), "doc_id", "score"} arrays,
+    sorted by (query_id, rank)."""
+    payloads = payloads or [_EMPTY_PAYLOAD]
+    qid, doc, val, kq, mq, mc = (
+        np.concatenate([p[i] for p in payloads]) for i in range(6)
+    )
+    order = np.lexsort((doc, -val, qid))
+    qid, doc, val, kq = qid[order], doc[order], val[order], kq[order]
+    n = qid.size
+    new_q = np.ones(n, dtype=bool)
+    new_q[1:] = qid[1:] != qid[:-1]
+    starts = np.flatnonzero(new_q)
+    rank = np.arange(n) - np.repeat(starts, np.diff(np.append(starts, n)))
+    keep = rank < kq
+    qid, doc, val, rank = qid[keep], doc[keep], val[keep], rank[keep]
+    if mq.size:
+        pq, inv = np.unique(mq, return_inverse=True)
+        idf = np.array([
+            math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+            for df in np.bincount(inv, weights=mc).tolist()
+        ])
+        pos = np.minimum(np.searchsorted(pq, qid), pq.size - 1)
+        ph = pq[pos] == qid
+        val[ph] = idf[pos[ph]] * val[ph]
+    return {
+        "query_id": qid,
+        "rank": (rank + 1).astype(np.int32),
+        "doc_id": doc,
+        "score": val,
+    }
 
 
 def prime_shard_workers(
@@ -252,10 +316,10 @@ def prime_shard_workers(
 
     Shape: ``n_tasks`` (default ``sc.defaultParallelism``) concurrent
     tasks, each opening ALL shard searchers, prefetching the given terms'
-    postings (metadata + payloads under the same PREFETCH_MAX_DF cap the
-    query path uses — huge-df tails stay lazy), and EXECUTING the
-    positional (phrase/proximity) queries once per shard — Solr's
-    firstSearcher warming-queries semantics. The positional execution is
+    postings (``Searcher.prefetch``, as the query path does — huge-df
+    tails stay lazy), and EXECUTING the positional (phrase/proximity)
+    queries once per shard — Solr's firstSearcher warming-queries
+    semantics. The positional execution is
     what matters: bm25's adaptive candidate-only decode showed no
     measurable per-(worker, shard) miss penalty, but a positional query's
     first run on a pair pays position-payload loads + per-block decode
@@ -283,11 +347,7 @@ def prime_shard_workers(
     def prime(_):
         for d in dirs:
             s = get_searcher(d, lang)
-            if terms:
-                fetched = s.reader.fetch(terms)
-                s.reader.ensure_payloads(
-                    fetched.values(), max_df=PREFETCH_MAX_DF
-                )
+            s.prefetch(terms)
             for q in pos_qs:
                 # warming query: shard-local stats are fine — the decode
                 # work (position payload loads, per-block flat caches,
@@ -321,7 +381,15 @@ def search_sharded(
     searchers all use the same stemmer (VERDICT r4: a lang mismatch
     between phases would compute global df over differently-stemmed terms
     and silently fall back to shard-local df, breaking cross-shard score
-    comparability)."""
+    comparability).
+
+    Eager: the batch's one scoring job (one stage, one task per shard ×
+    query slice) runs before this returns, and the per-task payloads are
+    cut to each query's k on the driver (``cut_topk``; at most shards ×
+    Σk_q candidate rows of 32 B). The returned frame is a ``LocalRelation``
+    built from an Arrow table, so acting on it starts no further job. An
+    empty batch, or one without hits, returns an empty frame with the same
+    schema. Query ids key the cut, so they must be distinct in a batch."""
     from tesserae_ng_spark.query import search as search_mod
 
     sc = spark.sparkContext
@@ -344,12 +412,9 @@ def search_sharded(
         queries, n_slices, lang, df=stats.get("df")
     )
     tasks = [(d, s) for d in index_dirs for s in slices if s]
-    # One shard: its own stats ARE the global stats, so each task scores
-    # with the plain per-query path (bm25 keeps WAND on the stored block
-    # bounds, phrase multiplies its own idf in) and its rows are already
-    # final — no merge. Several shards: score under the GLOBAL stats and
-    # merge per query. The stats and the k map ride the task closure;
-    # PySpark broadcasts a pickled command over 1 MB by itself.
+    # one shard: its own stats are the global stats (see _query_topk); the
+    # stats ride the task closure — PySpark broadcasts a pickled command
+    # over 1 MB by itself
     gs = stats if len(index_dirs) > 1 else None
 
     def run_task(task):
@@ -358,103 +423,31 @@ def search_sharded(
         terms: set[str] = set()
         for q in qs:
             terms.update(analyze_query(q["query_text"], searcher.lang))
-        if terms:
-            # one metadata scan + one payload scan for the slice (union of
-            # its terms); head terms past PREFETCH_MAX_DF stay lazy so WAND
-            # can skip their blocks without the I/O having happened.
-            # Positions are never prefetched — positional queries load
-            # them candidate-only (TermPostings.candidate_positions).
-            fetched = searcher.reader.fetch(sorted(terms))
-            searcher.reader.ensure_payloads(
-                fetched.values(), max_df=PREFETCH_MAX_DF
-            )
+        searcher.prefetch(terms)
+        qid, doc, val, kq, mq, mc = [], [], [], [], [], []
         for q in qs:
-            if gs is None:
-                for hit in searcher.search(
-                    q["query_text"], k=q.get("k", k),
-                    mode=q.get("mode", "bm25"), window=q.get("window", 5),
-                ):
-                    yield (q["query_id"], hit.rank, hit.doc_id, hit.score)
-            else:
-                yield from _shard_query_rows(searcher, q, gs, k)
-
-    # one task (shard × slice) per partition keeps the affinity grouping
-    rows = sc.parallelize(tasks, max(1, len(tasks))).mapPartitions(
-        lambda ts: (r for t in ts for r in run_task(t))
-    )
-    schema = "query_id long, rank int, doc_id long, score double"
-    if gs is None:
-        return spark.createDataFrame(rows, schema)
-
-    # associative per-query top-k merge (reduceByKey): each task packs ONE
-    # numpy payload per query (its shard's top-k_q docs + values, plus the
-    # shard's phrase match count), and merging two payloads keeps the k_q
-    # best by (val desc, doc asc) while summing match counts. Map-side
-    # combine makes shuffle volume ≤ queries × k packed rows per task —
-    # independent of how the candidates were found — and only the final
-    # queries × k result rows cross the Python→JVM DataFrame bridge (the
-    # previous per-candidate DataFrame + window merge moved shards ×
-    # queries × k individual rows through row conversion and a shuffle,
-    # and measured ~7 s of a 15 s batch at sandbox scale).
-    # Exactness: any global top-k_q doc is in its shard's top-k_q, and for
-    # phrase the merge order (tf-part) is the final order because
-    # idf(global df) is one positive scalar per query, applied after the
-    # exact global match-count sum.
-    kmap = {q["query_id"]: int(q.get("k", k)) for q in queries}
-
-    def to_payloads(task_rows):
-        per_q: dict = {}
-        for qid, kind, a, b in task_rows:
-            ent = per_q.setdefault(qid, [[], [], 0.0, False])
-            if kind == _CAND:
-                ent[0].append(a)
-                ent[1].append(b)
-            else:
-                ent[2] += b
-                ent[3] = True
-        for qid, (docs, vals, df_sum, is_phrase) in per_q.items():
-            yield (
-                qid,
-                (
-                    np.asarray(docs, dtype=np.int64),
-                    np.asarray(vals, dtype=np.float64),
-                    df_sum if is_phrase else None,
-                    kmap.get(qid, k),
-                ),
-            )
-
-    def merge(pa, pb):
-        docs = np.concatenate([pa[0], pb[0]])
-        vals = np.concatenate([pa[1], pb[1]])
-        df = (
-            None
-            if pa[2] is None and pb[2] is None
-            else (pa[2] or 0.0) + (pb[2] or 0.0)
+            k_q = int(q.get("k", k))
+            docs, vals, matches = _query_topk(searcher, q, k_q, gs)
+            qid.append(np.full(docs.size, q["query_id"], dtype=np.int64))
+            doc.append(docs)
+            val.append(vals)
+            kq.append(np.full(docs.size, k_q, dtype=np.int64))
+            if matches is not None:
+                mq.append(q["query_id"])
+                mc.append(matches)
+        return (
+            np.concatenate(qid), np.concatenate(doc), np.concatenate(val),
+            np.concatenate(kq), np.array(mq, dtype=np.int64),
+            np.array(mc, dtype=np.float64),
         )
-        # cutting at k_q mid-merge is exact: the merged order is already
-        # the final order (phrase idf is a positive per-query scalar), so
-        # payloads stay ≤ k_q rows no matter how many shards merge in
-        k_q = pa[3]
-        order = np.lexsort((docs, -vals))[:k_q]
-        return docs[order], vals[order], df, k_q
 
-    n_docs = float(stats["n_docs"])
-
-    def finalize(item):
-        qid, (docs, vals, df, k_q) = item
-        order = np.lexsort((docs, -vals))[:k_q]
-        docs, vals = docs[order], vals[order]
-        if df is not None:
-            # the same libm idf and idf·(tf/den) order as phrase_topk, so
-            # phrase scores are bit-identical to the union index
-            idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-            vals = idf * vals
-        for r in range(docs.size):
-            yield (qid, r + 1, int(docs[r]), float(vals[r]))
-
-    merged = (
-        rows.mapPartitions(to_payloads)
-        .reduceByKey(merge, numPartitions=max(1, sc.defaultParallelism))
-        .flatMap(finalize)
+    # one task (shard × slice) per partition keeps the affinity grouping;
+    # a map + collect is one stage, with no shuffle for any shard count
+    payloads = (
+        sc.parallelize(tasks, len(tasks)).map(run_task).collect()
+        if tasks else []
     )
-    return spark.createDataFrame(merged, schema)
+    top = cut_topk(payloads, float(stats["n_docs"]))
+    return spark.createDataFrame(
+        pa.table(top), "query_id long, rank int, doc_id long, score double"
+    )

@@ -61,22 +61,21 @@ def get_spark(
     # pre-importing worker daemon (daemon.py; guide §4.5): forked python
     # workers inherit numpy/pyarrow/pandas/engine imports + tuned allocator
     # state from the daemon instead of each paying ~0.7 s on first task.
-    # Local mode only (the daemon process inherits this driver's
-    # PYTHONPATH, exported below, so `python -m tesserae_ng_spark.daemon`
-    # resolves); cluster deployments keep the stock daemon unless they ship
-    # the package and opt in themselves. TNG_FAST_DAEMON=0 disables.
+    # Local mode only; cluster deployments keep the stock daemon unless
+    # they ship the package and opt in themselves. TNG_FAST_DAEMON=0
+    # disables. The package's parent reaches the daemon (so `python -m
+    # tesserae_ng_spark.daemon` resolves) through spark.executorEnv, which
+    # Spark merges into its python workers' PYTHONPATH — this process's
+    # own environment stays untouched.
     if master.startswith("local") and os.environ.get(
         "TNG_FAST_DAEMON", "1"
     ).strip().lower() not in ("0", "false", "no", "off"):
         pkg_parent = os.path.dirname(
             os.path.dirname(os.path.abspath(__file__))
         )
-        pp = os.environ.get("PYTHONPATH", "")
-        if pkg_parent not in pp.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                pkg_parent + (os.pathsep + pp if pp else "")
-            )
-        b = b.config("spark.python.daemon.module", "tesserae_ng_spark.daemon")
+        b = b.config("spark.executorEnv.PYTHONPATH", pkg_parent).config(
+            "spark.python.daemon.module", "tesserae_ng_spark.daemon"
+        )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

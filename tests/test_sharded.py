@@ -8,6 +8,8 @@ results are rank-identical — same doc ids, same scores — as one index
 over the union of the shards.
 """
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -264,3 +266,48 @@ def test_prime_shard_workers_preserves_results(spark, indexes):
     assert info["tasks"] >= 1 and 1 <= info["workers"] <= info["tasks"]
     after = rows(search_sharded(spark, shard_dirs, queries, k=10))
     assert before == after
+
+
+def _jobs_and_stages(spark, action):
+    """→ (action(), jobs, stages): the jobs and stages Spark ran for the
+    action, read back from the status tracker under a job group of its
+    own."""
+    sc = spark.sparkContext
+    group = f"stage-pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "stage-count pin")
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job and stage events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+    return result, len(jobs), stages
+
+
+def test_one_job_one_stage_per_batch(spark, indexes):
+    """A query batch is one Spark job with one stage, for several shards
+    (no merge shuffle) and for one (``search_batch``); the result frame is
+    local, so collecting it runs nothing more."""
+    shard_dirs, union_dir = indexes
+    queries = [
+        dict(query_id=0, query_text="sort merge join", mode="bm25", k=10),
+        dict(query_id=1, query_text="hash join", mode="phrase", k=10),
+        dict(query_id=2, query_text="sort merge", mode="proximity", k=5),
+        dict(query_id=3, query_text="zzmissing", mode="bm25", k=10),
+    ]
+    sharded, jobs, stages = _jobs_and_stages(
+        spark,
+        lambda: search_sharded(spark, shard_dirs, queries, k=10).collect(),
+    )
+    assert (jobs, stages) == (1, 1)
+    union, jobs, stages = _jobs_and_stages(
+        spark, lambda: search_batch(spark, union_dir, queries, k=10).collect()
+    )
+    assert (jobs, stages) == (1, 1)
+    assert sharded and sorted(map(tuple, sharded)) == sorted(
+        map(tuple, union)
+    )
