@@ -231,113 +231,6 @@ def split_varint_stream(buf: bytes, counts: np.ndarray) -> list[bytes]:
     return [buf[s:e] for s, e in zip(chunk_starts, chunk_ends)]
 
 
-# ---------------------------------------------------------------------------
-# PForDelta (Patched Frame-of-Reference; Zukowski et al. ICDE'06, NewPFD
-# variant per Yan, Ding & Suel WWW'09): bit-pack every value at a width b
-# covering ~90% of them, store the overflowing high bits as patched
-# exceptions. Denser than LEB128 for tightly clustered deltas (the common
-# posting-gap case) at a small decode-complexity cost.
-#
-# Registered in CODECS as the optional v2 block codec; the on-disk format
-# keeps "varint" as default (stats.json would carry the codec name on a
-# format bump). Round-trip equivalence is property-tested in
-# tests/test_codec.py.
-# ---------------------------------------------------------------------------
-
-
-def _bit_width(v: np.ndarray) -> np.ndarray:
-    """Per-value minimal bit width (0 for value 0)."""
-    w = np.zeros(v.size, dtype=np.int64)
-    tmp = v.copy()
-    while tmp.any():
-        w += (tmp > 0).astype(np.int64)
-        tmp >>= np.uint64(1)
-    return w
-
-
-def pfor_encode(values: np.ndarray) -> bytes:
-    """uint64 array → PForDelta frame bytes.
-
-    Layout: u8 b | varint n | packed n×b bits (little-endian bit order) |
-    varint n_exc | varint exc_index... | varint exc_high... where
-    exc_high = value >> b for each exception."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    n = v.size
-    if n == 0:
-        return b"\x00" + varint_encode(np.array([0], dtype=np.uint64))
-    widths = _bit_width(v)
-    # choose the smallest b with ≤12.5% exceptions (NewPFD heuristic)
-    b = 0
-    for cand in range(0, 65):
-        if (widths > cand).sum() <= max(0, n >> 3):
-            b = cand
-            break
-    header = bytes([b]) + varint_encode(np.array([n], dtype=np.uint64))
-    if b:
-        low = v & ((np.uint64(1) << np.uint64(b)) - np.uint64(1)) if b < 64 else v
-        bits = (
-            (low[:, None] >> np.arange(b, dtype=np.uint64)[None, :])
-            & np.uint64(1)
-        ).astype(np.uint8)
-        packed = np.packbits(bits.reshape(-1), bitorder="little").tobytes()
-    else:
-        packed = b""
-    exc_idx = np.nonzero(widths > b)[0].astype(np.uint64)
-    exc_high = (v[exc_idx.astype(np.int64)] >> np.uint64(b)) if b < 64 else np.zeros(0, np.uint64)
-    tail = (
-        varint_encode(np.array([exc_idx.size], dtype=np.uint64))
-        + varint_encode(exc_idx)
-        + varint_encode(exc_high)
-    )
-    return header + packed + tail
-
-
-def pfor_decode(buf: bytes) -> np.ndarray:
-    """PForDelta frame bytes → uint64 array."""
-    arr = np.frombuffer(buf, dtype=np.uint8)
-    b = int(arr[0])
-    # parse varint n
-    pos = 1
-    n = 0
-    shift = 0
-    while True:
-        byte = int(arr[pos])
-        n |= (byte & 0x7F) << shift
-        pos += 1
-        shift += 7
-        if not byte & 0x80:
-            break
-    if n == 0:
-        return np.empty(0, dtype=np.uint64)
-    if b:
-        nbytes = (n * b + 7) // 8
-        bits = np.unpackbits(
-            arr[pos : pos + nbytes], count=n * b, bitorder="little"
-        ).reshape(n, b)
-        vals = (
-            bits.astype(np.uint64) << np.arange(b, dtype=np.uint64)[None, :]
-        ).sum(axis=1, dtype=np.uint64)
-        pos += nbytes
-    else:
-        vals = np.zeros(n, dtype=np.uint64)
-    rest = varint_decode(arr[pos:].tobytes())
-    n_exc = int(rest[0])
-    if n_exc:
-        idx = rest[1 : 1 + n_exc].astype(np.int64)
-        high = rest[1 + n_exc : 1 + 2 * n_exc]
-        vals[idx] |= high << np.uint64(b)
-    return vals
-
-
-# codec registry: name → (encode uint64[] → bytes, decode bytes → uint64[]).
-# "varint" is the v1 on-disk default; "pfor" is the denser v2 option — a
-# format bump records the name in stats.json and the reader dispatches here.
-CODECS = {
-    "varint": (varint_encode, varint_decode),
-    "pfor": (pfor_encode, pfor_decode),
-}
-
-
 def encode_positions(positions_per_doc: list, tfs: np.ndarray) -> bytes:
     """Per-doc sorted position lists → concatenated delta varints.
 

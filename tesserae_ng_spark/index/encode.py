@@ -1,27 +1,25 @@
 """Stage A block encoding: per-shard postings → compressed block rows.
 
-Runs inside one shard's build job (index/builder.py): the shard's
-(term, doc_id, tf, dl, positions) postings are grouped by term and encoded
-into 128-doc blocks (delta+varint; index/codec.py) via ``applyInPandas``
-— the Arrow-grouped-map path, no per-row Python.
+Runs inside one part's build job (index/builder.py): each input
+partition's (term, doc_id, tf, dl, positions) postings are sorted by
+(term, doc_id) and encoded into 128-doc blocks (delta+varint;
+index/codec.py) by a partition-local ``mapInArrow`` — no exchange and no
+per-row Python (``encode_blocks_local``).
 
 Shard blocks carry tf/dl but NO scores: idf needs global df, which only
 exists after all shards are built — stage B (index/merge.py) attaches
 scores and block-max metadata during the merge.
 
-Scale note: within one shard, a head term's group is bounded by the shard's
-doc count (corpus_partitions >> 1 at 10^12 docs keeps groups in memory);
-the global head-term problem is handled by the salted merge, not here.
+Scale note: a term fragment is bounded by ``ENCODE_BUFFER_ROWS``, the
+per-worker sort buffer; the global head-term problem is handled by the
+salted merge, not here.
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tesserae_ng_spark.index.codec import (
@@ -32,6 +30,9 @@ from tesserae_ng_spark.index.codec import (
     varint_encode_lengths,
 )
 from tesserae_ng_spark.schemas import BLOCK_SIZE
+
+# per-worker row bound for stage A's sort buffer (see encode_blocks_local)
+ENCODE_BUFFER_ROWS = 2_000_000
 
 SHARD_BLOCK_SCHEMA = T.StructType(
     [
@@ -89,92 +90,13 @@ def encode_term_group(pdf: pd.DataFrame, block_size: int = BLOCK_SIZE) -> pd.Dat
     return pd.DataFrame(rows)
 
 
-def encode_blocks_batch(pdf: pd.DataFrame, block_size: int = BLOCK_SIZE) -> pd.DataFrame:
-    """Encode a frame of MANY complete term groups — rows pre-sorted by
-    (term, doc_id) — into block rows, byte-identical to running
-    ``encode_term_group`` per group (pinned by tests/test_codec.py).
-
-    Everything is batch-wide numpy: ONE varint encode per column for the
-    whole frame (per-value byte lengths → per-block byte offsets; varint
-    streams are self-delimiting so slicing whole values is lossless), one
-    reduceat for tf sums, one byte join + offset slicing for positions.
-    Python-per-group cost is zero — this stage used to spend ~70 % of the
-    build's encode wall on per-group pandas slicing + per-block small-array
-    varint calls (round-5 profile: 36 s → ~6 s of a 46 s stage at 17M
-    postings, local[8])."""
-    n = len(pdf)
-    if n == 0:
-        return pd.DataFrame(columns=[f.name for f in SHARD_BLOCK_SCHEMA])
-    terms = pdf["term"].to_numpy()
-    ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-    tfs = pdf["tf"].to_numpy(dtype=np.int64)
-    dls = pdf["dl"].to_numpy(dtype=np.int64)
-
-    change = np.empty(n, dtype=bool)
-    change[0] = True
-    change[1:] = terms[1:] != terms[:-1]
-    group_starts = np.flatnonzero(change).astype(np.int64)
-    # per-row index of its group's first row, then rank within group
-    row_gs = expand_segment_values(group_starts, group_starts, n)
-    rank = np.arange(n, dtype=np.int64) - row_gs
-    block_starts = np.flatnonzero(rank % block_size == 0).astype(np.int64)
-    block_ends = np.append(block_starts[1:], n)
-
-    u = to_u64(ids)
-    deltas = np.empty_like(u)
-    deltas[0] = u[0]
-    deltas[1:] = u[1:] - u[:-1]
-    deltas[block_starts] = u[block_starts]  # absolute at every block start
-    id_buf, id_len = varint_encode_lengths(deltas)
-    tf_buf, tf_len = varint_encode_lengths(tfs.astype(np.uint64))
-    dl_buf, dl_len = varint_encode_lengths(dls.astype(np.uint64))
-
-    def _slices(buf: bytes, lens: np.ndarray) -> list[bytes]:
-        off = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lens, out=off[1:])
-        return [
-            buf[off[s]:off[e]] for s, e in zip(block_starts, block_ends)
-        ]
-
-    pos_col = pdf["positions"]
-    has_pos = pos_col.iloc[0] is not None
-    if has_pos:
-        pos_list = pos_col.tolist()
-        plens = np.fromiter(
-            (len(x) for x in pos_list), dtype=np.int64, count=n
-        )
-        pbuf = b"".join(pos_list)
-        poff = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(plens, out=poff[1:])
-        pos_out = [
-            pbuf[poff[s]:poff[e]] for s, e in zip(block_starts, block_ends)
-        ]
-    else:
-        pos_out = None
-
-    return pd.DataFrame(
-        {
-            "term": terms[block_starts],
-            "block_id": (rank[block_starts] // block_size).astype(np.int32),
-            "n_docs": (block_ends - block_starts).astype(np.int32),
-            "tf_sum": np.add.reduceat(tfs, block_starts),
-            "block_first_doc": ids[block_starts],
-            "block_last_doc": ids[block_ends - 1],
-            "doc_ids": _slices(id_buf, id_len),
-            "tfs": _slices(tf_buf, tf_len),
-            "dls": _slices(dl_buf, dl_len),
-            "positions": pos_out,
-        }
-    )
-
-
 def encode_batch_arrow(tbl, block_size: int = BLOCK_SIZE):
     """Arrow-native encode of a table of COMPLETE term groups, rows sorted
     by (term, doc_id) → one output RecordBatch of block rows (or None).
 
-    Semantics identical to encode_blocks_batch / per-group
-    encode_term_group (pinned in tests/test_codec.py) but with ZERO
-    per-row Python objects: group boundaries come from a C-side
+    Byte-identical to per-group encode_term_group (pinned in
+    tests/test_codec.py) but with ZERO per-row Python objects: group
+    boundaries come from a C-side
     dictionary-encode, numeric columns cross as numpy views, the
     positions column is sliced by offset math against its Arrow data
     buffer (per-row position streams are contiguous in row order, so a
@@ -315,37 +237,10 @@ def encode_sharded_batch(tbl, block_size: int = BLOCK_SIZE):
     return t.to_batches()[0]
 
 
-def encode_shard_blocks(term_doc_dl: DataFrame, block_size: int = BLOCK_SIZE) -> DataFrame:
-    """(term, doc_id, tf, dl, positions) → shard block rows.
-
-    One exchange keyed by term and partition-sorted by (term, doc_id) —
-    the JVM sort replaces per-group pandas sorts — then mapInArrow with
-    batch-wide columnar encoding (encode_batch_arrow) over complete
-    groups per Arrow batch: Arrow AND Python costs are per batch, not per
-    term group, per block, or per row. A group straddling two Arrow
-    batches is carried over (partition-sorted data keeps groups
-    contiguous and within one partition), same contract as
-    index/grouped.py.
-
-    Kept as the exchange-based reference shape; the build now uses
-    ``encode_blocks_local`` (below), which produces fragmented-but-
-    equivalent block rows with NO exchange at all."""
-    from tesserae_ng_spark.index.grouped import grouped_arrow_sorted
-
-    return grouped_arrow_sorted(
-        term_doc_dl,
-        ["term"],
-        lambda t: encode_batch_arrow(t, block_size),
-        SHARD_BLOCK_SCHEMA,
-        sort_extra=("doc_id",),
-    )
-
-
 def encode_blocks_local(
     term_doc_dl: DataFrame,
     block_size: int = BLOCK_SIZE,
     shard_aware: bool = False,
-    max_buffer_rows: int | None = None,
 ) -> DataFrame:
     """Partition-LOCAL block encode: ZERO exchange.
 
@@ -356,65 +251,44 @@ def encode_blocks_local(
     exchange will move. So: accumulate each input partition in the Arrow
     worker, numpy-lexsort by (term, doc_id) (5-10x cheaper than the JVM
     row sort, and the sort is the one build body that does NOT scale
-    with cores — tools/encode_probe.py: sort 0.70 eff vs encode 1.22 at
-    2→8 procs), then batch-encode per-partition term fragments. The
-    merge's (term, salt) exchange then moves delta+varint blocks instead
-    of raw posting rows (~3-5x fewer bytes), and the build has exactly
-    ONE wide exchange end to end.
+    with cores), then batch-encode per-partition term fragments. The
+    merge's exchange then moves delta+varint blocks instead of raw
+    posting rows (~3-5x fewer bytes), and the build has exactly ONE wide
+    exchange end to end.
 
     Fragmentation is bounded and harmless: one block row per
     (partition, term) per ``block_size`` docs; because fragments are
     doc_id-sorted runs, their doc ranges stay tight, so the merge's
     salt-straddle routing stays ~1 salt per fragment even for head
-    terms. Final index bytes are IDENTICAL to the exchange-based path
-    (the merge's output is invariant to input block fragmentation —
-    pinned in tests/test_merge_arrow.py and tests/test_build_e2e.py).
+    terms. Final index bytes are IDENTICAL to encoding complete term
+    groups (the merge's output is invariant to input block fragmentation
+    — pinned in tests/test_merge_arrow.py and tests/test_build_e2e.py).
 
-    ``max_buffer_rows`` bounds the per-worker accumulation (first-touch
-    arena cost on lazily-backed VMs — same lesson as
-    grouped_arrow_sorted(max_rows)); a larger partition is encoded in
-    several sorted chunks, which only adds fragments. Default 2M rows,
-    overridable via TNG_ENCODE_BUFFER_ROWS (read driver-side at plan
-    build): the buffer's lexsort working set (~24 B/row keys + index)
-    is the build's one non-streaming body, so the right size scales
-    with the per-core LLC share, not a constant — co-located workers
-    whose combined sort sets exceed the shared LLC go DRAM-random
-    (tools/encode_probe.py sort control). Fragmentation stays bounded
-    either way; final index bytes are invariant to the choice.
+    ``ENCODE_BUFFER_ROWS`` bounds the per-worker accumulation: the
+    buffer's lexsort working set (~24 B/row keys + index) is the build's
+    one non-streaming body, and a worker's first touch of a large
+    transient arena is slow on lazily-backed VM memory (memtune.py). A
+    larger partition is encoded in several sorted chunks, which only
+    adds fragments; final index bytes are invariant to the bound.
 
     ``shard_aware=True`` (fused sharded build): rows carry a ``shard``
     column; the local sort keys on (shard, term, doc_id) and the output
     prepends the shard column.
     """
-    if max_buffer_rows is None:
-        max_buffer_rows = int(
-            os.environ.get("TNG_ENCODE_BUFFER_ROWS", "2000000")
-        )
+    max_rows = ENCODE_BUFFER_ROWS
     sort_fn = _sorted_shard_table if shard_aware else _sorted_term_table
     enc = encode_sharded_batch if shard_aware else encode_batch_arrow
     schema = SHARDED_BLOCK_SCHEMA if shard_aware else SHARD_BLOCK_SCHEMA
 
     def runner(batches):
-        import os as _os
-        import time as _time
-
         import pyarrow as pa
-
-        # TNG_GROUPED_PROFILE=1: same split as grouped_arrow_sorted —
-        # encode body vs arrival gaps (arrival here includes the whole
-        # pipelined upstream: scan, analysis UDF, JVM feed)
-        prof = _os.environ.get("TNG_GROUPED_PROFILE") == "1"
-        t_open = _time.time()
-        body_s = 0.0
-        rows_in = 0
 
         buf, rows = [], 0
 
         def flush():
-            nonlocal buf, rows, body_s
+            nonlocal buf, rows
             if not rows:
                 return
-            t0 = _time.time()
             t = (
                 pa.concat_tables(
                     [pa.Table.from_batches([b]) for b in buf]
@@ -424,32 +298,15 @@ def encode_blocks_local(
             )
             buf, rows = [], 0
             rb = enc(sort_fn(t), block_size)
-            body_s += _time.time() - t0
             if rb is not None and rb.num_rows:
                 yield rb
 
         for rb in batches:
             buf.append(rb)
             rows += rb.num_rows
-            rows_in += rb.num_rows
-            if rows >= max_buffer_rows:
+            if rows >= max_rows:
                 yield from flush()
         yield from flush()
-        if prof:
-            import json as _json
-
-            import tempfile as _tf
-
-            fd, _ = _tf.mkstemp(
-                prefix=f"tng_encode_prof_{_os.getpid()}_", suffix=".json",
-                dir=_os.environ.get("TNG_PROFILE_DIR") or None,
-            )  # mkstemp = O_EXCL private file (ADVICE r6)
-            with _os.fdopen(fd, "w") as f:
-                f.write(_json.dumps({
-                    "pid": _os.getpid(),
-                    "wall_s": round(_time.time() - t_open, 3),
-                    "body_s": round(body_s, 3), "rows_in": rows_in,
-                }))
 
     return term_doc_dl.mapInArrow(runner, schema)
 

@@ -29,7 +29,6 @@ shards partition docs by url hash.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -53,7 +52,7 @@ from tesserae_ng_spark.schemas import BLOCK_SIZE, BM25_B, BM25_K1, POSTINGS_SCHE
 _LONG_MIN = -(1 << 63)
 
 # per-call row bound for the Arrow batch merge (see merge_shard_blocks)
-MERGE_BATCH_MAX_ROWS = int(os.environ.get("TNG_MERGE_BATCH_ROWS", "1536"))
+MERGE_BATCH_MAX_ROWS = 1536
 
 
 def salt_expr(doc_col, nsalt_col):
@@ -77,22 +76,20 @@ def merge_shard_blocks(
     block_size: int = BLOCK_SIZE,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    n_buckets: int | None = None,
+    *,
+    n_buckets: int,
     merge_width: int | None = None,
 ) -> DataFrame:
     """shard block rows → final POSTINGS_SCHEMA rows (scored, re-blocked).
 
-    With ``n_buckets`` set, the merge exchange partitions by the FINAL
-    storage bucket ``pmod(xxhash64(term), n_buckets)`` instead of
-    (term, salt): the output is then already in sink layout — complete
-    term groups per partition, (term, salt, block_id)-ordered — so the
-    caller writes it directly with NO second shuffle and NO sort. The
-    round-6 grouped-stage profile motivated this: the Arrow merge body
-    is ~1.2 s/worker while the merge phase wall was 11-41 s, i.e. ~95%
-    of the phase was JVM-side — half of it the now-removed second
-    full shuffle + sort of the final postings. At cluster scale
-    ``n_buckets`` must grow with the cluster (it caps merge/write
-    parallelism); per-GROUP working sets stay salt-bounded either way."""
+    ``n_buckets`` is required: the merge exchange partitions by the FINAL
+    storage bucket ``pmod(xxhash64(term), n_buckets)``, so the output is
+    already in sink layout — complete term groups per partition,
+    (term, salt, block_id)-ordered — and the caller writes it directly
+    with NO second shuffle and NO sort. At cluster scale ``n_buckets``
+    must grow with the cluster (it caps merge/write parallelism unless
+    ``merge_width`` sub-splits each bucket); per-GROUP working sets stay
+    salt-bounded either way."""
     term_stats = shard_blocks.groupBy("term").agg(
         F.sum("n_docs").alias("df"),
         F.sum("tf_sum").alias("cf"),
@@ -125,54 +122,144 @@ def merge_shard_blocks(
             block_size=block_size, k1=k1, b=b,
         )
 
-    from tesserae_ng_spark.index.grouped import grouped_arrow_sorted
-
-    # one exchange keyed by (term, salt) + partition-sorted Arrow-native
-    # batch merge: decode/score/re-encode run ONCE per Arrow batch over
-    # many complete groups — per-group applyInPandas plumbing and per-row
-    # bytes objects both dominated this stage on realistic dictionaries
+    routed = routed.withColumn(
+        "_bucket",
+        F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"),
+    )
+    part_cols = ["_bucket"]
+    n_parts = n_buckets
+    if merge_width and merge_width > n_buckets:
+        # n_buckets caps merge parallelism (it IS the exchange key);
+        # when the caller has more cores than buckets, sub-split each
+        # bucket with an INDEPENDENT term hash (same-hash mod would
+        # correlate with _bucket and collapse the combinations) — the
+        # write still lands rows in their bucket dir, just as a few
+        # files per bucket instead of one (r7, guide §2.5: more
+        # distinct partition values than partitions)
+        sub = -(-merge_width // n_buckets)  # ceil
+        routed = routed.withColumn(
+            "_sub",
+            F.pmod(
+                F.xxhash64(F.col("term"), F.lit(1)), F.lit(sub)
+            ).cast("int"),
+        )
+        part_cols = ["_bucket", "_sub"]
+        n_parts = merge_width
+    # one exchange + partition-sorted Arrow-native batch merge:
+    # decode/score/re-encode run ONCE per Arrow batch over many complete
+    # (term, salt) groups, with no per-group or per-row Python
     # (merge_group_reference below is the per-group spec; equivalence is
-    # pinned bit-exactly in tests/test_merge_arrow.py)
+    # pinned bit-exactly in tests/test_merge_arrow.py).
     # max_rows bounds the per-call working set: a merge input row carries
     # up to a whole shard block (block_size postings), so 10k-row Arrow
     # batches decode to ~1.3M-posting transient arrays — a ~400 MB peak
-    # whose FIRST touch costs ~50 s/worker on this VM's lazily-backed
-    # memory (memtune.py). ~1.5k rows ≈ 200k postings keeps the one-time
-    # arena growth at a few MB-scale faults while batch amortization stays
+    # whose FIRST touch costs ~50 s/worker on lazily-backed VM memory
+    # (memtune.py). ~1.5k rows ≈ 200k postings keeps the one-time arena
+    # growth at a few MB-scale faults while batch amortization stays
     # intact (measured: stage 117 s → 9 s cold).
-    if n_buckets is not None:
-        routed = routed.withColumn(
-            "_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"),
-        )
-        part_cols = ["_bucket"]
-        n_parts = n_buckets
-        if merge_width and merge_width > n_buckets:
-            # n_buckets caps merge parallelism (it IS the exchange key);
-            # when the caller has more cores than buckets, sub-split each
-            # bucket with an INDEPENDENT term hash (same-hash mod would
-            # correlate with _bucket and collapse the combinations) — the
-            # write still lands rows in their bucket dir, just as a few
-            # files per bucket instead of one (r7, guide §2.5: more
-            # distinct partition values than partitions)
-            sub = -(-merge_width // n_buckets)  # ceil
-            routed = routed.withColumn(
-                "_sub",
-                F.pmod(
-                    F.xxhash64(F.col("term"), F.lit(1)), F.lit(sub)
-                ).cast("int"),
-            )
-            part_cols = ["_bucket", "_sub"]
-            n_parts = merge_width
-        return grouped_arrow_sorted(
-            routed, ["term", "salt"], merge_batch, POSTINGS_SCHEMA,
-            n_parts=n_parts, partition_cols=part_cols,
-            max_rows=MERGE_BATCH_MAX_ROWS,
-        )
-    return grouped_arrow_sorted(
+    return _grouped_arrow_sorted(
         routed, ["term", "salt"], merge_batch, POSTINGS_SCHEMA,
+        n_parts=n_parts, partition_cols=part_cols,
         max_rows=MERGE_BATCH_MAX_ROWS,
     )
+
+
+def _arrow_key_codes(tbl, keys: list[str]) -> list[np.ndarray]:
+    """Per-key comparable numpy arrays for an Arrow table (strings via
+    C-side dictionary-encode, numerics zero-copy)."""
+    import pyarrow as pa
+
+    cols = []
+    for k in keys:
+        arr = tbl.column(k).combine_chunks()
+        if pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type):
+            cols.append(
+                arr.dictionary_encode().indices.to_numpy(zero_copy_only=False)
+            )
+        else:
+            cols.append(arr.to_numpy(zero_copy_only=False))
+    return cols
+
+
+def _grouped_arrow_sorted(
+    df: DataFrame,
+    keys: list[str],
+    batch_fn,
+    schema,
+    n_parts: int,
+    partition_cols: list[str],
+    max_rows: int,
+) -> DataFrame:
+    """Arrow-native grouped batch map: hash-partition by
+    ``partition_cols``, partition-sort by ``keys``, then ``mapInArrow``
+    where ``batch_fn(pa.Table) -> pa.RecordBatch | None`` receives
+    COMPLETE key groups (the trailing, possibly batch-straddling group is
+    carried into the next batch). Zero per-row Python objects: binary
+    payload columns stay Arrow buffers end to end.
+
+    ``partition_cols`` must be a function of a prefix of ``keys`` (here
+    the final storage bucket, a deterministic function of ``term``), so
+    every group lands in exactly one partition and the exchange doubles
+    as the sink's partitioning.
+
+    ``max_rows`` re-chunks each complete-groups frame at group boundaries
+    before calling batch_fn: a worker's one-time heap growth is
+    proportional to the PEAK per-call working set, so chunking bounds the
+    peak while leaving steady-state reuse intact (a group larger than
+    max_rows still goes through whole, correctness over the bound)."""
+    rep = df.repartition(n_parts, *partition_cols).sortWithinPartitions(*keys)
+
+    def _call_chunked(t):
+        n = t.num_rows
+        if n <= max_rows:
+            out = batch_fn(t)
+            if out is not None and out.num_rows:
+                yield out
+            return
+        cols = _arrow_key_codes(t, keys)
+        change = np.zeros(n, dtype=bool)
+        change[0] = True
+        for c in cols:
+            change[1:] |= c[1:] != c[:-1]
+        gstarts = np.flatnonzero(change)
+        pos = 0
+        while pos < n:
+            # furthest group start ≤ pos + max_rows (always ≥ one group)
+            nxt = gstarts[np.searchsorted(gstarts, pos + max_rows, "right") - 1]
+            if nxt <= pos:
+                nxt_i = np.searchsorted(gstarts, pos, "right")
+                nxt = gstarts[nxt_i] if nxt_i < gstarts.size else n
+            out = batch_fn(t.slice(pos, nxt - pos))
+            if out is not None and out.num_rows:
+                yield out
+            pos = nxt
+
+    def runner(batches):
+        import pyarrow as pa
+
+        carry = None
+        for rb in batches:
+            t = pa.Table.from_batches([rb])
+            if carry is not None:
+                t = pa.concat_tables([carry, t])
+                carry = None
+            n = t.num_rows
+            if n == 0:
+                continue
+            cols = _arrow_key_codes(t, keys)
+            eq_last = np.ones(n, dtype=bool)
+            for c in cols:
+                eq_last &= c[::-1] == c[-1]
+            if eq_last.all():
+                carry = t  # whole batch is one group; keep accumulating
+                continue
+            tail_len = int(eq_last.argmin())
+            carry = t.slice(n - tail_len)
+            yield from _call_chunked(t.slice(0, n - tail_len))
+        if carry is not None and carry.num_rows:
+            yield from _call_chunked(carry)
+
+    return rep.mapInArrow(runner, schema)
 
 
 def merge_group_reference(
@@ -180,8 +267,7 @@ def merge_group_reference(
     block_size: int = BLOCK_SIZE, k1: float = BM25_K1, b: float = BM25_B,
 ) -> pd.DataFrame:
     """Per-(term, salt)-group merge — the SPEC for merge_batch_arrow,
-    byte-for-byte (tests/test_merge_arrow.py pins equivalence). Same body
-    merge_shard_blocks used to run under grouped_map_sorted."""
+    byte-for-byte (tests/test_merge_arrow.py pins equivalence)."""
     n_docs_f = float(n_docs)
     avg_dl_f = float(avg_dl)
     term = pdf["term"].iloc[0]
@@ -460,16 +546,15 @@ def merge_batch_arrow(
 
 def build_dictionary(postings: DataFrame, n_buckets: int) -> DataFrame:
     """final blocks → DICTIONARY_SCHEMA rows in ONE scan of the final
-    postings (r7, guide §2.3/§2.4: aggregate before the shuffle, and drop
-    the second full shards-postings scan + join the old path paid).
+    postings (guide §2.3/§2.4: aggregate before the shuffle; no second
+    scan of the shard postings and no join).
 
     cf per term is recovered by decoding each block's tf varints (a
     vectorized Arrow-batched pass over the ``tfs`` payload column only):
     the merge routed every posting to exactly one (term, salt) group
     (straddlers are filtered to their own salt range), so Σ decoded tf
-    over the FINAL blocks equals the Σ tf_sum over shard blocks the old
-    join supplied — integer-exact, value-identical dictionary rows
-    (pinned in tests/test_build_e2e.py)."""
+    over the FINAL blocks equals Σ tf_sum over the shard blocks —
+    integer-exact dictionary rows (pinned in tests/test_build_e2e.py)."""
     import pandas as pd
 
     @F.pandas_udf("long")

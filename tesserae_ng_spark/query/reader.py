@@ -466,35 +466,21 @@ class IndexReader:
         lazy-I/O pins (payload_blocks_loaded) are unaffected unless the
         caller asks to warm."""
         budget = budget_mb * (1 << 20)
-        if self._dict_cache is not None:
-            # pinned dictionaries are bounded by dict_pin_max_terms, so a
-            # Python sort over the cache is fine
-            items = [
-                (r["term"], int(r["df"])) for r in self._dict_cache.values()
-            ]
-            items.sort(key=lambda p: (-p[1], p[0]))
-            dfs = np.array([d for _, d in items], dtype=np.float64)
-            terms_sorted = [t for t, _ in items]
-            order = None
-            tbl = None
-        else:
-            # web-scale fallback (VERDICT r5 #4): the whole-vocabulary
-            # sort and the budget prefix cut stay in Arrow/numpy; only
-            # the CHOSEN head terms ever materialize as Python objects
-            # (a 10^8-term dictionary must not become a Python list at
-            # service open)
-            tbl = self._dict_ds.to_table(columns=["term", "df"])
-            order = pc.sort_indices(
-                tbl, sort_keys=[("df", "descending"), ("term", "ascending")]
-            )
-            dfs = (
-                pc.take(tbl.column("df"), order)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-            )
-            terms_sorted = None
-        # prefix-budget rule (≡ the old greedy loop): always take the top
-        # term, then extend while cumulative estimated decode bytes fit
+        # the whole-vocabulary sort and the budget prefix cut stay in
+        # Arrow/numpy; only the CHOSEN head terms ever materialize as
+        # Python objects (a 10^8-term dictionary must not become a Python
+        # list at service open)
+        tbl = self._dict_ds.to_table(columns=["term", "df"])
+        order = pc.sort_indices(
+            tbl, sort_keys=[("df", "descending"), ("term", "ascending")]
+        )
+        dfs = (
+            pc.take(tbl.column("df"), order)
+            .to_numpy(zero_copy_only=False)
+            .astype(np.float64)
+        )
+        # prefix-budget rule: always take the top term, then extend while
+        # cumulative estimated decode bytes fit
         cum = np.cumsum(dfs * 24.0)
         n = int(np.searchsorted(cum, budget, side="right"))
         if cum.size:
@@ -502,10 +488,7 @@ class IndexReader:
         if n == 0:
             return {"terms": 0, "est_mb": 0.0}
         est = float(cum[n - 1])
-        if terms_sorted is not None:
-            chosen = terms_sorted[:n]
-        else:
-            chosen = pc.take(tbl.column("term"), order[:n]).to_pylist()
+        chosen = pc.take(tbl.column("term"), order[:n]).to_pylist()
         tps = self.fetch(chosen)
         self.ensure_payloads(tps.values())
         for tp in tps.values():

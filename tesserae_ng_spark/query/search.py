@@ -63,16 +63,12 @@ class Hit:
 
 
 class Searcher:
-    def __init__(
-        self, index_dir: str, lang: str = "en", warm_mb: float | None = None
-    ):
+    def __init__(self, index_dir: str, lang: str = "en", warm_mb: float = 0.0):
         self.reader = IndexReader(index_dir)
         self.lang = lang
         # opt-in head-term warmer (IndexReader.warm_top_terms — the
-        # Solr warming-query analog for latency-sensitive services).
-        # warm_mb=None reads TNG_WARM_MB (default 0 = stay lazy).
-        if warm_mb is None:
-            warm_mb = float(os.environ.get("TNG_WARM_MB", "0") or 0)
+        # Solr warming-query analog for latency-sensitive services);
+        # the default 0 stays lazy
         self.warm_info = (
             self.reader.warm_top_terms(warm_mb) if warm_mb > 0 else None
         )

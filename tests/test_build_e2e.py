@@ -93,17 +93,22 @@ def test_build_and_bm25(spark, corpus):
     assert bm25_topk_oracle(td, ["zzzznotaterm"], 10, n_docs, avg_dl).count() == 0
 
 
-def test_merged_postings_invariant_to_stage_a_fragmentation(spark, corpus):
+def test_merged_postings_invariant_to_stage_a_fragmentation(
+    spark, corpus, monkeypatch
+):
     """The build's exchange-free stage A (encode_blocks_local) emits
     per-partition term FRAGMENTS instead of complete term groups; the
-    final index must be byte-identical to the exchange-based stage A
-    (encode_shard_blocks) because the merge fully decodes, lexsorts and
-    re-blocks every (term, salt) group — this is the invariance the
+    final index must be byte-identical to merging complete term groups
+    (encode_term_group per term via applyInPandas, a reference with no
+    production exchange code) because the merge fully decodes, lexsorts
+    and re-blocks every (term, salt) group — this is the invariance the
     one-exchange build topology rests on."""
+    from tesserae_ng_spark.index import encode
     from tesserae_ng_spark.index.build import prepare_docs, term_doc_table
     from tesserae_ng_spark.index.encode import (
+        SHARD_BLOCK_SCHEMA,
         encode_blocks_local,
-        encode_shard_blocks,
+        encode_term_group,
     )
     from tesserae_ng_spark.index.merge import merge_shard_blocks
 
@@ -115,7 +120,7 @@ def test_merged_postings_invariant_to_stage_a_fragmentation(spark, corpus):
     def final_rows(stage_a):
         out = merge_shard_blocks(
             stage_a, n_docs=n_docs, avg_dl=avg_dl,
-            target_postings_per_salt=64, block_size=16,
+            target_postings_per_salt=64, block_size=16, n_buckets=4,
         ).collect()
         return sorted(
             (
@@ -129,14 +134,17 @@ def test_merged_postings_invariant_to_stage_a_fragmentation(spark, corpus):
         )
 
     frag = final_rows(encode_blocks_local(td, block_size=16))
-    grouped = final_rows(encode_shard_blocks(td, block_size=16))
-    prepared.unpersist()
+    grouped = final_rows(
+        td.groupBy("term").applyInPandas(
+            lambda g: encode_term_group(g, 16), SHARD_BLOCK_SCHEMA
+        )
+    )
     assert len(frag) > 50
     assert frag == grouped
 
     # tiny buffer cap → maximal fragmentation (several sorted chunks per
     # partition) — still the same final index
-    tiny = final_rows(
-        encode_blocks_local(td, block_size=16, max_buffer_rows=64)
-    )
+    monkeypatch.setattr(encode, "ENCODE_BUFFER_ROWS", 64)
+    tiny = final_rows(encode_blocks_local(td, block_size=16))
+    prepared.unpersist()
     assert tiny == frag

@@ -92,102 +92,105 @@ def test_empty_everything():
     assert encode_positions([], np.empty(0)) == b""
 
 
-# ---------------------------------------------------------------------------
-# PForDelta (optional v2 codec; CODECS registry)
-# ---------------------------------------------------------------------------
+def _blocks(df) -> list[tuple]:
+    """Block rows as comparable tuples (Arrow binaries → bytes)."""
+    return [
+        tuple(bytes(x) if isinstance(x, (bytes, bytearray)) else x for x in r)
+        for r in df.itertuples(index=False)
+    ]
 
 
-@given(
-    st.lists(
-        st.integers(min_value=0, max_value=2**64 - 1), min_size=0, max_size=300
-    )
-)
-@settings(max_examples=200, deadline=None)
-def test_pfor_roundtrip(vals):
-    from tesserae_ng_spark.index.codec import pfor_decode, pfor_encode
-
-    v = np.array(vals, dtype=np.uint64)
-    got = pfor_decode(pfor_encode(v))
-    assert got.dtype == np.uint64
-    assert np.array_equal(got, v)
-
-
-@given(
-    st.lists(st.integers(min_value=1, max_value=250), min_size=32, max_size=128)
-)
-@settings(max_examples=50, deadline=None)
-def test_pfor_denser_than_varint_on_clustered_gaps(gaps):
-    from tesserae_ng_spark.index.codec import pfor_encode
-
-    v = np.array(gaps, dtype=np.uint64)
-    # small clustered gaps (the posting-delta common case): PFor packs at
-    # ~8 bits/value where LEB128 needs >=8 bits + per-value framing
-    assert len(pfor_encode(v)) <= len(varint_encode(v)) + 16
-
-
-def test_codec_registry_dispatch():
-    from tesserae_ng_spark.index.codec import CODECS
-
-    v = np.array([5, 0, 2**40, 17], dtype=np.uint64)
-    for name, (enc, dec) in CODECS.items():
-        assert np.array_equal(dec(enc(v)), v), name
-
-
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["alpha", "beta", "gamma"]),
-            st.integers(min_value=-(2**62), max_value=2**62),
-            st.integers(min_value=1, max_value=7),
-            st.integers(min_value=1, max_value=300),
-        ),
-        min_size=1,
-        max_size=120,
-        unique_by=lambda r: (r[0], r[1]),
+_ROWS = st.lists(
+    st.tuples(
+        st.sampled_from(["alpha", "beta", "gamma", "d"]),
+        st.integers(min_value=-(2**62), max_value=2**62),
+        st.integers(min_value=1, max_value=7),
+        st.integers(min_value=1, max_value=300),
     ),
-    st.sampled_from([4, 16, 128]),
+    min_size=1,
+    max_size=150,
+    unique_by=lambda r: (r[0], r[1]),
 )
-@settings(max_examples=60, deadline=None)
-def test_batch_encoder_equals_per_group(rows, block_size):
-    """encode_blocks_batch (one numpy pass over MANY term groups) must be
-    byte-identical to encode_term_group run per group — the batch path is
-    the production stage-A encoder, the per-group one its spec."""
+
+
+def _postings_frame(rows, seed: int, with_pos: bool):
+    """Sorted (term, doc_id) postings frame in the stage-A input shape."""
     import pandas as pd
 
-    from tesserae_ng_spark.index.encode import (
-        encode_blocks_batch,
-        encode_term_group,
-    )
-
-    rng = np.random.RandomState(7)
+    rng = np.random.RandomState(seed)
     recs = [
-        (t, d, tf, bytes(rng.randint(0, 255, size=tf).astype(np.uint8)), dl)
+        (
+            t, d, tf,
+            bytes(rng.randint(0, 255, size=tf).astype(np.uint8))
+            if with_pos else None,
+            dl,
+        )
         for t, d, tf, dl in rows
     ]
-    pdf = pd.DataFrame(
+    return pd.DataFrame(
         recs, columns=["term", "doc_id", "tf", "positions", "dl"]
     ).sort_values(["term", "doc_id"], kind="mergesort").reset_index(drop=True)
-    want = pd.concat(
-        [encode_term_group(g, block_size) for _, g in pdf.groupby("term", sort=True)],
+
+
+def _per_group(frame, block_size: int):
+    """The spec: encode_term_group run once per term group of a pandas frame."""
+    import pandas as pd
+
+    from tesserae_ng_spark.index.encode import encode_term_group
+
+    return pd.concat(
+        [
+            encode_term_group(g, block_size)
+            for _, g in frame.groupby("term", sort=True)
+        ],
         ignore_index=True,
     )
-    got = encode_blocks_batch(pdf, block_size)
-    assert len(got) == len(want)
-    for c in want.columns:
-        w, g = want[c].tolist(), got[c].tolist()
-        g = [bytes(x) if isinstance(x, (bytes, bytearray)) else x for x in g]
-        w = [bytes(x) if isinstance(x, (bytes, bytearray)) else x for x in w]
-        assert w == g, c
-    # no-positions shape degrades identically
-    pdf2 = pdf.copy()
-    pdf2["positions"] = None
-    want2 = pd.concat(
-        [encode_term_group(g, block_size) for _, g in pdf2.groupby("term", sort=True)],
-        ignore_index=True,
-    )
-    got2 = encode_blocks_batch(pdf2, block_size)
-    for c in want2.columns:
-        assert want2[c].tolist() == got2[c].tolist(), c
+
+
+@given(_ROWS, st.sampled_from([4, 16, 128]))
+@settings(max_examples=60, deadline=None)
+def test_batch_encoder_equals_per_group(rows, block_size):
+    """encode_batch_arrow (the production stage-A body, one pass over MANY
+    term groups) must be byte-identical to encode_term_group run per group
+    — its spec — with positions and with the no-positions shape."""
+    import pyarrow as pa
+
+    from tesserae_ng_spark.index.encode import encode_batch_arrow
+
+    for with_pos in (True, False):
+        pdf = _postings_frame(rows, 7, with_pos)
+        got = encode_batch_arrow(
+            pa.Table.from_pandas(pdf, preserve_index=False), block_size
+        ).to_pandas()
+        want = _per_group(pdf, block_size)
+        assert list(got.columns) == list(want.columns)
+        assert _blocks(got) == _blocks(want)
+
+
+@given(_ROWS, st.sampled_from([4, 128]), st.booleans())
+@settings(max_examples=40, deadline=None)
+def test_arrow_encoder_equals_pandas_batch(rows, block_size, with_pos):
+    """encode_batch_arrow over an Arrow table must emit rows byte-identical
+    to the per-group encoder over the same pandas batch — including via a
+    nonzero Arrow slice offset, the shape the runner's carry produces."""
+    import pyarrow as pa
+
+    from tesserae_ng_spark.index.encode import encode_batch_arrow
+
+    pdf = _postings_frame(rows, 11, with_pos)
+    tbl = pa.Table.from_pandas(pdf, preserve_index=False)
+    got = encode_batch_arrow(tbl, block_size).to_pandas()
+    assert _blocks(got) == _blocks(_per_group(pdf, block_size))
+    if len(pdf) > 2:
+        # sliced table (carry shape): encode rows of the LAST whole group
+        # only, via slice — offsets must honor the slice
+        terms_np = pdf["term"].to_numpy()
+        last_start = int(np.flatnonzero(terms_np == terms_np[-1])[0])
+        got_tail = encode_batch_arrow(tbl.slice(last_start), block_size)
+        want_tail = _per_group(
+            pdf.iloc[last_start:].reset_index(drop=True), block_size
+        )
+        assert _blocks(got_tail.to_pandas()) == _blocks(want_tail)
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=50))
@@ -236,73 +239,3 @@ def test_varint_scratch_pool_no_stale_bytes():
         [0x00, 0x01, 0x7F, 0x80, 0x01, 0xAC, 0x02, 0x80, 0x80, 0x01]
     )
     assert lens.tolist() == [1, 1, 1, 2, 2, 3]
-
-
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["alpha", "beta", "gamma", "d"]),
-            st.integers(min_value=-(2**62), max_value=2**62),
-            st.integers(min_value=1, max_value=7),
-            st.integers(min_value=1, max_value=300),
-        ),
-        min_size=1,
-        max_size=150,
-        unique_by=lambda r: (r[0], r[1]),
-    ),
-    st.sampled_from([4, 128]),
-    st.booleans(),
-)
-@settings(max_examples=40, deadline=None)
-def test_arrow_encoder_equals_pandas_batch(rows, block_size, with_pos):
-    """encode_batch_arrow (the production mapInArrow body) must emit rows
-    byte-identical to encode_blocks_batch — including via a nonzero Arrow
-    slice offset, the shape the runner's carry produces."""
-    import pandas as pd
-    import pyarrow as pa
-
-    from tesserae_ng_spark.index.encode import (
-        encode_batch_arrow,
-        encode_blocks_batch,
-    )
-
-    rng = np.random.RandomState(11)
-    recs = [
-        (
-            t, d, tf,
-            bytes(rng.randint(0, 255, size=tf).astype(np.uint8))
-            if with_pos else None,
-            dl,
-        )
-        for t, d, tf, dl in rows
-    ]
-    pdf = pd.DataFrame(
-        recs, columns=["term", "doc_id", "tf", "positions", "dl"]
-    ).sort_values(["term", "doc_id"], kind="mergesort").reset_index(drop=True)
-    want = encode_blocks_batch(pdf, block_size)
-    tbl = pa.Table.from_pandas(pdf, preserve_index=False)
-    got = encode_batch_arrow(tbl, block_size)
-    gdf = got.to_pandas()
-    assert len(gdf) == len(want)
-    for c in want.columns:
-        w = [bytes(x) if isinstance(x, (bytes, bytearray)) else x
-             for x in want[c].tolist()]
-        g = [bytes(x) if isinstance(x, (bytes, bytearray)) else x
-             for x in gdf[c].tolist()]
-        assert w == g, c
-    if len(pdf) > 2:
-        # sliced table (carry shape): encode rows of the LAST whole group
-        # only, via slice — offsets must honor the slice
-        terms_np = pdf["term"].to_numpy()
-        last_start = int(np.flatnonzero(terms_np == terms_np[-1])[0])
-        got_tail = encode_batch_arrow(tbl.slice(last_start), block_size)
-        want_tail = encode_blocks_batch(
-            pdf.iloc[last_start:].reset_index(drop=True), block_size
-        )
-        gt = got_tail.to_pandas()
-        for c in want_tail.columns:
-            w = [bytes(x) if isinstance(x, (bytes, bytearray)) else x
-                 for x in want_tail[c].tolist()]
-            g = [bytes(x) if isinstance(x, (bytes, bytearray)) else x
-                 for x in gt[c].tolist()]
-            assert w == g, c

@@ -174,10 +174,10 @@ def test_merge_arrow_slice_offset():
 
 
 def test_merge_chunking_invariant(spark, monkeypatch):
-    """grouped_arrow_sorted(max_rows=...) re-chunks batches at group
-    boundaries; results must be independent of the chunk bound (the
-    sf0.001 e2e suite never exceeds the production bound, so pin it
-    explicitly with a tiny one)."""
+    """The merge's grouped map re-chunks batches at group boundaries
+    (MERGE_BATCH_MAX_ROWS); results must be independent of the chunk
+    bound (the sf0.001 e2e suite never exceeds the production bound, so
+    pin it explicitly with a tiny one)."""
     import pandas as pd
 
     from tesserae_ng_spark.index import merge as M
@@ -201,7 +201,7 @@ def test_merge_chunking_invariant(spark, monkeypatch):
         monkeypatch.setattr(M, "MERGE_BATCH_MAX_ROWS", max_rows)
         out = M.merge_shard_blocks(
             sdf, n_docs=N_DOCS, avg_dl=AVG_DL,
-            target_postings_per_salt=24, block_size=8,
+            target_postings_per_salt=24, block_size=8, n_buckets=3,
         ).collect()
         return sorted(
             (

@@ -56,41 +56,11 @@ def test_global_sort_limit_is_take_ordered(spark, sf_dir, registry):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_build_has_no_token_level_shuffle(spark, corpus):
-    """The legacy exchange-based stage A's only wide exchange keys on term
-    (block encoding); token-granular rows never cross a shuffle
-    (document-at-a-time indexing). asof window + term grouping = 1-2
-    exchanges total (the production path is pinned tighter below)."""
-    from tesserae_ng_spark.index.build import prepare_docs, term_doc_table
-    from tesserae_ng_spark.index.encode import encode_shard_blocks
-
-    import re
-
-    td = term_doc_table(prepare_docs(corpus))
-    blocks = encode_shard_blocks(td)
-    plan = explain_str(blocks)
-    # formatted mode lists each node in tree AND details → count node ids
-    # count exchanges in the executed tree only: anything under an
-    # InMemoryRelation is the cached input's historical build plan and is
-    # not re-executed on cache hit
-    tree = plan.split("\n\n")[0]
-    cut = tree.find("InMemoryRelation")
-    live = tree[: cut if cut != -1 else len(tree)]
-    n_exchanges = len(re.findall(r"Exchange \(\d+\)", live))
-    # asof window + term grouping, nothing else (may collapse to 1 when the
-    # cache manager substitutes an earlier test's cached prepared subtree)
-    assert 1 <= n_exchanges <= 2, f"n_exchanges={n_exchanges}\n{tree[:4000]}"
-    # Arrow-native grouped encoder: partition-sorted MapInArrow
-    # (grouped.py grouped_arrow_sorted) — per-batch cost, zero per-row
-    # Python objects, not per-term-group plumbing
-    assert "MapInArrow" in plan
-
-
 def test_production_stage_a_is_exchange_free(spark, corpus):
     """The PRODUCTION stage A (encode_blocks_local, used by build_index)
     adds ZERO exchanges of its own: each partition lexsorts and encodes
     its own fragments in the Arrow worker, so the build's one wide
-    exchange is the merge's (term, salt) shuffle of compressed blocks.
+    exchange is the merge's shuffle of compressed blocks.
     The asof dedup window upstream of term_doc_table is the only
     exchange allowed in this plan."""
     from tesserae_ng_spark.index.build import prepare_docs, term_doc_table

@@ -1,8 +1,11 @@
 """Process-level side effects of the session factory and the worker
-daemon: ``get_spark`` leaves this process's environment alone, and the
+daemon: ``get_spark`` leaves this process's environment alone, the
 daemon's pre-imports cannot write to the stdout that carries its port
-handshake to the JVM."""
+handshake to the JVM, and the package reads only deployment and
+allocator settings from the environment."""
 
+import ast
+import glob
 import os
 import sys
 
@@ -42,3 +45,53 @@ def test_preimport_prints_go_to_stderr(tmp_path, monkeypatch, capsys):
     captured = capsys.readouterr()
     assert captured.out == ""
     assert "imported the stub" in captured.err
+
+
+# deployment (session) and allocator (memtune, daemon) settings: the only
+# environment the package may read. Engine behaviour is set by arguments.
+ENV_ALLOWLIST = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_MASTER",
+    "SPARK_DRIVER_MEM",
+    "SPARK_GRAFT_LOCAL_DIR",
+    "TNG_MALLOC_TUNE",
+    "TNG_NO_MALLOC_TUNE",
+    "TNG_FAST_DAEMON",
+}
+
+
+def _is_environ(node) -> bool:
+    return (isinstance(node, ast.Attribute) and node.attr == "environ") or (
+        isinstance(node, ast.Name) and node.id == "environ"
+    )
+
+
+def _env_reads(tree: ast.AST, where: str) -> set[str]:
+    """Names read via os.environ.get/setdefault(...), os.environ[...] and
+    os.getenv(...); a non-literal name is reported as itself so it cannot
+    slip past the allowlist."""
+    keys = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            f = node.func
+            if (f.attr in ("get", "setdefault") and _is_environ(f.value)) or (
+                f.attr == "getenv"
+            ):
+                keys.append(node.args[0] if node.args else None)
+        elif isinstance(node, ast.Subscript) and _is_environ(node.value):
+            keys.append(node.slice)
+    return {
+        k.value
+        if isinstance(k, ast.Constant) and isinstance(k.value, str)
+        else f"<non-literal at {where}:{getattr(k, 'lineno', '?')}>"
+        for k in keys
+    }
+
+
+def test_package_env_reads_are_allowlisted():
+    pkg = os.path.dirname(tesserae_ng_spark.__file__)
+    found = set()
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            found |= _env_reads(ast.parse(f.read()), os.path.relpath(path, pkg))
+    assert found == ENV_ALLOWLIST

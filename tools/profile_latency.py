@@ -1,7 +1,7 @@
 """Profile bench.py's single-query latency loop (single_qps) standalone.
 
 Reproduces the exact bench shape — 60-query reference set (seed 42),
-warmed searcher (TNG_WARM_MB semantics), 200 sequential queries — against
+warmed searcher (Searcher warm_mb=64), 200 sequential queries — against
 an existing profile index (tools/profile_positional.py builds it), and
 prints p50/p99/qps plus the cProfile hot list. VERDICT r4 #6: single_qps
 moved 132 → 104 between driver runs; one profiled run decides whether
