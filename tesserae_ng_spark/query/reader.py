@@ -1,12 +1,23 @@
 """Index reader: dictionary lookup + posting-block fetch, Spark-free.
 
 A single query must not pay JVM/job-scheduling latency (the reference
-serves queries from a always-warm Solr core), so the read path is
-pyarrow.dataset with predicate pushdown:
+serves queries from a always-warm Solr core), so the reader keeps its own
+term index over the Parquet files, as Lucene keeps a segment's term index
+open and seeks straight to a term's blocks:
 
-- ``bucket = pmod(xxhash64(term), n_buckets)`` prunes hive partitions,
-- ``term IN (...)`` prunes parquet row groups (blocks were written sorted
-  by term within each bucket partition).
+- ``bucket = pmod(xxhash64(term), n_buckets)`` picks the hive partition
+  (``postings/bucket=b/``); file discovery is the ``pyarrow.dataset``
+  built once at open;
+- the first read that touches a bucket opens each of its files once as a
+  ``pq.ParquetFile`` handle and records every row group's min/max of
+  ``term``, ``salt`` and ``block_id`` from the footer statistics (the
+  footer index). Blocks were written sorted by term within each bucket,
+  so a term's rows sit in the few row groups whose term range covers it;
+- every later read prunes row groups on that index (term set, and for
+  payload loads the requested (salt, block_id) windows), reads the
+  survivors from the open handles and filters their rows — no dataset
+  scan per cache miss. The dictionary is one term-sorted file and is
+  pruned the same way when it is too large to pin.
 
 The same reader runs inside executors for distributed batch queries
 (query/search.py search_batch) — local FS here, object store in prod.
@@ -18,8 +29,10 @@ import json
 import os
 
 import numpy as np
-import pyarrow.dataset as ds
+import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 
 from tesserae_ng_spark.index.codec import (
     decode_positions,
@@ -402,8 +415,82 @@ _PAYLOAD_COLS = ("doc_ids", "tfs", "dls")
 
 # single-block demand loads are expanded to this many contiguous blocks
 # (readahead): WAND's next advance usually lands nearby, and one pyarrow
-# scan per block would drown selective queries in per-scan fixed costs
+# read per block would drown selective queries in per-read fixed costs
 PAYLOAD_SEGMENT_BLOCKS = 32
+
+# footer-index key of the dictionary (postings buckets are keyed by int)
+_DICT = "dictionary"
+
+
+class _Footers:
+    """Row-group index of one part of the index (a postings bucket or the
+    dictionary), read once from the Parquet footers of its files: the open
+    file handle and row-group ordinal of every non-empty row group, plus
+    its min/max of ``term``, ``salt`` and ``block_id``. A column without
+    statistics gets the full range, so its row group is always read."""
+
+    def __init__(self, files: list[str]):
+        i64 = np.iinfo(np.int64)
+        self.groups: list[tuple] = []
+        t_lo, t_hi, t_any, ints = [], [], [], []
+        for f in files:
+            pf = pq.ParquetFile(f)
+            md = pf.metadata
+            col = {md.schema.column(j).name: j for j in range(md.num_columns)}
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                if rg.num_rows == 0:
+                    continue
+                self.groups.append((pf, g))
+                st = self._stats(rg, col.get("term"))
+                t_any.append(st is None)
+                t_lo.append("" if st is None else st[0])
+                t_hi.append("" if st is None else st[1])
+                row = []
+                for c in ("salt", "block_id"):
+                    st = self._stats(rg, col.get(c))
+                    row += (i64.min, i64.max) if st is None else st
+                ints.append(row)
+        self.t_lo = np.array(t_lo, dtype=object)
+        self.t_hi = np.array(t_hi, dtype=object)
+        self.t_any = np.array(t_any, dtype=bool)  # no term stats
+        ints = np.array(ints, dtype=np.int64).reshape(-1, 4)
+        self.s_lo, self.s_hi, self.b_lo, self.b_hi = ints.T
+
+    @staticmethod
+    def _stats(rg, j):
+        if j is None:
+            return None
+        st = rg.column(j).statistics
+        if st is None or not st.has_min_max:
+            return None
+        return [st.min, st.max]
+
+    def select(self, terms: np.ndarray, where: dict | None) -> np.ndarray:
+        """Ordinals of the row groups a read must touch: the sorted
+        ``terms`` meet the group's term range and, with ``where``
+        ({salt: sorted block ids}), some requested salt lies in its salt
+        range with one of that salt's blocks in its block range — the
+        per-column min/max rule of a dataset scan's pushdown."""
+        keep = self.t_any | _meets(terms, self.t_lo, self.t_hi)
+        if where is not None:
+            hit = np.zeros(keep.size, dtype=bool)
+            for s, bl in where.items():
+                hit |= (
+                    (self.s_lo <= s) & (s <= self.s_hi)
+                    & _meets(bl, self.b_lo, self.b_hi)
+                )
+            keep &= hit
+        return np.flatnonzero(keep)
+
+
+def _meets(vals: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """Per range ``[lo[i], hi[i]]``: does any of the sorted ``vals`` fall
+    in it? One searchsorted over all ranges."""
+    if vals.size == 0:
+        return np.zeros(lo.size, dtype=bool)
+    i = np.searchsorted(vals, lo)
+    return (i < vals.size) & (vals[np.minimum(i, vals.size - 1)] <= hi)
 
 
 class IndexReader:
@@ -435,11 +522,17 @@ class IndexReader:
         self._post_ds = ds.dataset(
             os.path.join(index_dir, "postings"), partitioning="hive"
         )
+        # each part's files, from the discovery above; its footers load on
+        # first touch (_read_rows) so open stays a directory listing
+        self._files: dict = {_DICT: self._dict_ds.files}
+        for f in self._post_ds.files:
+            b = int(os.path.basename(os.path.dirname(f)).partition("=")[2])
+            self._files.setdefault(b, []).append(f)
+        self._footers: dict = {}
         # small dictionaries (≤ dict_pin_max_terms) are cheaper to pin in
-        # memory than to filter-scan per query; web-scale vocabularies fall
-        # back to pushdown reads (parquet row-group stats on the
-        # term-sorted file) — the fallback is pinned by tests with
-        # dict_pin_max_terms=0
+        # memory than to read per query; web-scale vocabularies fall back
+        # to footer-pruned reads of the term-sorted file (_read_rows) —
+        # the fallback is pinned by tests with dict_pin_max_terms=0
         self._dict_cache: dict[str, dict] | None = None
         if self._dict_ds.count_rows() <= dict_pin_max_terms:
             tbl = self._dict_ds.to_table()
@@ -452,6 +545,9 @@ class IndexReader:
         # payload rows the scans actually returned: equals the requested
         # block count when selection is tight (tests pin no over-select)
         self.payload_rows_scanned = 0
+        # parquet row groups read by any read (dictionary, metadata,
+        # payloads): tests pin that footer pruning skips the rest
+        self.row_groups_read = 0
 
     def warm_top_terms(self, budget_mb: float = 64.0) -> dict:
         """Solr/Lucene warming-query analog: at service open, prefetch AND
@@ -500,11 +596,49 @@ class IndexReader:
         terms = sorted(set(terms))
         if self._dict_cache is not None:
             return {t: self._dict_cache[t] for t in terms if t in self._dict_cache}
-        tbl = self._dict_ds.to_table(filter=pc.field("term").isin(terms))
-        out = {}
-        for row in tbl.to_pylist():
-            out[row["term"]] = row
-        return out
+        tbl = self._read_rows([_DICT], terms, self._dict_ds.schema.names)
+        return {row["term"]: row for row in tbl.to_pylist()}
+
+    def _read_rows(
+        self, parts, terms, columns, where: dict | None = None
+    ) -> pa.Table:
+        """Rows of ``terms`` in the given parts (postings buckets or
+        ``_DICT``) → one table of ``columns``. Row groups are pruned on the
+        parts' footer index (loaded on first touch), read from the open
+        handles and filtered to ``term IN terms`` and, with ``where``
+        ({salt: sorted block ids}), to exactly those (salt, block_id)
+        pairs. The filter columns are read along and kept."""
+        tarr = np.array(sorted(terms), dtype=object)
+        cols = list(dict.fromkeys(
+            ["term", *(("salt", "block_id") if where is not None else ()),
+             *columns]
+        ))
+        tset = pa.array(tarr.tolist(), type=pa.string())
+        want = None
+        if where is not None:
+            want = np.concatenate([
+                (np.int64(s) << 32) | bl for s, bl in where.items()
+            ])
+        parts_out = []
+        for p in parts:
+            fi = self._footers.get(p)
+            if fi is None:
+                fi = self._footers[p] = _Footers(self._files.get(p, []))
+            for g in fi.select(tarr, where):
+                pf, rg = fi.groups[g]
+                tbl = pf.read_row_group(rg, columns=cols, use_threads=False)
+                self.row_groups_read += 1
+                mask = pc.is_in(tbl.column("term"), value_set=tset)
+                if want is not None:
+                    mask = pa.array(
+                        mask.to_numpy(zero_copy_only=False)
+                        & np.isin(self._row_keys(tbl), want)
+                    )
+                parts_out.append(tbl.filter(mask))
+        if not parts_out:
+            schema = (self._dict_ds if _DICT in parts else self._post_ds).schema
+            parts_out.append(pa.schema([schema.field(c) for c in cols]).empty_table())
+        return pa.concat_tables(parts_out)
 
     def fetch(self, terms: list[str]) -> dict[str, TermPostings]:
         """postings blocks for terms, metadata-sorted, lazily decodable."""
@@ -528,8 +662,8 @@ class IndexReader:
         return cached
 
     def _fetch_uncached(self, terms: list[str]) -> dict[str, TermPostings]:
-        """METADATA-ONLY block fetch: no payload (binary) columns cross the
-        scan. A head term's postings are GBs at web scale — eagerly pulling
+        """METADATA-ONLY block fetch: no payload (binary) columns are
+        read. A head term's postings are GBs at web scale — eagerly pulling
         them made skipping pointless (block-max WAND skipped the *decode*
         but the I/O had already happened). Payloads load on demand via
         ensure_payloads/_load_payloads."""
@@ -542,13 +676,7 @@ class IndexReader:
         meta_cols = _META_COLS + (
             ("block_max_tf", "block_min_dl") if has_sf else ()
         )
-        tbl = self._post_ds.to_table(
-            filter=(
-                pc.field("bucket").isin(buckets)
-                & pc.field("term").isin(sorted(dic))
-            ),
-            columns=list(meta_cols),
-        )
+        tbl = self._read_rows(buckets, dic, meta_cols)
         # struct-of-arrays construction (VERDICT r5 #5): group the scan by
         # term (one C-side dictionary-encode) and order blocks by packed
         # (salt, block_id) key (== docID order) with ONE lexsort; each
@@ -611,12 +739,13 @@ class IndexReader:
         self, tp: TermPostings, idxs: np.ndarray, with_positions: bool,
         segment: bool,
     ) -> None:
-        """One pyarrow scan for the requested block indices' payload bytes.
+        """One footer-pruned read for the requested block indices' payload
+        bytes.
 
         ``segment``: expand each demanded block to a PAYLOAD_SEGMENT_BLOCKS
         readahead window of its neighbors (list-position aligned) — WAND's
-        next landing is usually nearby, and per-block scans would pay the
-        per-scan fixed cost hundreds of times per term."""
+        next landing is usually nearby, and per-block reads would pay the
+        per-read fixed cost hundreds of times per term."""
         n = tp.n_blocks
         if segment and n > idxs.size:
             wstarts = np.unique(idxs // PAYLOAD_SEGMENT_BLOCKS)
@@ -634,38 +763,18 @@ class IndexReader:
             # blocks, but an empty set must not fall through to `& sel`
             # with sel=None — ADVICE r4)
             return
-        # per-salt block predicates, not salt.isin × block_id.isin: the
-        # cross product pulled same-numbered blocks from EVERY listed salt,
-        # reading payload bytes the window never asked for (ADVICE r3 /
-        # VERDICT r3 #6). Block ids per salt are contiguous readahead
-        # windows, so a range predicate covers each salt exactly.
+        # per-salt block sets, not salt × block_id ranges: the cross product
+        # pulled same-numbered blocks from EVERY listed salt, reading
+        # payload bytes the window never asked for (ADVICE r3 / VERDICT r3
+        # #6). Each salt's block range also prunes row groups, so a head
+        # term spanning many row groups reads only the window's.
         s_arr = tp.blk_salt[idxs]
         b_arr = tp.blk_id[idxs]
-        sel = None
-        for s in np.unique(s_arr):
-            bl = np.sort(b_arr[s_arr == s])
-            if bl[-1] - bl[0] + 1 == bl.size:  # contiguous → range pred
-                e = (
-                    (pc.field("salt") == int(s))
-                    & (pc.field("block_id") >= int(bl[0]))
-                    & (pc.field("block_id") <= int(bl[-1]))
-                )
-            else:
-                e = (pc.field("salt") == int(s)) & pc.field("block_id").isin(
-                    [int(x) for x in bl]
-                )
-            sel = e if sel is None else (sel | e)
-        cols = ["salt", "block_id", *_PAYLOAD_COLS] + (
-            ["positions"] if with_positions else []
-        )
-        tbl = self._post_ds.to_table(
-            filter=(
-                (pc.field("bucket") == tp._bucket)
-                & (pc.field("term") == tp.term)
-                & sel
-            ),
-            columns=cols,
-        )
+        where = {
+            int(s): np.sort(b_arr[s_arr == s]) for s in np.unique(s_arr)
+        }
+        cols = [*_PAYLOAD_COLS] + (["positions"] if with_positions else [])
+        tbl = self._read_rows([tp._bucket], [tp.term], cols, where)
         self.payload_scans += 1
         self.payload_rows_scanned += tbl.num_rows
         self._attach_payloads(tp, tbl, with_positions)
@@ -767,7 +876,7 @@ class IndexReader:
     def ensure_payloads(
         self, tps, with_positions: bool = False, max_df: int | None = None,
     ) -> None:
-        """Bulk payload load for many terms in ONE scan — the batch/dense
+        """Bulk payload load for many terms in ONE read — the batch/dense
         path (a slice's union of query terms, or an exhaustive scorer
         touching every block anyway). ``max_df`` skips huge terms so a
         batch prefetch can stay lazy on exactly the head terms where
@@ -780,15 +889,11 @@ class IndexReader:
         ]
         if not need:
             return
-        cols = ["term", "salt", "block_id", *_PAYLOAD_COLS] + (
+        cols = ["salt", "block_id", *_PAYLOAD_COLS] + (
             ["positions"] if with_positions else []
         )
-        tbl = self._post_ds.to_table(
-            filter=(
-                pc.field("bucket").isin(sorted({tp._bucket for tp in need}))
-                & pc.field("term").isin(sorted(tp.term for tp in need))
-            ),
-            columns=cols,
+        tbl = self._read_rows(
+            sorted({tp._bucket for tp in need}), [tp.term for tp in need], cols
         )
         self.payload_scans += 1
         self.payload_rows_scanned += tbl.num_rows
@@ -807,10 +912,12 @@ class IndexReader:
         term. 8 bytes/doc — fine to ~100M docs per query node; beyond
         that, shard the index (batch mode already runs per-shard)."""
         if getattr(self, "_global_docs", None) is None:
-            import numpy as np
-
-            d = ds.dataset(self.docs_path())
-            arr = d.to_table(columns=["doc_id"]).column("doc_id").to_numpy()
+            files = ds.dataset(self.docs_path()).files
+            arr = np.concatenate([
+                pq.ParquetFile(f).read(columns=["doc_id"], use_threads=False)
+                .column("doc_id").to_numpy()
+                for f in files
+            ])
             self._global_docs = np.sort(arr)
         return self._global_docs
 

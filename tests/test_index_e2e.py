@@ -399,3 +399,200 @@ def test_warm_top_terms_arrow_fallback_same_selection(index_dir):
             assert want == [by_rank[0]]
         if budget_mb == tie_mb:
             assert n == tie
+
+
+POSITIONAL = [
+    ("sort merge", "phrase"),
+    ("hash join", "phrase"),
+    ("hash join", "proximity"),
+    ("sort merge join", "proximity"),
+]
+
+
+def _hits(searcher, q, mode="bm25"):
+    return [
+        (h.rank, h.doc_id, h.score)
+        for h in searcher.search(q, k=10, mode=mode, window=6)
+    ]
+
+
+def _row_group_stats(path):
+    """[(term, salt, block_id) min/max per row group, or None where a
+    column has no statistics] of one parquet file, straight from its
+    footer."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    col = {md.schema.column(j).name: j for j in range(md.num_columns)}
+    out = []
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        st = {}
+        for c in ("term", "salt", "block_id"):
+            s = rg.column(col[c]).statistics if c in col else None
+            st[c] = (s.min, s.max) if s is not None and s.has_min_max else None
+        out.append(st)
+    return out
+
+
+@pytest.fixture(scope="module")
+def small_rg_dir(index_dir, tmp_path_factory):
+    """The fixture index with its postings and dictionary rewritten into
+    4-row row groups (same ``bucket=b`` dirs, rows in term order), plus one
+    file written without statistics in the head term's bucket holding
+    another term's rows."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tesserae_ng_spark.query.reader import _xxhash64_str
+
+    out = str(tmp_path_factory.mktemp("small_rg") / "index")
+    shutil.copytree(index_dir, out)
+    head_bucket = _xxhash64_str("the") % 4
+    moved = None
+    for bdir in sorted(glob.glob(f"{out}/postings/bucket=*")):
+        files = sorted(glob.glob(f"{bdir}/*.parquet"))
+        tbl = pa.concat_tables([pq.ParquetFile(f).read() for f in files])
+        for f in files:
+            os.remove(f)
+        tbl = tbl.sort_by([("term", "ascending"), ("salt", "ascending"),
+                           ("block_id", "ascending")])
+        if bdir.endswith(f"bucket={head_bucket}"):
+            moved = max(t for t in tbl.column("term").to_pylist() if t != "the")
+            is_moved = pc.equal(tbl.column("term"), moved)
+            pq.write_table(tbl.filter(is_moved), f"{bdir}/part-nostats.parquet",
+                           write_statistics=False)
+            tbl = tbl.filter(pc.invert(is_moved))
+        pq.write_table(tbl, f"{bdir}/part-00000.parquet", row_group_size=4)
+    (dict_file,) = glob.glob(f"{out}/dictionary/*.parquet")
+    tbl = pq.ParquetFile(dict_file).read()
+    os.remove(dict_file)
+    pq.write_table(tbl.sort_by("term"), f"{out}/dictionary/part-00000.parquet",
+                   row_group_size=4)
+    assert moved is not None
+    return out, head_bucket, moved
+
+
+def test_footer_pruned_reads_small_row_groups(index_dir, small_rg_dir,
+                                              monkeypatch):
+    """Footer pruning on an index of many small row groups: results equal
+    the original index's, a single-term fetch reads only the row groups
+    whose term range covers the term, a head-term segment load reads only
+    the row groups whose (term, salt, block_id) ranges meet the readahead
+    window, and a row group without statistics is read whenever its
+    bucket is touched."""
+    import numpy as np
+
+    from tesserae_ng_spark.query import reader as reader_mod
+    from tesserae_ng_spark.query.reader import IndexReader, _xxhash64_str
+
+    small, head_bucket, moved = small_rg_dir
+    ref, got = Searcher(index_dir), Searcher(small)
+    for q in QUERIES:
+        assert _hits(got, q) == _hits(ref, q), q
+    for q, mode in POSITIONAL:
+        assert _hits(got, q, mode) == _hits(ref, q, mode), (q, mode)
+
+    bdir = f"{small}/postings/bucket={head_bucket}"
+    stats = [
+        st for f in sorted(glob.glob(f"{bdir}/*.parquet"))
+        for st in _row_group_stats(f)
+    ]
+    n_nostats = sum(st["term"] is None for st in stats)
+    assert n_nostats == 1
+
+    def covers(st, t):
+        return st["term"] is None or st["term"][0] <= t <= st["term"][1]
+
+    # single-term fetch: a bucket-mate of the head term (neither it nor
+    # the term moved to the stats-less file)
+    probe = next(
+        t for t in sorted(IndexReader(index_dir)._dict_cache)
+        if _xxhash64_str(t) % 4 == head_bucket and t not in ("the", moved)
+    )
+    want = sum(covers(st, probe) for st in stats)
+    assert n_nostats < want < len(stats)
+    r = IndexReader(small)
+    r.fetch([probe])
+    assert r.row_groups_read == want
+
+    # unpinned dictionary lookup: same pruning on the term-sorted file
+    (dict_file,) = glob.glob(f"{small}/dictionary/*.parquet")
+    dstats = _row_group_stats(dict_file)
+    fallback = IndexReader(small, dict_pin_max_terms=0)
+    assert fallback.lookup([probe]) == r.lookup([probe])
+    assert fallback.row_groups_read == sum(covers(st, probe) for st in dstats)
+    assert fallback.row_groups_read < len(dstats)
+
+    # head-term segment load: the window's (salt, block_id) ranges prune
+    # the head term's own row groups
+    monkeypatch.setattr(reader_mod, "PAYLOAD_SEGMENT_BLOCKS", 4)
+    r = IndexReader(small)
+    tp = r.fetch(["the"])["the"]
+    assert tp.n_blocks > 8
+    bi = tp.n_blocks // 2
+    window = np.arange(bi // 4 * 4, min(bi // 4 * 4 + 4, tp.n_blocks))
+    wanted = set(zip(tp.blk_salt[window].tolist(), tp.blk_id[window].tolist()))
+
+    def meets_window(st):
+        if st["salt"] is None or st["block_id"] is None:
+            return True
+        return any(
+            st["salt"][0] <= s <= st["salt"][1]
+            and st["block_id"][0] <= b <= st["block_id"][1]
+            for s, b in wanted
+        )
+
+    head_groups = sum(covers(st, "the") for st in stats)
+    want = sum(covers(st, "the") and meets_window(st) for st in stats)
+    assert n_nostats < want < head_groups
+    before = r.row_groups_read
+    tp.decode_block(int(bi))
+    assert r.row_groups_read - before == want
+    assert r.payload_rows_scanned == window.size
+    assert not tp._ids_miss[window].any()
+
+
+def test_no_dataset_scan_after_open(index_dir, monkeypatch):
+    """After open, lookups and bm25, phrase and proximity searches read
+    through the footer index alone. pyarrow's Dataset is an immutable
+    extension type whose methods cannot be patched, so every dataset the
+    readers hold, and every one ``pyarrow.dataset.dataset`` opens after
+    this point, is wrapped so that its scan methods raise; file discovery
+    and schemas still pass through."""
+    import pyarrow.dataset as ds
+
+    from tesserae_ng_spark.query.reader import IndexReader
+
+    terms = ["the", "window", "join", "totallyabsentterm"]
+    ref = Searcher(index_dir)
+    want_lookup = ref.reader.lookup(terms)
+    want = {
+        (q, mode): _hits(ref, q, mode)
+        for q, mode in [(q, "bm25") for q in QUERIES] + POSITIONAL
+    }
+    readers = [IndexReader(index_dir), IndexReader(index_dir, dict_pin_max_terms=0)]
+
+    class NoScan:
+        def __init__(self, real):
+            self._real = real
+
+        def __getattr__(self, name):
+            if name in ("to_table", "scanner", "to_batches", "head", "take",
+                        "count_rows"):
+                raise AssertionError(f"dataset scan after open: {name}")
+            return getattr(self._real, name)
+
+    open_dataset = ds.dataset
+    monkeypatch.setattr(ds, "dataset", lambda *a, **kw: NoScan(open_dataset(*a, **kw)))
+    for r in readers:
+        r._post_ds = NoScan(r._post_ds)
+        r._dict_ds = NoScan(r._dict_ds)
+        assert r.lookup(terms) == want_lookup
+        s = Searcher.__new__(Searcher)
+        s.reader, s.lang = r, "en"
+        for (q, mode), hits in want.items():
+            assert _hits(s, q, mode) == hits, (q, mode)
