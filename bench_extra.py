@@ -58,7 +58,7 @@ def bench_vocab(sf_dir: str, replicas: int):
 def main():
     piece = sys.argv[1] if len(sys.argv) > 1 else "large"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     sf = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
     replicas = int(os.environ.get("SPARK_GRAFT_REPLICAS", "8" if sf == "0.1" else "1"))
     idx_dir = os.environ.get(

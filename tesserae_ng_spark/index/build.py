@@ -61,7 +61,6 @@ def prepare_docs(
     corpus: DataFrame,
     lang: str | None = None,
     use_stored_text: bool = False,
-    width: int | None = None,
 ) -> DataFrame:
     """corpus → (doc_id, url, lang, terms, tfs, offs, lens, pos, dl):
     flat per-doc term vectors (primitive arrays + one varint position
@@ -81,14 +80,7 @@ def prepare_docs(
     # count is exempt from AQE coalescing — vital because the downstream
     # UDF chain is CPU-per-row heavy, and AQE's byte-based coalescing would
     # otherwise serialize 80 MB of html onto 1-2 Python workers.
-    # ``width`` overrides the default 2×parallelism: callers running
-    # SEVERAL of these plans concurrently (build_index's partition jobs)
-    # divide the core budget between them, so the fleet keeps 2×cores
-    # tasks in flight total instead of 2×cores PER JOB (r7: 256 UDF tasks
-    # + 512 output files → 64 tasks + 128 files at bench shape; final
-    # index bytes are invariant to stage-A fragmentation, pinned in
-    # tests/test_build_e2e.py).
-    n_parts = width or df.sparkSession.sparkContext.defaultParallelism * 2
+    n_parts = df.sparkSession.sparkContext.defaultParallelism * 2
     df = df.repartition(n_parts, "url")
     df = asof_latest(df)
     dv = (

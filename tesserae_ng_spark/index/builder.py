@@ -1,23 +1,35 @@
-"""Index build orchestration: resumable shard builds + salted merge.
+"""Index build orchestration: one keyed stage-A pass + salted merge.
 
-Layout under ``out_dir``:
+Layout under an index dir:
     shards/postings/part=i/   stage-A block rows (tf/dl, unscored)
-    shards/docs/part=i/       (doc_id, url, lang, dl) per shard
-    manifests/part-i.json     per-partition lineage (status/metrics/checksum)
+    shards/docs/part=i/       (doc_id, url, lang, dl) per part
+    manifests/part-i.json     per-part lineage (status/metrics/checksum)
     postings/bucket=b/        final scored blocks (partitioned by term bucket)
     dictionary/               term → df/cf/max_score/n_blocks/bucket
-    docs/                     consolidated docs table
     stats.json                corpus stats + build metrics
     manifests/merge.json      stage-B lineage
 
-Stage A partitions the corpus by ``pmod(xxhash64(url), n_parts)`` — one
-Spark job per partition, each independently resumable. Because a url maps
-to exactly one partition, the as-of latest-crawl dedupe inside a partition
-IS the global dedupe, and each (term, doc) pair lands in exactly one shard
-(df/cf from block metadata is exact).
+Every build runs the same two stages. Stage A (``_stage_a``) is ONE
+Spark pass over the corpus: analyze each doc once, key it by
+``pmod(doc_id, n_keys)`` (doc_id = xxhash64(url)), encode
+partition-locally, write through a staging dir with ``partitionBy``,
+move each key's dirs to its destination ``(index_dir, part)`` and commit
+its manifest. Stage B (``_merge_all``) merges one index dir's parts.
+The three callers differ only in where the keys go:
 
-Scale note: on a real Iceberg corpus the partition predicate would be the
-table's own partitioning (crawl date / bucket(url)) so each stage-A job
+- ``build_index``: key = part, every part goes to ``out_dir``;
+- ``build_sharded_indexes`` (index/sharded_build.py): key = shard, each
+  shard goes to its own dir as part 0;
+- the streaming batch writer (streaming/incremental.py): one key.
+
+Because a url maps to exactly one key, the as-of latest-crawl dedupe is
+global, and each (term, doc) pair lands in exactly one part (df/cf from
+block metadata is exact). Resume is per key: a rerun analyzes only the
+keys whose manifest is missing or stale, filtering the corpus on the key
+before the analyzer runs.
+
+Scale note: on a real Iceberg corpus the key predicate would be the
+table's own partitioning (crawl date / bucket(url)) so a resumed pass
 scans only its slice of manifests instead of hash-filtering a full scan;
 the orchestration, manifests, and merge are unchanged.
 """
@@ -26,7 +38,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import tempfile
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,7 +74,7 @@ class BuildResult:
     built_parts: list[int]
     skipped_parts: list[int]
     wall_s: float
-    # wall per build phase (parts = shard builds incl. UDF analysis;
+    # wall per build phase (parts = stage A incl. UDF analysis;
     # merge_postings = global block merge + bucketed write; merge_dict =
     # dictionary build + stats) — scaling-protocol observability: the
     # serial fraction at 4N hides here, not in the per-doc work
@@ -83,73 +98,217 @@ def _source_desc(source) -> str:
         return source
     # content-derived id for DataFrame sources: the canonicalized logical
     # plan's semantic hash — two builds from different plans never collide
-    # into one resume lineage (they used to collapse to 'dataframe')
-    try:
-        return f"df:{source._jdf.queryExecution().analyzed().semanticHash()}"
-    except Exception:
-        return "dataframe"
+    # into one resume lineage
+    return f"df:{source._jdf.queryExecution().analyzed().semanticHash()}"
 
 
-def _write_shard(
-    prepared: DataFrame, out_dir: str, part: int, block_size: int,
-    with_positions: bool = True,
-) -> dict:
-    """Write one shard's docs + postings, collecting manifest metrics from
-    Observations ON the write jobs themselves — no extra metric pass and no
-    parquet read-back (each used to double shard I/O)."""
-    from pyspark.sql import Observation
+def _move_partition(staging_root: str, key: int, dst: str) -> bool:
+    """Rename a partitionBy output dir into a part's layout; returns
+    False when the key produced no rows (no partition dir exists)."""
+    src = os.path.join(staging_root, f"key={key}")
+    shutil.rmtree(dst, ignore_errors=True)
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    if not os.path.isdir(src):
+        return False
+    shutil.move(src, dst)
+    return True
 
-    doc_obs = Observation(f"docs-{part}")
-    docs = docs_table(prepared).observe(
-        doc_obs,
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").alias("tokens"),
+
+def _write_empty(schema, dst: str) -> None:
+    """Empty-key edge (tiny corpora): write an empty parquet dir with
+    the given Spark schema so downstream readers see a valid (0-row)
+    table. Written via pyarrow — a zero-row Spark write can emit no data
+    files at all (just _SUCCESS), which breaks schema inference on
+    read-back."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    os.makedirs(dst, exist_ok=True)
+    pq.write_table(
+        to_arrow_schema(schema).empty_table(),
+        os.path.join(dst, "part-00000.parquet"),
     )
 
-    td_dl = term_doc_table(prepared)
-    if not with_positions:
-        td_dl = td_dl.withColumn("positions", F.lit(None).cast("binary"))
-    blk_obs = Observation(f"blocks-{part}")
-    # exchange-free stage A (encode_blocks_local): partition-local numpy
-    # sort + fragment encode; the only wide exchange in the whole build
-    # is stage B's (term, salt) merge, which moves compressed blocks
-    blocks = encode_blocks_local(td_dl, block_size=block_size).observe(
-        blk_obs,
-        F.count(F.lit(1)).alias("blocks"),
-        # observe() forbids distinct aggregates; HLL is single-pass. The
-        # exact term count lives in the final dictionary — the manifest
-        # count is lineage metadata, not a query input.
-        F.approx_count_distinct("term").alias("terms"),
-        F.sum(F.crc32(F.col("doc_ids"))).alias("crc"),
-    )
-    # both writes consume the persisted `prepared`; submit them
-    # concurrently (r7, guide §2.6): the cache's per-block locks make the
-    # first job materialize each partition while the other waits, so the
-    # analyzer chain runs once and the docs job back-fills the encode
-    # job's tail instead of serializing after it.
-    from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_docs = pool.submit(
-            lambda: docs.write.mode("overwrite").parquet(
-                f"{out_dir}/shards/docs/part={part}"
-            )
-        )
-        f_blocks = pool.submit(
-            lambda: blocks.write.mode("overwrite").parquet(
-                f"{out_dir}/shards/postings/part={part}"
-            )
-        )
-        f_docs.result()
-        f_blocks.result()
-    d, b = doc_obs.get, blk_obs.get
-    return {
-        "row_count": int(d["n_docs"] or 0),
-        "total_tokens": int(d["tokens"] or 0),
-        "term_count": int(b["terms"] or 0),
-        "block_count": int(b["blocks"] or 0),
-        "checksum": str(b["crc"]),
+def _finalize_empty(out_dir: str, n_buckets: int) -> BuildResult:
+    """Valid 0-doc index: empty dictionary/postings + zeroed stats, same
+    layout the merge would produce (Searcher/global_shard_stats open it
+    like any other index). A 0-row Spark write emits no data files, so
+    the merge cannot produce these itself."""
+    from tesserae_ng_spark.schemas import DICTIONARY_SCHEMA, POSTINGS_SCHEMA
+
+    for sub in ("postings", "dictionary"):
+        shutil.rmtree(os.path.join(out_dir, sub), ignore_errors=True)
+    _write_empty(POSTINGS_SCHEMA, os.path.join(out_dir, "postings", "bucket=0"))
+    _write_empty(DICTIONARY_SCHEMA, os.path.join(out_dir, "dictionary"))
+    stats = {
+        "n_docs": 0, "avg_dl": 0.0, "total_tokens": 0,
+        "n_terms": 0, "n_blocks": 0, "n_buckets": n_buckets,
     }
+    with open(os.path.join(out_dir, "stats.json"), "w") as f:
+        json.dump(stats, f, sort_keys=True)
+    write_manifest(
+        out_dir, 99999,
+        {"status": "done", "stage": "merge", "input_fingerprint": "merge",
+         **stats},
+    )
+    return BuildResult(
+        out_dir=out_dir, n_docs=0, avg_dl=0.0, total_tokens=0, n_terms=0,
+        n_blocks=0, built_parts=[], skipped_parts=[], wall_s=0.0,
+        phases={"merge_postings_s": 0.0, "merge_dict_s": 0.0},
+    )
+
+
+def _stage_a(
+    spark: SparkSession,
+    corpus: DataFrame,
+    dests: dict[int, tuple[str, int]],
+    fingerprints: dict[int, str],
+    lang: str | None,
+    use_stored_text: bool,
+    with_positions: bool,
+    block_size: int,
+    resume: bool = True,
+    fail_after_part: int | None = None,  # test hook: crash mid-build
+) -> tuple[list[int], list[int]]:
+    """The one stage-A pass: a doc with key k = ``pmod(doc_id,
+    len(dests))`` goes to part ``dests[k][1]`` of index dir
+    ``dests[k][0]`` (``dests`` is keyed 0..len(dests)-1).
+
+    Keys whose manifest is done with ``fingerprints[k]`` are skipped
+    (when ``resume``); the corpus is filtered to the remaining keys
+    BEFORE the analyzer runs, so done keys cost no UDF time. Each built
+    key's dirs are moved into place and its manifest committed in key
+    order; a key with no rows gets schema-only dirs. Returns
+    ``(built, skipped)`` key lists."""
+    t0 = time.time()
+    n_keys = len(dests)
+    built = [
+        k for k in sorted(dests)
+        if not (resume and partition_done(*dests[k], fingerprints[k]))
+    ]
+    skipped = [k for k in sorted(dests) if k not in built]
+    if not built:
+        return built, skipped
+    if skipped:
+        corpus = corpus.filter(
+            F.pmod(F.xxhash64("url"), F.lit(n_keys)).isin(built)
+        )
+    root = dests[built[0]][0]
+    os.makedirs(root, exist_ok=True)
+    staging = tempfile.mkdtemp(prefix="_stage_a_", dir=root)
+    try:
+        prepared = prepare_docs(
+            corpus, lang=lang, use_stored_text=use_stored_text
+        ).persist()
+        try:
+            # doc_id IS xxhash64(url) (build.py), so the key is a plain
+            # mod of the column we already carry
+            key_of = F.pmod(F.col("doc_id"), F.lit(n_keys)).cast("int")
+            # cluster by key before the partitionBy write (small files
+            # hurt twice): without it every one of the
+            # 2×cores analysis tasks writes a file into EVERY key dir,
+            # and the metric read-back + per-index merge scans each
+            # re-pay the file-open cost. The extra exchange moves compact
+            # rows (docs) / compressed blocks, not html.
+            docs = docs_table(prepared).withColumn("key", key_of)
+            td = term_doc_table(prepared).withColumn("key", key_of)
+            if not with_positions:
+                td = td.withColumn("positions", F.lit(None).cast("binary"))
+            # exchange-free encode: partition-local (key, term, doc_id)
+            # sort + fragment encode — the merges re-block
+            # deterministically
+            blocks = encode_blocks_local(td, block_size=block_size)
+            # schemas captured from the DataFrames (not read-back): an
+            # ALL-empty corpus writes no data files at all
+            docs_schema = docs_table(prepared).schema
+            posts_schema = blocks.drop("key").schema
+
+            # the three actions share the persisted `prepared` and are
+            # independent — submit them concurrently: the
+            # cache's per-block locks make whichever job arrives first
+            # materialize each partition while the others wait, so the
+            # analyzer chain runs exactly once and the small jobs
+            # back-fill the big one's straggler tail.
+            def _write(df, table):
+                (
+                    df.repartition(n_keys, "key")
+                    .write.mode("overwrite")
+                    .partitionBy("key")
+                    .parquet(f"{staging}/{table}")
+                )
+
+            def _doc_metrics():
+                # from the persisted per-doc vectors — no staging
+                # read-back
+                return {
+                    r["key"]: r
+                    for r in docs.groupBy("key")
+                    .agg(
+                        F.count(F.lit(1)).alias("n_docs"),
+                        F.sum("dl").alias("tokens"),
+                    )
+                    .collect()
+                }
+
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                f_docs = pool.submit(_write, docs, "docs")
+                f_blocks = pool.submit(_write, blocks, "postings")
+                f_dmet = pool.submit(_doc_metrics)
+                f_docs.result()
+                f_blocks.result()
+                dmet = f_dmet.result()
+        finally:
+            prepared.unpersist()
+
+        # per-key block metrics from one grouped pass over the staging
+        # postings. A partitionBy write of 0 rows emits no key dirs —
+        # guard the read-back so the all-empty corpus degrades to empty
+        # metrics instead of an AnalysisException.
+        posts_root = f"{staging}/postings"
+        bmet = (
+            {
+                r["key"]: r
+                for r in spark.read.parquet(posts_root)
+                .groupBy("key")
+                .agg(
+                    F.count(F.lit(1)).alias("blocks"),
+                    F.approx_count_distinct("term").alias("terms"),
+                    F.sum(F.crc32(F.col("doc_ids"))).alias("crc"),
+                )
+                .collect()
+            }
+            if os.path.isdir(posts_root)
+            and any(e.startswith("key=") for e in os.listdir(posts_root))
+            else {}
+        )
+        for k in built:
+            out_dir, part = dests[k]
+            for table, schema in (("docs", docs_schema), ("postings", posts_schema)):
+                dst = f"{out_dir}/shards/{table}/part={part}"
+                if not _move_partition(f"{staging}/{table}", k, dst):
+                    _write_empty(schema, dst)
+            d, b = dmet.get(k), bmet.get(k)
+            write_manifest(
+                out_dir,
+                part,
+                {
+                    "status": "done",
+                    "input_fingerprint": fingerprints[k],
+                    "row_count": int(d["n_docs"]) if d else 0,
+                    "total_tokens": int(d["tokens"] or 0) if d else 0,
+                    "term_count": int(b["terms"]) if b else 0,
+                    "block_count": int(b["blocks"]) if b else 0,
+                    "checksum": str(b["crc"]) if b else "0",
+                    "wall_ms": int((time.time() - t0) * 1000),
+                    "fused": n_keys,
+                },
+            )
+            if fail_after_part is not None and k >= fail_after_part:
+                raise RuntimeError(f"injected failure after partition {k}")
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    return built, skipped
 
 
 def build_index(
@@ -167,15 +326,12 @@ def build_index(
     fail_after_part: int | None = None,  # test hook: crash mid-build
 ) -> BuildResult:
     """Build (or resume) the full index. ``source`` = str for load_corpus
-    or a ready corpus DataFrame."""
+    or a ready corpus DataFrame. Stage A keys docs by part
+    (``pmod(xxhash64(url), n_parts)``) and sends every part to
+    ``out_dir``; each part resumes on its own."""
     t_start = time.time()
-    os.makedirs(out_dir, exist_ok=True)
-    if isinstance(source, str):
-        corpus = load_corpus(spark, source)
-    else:
-        corpus = source
+    corpus = load_corpus(spark, source) if isinstance(source, str) else source
     source_desc = _source_desc(source)
-
     expected = {
         part: _fingerprint(
             source_desc, n_parts, part, lang,
@@ -183,51 +339,11 @@ def build_index(
         )
         for part in range(n_parts)
     }
-    built, skipped, todo = [], [], []
-    for part, fp in expected.items():
-        if resume and partition_done(out_dir, part, fp):
-            skipped.append(part)
-        else:
-            todo.append((part, fp))
-
-    if fail_after_part is not None:
-        # test hook path: deterministic ordering, crash mid-build
-        for part, fp in todo:
-            _build_partition(
-                spark, corpus, out_dir, part, n_parts, fp, lang,
-                use_stored_text, with_positions, block_size,
-            )
-            built.append(part)
-            if part >= fail_after_part:
-                raise RuntimeError(f"injected failure after partition {part}")
-    elif todo:
-        # partition jobs are independent (distinct output paths + manifests):
-        # submit them concurrently so per-job fixed costs (scheduling, UDF
-        # worker spin-up, small final stages) overlap. Spark's scheduler
-        # interleaves the jobs across the same executor slots.
-        from concurrent.futures import ThreadPoolExecutor
-
-        max_conc = min(4, len(todo))
-        # divide the 2×cores task budget between the concurrent jobs: each
-        # job alone at 2×parallelism width made max_conc × 2 × cores tiny
-        # tasks (and as many output files) for the same total work
-        width = max(
-            4, spark.sparkContext.defaultParallelism * 2 // max_conc
-        )
-        with ThreadPoolExecutor(max_workers=max_conc) as pool:
-            futs = {
-                pool.submit(
-                    _build_partition, spark, corpus, out_dir, part, n_parts,
-                    fp, lang, use_stored_text, with_positions, block_size,
-                    width,
-                ): part
-                for part, fp in todo
-            }
-            for f, part in futs.items():
-                f.result()
-                built.append(part)
-        built.sort()
-
+    built, skipped = _stage_a(
+        spark, corpus, {part: (out_dir, part) for part in expected},
+        expected, lang, use_stored_text, with_positions, block_size,
+        resume=resume, fail_after_part=fail_after_part,
+    )
     t_parts = time.time() - t_start
     result = _merge_all(
         spark, out_dir, target_postings_per_salt, n_buckets, block_size,
@@ -239,35 +355,6 @@ def build_index(
     result.wall_s = time.time() - t_start
     result.phases["parts_s"] = round(t_parts, 3)
     return result
-
-
-def _build_partition(
-    spark, corpus: DataFrame, out_dir: str, part: int, n_parts: int,
-    fingerprint: str, lang, use_stored_text, with_positions, block_size,
-    width: int | None = None,
-) -> None:
-    t0 = time.time()
-    corpus_i = corpus.filter(F.pmod(F.xxhash64("url"), F.lit(n_parts)) == part)
-    # document-at-a-time term vectors: (term, doc_id, tf, positions, dl)
-    # with NO token-level shuffle and no dl join (build.py). persist() so
-    # the analyze UDF runs once for both the docs and postings writes.
-    prepared = prepare_docs(
-        corpus_i, lang=lang, use_stored_text=use_stored_text, width=width
-    ).persist()
-    try:
-        metrics = _write_shard(prepared, out_dir, part, block_size, with_positions)
-    finally:
-        prepared.unpersist()
-    write_manifest(
-        out_dir,
-        part,
-        {
-            "status": "done",
-            "input_fingerprint": fingerprint,
-            **metrics,
-            "wall_ms": int((time.time() - t0) * 1000),
-        },
-    )
 
 
 def _merge_all(
@@ -312,8 +399,10 @@ def _merge_all(
             )
         manifests = [by_part[p] for p in expected]
     n_docs = sum(m["row_count"] for m in manifests)
+    if n_docs == 0:
+        return _finalize_empty(out_dir, n_buckets)
     total_tokens = sum(m["total_tokens"] for m in manifests)
-    avg_dl = (total_tokens / n_docs) if n_docs else 0.0
+    avg_dl = total_tokens / n_docs
 
     t_merge = time.time()
     shard_blocks = spark.read.parquet(f"{out_dir}/shards/postings")

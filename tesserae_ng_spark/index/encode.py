@@ -1,10 +1,12 @@
-"""Stage A block encoding: per-shard postings → compressed block rows.
+"""Stage A block encoding: keyed postings → compressed block rows.
 
-Runs inside one part's build job (index/builder.py): each input
-partition's (term, doc_id, tf, dl, positions) postings are sorted by
-(term, doc_id) and encoded into 128-doc blocks (delta+varint;
-index/codec.py) by a partition-local ``mapInArrow`` — no exchange and no
-per-row Python (``encode_blocks_local``).
+Runs inside the build's one stage-A pass (index/builder.py
+``_stage_a``): each input partition's (key, term, doc_id, tf, dl,
+positions) postings are sorted by (key, term, doc_id) and encoded into
+128-doc blocks (delta+varint; index/codec.py) by a partition-local
+``mapInArrow`` — no exchange and no per-row Python
+(``encode_blocks_local``). The key names the part or shard a row's
+stage-A output belongs to.
 
 Shard blocks carry tf/dl but NO scores: idf needs global df, which only
 exists after all shards are built — stage B (index/merge.py) attaches
@@ -188,28 +190,28 @@ def encode_batch_arrow(tbl, block_size: int = BLOCK_SIZE):
     )
 
 
-SHARDED_BLOCK_SCHEMA = T.StructType(
-    [T.StructField("shard", T.IntegerType(), False), *SHARD_BLOCK_SCHEMA.fields]
+KEYED_BLOCK_SCHEMA = T.StructType(
+    [T.StructField("key", T.IntegerType(), False), *SHARD_BLOCK_SCHEMA.fields]
 )
 
 
-def encode_sharded_batch(tbl, block_size: int = BLOCK_SIZE):
-    """Arrow batch of complete (shard, term) groups → block rows + shard.
+def encode_keyed_batch(tbl, block_size: int = BLOCK_SIZE):
+    """Arrow batch of complete (key, term) groups → block rows + key.
 
-    Thin fan-out over ``encode_batch_arrow``: slice the batch at shard
-    boundaries (a handful per batch — shards ≪ terms) and encode each
-    slice with the single-shard batch encoder, so the per-block bytes are
-    the same code path (and therefore byte-identical) as ``build_index``.
+    Thin fan-out over ``encode_batch_arrow``: slice the batch at key
+    boundaries (a handful per batch — keys ≪ terms) and encode each
+    slice with ``encode_batch_arrow``, so every key's block bytes come
+    from the same code path.
     """
     import pyarrow as pa
 
     n = tbl.num_rows
     if n == 0:
         return None
-    shard = tbl.column("shard").combine_chunks().to_numpy(zero_copy_only=False)
+    key = tbl.column("key").combine_chunks().to_numpy(zero_copy_only=False)
     change = np.empty(n, dtype=bool)
     change[0] = True
-    change[1:] = shard[1:] != shard[:-1]
+    change[1:] = key[1:] != key[:-1]
     starts = np.flatnonzero(change)
     ends = np.append(starts[1:], n)
     outs = []
@@ -221,12 +223,12 @@ def encode_sharded_batch(tbl, block_size: int = BLOCK_SIZE):
             pa.RecordBatch.from_arrays(
                 [
                     pa.array(
-                        np.full(rb.num_rows, shard[s], dtype=np.int32),
+                        np.full(rb.num_rows, key[s], dtype=np.int32),
                         pa.int32(),
                     ),
                     *rb.columns,
                 ],
-                names=["shard", *rb.schema.names],
+                names=["key", *rb.schema.names],
             )
         )
     if not outs:
@@ -240,25 +242,28 @@ def encode_sharded_batch(tbl, block_size: int = BLOCK_SIZE):
 def encode_blocks_local(
     term_doc_dl: DataFrame,
     block_size: int = BLOCK_SIZE,
-    shard_aware: bool = False,
 ) -> DataFrame:
     """Partition-LOCAL block encode: ZERO exchange.
+
+    Input rows are (key, term, doc_id, tf, positions, dl); ``key`` is the
+    stage-A output the row belongs to (index/builder.py ``_stage_a``: a
+    part of a union index or a shard). The output is KEYED_BLOCK_SCHEMA.
 
     Why stage A needs no term shuffle: stage B (index/merge.py) fully
     decodes, lexsorts, and re-encodes every (term, salt) group anyway —
     block-grouping by term across partitions buys the final index
     nothing. Stage A's only real job is COMPRESSING the rows the merge's
     exchange will move. So: accumulate each input partition in the Arrow
-    worker, numpy-lexsort by (term, doc_id) (5-10x cheaper than the JVM
-    row sort, and the sort is the one build body that does NOT scale
+    worker, numpy-lexsort by (key, term, doc_id) (5-10x cheaper than the
+    JVM row sort, and the sort is the one build body that does NOT scale
     with cores), then batch-encode per-partition term fragments. The
     merge's exchange then moves delta+varint blocks instead of raw
     posting rows (~3-5x fewer bytes), and the build has exactly ONE wide
     exchange end to end.
 
     Fragmentation is bounded and harmless: one block row per
-    (partition, term) per ``block_size`` docs; because fragments are
-    doc_id-sorted runs, their doc ranges stay tight, so the merge's
+    (partition, key, term) per ``block_size`` docs; because fragments
+    are doc_id-sorted runs, their doc ranges stay tight, so the merge's
     salt-straddle routing stays ~1 salt per fragment even for head
     terms. Final index bytes are IDENTICAL to encoding complete term
     groups (the merge's output is invariant to input block fragmentation
@@ -270,15 +275,8 @@ def encode_blocks_local(
     transient arena is slow on lazily-backed VM memory (memtune.py). A
     larger partition is encoded in several sorted chunks, which only
     adds fragments; final index bytes are invariant to the bound.
-
-    ``shard_aware=True`` (fused sharded build): rows carry a ``shard``
-    column; the local sort keys on (shard, term, doc_id) and the output
-    prepends the shard column.
     """
     max_rows = ENCODE_BUFFER_ROWS
-    sort_fn = _sorted_shard_table if shard_aware else _sorted_term_table
-    enc = encode_sharded_batch if shard_aware else encode_batch_arrow
-    schema = SHARDED_BLOCK_SCHEMA if shard_aware else SHARD_BLOCK_SCHEMA
 
     def runner(batches):
         import pyarrow as pa
@@ -297,7 +295,7 @@ def encode_blocks_local(
                 else pa.Table.from_batches([buf[0]])
             )
             buf, rows = [], 0
-            rb = enc(sort_fn(t), block_size)
+            rb = encode_keyed_batch(_sorted_keyed_table(t), block_size)
             if rb is not None and rb.num_rows:
                 yield rb
 
@@ -308,11 +306,11 @@ def encode_blocks_local(
                 yield from flush()
         yield from flush()
 
-    return term_doc_dl.mapInArrow(runner, schema)
+    return term_doc_dl.mapInArrow(runner, KEYED_BLOCK_SCHEMA)
 
 
-def _sorted_term_table(t):
-    """Stable in-worker sort by (term, doc_id) via numpy lexsort over
+def _sorted_keyed_table(t):
+    """Stable in-worker sort by (key, term, doc_id) via numpy lexsort over
     C-side dictionary codes (term group ORDER is first-appearance — the
     merge re-groups by hash, so only contiguity matters)."""
     t = t.combine_chunks()
@@ -321,15 +319,5 @@ def _sorted_term_table(t):
         .to_numpy(zero_copy_only=False)
     )
     ids = t.column("doc_id").to_numpy(zero_copy_only=False)
-    return t.take(np.lexsort((ids, codes)))
-
-
-def _sorted_shard_table(t):
-    t = t.combine_chunks()
-    codes = (
-        t.column("term").combine_chunks().dictionary_encode().indices
-        .to_numpy(zero_copy_only=False)
-    )
-    ids = t.column("doc_id").to_numpy(zero_copy_only=False)
-    shards = t.column("shard").to_numpy(zero_copy_only=False)
-    return t.take(np.lexsort((ids, codes, shards)))
+    keys = t.column("key").to_numpy(zero_copy_only=False)
+    return t.take(np.lexsort((ids, codes, keys)))

@@ -1,114 +1,44 @@
-"""One-pass fused build of N doc-sharded indexes.
+"""N doc-sharded indexes from one corpus pass.
 
 The sharded deployment (BASELINE.json north_star: per-shard builds,
 distributed-IDF query) partitions docs by ``pmod(xxhash64(url), n_shards)``
 into independent shard indexes. Building them as N separate
-``build_index`` jobs is correct and independently resumable, but each job
-re-pays the expensive part — the per-doc analyzer chain plus a full
-corpus scan to filter its slice — and N small merges serialize per-job
-fixed costs (measured: 8 shard builds at sf0.1x8 cost ~3x one union build
-over the same total docs).
+``build_index`` jobs is correct, but each job re-pays the expensive part
+— the per-doc analyzer chain plus a full corpus scan to filter its slice
+— and N small merges serialize per-job fixed costs.
 
-``build_sharded_indexes`` runs the analysis ONCE over the full corpus
-with a shard key, writes stage-A artifacts hash-partitioned by
-(shard, term) in a single exchange, renames the per-shard partition dirs
-into N standalone index dirs (same on-disk layout as ``build_index``),
-then runs the existing stage-B merge per shard. Per-shard outputs are
+``build_sharded_indexes`` is the shard-keyed case of the build's one
+stage-A pass (index/builder.py ``_stage_a``): analysis runs ONCE over
+the corpus, each shard's stage-A dirs land in its own index dir as part
+0, and the existing stage-B merge runs per shard. Per-shard outputs are
 BYTE-IDENTICAL to independent ``build_index`` runs over the filtered
-corpus (pinned in tests/test_sharded_build.py): stage A produces the same
-(term, doc) groups per shard in the same doc_id order, and stage B is the
-same deterministic merge.
+corpus (pinned in tests/test_sharded_build.py): stage B is the same
+deterministic merge, invariant to stage-A fragmentation.
 
 At 10^12 docs this is the natural build topology: shards are a STORAGE
 layout (constant per cluster), so one corpus pass fans out to all of them
-through the same (shard, term, salt)-keyed exchange the single-index
-build already uses — no extra shuffle, no repeated scans, and the merge
-work per shard is what the independent builds would have done anyway.
-Orchestration-level resume is preserved at shard granularity: a rerun
-whose shard manifests are all present (fingerprint-matched) skips
-straight to the merges; the fused stage A is itself one resumable unit
-in a larger per-corpus-partition orchestration.
+— no extra shuffle, no repeated scans, and the merge work per shard is
+what the independent builds would have done anyway. Resume is per shard:
+a rerun analyzes only the shards whose manifest is missing or stale and
+then runs every shard's merge.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-import numpy as np
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from tesserae_ng_spark.index.build import docs_table, prepare_docs, term_doc_table
 from tesserae_ng_spark.index.builder import (
     BuildResult,
     _fingerprint,
     _merge_all,
     _source_desc,
+    _stage_a,
 )
-from tesserae_ng_spark.index.encode import encode_blocks_local
-from tesserae_ng_spark.index.manifest import partition_done, write_manifest
 from tesserae_ng_spark.schemas import BLOCK_SIZE
 from tesserae_ng_spark.sources.corpus import load_corpus
-
-
-def _move_partition(staging_root: str, shard: int, dst: str) -> bool:
-    """Rename a partitionBy output dir into a shard's layout; returns
-    False when the shard produced no rows (no partition dir exists)."""
-    src = os.path.join(staging_root, f"shard={shard}")
-    shutil.rmtree(dst, ignore_errors=True)
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    if not os.path.isdir(src):
-        return False
-    shutil.move(src, dst)
-    return True
-
-
-def _write_empty(schema, dst: str) -> None:
-    """Empty-shard edge (tiny corpora): write an empty parquet dir with
-    the given Spark schema so downstream readers see a valid (0-row)
-    table. Written via pyarrow — a zero-row Spark write can emit no data
-    files at all (just _SUCCESS), which breaks schema inference on
-    read-back."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    os.makedirs(dst, exist_ok=True)
-    pq.write_table(
-        to_arrow_schema(schema).empty_table(),
-        os.path.join(dst, "part-00000.parquet"),
-    )
-
-
-def _finalize_empty(sd: str, n_buckets: int) -> BuildResult:
-    """Valid 0-doc index: empty dictionary/postings + zeroed stats, same
-    layout the merge would produce (Searcher/global_shard_stats open it
-    like any other shard)."""
-    import json
-
-    from tesserae_ng_spark.schemas import DICTIONARY_SCHEMA, POSTINGS_SCHEMA
-
-    _write_empty(POSTINGS_SCHEMA, os.path.join(sd, "postings", "bucket=0"))
-    _write_empty(DICTIONARY_SCHEMA, os.path.join(sd, "dictionary"))
-    stats = {
-        "n_docs": 0, "avg_dl": 0.0, "total_tokens": 0,
-        "n_terms": 0, "n_blocks": 0, "n_buckets": n_buckets,
-    }
-    with open(os.path.join(sd, "stats.json"), "w") as f:
-        json.dump(stats, f, sort_keys=True)
-    write_manifest(
-        sd, 99999,
-        {"status": "done", "stage": "merge", "input_fingerprint": "merge",
-         **stats},
-    )
-    return BuildResult(
-        out_dir=sd, n_docs=0, avg_dl=0.0, total_tokens=0, n_terms=0,
-        n_blocks=0, built_parts=[], skipped_parts=[], wall_s=0.0,
-        phases={"merge_postings_s": 0.0, "merge_dict_s": 0.0},
-    )
 
 
 def build_sharded_indexes(
@@ -145,180 +75,29 @@ def build_sharded_indexes(
         )
         for i in range(n_shards)
     }
-    for sd in out_dirs:
-        os.makedirs(sd, exist_ok=True)
-
-    all_done = resume and all(
-        partition_done(out_dirs[i], 0, fps[i]) for i in range(n_shards)
+    built, _ = _stage_a(
+        spark, corpus, {i: (sd, 0) for i, sd in enumerate(out_dirs)}, fps,
+        lang, use_stored_text, with_positions, block_size, resume=resume,
     )
-    if not all_done:
-        staging = tempfile.mkdtemp(
-            prefix="_fused_stage_a_", dir=os.path.dirname(out_dirs[0]) or "."
-        )
-        try:
-            prepared = prepare_docs(
-                corpus, lang=lang, use_stored_text=use_stored_text
-            ).persist()
-            try:
-                # doc_id IS xxhash64(url) (build.py), so the shard key is a
-                # plain mod of the column we already carry
-                shard_of = F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
-                # cluster by shard before the partitionBy write (guide §6:
-                # small files hurt twice): without it every one of the
-                # 2×cores analysis tasks writes a file into EVERY shard dir
-                # (cores × shards tiny files per table), and the metric
-                # read-backs + 8 per-shard merge scans each re-pay the
-                # file-open cost — measured ~4 s of the fused stage A. The
-                # extra exchange moves compact rows (docs) / compressed
-                # blocks, not html.
-                docs = docs_table(prepared).withColumn("shard", shard_of)
-                td = term_doc_table(prepared).withColumn("shard", shard_of)
-                if not with_positions:
-                    td = td.withColumn("positions", F.lit(None).cast("binary"))
-                # exchange-free stage A: partition-local (shard, term,
-                # doc_id) sort + fragment encode (encode_blocks_local) —
-                # the per-shard merges re-block deterministically
-                blocks = encode_blocks_local(
-                    td, block_size=block_size, shard_aware=True
-                ).repartition(n_shards, "shard")
-                # schemas captured from the DataFrames (not read-back):
-                # an ALL-empty corpus (0 docs, or every doc filtered out)
-                # writes no data files at all, so a read-back would raise
-                # "unable to infer schema" before any per-shard handling
-                docs_schema = docs_table(prepared).schema
-                posts_schema = blocks.drop("shard").schema
-
-                # the three stage-A actions share the persisted `prepared`
-                # and are independent — submit them concurrently (guide
-                # §2.6 "overlap independent jobs"): the cache's per-block
-                # locks make whichever job arrives first materialize each
-                # partition while the others wait, so the analyzer chain
-                # still runs exactly once and the small jobs back-fill the
-                # big one's straggler tail.
-                from concurrent.futures import ThreadPoolExecutor
-
-                def _w_docs():
-                    (
-                        docs.repartition(n_shards, "shard")
-                        .write.mode("overwrite")
-                        .partitionBy("shard")
-                        .parquet(f"{staging}/docs")
-                    )
-
-                def _w_blocks():
-                    (
-                        blocks.write.mode("overwrite")
-                        .partitionBy("shard")
-                        .parquet(f"{staging}/postings")
-                    )
-
-                def _doc_metrics():
-                    # from the persisted per-doc vectors — no staging
-                    # read-back (the file listing + re-read of the
-                    # freshly-written docs dirs was ~2 s of stage A)
-                    return {
-                        r["shard"]: r
-                        for r in docs.groupBy("shard")
-                        .agg(
-                            F.count(F.lit(1)).alias("n_docs"),
-                            F.sum("dl").alias("tokens"),
-                        )
-                        .collect()
-                    }
-
-                with ThreadPoolExecutor(max_workers=3) as pool:
-                    f_docs = pool.submit(_w_docs)
-                    f_blocks = pool.submit(_w_blocks)
-                    f_dmet = pool.submit(_doc_metrics)
-                    f_docs.result()
-                    f_blocks.result()
-                    dmet = f_dmet.result()
-            finally:
-                prepared.unpersist()
-
-            # per-shard manifest metrics from one grouped pass over each
-            # staging table (the independent path collects the same
-            # numbers via Observations on its per-shard write jobs).
-            # A partitionBy write of 0 rows emits no shard dirs — guard
-            # the read-back so the all-empty corpus degrades to empty
-            # metrics instead of an AnalysisException.
-            def _has_parts(root: str) -> bool:
-                return os.path.isdir(root) and any(
-                    e.startswith("shard=") for e in os.listdir(root)
-                )
-
-            bmet = (
-                {
-                    r["shard"]: r
-                    for r in spark.read.parquet(f"{staging}/postings")
-                    .groupBy("shard")
-                    .agg(
-                        F.count(F.lit(1)).alias("blocks"),
-                        F.approx_count_distinct("term").alias("terms"),
-                        F.sum(F.crc32(F.col("doc_ids"))).alias("crc"),
-                    )
-                    .collect()
-                }
-                if _has_parts(f"{staging}/postings")
-                else {}
-            )
-            for i, sd in enumerate(out_dirs):
-                if not _move_partition(
-                    f"{staging}/docs", i, f"{sd}/shards/docs/part=0"
-                ):
-                    _write_empty(docs_schema, f"{sd}/shards/docs/part=0")
-                if not _move_partition(
-                    f"{staging}/postings", i, f"{sd}/shards/postings/part=0"
-                ):
-                    _write_empty(posts_schema, f"{sd}/shards/postings/part=0")
-                d, b = dmet.get(i), bmet.get(i)
-                write_manifest(
-                    sd,
-                    0,
-                    {
-                        "status": "done",
-                        "input_fingerprint": fps[i],
-                        "row_count": int(d["n_docs"]) if d else 0,
-                        "total_tokens": int(d["tokens"] or 0) if d else 0,
-                        "term_count": int(b["terms"]) if b else 0,
-                        "block_count": int(b["blocks"]) if b else 0,
-                        "checksum": str(b["crc"]) if b else "0",
-                        "wall_ms": int((time.time() - t_start) * 1000),
-                        "fused": n_shards,
-                    },
-                )
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
     t_parts = time.time() - t_start
 
-    # stage B: the existing per-index merge, unchanged — concurrent
-    # submissions overlap per-job fixed costs (distinct output paths).
-    # Zero-doc shards (more shards than docs; only reachable at toy
-    # scale) skip the merge: a 0-row partitionBy write emits no data
-    # files, so their final artifacts are synthesized directly.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from tesserae_ng_spark.index.manifest import read_manifest
-
+    # stage B: the per-index merge — concurrent submissions overlap
+    # per-job fixed costs (distinct output paths). 8-wide: per-shard
+    # merge jobs are small (a few tasks each), so the limit is
+    # driver-side plan/scheduling latency — overlapping more of them
+    # collapses two 4-merge waves into one (r7)
     def _merge(i: int) -> BuildResult:
-        m = read_manifest(out_dirs[i], 0) or {}
-        if m.get("row_count", 0) == 0:
-            return _finalize_empty(out_dirs[i], n_buckets)
         return _merge_all(
             spark, out_dirs[i], target_postings_per_salt, n_buckets,
             block_size, expected={0: fps[i]},
         )
 
-    # 8-wide: per-shard merge jobs are small (a few tasks each), so the
-    # limit is driver-side plan/scheduling latency — overlapping more of
-    # them collapses the two 4-merge waves into one (r7; the union build
-    # keeps 4 because its partition jobs are corpus-wide and memory-heavy)
     with ThreadPoolExecutor(max_workers=min(8, n_shards)) as pool:
         results = list(pool.map(_merge, range(n_shards)))
     wall = time.time() - t_start
     for i, r in enumerate(results):
-        r.built_parts = [] if all_done else [0]
-        r.skipped_parts = [0] if all_done else []
+        r.built_parts = [0] if i in built else []
+        r.skipped_parts = [] if i in built else [0]
         r.wall_s = wall
         r.phases["parts_s"] = round(t_parts, 3)
     return results

@@ -24,7 +24,7 @@ def get_spark(
     # propagate the RESOLVED value: a user-set TNG_MALLOC_TUNE=0 reaches
     # executors as 0 (disabled) instead of being overwritten with 1
     tune_env = os.environ["TNG_MALLOC_TUNE"]
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     b = (
         SparkSession.builder.master(master)

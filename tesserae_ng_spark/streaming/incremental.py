@@ -2,10 +2,11 @@
 
 The reference ingests via batch HTTP POSTs to Solr (no streaming
 semantics); the engine analog is an incremental build: new corpus files
-arrive → each micro-batch becomes one more index shard partition (stage A
-of index/builder.py) with its own lineage manifest → the salted merge
-(stage B) runs on demand to refresh the queryable index, exactly like a
-Lucene segment merge after a commit.
+arrive → each micro-batch runs the build's one stage-A pass
+(index/builder.py ``_stage_a``) with a single key, becoming one more
+index part with its own lineage manifest → the salted merge (stage B)
+runs on demand to refresh the queryable index, exactly like a Lucene
+segment merge after a commit.
 
 Structured Streaming specifics:
 - file source (``readStream``) with ``maxFilesPerTrigger`` batching;
@@ -26,12 +27,9 @@ Lucene soft-deletes vs merge-time purge.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 
-from tesserae_ng_spark.index.build import prepare_docs
-from tesserae_ng_spark.index.manifest import partition_done, write_manifest
+from tesserae_ng_spark.index.builder import _stage_a
 from tesserae_ng_spark.schemas import BLOCK_SIZE, CORPUS_SCHEMA
 
 STREAM_PART_BASE = 10_000  # shard ids for streamed batches live above this
@@ -39,24 +37,16 @@ STREAM_PART_BASE = 10_000  # shard ids for streamed batches live above this
 
 def _process_batch(batch_df: DataFrame, batch_id: int, out_dir: str,
                    lang: str | None, block_size: int) -> None:
-    part = STREAM_PART_BASE + int(batch_id)
-    fp = f"stream-batch={batch_id}"
-    if partition_done(out_dir, part, fp):
-        return  # replayed batch after checkpoint recovery → idempotent skip
-    t0 = time.time()
-    from tesserae_ng_spark.index.builder import _write_shard
-
-    prepared = prepare_docs(batch_df, lang=lang).persist()
-    try:
-        metrics = _write_shard(prepared, out_dir, part, block_size)
-    finally:
-        prepared.unpersist()
-    write_manifest(out_dir, part, {
-        "status": "done",
-        "input_fingerprint": fp,
-        **metrics,
-        "wall_ms": int((time.time() - t0) * 1000),
-    })
+    # one key: the whole micro-batch becomes part STREAM_PART_BASE + id;
+    # a replayed batch (checkpoint recovery) finds its manifest done and
+    # is skipped → idempotent
+    _stage_a(
+        batch_df.sparkSession, batch_df,
+        {0: (out_dir, STREAM_PART_BASE + int(batch_id))},
+        {0: f"stream-batch={batch_id}"},
+        lang=lang, use_stored_text=False, with_positions=True,
+        block_size=block_size,
+    )
 
 
 def incremental_index_stream(

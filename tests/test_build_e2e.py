@@ -114,6 +114,8 @@ def test_merged_postings_invariant_to_stage_a_fragmentation(
 
     prepared = prepare_docs(corpus).persist()
     td = term_doc_table(prepared)
+    # stage A's one key column, constant here: one output
+    keyed = td.withColumn("key", F.lit(0))
     n_docs = prepared.count()
     avg_dl = prepared.agg(F.avg("dl")).collect()[0][0]
 
@@ -133,7 +135,7 @@ def test_merged_postings_invariant_to_stage_a_fragmentation(
             for r in out
         )
 
-    frag = final_rows(encode_blocks_local(td, block_size=16))
+    frag = final_rows(encode_blocks_local(keyed, block_size=16))
     grouped = final_rows(
         td.groupBy("term").applyInPandas(
             lambda g: encode_term_group(g, 16), SHARD_BLOCK_SCHEMA
@@ -145,6 +147,6 @@ def test_merged_postings_invariant_to_stage_a_fragmentation(
     # tiny buffer cap → maximal fragmentation (several sorted chunks per
     # partition) — still the same final index
     monkeypatch.setattr(encode, "ENCODE_BUFFER_ROWS", 64)
-    tiny = final_rows(encode_blocks_local(td, block_size=16))
+    tiny = final_rows(encode_blocks_local(keyed, block_size=16))
     prepared.unpersist()
     assert tiny == frag

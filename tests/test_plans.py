@@ -68,7 +68,7 @@ def test_production_stage_a_is_exchange_free(spark, corpus):
 
     import re
 
-    td = term_doc_table(prepare_docs(corpus))
+    td = term_doc_table(prepare_docs(corpus)).withColumn("key", F.lit(0))
     blocks = encode_blocks_local(td)
     plan = explain_str(blocks)
     tree = plan.split("\n\n")[0]

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tesserae_ng_spark.index.builder import build_index
+from tesserae_ng_spark.index.manifest import all_manifests, manifest_path
 from tesserae_ng_spark.index.sharded_build import build_sharded_indexes
 from tesserae_ng_spark.query.search import Searcher
 from tesserae_ng_spark.query.sharded import search_sharded
@@ -115,37 +116,85 @@ def test_fused_resume_skips_stage_a(spark, corpus, fused):
     assert all(r.n_docs == f.n_docs for r, f in zip(results, first))
 
 
-def test_fused_all_empty_corpus(spark, corpus, tmp_path_factory):
+def test_fused_partial_resume_rebuilds_only_stale_shard(spark, corpus, fused):
+    # resume is per shard: with one shard's manifest gone, only that
+    # shard is analyzed again, and it comes out equal to its first build
+    fdirs, _ = fused
+    cols = [
+        "term", "salt", "block_id", "doc_ids", "tfs", "dls", "positions",
+        "block_max_score",
+    ]
+    dcols = ["term", "df", "cf", "max_score", "n_blocks", "bucket"]
+    lost = 1
+    before = (
+        _rows(spark, f"{fdirs[lost]}/postings", cols, cols[:3]),
+        _rows(spark, f"{fdirs[lost]}/dictionary", dcols, ["term"]),
+        json.load(open(f"{fdirs[lost]}/stats.json")),
+    )
+    os.remove(manifest_path(fdirs[lost], 0))
+    results = build_sharded_indexes(spark, corpus, fdirs, **KW)
+    for i, r in enumerate(results):
+        assert (r.built_parts, r.skipped_parts) == (
+            ([0], []) if i == lost else ([], [0])
+        )
+    assert (
+        _rows(spark, f"{fdirs[lost]}/postings", cols, cols[:3]),
+        _rows(spark, f"{fdirs[lost]}/dictionary", dcols, ["term"]),
+        json.load(open(f"{fdirs[lost]}/stats.json")),
+    ) == before
+
+
+def _build_layout(entry, spark, corpus, base, n):
+    """Index dirs and per-part manifest row counts from either entry
+    point: ``n`` fused shards, or one union index with ``n`` parts."""
+    if entry == "sharded":
+        dirs = [str(base / f"s{i}") for i in range(n)]
+        build_sharded_indexes(spark, corpus, dirs, **KW)
+    else:
+        dirs = [str(base / "union")]
+        build_index(spark, corpus, dirs[0], n_parts=n, **KW)
+    rows = [
+        m["row_count"]
+        for d in dirs
+        for m in all_manifests(d)
+        if m.get("stage") != "merge"
+    ]
+    assert len(rows) == n
+    return dirs, rows
+
+
+@pytest.mark.parametrize("entry", ["sharded", "union"])
+def test_fused_all_empty_corpus(spark, corpus, tmp_path_factory, entry):
     # ADVICE r5: a corpus where EVERY doc is filtered out writes zero
     # data files in the partitionBy staging step — the build must not
-    # crash on schema inference and must emit N valid 0-doc indexes
+    # crash on schema inference and must emit valid 0-doc indexes
     empty = corpus.filter(F.lit(False))
-    n = 3
     base = tmp_path_factory.mktemp("fusedallempty")
-    dirs = [str(base / f"s{i}") for i in range(n)]
-    results = build_sharded_indexes(spark, empty, dirs, **KW)
-    assert len(results) == n
-    assert all(r.n_docs == 0 for r in results)
+    dirs, rows = _build_layout(entry, spark, empty, base, 3)
+    assert rows == [0, 0, 0]
     for d in dirs:
+        assert json.load(open(f"{d}/stats.json"))["n_docs"] == 0
         s = Searcher(d)
         assert s.search("join hash", k=5, mode="bm25") == []
     queries = [dict(query_id=0, query_text="join hash", mode="bm25", k=5)]
     assert search_sharded(spark, dirs, queries, k=5).collect() == []
 
 
-def test_fused_empty_shard(spark, corpus, tmp_path_factory):
-    # more shards than docs → some shards are empty; they must still come
-    # out as valid (0-doc) indexes and not break the sharded query path
+@pytest.mark.parametrize("entry", ["sharded", "union"])
+def test_fused_empty_shard(spark, corpus, tmp_path_factory, entry):
+    # more shards (or parts) than docs → some are empty; they must still
+    # come out as valid indexes and not break the query paths
     small = corpus.orderBy("url").limit(3)
     # the corpus carries multiple crawl versions per url; the build's
     # as-of dedupe keeps one doc per distinct url
     expect = small.select("url").distinct().count()
-    n = 7
     base = tmp_path_factory.mktemp("fusedempty")
-    dirs = [str(base / f"s{i}") for i in range(n)]
-    results = build_sharded_indexes(spark, small, dirs, **KW)
-    assert sum(r.n_docs for r in results) == expect
-    assert any(r.n_docs == 0 for r in results)
+    dirs, rows = _build_layout(entry, spark, small, base, 7)
+    assert sum(rows) == expect
+    assert any(r == 0 for r in rows)
+    assert sum(
+        json.load(open(f"{d}/stats.json"))["n_docs"] for d in dirs
+    ) == expect
     queries = [dict(query_id=0, query_text="join hash", mode="bm25", k=5)]
     rows = search_sharded(spark, dirs, queries, k=5).collect()
     # global stats over the 3-doc corpus drive whatever matches exist
