@@ -19,14 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Engine entry point: opt in to allocator tuning for this process and for
-# any Spark python workers launched after this import (memtune.py; the
-# library itself no longer tunes on bare import).
-os.environ.setdefault("TNG_MALLOC_TUNE", "1")
-from tesserae_ng_spark.memtune import tune_allocator as _tune  # noqa: E402
-
-_tune(force=True)
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: exhaustive BM25 top-20 over sf0.001 documents."""

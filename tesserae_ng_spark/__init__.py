@@ -18,13 +18,3 @@ AQE handle pushdown, pruning, join strategy and skew; the custom physics
 """
 
 __version__ = "0.1.0"
-
-# Allocator tuning for lazily-backed-VM first-touch pathology (memtune.py)
-# is OPT-IN: this call is a no-op unless TNG_MALLOC_TUNE=1 is set in the
-# environment (session.get_spark exports it so Spark executor python
-# workers — which import this package when unpickling UDFs — are tuned),
-# so merely importing the library leaves process-global allocator state
-# alone (ADVICE r2). Engine entry points call tune_allocator(force=True).
-from tesserae_ng_spark.memtune import tune_allocator as _tune_allocator
-
-_tune_allocator()

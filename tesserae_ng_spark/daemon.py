@@ -10,11 +10,6 @@ and a 32-worker cold wave repeats it 32×). This drop-in daemon module
 (``spark.python.daemon.module``) performs those imports ONCE in the daemon
 before the first fork, so workers start with a warm interpreter.
 
-It also applies the allocator tuning (memtune.py) in the daemon: the
-mallopt thresholds, the THP opt-out prctl, and pyarrow's system-allocator
-pool are all inherited across fork, so workers no longer each re-run the
-tuning on first import.
-
 Failure posture: every pre-import is best-effort — a missing optional
 library must not kill the daemon (worker-side imports would then fail
 with their own, clearer error). The daemon protocol itself is delegated
@@ -46,15 +41,6 @@ def _preimport() -> None:
     # the JVM reads the daemon's listening port from its stdout, so an
     # import-time print must not land there before manager() writes it
     with contextlib.redirect_stdout(sys.stderr):
-        try:
-            from tesserae_ng_spark.memtune import tune_allocator
-
-            # opt-in via TNG_MALLOC_TUNE (get_spark exports it before the
-            # JVM launches, so the daemon sees it); forks inherit the
-            # tuned state
-            tune_allocator()
-        except Exception:
-            pass
         for mod in PREIMPORTS:
             try:
                 __import__(mod)

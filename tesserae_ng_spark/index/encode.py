@@ -271,10 +271,10 @@ def encode_blocks_local(
 
     ``ENCODE_BUFFER_ROWS`` bounds the per-worker accumulation: the
     buffer's lexsort working set (~24 B/row keys + index) is the build's
-    one non-streaming body, and a worker's first touch of a large
-    transient arena is slow on lazily-backed VM memory (memtune.py). A
-    larger partition is encoded in several sorted chunks, which only
-    adds fragments; final index bytes are invariant to the bound.
+    one non-streaming body, so the bound caps each call's transient
+    arrays whatever the partition size. A larger partition is encoded in
+    several sorted chunks, which only adds fragments; final index bytes
+    are invariant to the bound.
     """
     max_rows = ENCODE_BUFFER_ROWS
 

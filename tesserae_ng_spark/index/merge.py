@@ -153,10 +153,10 @@ def merge_shard_blocks(
     # max_rows bounds the per-call working set: a merge input row carries
     # up to a whole shard block (block_size postings), so 10k-row Arrow
     # batches decode to ~1.3M-posting transient arrays — a ~400 MB peak
-    # whose FIRST touch costs ~50 s/worker on lazily-backed VM memory
-    # (memtune.py). ~1.5k rows ≈ 200k postings keeps the one-time arena
-    # growth at a few MB-scale faults while batch amortization stays
-    # intact (measured: stage 117 s → 9 s cold).
+    # per worker. ~1.5k rows ≈ 200k postings keeps the transients at a
+    # few tens of MB whatever the allocator, while batch amortization
+    # stays intact (measured on a host with lazily-backed memory: stage
+    # 117 s → 9 s cold).
     return _grouped_arrow_sorted(
         routed, ["term", "salt"], merge_batch, POSTINGS_SCHEMA,
         n_parts=n_parts, partition_cols=part_cols,

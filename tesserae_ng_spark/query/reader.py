@@ -5,7 +5,8 @@ serves queries from a always-warm Solr core), so the reader keeps its own
 term index over the Parquet files, as Lucene keeps a segment's term index
 open and seeks straight to a term's blocks:
 
-- ``bucket = pmod(xxhash64(term), n_buckets)`` picks the hive partition
+- the term's dictionary row carries its ``bucket`` (the build's
+  ``pmod(xxhash64(term), n_buckets)``), which picks the hive partition
   (``postings/bucket=b/``); file discovery is the ``pyarrow.dataset``
   built once at open;
 - the first read that touches a bucket opens each of its files once as a
@@ -39,61 +40,6 @@ from tesserae_ng_spark.index.codec import (
     delta_decode_ids,
     varint_decode,
 )
-
-
-def _xxhash64_str(s: str) -> int:
-    """Spark-compatible xxhash64(string, seed=42) — needed to compute the
-    bucket of a term without a JVM. Pure-Python XXH64 over UTF-8 bytes."""
-    P1 = 0x9E3779B185EBCA87
-    P2 = 0xC2B2AE3D27D4EB4F
-    P3 = 0x165667B19E3779F9
-    P4 = 0x85EBCA77C2B2AE63
-    P5 = 0x27D4EB2F165667C5
-    M = 0xFFFFFFFFFFFFFFFF
-    data = s.encode("utf-8")
-    seed = 42
-    n = len(data)
-
-    def rotl(x, r):
-        return ((x << r) | (x >> (64 - r))) & M
-
-    def round_(acc, inp):
-        acc = (acc + inp * P2) & M
-        return (rotl(acc, 31) * P1) & M
-
-    i = 0
-    if n >= 32:
-        v1 = (seed + P1 + P2) & M
-        v2 = (seed + P2) & M
-        v3 = seed
-        v4 = (seed - P1) & M
-        while i <= n - 32:
-            v1 = round_(v1, int.from_bytes(data[i : i + 8], "little"))
-            v2 = round_(v2, int.from_bytes(data[i + 8 : i + 16], "little"))
-            v3 = round_(v3, int.from_bytes(data[i + 16 : i + 24], "little"))
-            v4 = round_(v4, int.from_bytes(data[i + 24 : i + 32], "little"))
-            i += 32
-        h = (rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)) & M
-        for v in (v1, v2, v3, v4):
-            h = ((h ^ round_(0, v)) * P1 + P4) & M
-    else:
-        h = (seed + P5) & M
-    h = (h + n) & M
-    while i <= n - 8:
-        h = ((rotl(h ^ round_(0, int.from_bytes(data[i : i + 8], "little")), 27) * P1) + P4) & M
-        i += 8
-    if i <= n - 4:
-        h = ((rotl(h ^ (int.from_bytes(data[i : i + 4], "little") * P1) & M, 23) * P2) + P3) & M
-        i += 4
-    while i < n:
-        h = (rotl(h ^ (data[i] * P5) & M, 11) * P1) & M
-        i += 1
-    h ^= h >> 33
-    h = (h * P2) & M
-    h ^= h >> 29
-    h = (h * P3) & M
-    h ^= h >> 32
-    return h - (1 << 64) if h >= (1 << 63) else h  # as signed int64
 
 
 # payload-not-yet-read sentinel: distinct from None, which means "this
@@ -496,15 +442,6 @@ def _meets(vals: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
 class IndexReader:
     def __init__(self, index_dir: str, term_cache_size: int = 65_536,
                  dict_pin_max_terms: int = 1_000_000):
-        from tesserae_ng_spark.memtune import tune_allocator
-
-        # queries are latency-sensitive: tune the allocator (opt-in engine
-        # entry point — see memtune.py). No big eager prefault here: with
-        # M_TRIM_THRESHOLD pinned the heap stays faulted at its high-water
-        # mark, so first-decode pages fault once per process for exactly
-        # the bytes used — a 64 MiB eager arena measured 5.4 s of pure
-        # upfront page-fault cost (~85 µs/page on this VM) per process.
-        tune_allocator(force=True)
         self.index_dir = index_dir
         # term → TermPostings LRU (the Solr/Lucene query-cache analog,
         # SURVEY.md §4): the index is immutable, so cached postings never
@@ -517,7 +454,6 @@ class IndexReader:
             self.stats = json.load(f)
         self.n_docs = self.stats["n_docs"]
         self.avg_dl = self.stats["avg_dl"]
-        self.n_buckets = self.stats["n_buckets"]
         self._dict_ds = ds.dataset(os.path.join(index_dir, "dictionary"))
         self._post_ds = ds.dataset(
             os.path.join(index_dir, "postings"), partitioning="hive"
@@ -670,7 +606,7 @@ class IndexReader:
         dic = self.lookup(terms)
         if not dic:
             return {}
-        buckets = sorted({int(_xxhash64_str(t) % self.n_buckets) for t in dic})
+        buckets = sorted({row["bucket"] for row in dic.values()})
         names = set(self._post_ds.schema.names)
         has_sf = "block_max_tf" in names  # pre-v2 indexes lack these
         meta_cols = _META_COLS + (
@@ -718,7 +654,7 @@ class IndexReader:
                 blk_max_tf=mts[rows] if has_sf else None,
                 blk_min_dl=mds[rows] if has_sf else None,
                 loader=self._load_payloads,
-                bucket=int(_xxhash64_str(t) % self.n_buckets),
+                bucket=dic[t]["bucket"],
             )
         empty = np.empty(0, dtype=np.int64)
         for t in dic:
@@ -731,7 +667,7 @@ class IndexReader:
                     blk_max_tf=empty if has_sf else None,
                     blk_min_dl=empty if has_sf else None,
                     loader=self._load_payloads,
-                    bucket=int(_xxhash64_str(t) % self.n_buckets),
+                    bucket=dic[t]["bucket"],
                 )
         return out
 

@@ -421,7 +421,9 @@ def bm25_dense_topk(
 
     EXHAUSTIVE-EQUIVALENT to wand_topk bit-for-bit: terms are accumulated
     in sorted-term order (np.add.at is sequential and unbuffered), so each
-    doc's float-addition order matches WAND's full-score order.
+    doc's float-addition order matches WAND's full-score order. Every
+    entry of ``acc`` is a matched doc with a strictly positive score
+    (idf > 0, tf ≥ 1), so dense_row_topk's nonzero = hit rule holds.
     """
     ids_parts: list[np.ndarray] = []
     score_parts: list[np.ndarray] = []
@@ -441,19 +443,4 @@ def bm25_dense_topk(
     uniq, inv = np.unique(ids, return_inverse=True)
     acc = np.zeros(uniq.size, dtype=np.float64)
     np.add.at(acc, inv, sc)
-    if uniq.size > k:
-        part = np.argpartition(-acc, k - 1)[: max(k * 4, k)]  # over-fetch for ties
-        # exact order among the partitioned head (+ a safe margin for ties
-        # at the boundary: re-partition wider until the cut is strict)
-        cand = part
-        order = np.lexsort((uniq[cand], -acc[cand]))
-        cand = cand[order][:k]
-        kth = acc[cand[-1]]
-        # docs outside the candidate head could tie kth and win on doc_id:
-        if np.count_nonzero(acc >= kth) > cand.size:
-            order = np.lexsort((uniq, -acc))[:k]
-            cand = order
-        top = cand
-    else:
-        top = np.lexsort((uniq, -acc))
-    return [(int(uniq[i]), float(acc[i])) for i in top[:k]]
+    return dense_row_topk(acc, uniq, k)

@@ -13,17 +13,6 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    # allocator tuning is opt-in (memtune.py): tune this driver process and
-    # export the env var BEFORE the JVM launches so local-mode python
-    # workers (forked under the JVM) inherit it; spark.executorEnv carries
-    # it to real-cluster executors.
-    from tesserae_ng_spark.memtune import tune_allocator
-
-    os.environ.setdefault("TNG_MALLOC_TUNE", "1")
-    tune_allocator(force=True)
-    # propagate the RESOLVED value: a user-set TNG_MALLOC_TUNE=0 reaches
-    # executors as 0 (disabled) instead of being overwritten with 1
-    tune_env = os.environ["TNG_MALLOC_TUNE"]
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     b = (
@@ -46,7 +35,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.executorEnv.TNG_MALLOC_TUNE", tune_env)
     )
     # SPARK_GRAFT_LOCAL_DIR: shuffle/spill scratch location. Round-6 note:
     # this sandbox's block device sustains ~6 MB/s writes (measured,
@@ -59,8 +47,8 @@ def get_spark(
     if local_dir:
         b = b.config("spark.local.dir", local_dir)
     # pre-importing worker daemon (daemon.py; guide §4.5): forked python
-    # workers inherit numpy/pyarrow/pandas/engine imports + tuned allocator
-    # state from the daemon instead of each paying ~0.7 s on first task.
+    # workers inherit numpy/pyarrow/pandas/engine imports from the daemon
+    # instead of each paying ~0.7 s on first task.
     # Local mode only; cluster deployments keep the stock daemon unless
     # they ship the package and opt in themselves. TNG_FAST_DAEMON=0
     # disables. The package's parent reaches the daemon (so `python -m

@@ -359,6 +359,42 @@ def test_searcher_warming_ignores_environment(index_dir, monkeypatch):
     assert Searcher(index_dir).warm_info is None
 
 
+def test_open_and_search_leave_arrow_memory_pool_unchanged(index_dir):
+    """Importing the package, opening an index and running a query leave
+    the process's pyarrow memory pool as they found it. Runs in a fresh
+    interpreter, without the removed allocator opt-in variable (its name
+    assembled as in test_searcher_warming_ignores_environment), so no
+    earlier test's process state counts."""
+    import json
+    import subprocess
+    import sys
+
+    import tesserae_ng_spark
+
+    script = (
+        "import json, sys\n"
+        "import pyarrow as pa\n"
+        "before = pa.default_memory_pool().backend_name\n"
+        "import tesserae_ng_spark\n"
+        "from tesserae_ng_spark.query.search import Searcher\n"
+        "hits = Searcher(sys.argv[1]).search('join hash scan', k=5)\n"
+        "print(json.dumps([before, pa.default_memory_pool().backend_name,"
+        " len(hits)]))\n"
+    )
+    opt_in = "_".join(("TNG", "MALLOC", "TUNE"))
+    env = {k: v for k, v in os.environ.items() if k != opt_in}
+    env["PYTHONPATH"] = os.path.dirname(
+        os.path.dirname(tesserae_ng_spark.__file__)
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script, index_dir], env=env,
+        capture_output=True, text=True, check=True,
+    ).stdout
+    before, after, n_hits = json.loads(out.strip().splitlines()[-1])
+    assert n_hits > 0
+    assert after == before
+
+
 def test_warm_top_terms_arrow_fallback_same_selection(index_dir):
     """The warmer has ONE selection path (Arrow sort_indices + prefix cut)
     for pinned and unpinned (web-scale) dictionaries. At every budget both
@@ -447,11 +483,11 @@ def small_rg_dir(index_dir, tmp_path_factory):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from tesserae_ng_spark.query.reader import _xxhash64_str
+    from tesserae_ng_spark.query.reader import IndexReader
 
     out = str(tmp_path_factory.mktemp("small_rg") / "index")
     shutil.copytree(index_dir, out)
-    head_bucket = _xxhash64_str("the") % 4
+    head_bucket = IndexReader(index_dir).lookup(["the"])["the"]["bucket"]
     moved = None
     for bdir in sorted(glob.glob(f"{out}/postings/bucket=*")):
         files = sorted(glob.glob(f"{bdir}/*.parquet"))
@@ -487,7 +523,7 @@ def test_footer_pruned_reads_small_row_groups(index_dir, small_rg_dir,
     import numpy as np
 
     from tesserae_ng_spark.query import reader as reader_mod
-    from tesserae_ng_spark.query.reader import IndexReader, _xxhash64_str
+    from tesserae_ng_spark.query.reader import IndexReader
 
     small, head_bucket, moved = small_rg_dir
     ref, got = Searcher(index_dir), Searcher(small)
@@ -510,8 +546,8 @@ def test_footer_pruned_reads_small_row_groups(index_dir, small_rg_dir,
     # single-term fetch: a bucket-mate of the head term (neither it nor
     # the term moved to the stats-less file)
     probe = next(
-        t for t in sorted(IndexReader(index_dir)._dict_cache)
-        if _xxhash64_str(t) % 4 == head_bucket and t not in ("the", moved)
+        t for t, row in sorted(IndexReader(index_dir)._dict_cache.items())
+        if row["bucket"] == head_bucket and t not in ("the", moved)
     )
     want = sum(covers(st, probe) for st in stats)
     assert n_nostats < want < len(stats)

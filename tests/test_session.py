@@ -1,8 +1,8 @@
 """Process-level side effects of the session factory and the worker
 daemon: ``get_spark`` leaves this process's environment alone, the
 daemon's pre-imports cannot write to the stdout that carries its port
-handshake to the JVM, and the package reads only deployment and
-allocator settings from the environment."""
+handshake to the JVM, and the package reads only deployment settings
+from the environment."""
 
 import ast
 import glob
@@ -16,10 +16,15 @@ from tesserae_ng_spark.session import get_spark
 PKG_PARENT = os.path.dirname(os.path.dirname(tesserae_ng_spark.__file__))
 
 
-def test_get_spark_leaves_pythonpath_unset(spark, monkeypatch):
+def test_get_spark_leaves_environment_unchanged(spark, monkeypatch):
+    """No variable is added, changed or removed. The name of the removed
+    allocator opt-in is assembled so that a source grep for it finds only
+    code that reads it."""
     monkeypatch.delenv("PYTHONPATH", raising=False)
+    monkeypatch.delenv("_".join(("TNG", "MALLOC", "TUNE")), raising=False)
+    before = dict(os.environ)
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)
-    assert "PYTHONPATH" not in os.environ
+    assert dict(os.environ) == before
 
     def where(_):
         import tesserae_ng_spark.query.sharded as mod
@@ -47,15 +52,13 @@ def test_preimport_prints_go_to_stderr(tmp_path, monkeypatch, capsys):
     assert "imported the stub" in captured.err
 
 
-# deployment (session) and allocator (memtune, daemon) settings: the only
-# environment the package may read. Engine behaviour is set by arguments.
+# deployment settings (session, daemon): the only environment the
+# package may read. Engine behaviour is set by arguments.
 ENV_ALLOWLIST = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_MASTER",
     "SPARK_DRIVER_MEM",
     "SPARK_GRAFT_LOCAL_DIR",
-    "TNG_MALLOC_TUNE",
-    "TNG_NO_MALLOC_TUNE",
     "TNG_FAST_DAEMON",
 }
 

@@ -40,10 +40,6 @@ def make_pyfiles_zip() -> str:
 def run_level(cpus: int, sf_dir: str, zpath: str) -> dict:
     env = dict(
         os.environ,
-        # allocator tuning is opt-in (memtune.py); under spark-submit the
-        # JVM's env is fixed before get_spark can export the flag, so pass
-        # it through the submission env (workers fork from the JVM daemon)
-        TNG_MALLOC_TUNE="1",
         SPARK_GRAFT_KEEP_SHARDS="1",
         SPARK_GRAFT_SF_DIR=sf_dir,
         SPARK_GRAFT_CPUS=str(cpus),

@@ -162,7 +162,6 @@ def solo_rate(nproc: int, seconds: float = 8.0) -> float:
 def run_build(cpus: int, sf_dir: str, zpath: str, tag: str) -> dict:
     env = dict(
         os.environ,
-        TNG_MALLOC_TUNE="1",
         SPARK_GRAFT_SF_DIR=sf_dir,
         SPARK_GRAFT_CPUS=str(cpus),
         SPARK_GRAFT_IDX=f"/dev/shm/tesserae_sat_idx_{tag}",
