@@ -6,8 +6,12 @@ Layout under an index dir:
     manifests/part-i.json     per-part lineage (status/metrics/checksum)
     postings/bucket=b/        final scored blocks (partitioned by term bucket)
     dictionary/               term → df/cf/max_score/n_blocks/bucket
-    stats.json                corpus stats + build metrics
+    stats.json                corpus stats + build metrics + postings_format
     manifests/merge.json      stage-B lineage
+
+Final postings store doc ORDINALS (postings format 3): a doc's rank in
+the index's sorted, unique ``shards/docs`` doc_ids. Stage-A blocks stay
+in doc_id space.
 
 Every build runs the same two stages. Stage A (``_stage_a``) is ONE
 Spark pass over the corpus: analyze each doc once, key it by
@@ -56,10 +60,11 @@ from tesserae_ng_spark.index.encode import encode_blocks_local
 from tesserae_ng_spark.index.manifest import (
     all_manifests,
     partition_done,
+    sorted_doc_ids,
     write_manifest,
 )
 from tesserae_ng_spark.index.merge import build_dictionary, merge_shard_blocks
-from tesserae_ng_spark.schemas import BLOCK_SIZE
+from tesserae_ng_spark.schemas import BLOCK_SIZE, POSTINGS_FORMAT
 from tesserae_ng_spark.sources.corpus import load_corpus
 
 
@@ -144,6 +149,7 @@ def _finalize_empty(out_dir: str, n_buckets: int) -> BuildResult:
     stats = {
         "n_docs": 0, "avg_dl": 0.0, "total_tokens": 0,
         "n_terms": 0, "n_blocks": 0, "n_buckets": n_buckets,
+        "postings_format": POSTINGS_FORMAT,
     }
     with open(os.path.join(out_dir, "stats.json"), "w") as f:
         json.dump(stats, f, sort_keys=True)
@@ -419,6 +425,7 @@ def _merge_all(
         target_postings_per_salt=target_postings_per_salt,
         block_size=block_size,
         n_buckets=n_buckets,
+        docs=sorted_doc_ids(out_dir),
         # widen the merge exchange past n_buckets when cores allow (the
         # sharded per-shard merges run many _merge_alls concurrently and
         # pass no width — their combined tasks already fill the cores)
@@ -460,8 +467,9 @@ def _merge_all(
         "overwrite"
     ).parquet(f"{out_dir}/dictionary")
 
-    # docs stay where the shards wrote them (shards/docs/part=*) — readers
-    # fall back there; re-copying terabytes of doc metadata buys nothing
+    # docs stay where the shards wrote them (shards/docs/part=*): the
+    # doc list (manifest.sorted_doc_ids) is read from there by the merge
+    # above and by readers; re-copying doc metadata buys nothing
     dagg = dict_obs.get
     stats = {
         "n_docs": n_docs,
@@ -470,6 +478,7 @@ def _merge_all(
         "n_terms": int(dagg["terms"] or 0),
         "n_blocks": int(dagg["blocks"] or 0),
         "n_buckets": n_buckets,
+        "postings_format": POSTINGS_FORMAT,
     }
     with open(f"{out_dir}/stats.json", "w") as f:
         json.dump(stats, f, sort_keys=True)

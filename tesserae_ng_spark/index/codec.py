@@ -6,17 +6,24 @@ SIGIR'11 block-max metadata): 128 docs per block, per-block
 in block-max WAND.
 
 Layout per block (each field its own BinaryType column — columnar at rest):
-  doc_ids  : varint( order-preserving-u64(doc_id[0]),
-                     delta_1, delta_2, ... )     # strictly positive deltas
+  doc_ids  : varint( first, delta_1, delta_2, ... )  # non-negative deltas
   tfs      : varint(tf_i)
   dls      : varint(dl_i)                         # exact doc length (BM25)
   positions: per doc: varint(pos_0, gap_1, ...)   # tf_i values per doc,
              concatenated in doc order (split by tfs at decode)
 
-doc_ids are int64 (xxhash64 output, may be negative); an XOR with the sign
-bit maps them to order-preserving uint64 so deltas of the sorted list are
-positive. All encode/decode paths are numpy-vectorized — no per-value
-Python in the hot loop beyond ≤10 masked passes (max varint length).
+Two doc spaces use the doc_ids layout:
+- stage-A blocks hold doc_ids (int64 xxhash64 output, may be negative); an
+  XOR with the sign bit maps them to order-preserving uint64 so deltas of
+  the sorted list are positive (``delta_encode_ids``/``concat_decode_ids``);
+- final postings (postings format 3) hold doc ORDINALS: a doc's rank in
+  its index's sorted, unique doc_id list. Ordinals are small and dense, so
+  a block's absolute first value costs at most 2 bytes up to 16k docs and
+  4 up to 268M, instead of ~9, and they decode with a plain cumsum
+  (``delta_encode_ords``/``concat_decode_ords``).
+
+All encode/decode paths are numpy-vectorized — no per-value Python in the
+hot loop beyond ≤10 masked passes (max varint length).
 """
 
 from __future__ import annotations
@@ -170,6 +177,18 @@ def delta_decode_ids(buf: bytes) -> np.ndarray:
     return from_u64(np.cumsum(d, dtype=np.uint64))
 
 
+def delta_encode_ords(ords: np.ndarray) -> bytes:
+    """Sorted non-negative doc ordinals → delta varint bytes (first value
+    absolute)."""
+    o = np.asarray(ords, dtype=np.int64)
+    if o.size == 0:
+        return b""
+    d = np.empty_like(o)
+    d[0] = o[0]
+    d[1:] = o[1:] - o[:-1]
+    return varint_encode(d.view(np.uint64))
+
+
 def expand_segment_values(vals: np.ndarray, starts: np.ndarray, n: int) -> np.ndarray:
     """Per-segment constant expansion — equivalent to
     ``np.repeat(vals, segment_lengths)`` for segments beginning at
@@ -212,6 +231,20 @@ def concat_decode_ids(bufs: list[bytes], counts: np.ndarray) -> np.ndarray:
     # uint64 wrap-around in the delta scatter is fine: cumsum is exact mod 2^64
     base = expand_segment_values(seg_base, starts, d.size)
     return from_u64(glob - base)
+
+
+def concat_decode_ords(bufs: list[bytes], counts: np.ndarray) -> np.ndarray:
+    """Decode many delta-ordinal buffers (each with an absolute first
+    value) in one pass → int64 ordinals: one varint decode + a cumsum reset
+    at each buffer start. Ordinals are < 2^63, so no sign mapping."""
+    counts = np.asarray(counts, dtype=np.int64)
+    d = concat_decode_varints(bufs).view(np.int64)
+    glob = np.cumsum(d)
+    if counts.size <= 1:
+        return glob
+    starts = np.cumsum(counts) - counts
+    seg_base = glob[starts] - d[starts]
+    return glob - expand_segment_values(seg_base, starts, d.size)
 
 
 def split_varint_stream(buf: bytes, counts: np.ndarray) -> list[bytes]:

@@ -1,7 +1,9 @@
 """In-memory index construction — pure Python, no Spark.
 
-Builds the SAME Block/TermPostings structures the reader produces, via the
-same codec, from raw posting tuples. Used by property tests (WAND ≡
+Builds the SAME TermPostings structures the reader produces, via the
+same codec, from raw posting tuples. Postings carry doc ORDINALS (ranks
+into a sorted doc list, as in a built index); callers map scorer output
+back through their own doc list. Used by property tests (WAND ≡
 exhaustive on thousands of random corpora without JVM startup) and by any
 embedded/unit use of the query engine.
 """
@@ -13,7 +15,7 @@ import math
 import numpy as np
 
 from tesserae_ng_spark.index.codec import (
-    delta_encode_ids,
+    delta_encode_ords,
     encode_positions,
     varint_encode,
 )
@@ -23,7 +25,7 @@ from tesserae_ng_spark.schemas import BLOCK_SIZE, BM25_B, BM25_K1
 
 def build_term_postings(
     term: str,
-    postings: list[tuple],  # (doc_id, tf, dl [, positions])
+    postings: list[tuple],  # (doc ordinal, tf, dl [, positions])
     n_docs: int,
     avg_dl: float,
     block_size: int = BLOCK_SIZE,
@@ -44,7 +46,7 @@ def build_term_postings(
     ids_b, tfs_b, dls_b, pos_b = [], [], [], []
     for start, end in zip(starts, ends):
         sl = slice(int(start), int(end))
-        ids_b.append(delta_encode_ids(ids[sl]))
+        ids_b.append(delta_encode_ords(ids[sl]))
         tfs_b.append(varint_encode(tfs[sl].astype(np.uint64)))
         dls_b.append(varint_encode(dls[sl].astype(np.uint64)))
         pos_b.append(

@@ -9,6 +9,9 @@ manifest is `done` with a matching input fingerprint.
 
 Analog: Lucene's commit points / segments_N file — a segment exists only
 once the commit metadata names it.
+
+Also here: the index's doc list (``sorted_doc_ids``), the ordinal space
+of the final postings, read by both the merge and the reader.
 """
 
 from __future__ import annotations
@@ -16,6 +19,8 @@ from __future__ import annotations
 import json
 import os
 import time
+
+import numpy as np
 
 
 def manifest_path(out_dir: str, part: int) -> str:
@@ -61,3 +66,18 @@ def all_manifests(out_dir: str) -> list[dict]:
             with open(os.path.join(d, name)) as f:
                 out.append(json.load(f))
     return out
+
+
+def sorted_doc_ids(index_dir: str) -> np.ndarray:
+    """The index's doc list: every doc_id under ``shards/docs``, sorted and
+    unique (streamed parts may repeat a url). A final posting stores its
+    doc's rank in this array. 8 B/doc: fine to ~100M docs per node."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    files = ds.dataset(os.path.join(index_dir, "shards", "docs")).files
+    return np.unique(np.concatenate([
+        pq.ParquetFile(f).read(columns=["doc_id"], use_threads=False)
+        .column("doc_id").to_numpy()
+        for f in files
+    ] or [np.empty(0, dtype=np.int64)]))

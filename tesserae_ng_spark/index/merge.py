@@ -24,6 +24,15 @@ memory-bounded (≤ target postings) regardless of term df.
 df/cf are computed from block METADATA (sum of n_docs / tf_sum per term)
 — exact, no decode: each (term, doc) lives in exactly one shard because
 shards partition docs by url hash.
+
+Output doc space (postings format 3): stage-A blocks carry doc_ids, and
+salt routing, the salt filter and the per-group sort all run on them. The
+merge then writes each posting's ORDINAL — its doc's rank in the index's
+sorted, unique doc list (``manifest.sorted_doc_ids``) — into ``doc_ids``,
+``block_first_doc`` and ``block_last_doc``. The rank is monotone in
+doc_id, so the (salt, block_id) order and block ranges keep their meaning,
+and a doc id missing from the doc list fails the build
+(``doc_ordinals``).
 """
 
 from __future__ import annotations
@@ -38,7 +47,7 @@ from pyspark.sql import functions as F
 from tesserae_ng_spark.index.codec import (
     concat_decode_ids,
     concat_decode_varints,
-    delta_encode_ids,
+    delta_encode_ords,
     expand_segment_values,
     from_u64,
     split_varint_stream,
@@ -67,6 +76,22 @@ def salt_np(doc_ids: np.ndarray, nsalt: int) -> np.ndarray:
     return ((b32 * np.uint64(nsalt)) >> np.uint64(32)).astype(np.int64)
 
 
+def doc_ordinals(docs: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """Ranks of ``ids`` in the sorted, unique doc list ``docs``. Raises
+    when an id is absent: postings and docs from different builds must
+    fail the build, not scatter scores onto the wrong docs later."""
+    ords = np.searchsorted(docs, ids)
+    if ids.size and (
+        int(ords.max()) >= docs.size
+        or not np.array_equal(docs[ords], ids)
+    ):
+        raise RuntimeError(
+            "postings/docs mismatch: the merge input holds doc ids absent "
+            "from the index's shards/docs"
+        )
+    return ords
+
+
 def merge_shard_blocks(
     shard_blocks: DataFrame,
     n_docs: int,
@@ -78,9 +103,14 @@ def merge_shard_blocks(
     b: float = BM25_B,
     *,
     n_buckets: int,
+    docs: np.ndarray | None = None,
     merge_width: int | None = None,
 ) -> DataFrame:
-    """shard block rows → final POSTINGS_SCHEMA rows (scored, re-blocked).
+    """shard block rows → final POSTINGS_SCHEMA rows (scored, re-blocked),
+    doc ordinals into ``docs`` (the index's sorted, unique doc_ids). An
+    index build passes its ``shards/docs`` list, which also holds docs
+    without postings; without one, ``docs`` is the blocks' own doc ids
+    (``block_doc_ids``, one extra job).
 
     ``n_buckets`` is required: the merge exchange partitions by the FINAL
     storage bucket ``pmod(xxhash64(term), n_buckets)``, so the output is
@@ -90,6 +120,8 @@ def merge_shard_blocks(
     must grow with the cluster (it caps merge/write parallelism unless
     ``merge_width`` sub-splits each bucket); per-GROUP working sets stay
     salt-bounded either way."""
+    if docs is None:
+        docs = block_doc_ids(shard_blocks)
     term_stats = shard_blocks.groupBy("term").agg(
         F.sum("n_docs").alias("df"),
         F.sum("tf_sum").alias("cf"),
@@ -118,7 +150,7 @@ def merge_shard_blocks(
 
     def merge_batch(tbl):
         return merge_batch_arrow(
-            tbl, n_docs_f, avg_dl_f,
+            tbl, n_docs_f, avg_dl_f, docs,
             block_size=block_size, k1=k1, b=b,
         )
 
@@ -162,6 +194,29 @@ def merge_shard_blocks(
         n_parts=n_parts, partition_cols=part_cols,
         max_rows=MERGE_BATCH_MAX_ROWS,
     )
+
+
+def block_doc_ids(shard_blocks: DataFrame) -> np.ndarray:
+    """Sorted, unique doc ids of stage-A block rows (decoded on the
+    executors, collected as one Arrow column)."""
+
+    def decode(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            ids = concat_decode_ids(
+                rb.column("doc_ids").to_pylist(),
+                rb.column("n_docs").to_numpy(zero_copy_only=False),
+            )
+            yield pa.RecordBatch.from_arrays([pa.array(ids)], ["doc_id"])
+
+    tbl = (
+        shard_blocks.select("doc_ids", "n_docs")
+        .mapInArrow(decode, "doc_id long")
+        .distinct()
+        .toArrow()
+    )
+    return np.sort(tbl.column("doc_id").to_numpy())
 
 
 def _arrow_key_codes(tbl, keys: list[str]) -> list[np.ndarray]:
@@ -263,7 +318,7 @@ def _grouped_arrow_sorted(
 
 
 def merge_group_reference(
-    pdf: pd.DataFrame, n_docs: int, avg_dl: float,
+    pdf: pd.DataFrame, n_docs: int, avg_dl: float, docs: np.ndarray,
     block_size: int = BLOCK_SIZE, k1: float = BM25_K1, b: float = BM25_B,
 ) -> pd.DataFrame:
     """Per-(term, salt)-group merge — the SPEC for merge_batch_arrow,
@@ -309,22 +364,23 @@ def merge_group_reference(
     scores = idf * all_tfs / (
         all_tfs + k1 * (1.0 - b + b * all_dls / avg_dl_f)
     )
+    all_ords = doc_ordinals(docs, all_ids)
     rows = []
     for bi, start in enumerate(range(0, all_ids.size, block_size)):
         sl = slice(start, min(start + block_size, all_ids.size))
-        ids_b, tfs_b = all_ids[sl], all_tfs[sl]
+        ords_b, tfs_b = all_ords[sl], all_tfs[sl]
         rows.append(
             {
                 "term": term,
                 "salt": salt,
                 "block_id": bi,
-                "n_docs": int(ids_b.size),
-                "block_first_doc": int(ids_b[0]),
-                "block_last_doc": int(ids_b[-1]),
+                "n_docs": int(ords_b.size),
+                "block_first_doc": int(ords_b[0]),
+                "block_last_doc": int(ords_b[-1]),
                 "block_max_score": float(scores[sl].max()),
                 "block_max_tf": int(tfs_b.max()),
                 "block_min_dl": int(all_dls[sl].min()),
-                "doc_ids": delta_encode_ids(ids_b),
+                "doc_ids": delta_encode_ords(ords_b),
                 "tfs": varint_encode(tfs_b.astype(np.uint64)),
                 "dls": varint_encode(all_dls[sl].astype(np.uint64)),
                 "positions": (
@@ -355,6 +411,7 @@ def merge_batch_arrow(
     tbl,
     n_docs_f: float,
     avg_dl_f: float,
+    docs: np.ndarray,
     block_size: int = BLOCK_SIZE,
     k1: float = BM25_K1,
     b: float = BM25_B,
@@ -423,11 +480,12 @@ def merge_batch_arrow(
     if keep_idx.size == 0:
         return None
 
-    # sort postings by doc_id within each group (groups stay in order)
+    # sort postings by doc_id within each group (groups stay in order),
+    # then map them to ordinals (monotone: the order is unchanged)
     order = keep_idx[
         np.lexsort((all_ids[keep_idx], p_group[keep_idx]))
     ]
-    ids_s = all_ids[order]
+    ords_s = doc_ordinals(docs, all_ids[order])
     tfs_s = all_tfs[order]
     dls_s = all_dls[order]
     grp_s = p_group[order]
@@ -460,11 +518,10 @@ def merge_batch_arrow(
     nblocks = block_starts.size
     bnd = np.append(block_starts, nk)
 
-    u = to_u64(ids_s)
-    d_out = np.empty_like(u)
-    d_out[0] = u[0]
-    d_out[1:] = u[1:] - u[:-1]
-    d_out[block_starts] = u[block_starts]
+    d_out = np.empty_like(ords_s)
+    d_out[0] = ords_s[0]
+    d_out[1:] = ords_s[1:] - ords_s[:-1]
+    d_out[block_starts] = ords_s[block_starts]
 
     def _binary(buf: bytes, lens: np.ndarray) -> pa.Array:
         off = np.zeros(nk + 1, dtype=np.int64)
@@ -477,7 +534,7 @@ def merge_batch_arrow(
              pa.py_buffer(buf)],
         )
 
-    id_arr = _binary(*varint_encode_lengths(d_out))
+    id_arr = _binary(*varint_encode_lengths(d_out.view(np.uint64)))
     tf_arr = _binary(*varint_encode_lengths(tfs_s.astype(np.uint64)))
     dl_arr = _binary(*varint_encode_lengths(dls_s.astype(np.uint64)))
 
@@ -526,8 +583,8 @@ def merge_batch_arrow(
             pa.array(salt_row[g_first_row[out_group]].astype(np.int32)),
             pa.array((rank[block_starts] // block_size).astype(np.int32)),
             pa.array((block_ends - block_starts).astype(np.int32)),
-            pa.array(ids_s[block_starts]),
-            pa.array(ids_s[block_ends - 1]),
+            pa.array(ords_s[block_starts]),
+            pa.array(ords_s[block_ends - 1]),
             pa.array(np.maximum.reduceat(scores, block_starts)),
             pa.array(
                 np.maximum.reduceat(tfs_s, block_starts).astype(np.int32)
@@ -549,23 +606,25 @@ def build_dictionary(postings: DataFrame, n_buckets: int) -> DataFrame:
     postings (guide §2.3/§2.4: aggregate before the shuffle; no second
     scan of the shard postings and no join).
 
-    cf per term is recovered by decoding each block's tf varints (a
-    vectorized Arrow-batched pass over the ``tfs`` payload column only):
+    cf per term is recovered by decoding the blocks' tf varints: one
+    decode of an Arrow batch's joined ``tfs`` bytes, summed per block with
+    one ``np.add.reduceat`` over the blocks' ``n_docs`` counts:
     the merge routed every posting to exactly one (term, salt) group
     (straddlers are filtered to their own salt range), so Σ decoded tf
     over the FINAL blocks equals Σ tf_sum over the shard blocks —
     integer-exact dictionary rows (pinned in tests/test_build_e2e.py)."""
-    import pandas as pd
-
     @F.pandas_udf("long")
-    def _tf_sum(tfs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [int(varint_decode(b).sum()) for b in tfs], dtype="int64"
-        )
+    def _tf_sum(tfs: pd.Series, n_docs: pd.Series) -> pd.Series:
+        counts = n_docs.to_numpy(dtype=np.int64)
+        if counts.size == 0:
+            return pd.Series([], dtype="int64")
+        vals = varint_decode(b"".join(tfs)).view(np.int64)
+        starts = np.cumsum(counts) - counts
+        return pd.Series(np.add.reduceat(vals, starts), dtype="int64")
 
     d = postings.groupBy("term").agg(
         F.sum("n_docs").alias("df"),
-        F.sum(_tf_sum("tfs")).alias("cf"),
+        F.sum(_tf_sum("tfs", "n_docs")).alias("cf"),
         F.count("*").cast("int").alias("n_blocks"),
         F.max("block_max_score").alias("max_score"),
     )

@@ -8,13 +8,16 @@ WAND top-k over the SAME rows — an end-to-end oracle on codec + salted
 merge + block-max WAND, not just on the logical plan.
 
 The index is built once per sf dir into /tmp (manifest-resume makes reruns
-cheap); engine doc_ids (xxhash64(url)) map back to documents.doc_id by
+cheap; a cached index whose stats.json names another postings format is
+rebuilt); engine doc_ids (xxhash64(url)) map back to documents.doc_id by
 parsing the url tail — both engines can compute that.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 from collections.abc import Iterator
 
 import pandas as pd
@@ -38,29 +41,29 @@ toks AS (
 )"""
 
 
+def _postings_format(index_dir: str):
+    """stats.json's ``postings_format``, or None when stats.json is
+    missing, unreadable or names none."""
+    try:
+        with open(f"{index_dir}/stats.json") as f:
+            stats = json.load(f)
+    except (OSError, ValueError):
+        return None
+    return stats.get("postings_format") if isinstance(stats, dict) else None
+
+
 def ensure_es_index(spark, sf_dir: str) -> str:
     from tesserae_ng_spark.index.builder import build_index
+    from tesserae_ng_spark.schemas import POSTINGS_FORMAT
     from tesserae_ng_spark.sources.corpus import synthesize_corpus
 
     out = f"/tmp/tesserae_idx_{LANG}_{os.path.basename(os.path.normpath(sf_dir))}"
-    if os.path.exists(f"{out}/stats.json"):
-        # format gate: a cached index from before the stats-free-bounds
-        # columns (block_max_tf/min_dl) must rebuild, not half-work. Any
-        # probe failure (half-deleted cache: stats.json present, postings
-        # missing/unreadable) is stale cache → rebuild, not a crash.
-        import pyarrow.dataset as _ds
-
-        try:
-            names = _ds.dataset(
-                f"{out}/postings", partitioning="hive"
-            ).schema.names
-            if "block_max_tf" in names:
-                return out
-        except Exception:
-            pass
-        import shutil
-
-        shutil.rmtree(out, ignore_errors=True)
+    # format gate: stats.json is written last, so a cache naming the
+    # current postings format is a finished index in this layout; any
+    # other cache (older format, no stats.json, unreadable) rebuilds
+    if _postings_format(out) == POSTINGS_FORMAT:
+        return out
+    shutil.rmtree(out, ignore_errors=True)
     corpus = synthesize_corpus(spark, sf_dir)
     build_index(
         spark,
@@ -76,12 +79,7 @@ def ensure_es_index(spark, sf_dir: str) -> str:
 
 
 def _docs_with_orig_id(spark, index_dir: str):
-    import os
-
-    p = f"{index_dir}/docs"
-    if not os.path.exists(p):
-        p = f"{index_dir}/shards/docs"
-    return spark.read.parquet(p).select(
+    return spark.read.parquet(f"{index_dir}/shards/docs").select(
         "doc_id",
         F.regexp_extract("url", r"(\d{8})$", 1).cast("long").alias("orig_id"),
     )
@@ -96,9 +94,13 @@ def _docs_with_orig_id(spark, index_dir: str):
 def block_encode(spark, sf):
     """Decode the FINAL compressed blocks back to (doc, term, tf) and let
     DuckDB confirm the roundtrip — codec + shard encode + salted merge are
-    all on the hook for every posting."""
+    all on the hook for every posting. Blocks store doc ordinals, so they
+    map through the index's doc list to doc_ids before the join."""
+    from tesserae_ng_spark.index.manifest import sorted_doc_ids
+
     idx = ensure_es_index(spark, sf)
     posts = spark.read.parquet(f"{idx}/postings")
+    doc_list = sorted_doc_ids(idx)
 
     out_schema = T.StructType(
         [
@@ -109,12 +111,12 @@ def block_encode(spark, sf):
     )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from tesserae_ng_spark.index.codec import delta_decode_ids, varint_decode
+        from tesserae_ng_spark.index.codec import concat_decode_ords, varint_decode
 
         for pdf in batches:
             terms, docs, tfs = [], [], []
             for r in pdf.itertuples(index=False):
-                ids = delta_decode_ids(r.doc_ids)
+                ids = doc_list[concat_decode_ords([r.doc_ids], [r.n_docs])]
                 tf = varint_decode(r.tfs)
                 terms.extend([r.term] * len(ids))
                 docs.extend(ids.tolist())
@@ -144,8 +146,10 @@ def external_merge(spark, sf):
 @register("salted_repartition_sort", None)  # physical layout → rows-only
 def salted_repartition_sort(spark, sf):
     """Expose the salted block layout: per (term, salt) block counts and doc
-    ranges. pytest asserts the global-order invariant (salt ranges disjoint,
-    blocks internally sorted); the driver records shape stability."""
+    ranges. ``lo``/``hi`` are doc ordinals (ranks into the index's sorted
+    doc list); the rank is monotone in doc_id, so a term's salt ranges are
+    still disjoint and ascending in salt order, and blocks internally
+    sorted. The key has no SQL oracle: only its rows' shape is checked."""
     idx = ensure_es_index(spark, sf)
     return (
         spark.read.parquet(f"{idx}/postings")

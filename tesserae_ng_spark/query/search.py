@@ -32,7 +32,6 @@ import numpy as np
 from tesserae_ng_spark.functions.analysis import analyze_query
 from tesserae_ng_spark.query.reader import IndexReader, TermPostings
 from tesserae_ng_spark.query.wand import (
-    StatsFreeBoundsUnavailable,
     bm25_dense_topk,
     bm25_global_topk,
     wand_topk,
@@ -94,7 +93,10 @@ class Searcher:
         global index. Block-max WAND runs under overridden stats too: the
         index stores stats-free per-block (max_tf, min_dl) and bounds are
         recomputed under the query's (n_docs, avg_dl, df) — see
-        TermIterator; only a pre-v2 index falls back to exhaustive."""
+        TermIterator.
+
+        The scorers return doc ordinals; the top-k maps through the
+        reader's doc list into the ``Hit``s' doc_ids (k gathers)."""
         terms = analyze_query(query_text, self.lang)
         if not terms:
             return []
@@ -113,21 +115,15 @@ class Searcher:
             # three exhaustive-equivalent scorers, picked by shape:
             # - block-max WAND: huge unions where skipping pays. Under
             #   overridden (sharded/global) stats it runs on stats-free
-            #   bounds recomputed from per-block (max_tf, min_dl); a pre-v2
-            #   index without that metadata falls through to exhaustive.
+            #   bounds recomputed from per-block (max_tf, min_dl).
             # - global accumulator: dense postings + index fits a per-node
-            #   row map (scatter-add per term, per-term work cached)
-            # - vectorized dense: small posting unions, no global map
+            #   accumulator over its ordinal space (scatter-add per term,
+            #   per-term work cached)
+            # - vectorized dense: small posting unions, no global array
             total_postings = sum(tp.df for tp in fetched.values())
-            top = None
             if total_postings > DENSE_POSTINGS_CUTOFF:
-                try:
-                    top = wand_topk(
-                        fetched, n_docs, avg_dl, k, df_override=dfo
-                    )
-                except StatsFreeBoundsUnavailable:
-                    top = None  # old index + overridden stats → exhaustive
-            if top is None:
+                top = wand_topk(fetched, n_docs, avg_dl, k, df_override=dfo)
+            else:
                 # exhaustive scorers decode every block — bulk-load all
                 # payloads in one scan instead of one scan per term.
                 # Selective (tail) queries score over the posting UNION
@@ -139,7 +135,7 @@ class Searcher:
                     and total_postings * 8 > self.reader.n_docs
                 ):
                     top = bm25_global_topk(
-                        fetched, self.reader.global_doc_ids(),
+                        fetched, self.reader.global_doc_ids().size,
                         n_docs, avg_dl, k, df_override=dfo,
                     )
                 else:
@@ -163,7 +159,11 @@ class Searcher:
             top = proximity_topk(tps, window, k)
         else:
             raise ValueError(f"unknown mode {mode!r}")
-        return [Hit(rank=i + 1, doc_id=d, score=s) for i, (d, s) in enumerate(top)]
+        docs = self.reader.global_doc_ids()
+        return [
+            Hit(rank=i + 1, doc_id=int(docs[o]), score=s)
+            for i, (o, s) in enumerate(top)
+        ]
 
 
 # ---------------------------------------------------------------------------
@@ -464,10 +464,10 @@ _EMPTY3 = (
 
 
 def phrase_match_arrays(ordered_tps: list[TermPostings]):
-    """→ (docs, phrase_tfs, dls) over ALL docs containing the exact phrase
-    — the match primitive shared by single-index phrase_topk and sharded
-    phrase search (which needs the raw arrays to score under GLOBAL df:
-    docs.size is this index's phrase-df contribution)."""
+    """→ (doc ordinals, phrase_tfs, dls) over ALL docs containing the exact
+    phrase — the match primitive shared by single-index phrase_topk and
+    sharded phrase search (which needs the raw arrays to score under GLOBAL
+    df: docs.size is this index's phrase-df contribution)."""
     got = _candidate_decoded(ordered_tps)
     if got is None:
         return _EMPTY3
@@ -498,9 +498,9 @@ def phrase_match_arrays(ordered_tps: list[TermPostings]):
 
 def phrase_topk(ordered_tps: list[TermPostings], n_docs: int, avg_dl: float,
                 k: int, k1: float = BM25_K1, b: float = BM25_B):
-    """Exact-phrase top-k, fully vectorized: conjunctive doc intersection,
-    packed-key phrase-start chaining, then BM25 with tf = phrase count and
-    df = number of phrase-matching docs."""
+    """Exact-phrase top-k → [(ordinal, score)], fully vectorized:
+    conjunctive doc intersection, packed-key phrase-start chaining, then
+    BM25 with tf = phrase count and df = number of phrase-matching docs."""
     docs, tfs, dls = phrase_match_arrays(ordered_tps)
     if docs.size == 0:
         return []
@@ -515,8 +515,9 @@ def phrase_topk(ordered_tps: list[TermPostings], n_docs: int, avg_dl: float,
 
 
 def proximity_match_arrays(tps: list[TermPostings], window: int):
-    """→ (docs, scores) over ALL docs where every term co-occurs within
-    ``window`` tokens, scored with the Tesserae distance-weighted formula.
+    """→ (doc ordinals, scores) over ALL docs where every term co-occurs
+    within ``window`` tokens, scored with the Tesserae distance-weighted
+    formula.
     The score has NO corpus-stats dependence, so per-shard top-k merges
     exactly (sharded.py) — this is the shared match primitive."""
     got = _candidate_decoded(tps)
@@ -557,7 +558,8 @@ def proximity_match_arrays(tps: list[TermPostings], window: int):
 
 
 def proximity_topk(tps: list[TermPostings], window: int, k: int):
-    """Proximity top-k with the Tesserae distance-weighted score.
+    """Proximity top-k → [(ordinal, score)] with the Tesserae
+    distance-weighted score.
 
     Every arity runs fully vectorized (2-term: adjacent-pair scan; 3+:
     per-term forward-fill cover-span sweep); the per-doc loop remains only

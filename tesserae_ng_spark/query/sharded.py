@@ -197,7 +197,9 @@ def _query_topk(searcher, q, k: int, gs: dict | None):
     so the plain per-query path returns final scores (bm25 keeps WAND on
     the stored block bounds, phrase multiplies its own idf in). Otherwise
     score under the GLOBAL stats; phrase returns tf-parts plus this shard's
-    match count, and the driver multiplies the global idf in."""
+    match count, and the driver multiplies the global idf in. The match
+    primitives work in the shard's doc ordinals (the cut at k is the same
+    in doc_id order); only the kept top-k maps to doc_ids."""
     mode = q.get("mode", "bm25")
     if gs is None or mode == "bm25":
         hits = searcher.search(
@@ -227,7 +229,10 @@ def _query_topk(searcher, q, k: int, gs: dict | None):
             tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * dls / gs["avg_dl"])
         )
         top = np.lexsort((docs, -part))[:k]
-        return docs[top], part[top], float(docs.size)
+        return (
+            searcher.reader.global_doc_ids()[docs[top]], part[top],
+            float(docs.size),
+        )
     if mode == "proximity":
         uniq = sorted(set(terms))
         if any(t not in fetched for t in uniq):
@@ -236,7 +241,7 @@ def _query_topk(searcher, q, k: int, gs: dict | None):
             [fetched[t] for t in uniq], q.get("window", 5)
         )
         top = np.lexsort((docs, -scores))[:k]
-        return docs[top], scores[top], None
+        return searcher.reader.global_doc_ids()[docs[top]], scores[top], None
     raise ValueError(f"unknown mode {mode!r}")
 
 

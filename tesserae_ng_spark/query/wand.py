@@ -5,9 +5,14 @@ refinement). Lucene 4 — the reference's engine — had neither; BMW is a
 contract requirement (BASELINE.json north_star); Lucene 8+ adopted the
 same algorithm, so its public semantics are the behavioral target.
 
-Guarantee: EXHAUSTIVE-EQUIVALENT top-k — identical (doc_id, score) lists,
-including the deterministic tie-break (score desc, doc_id asc) — property-
+Guarantee: EXHAUSTIVE-EQUIVALENT top-k — identical (doc, score) lists,
+including the deterministic tie-break (score desc, doc asc) — property-
 tested against the pure-DataFrame oracle (tests/test_wand.py).
+
+Every scorer here works in the index's doc ORDINAL space (postings format
+3, see index/codec.py) and returns (ordinal, score) pairs. Within one
+index ordinal order is doc_id order, so the tie-break is the doc_id
+tie-break; callers map the final top-k through the reader's doc list.
 
 Pruning discipline for exactness:
 - prune only when upper_bound < threshold - EPS (never on ==): a candidate
@@ -31,14 +36,9 @@ from tesserae_ng_spark.schemas import BM25_B, BM25_K1
 EPS = 1e-12
 
 
-class StatsFreeBoundsUnavailable(Exception):
-    """The index predates per-block (max_tf, min_dl) metadata — WAND under
-    overridden stats has no valid upper bounds; use an exhaustive scorer."""
-
-
 class TermIterator:
-    """Cursor over one term's blocks (blocks arrive in global docID order:
-    salts are contiguous doc ranges, so (salt, block_id) order == doc order).
+    """Cursor over one term's blocks (blocks arrive in doc order: salts are
+    contiguous doc ranges, so (salt, block_id) order == doc order).
 
     ``df`` overrides the stored document frequency (sharded/distributed
     search under GLOBAL stats — the Solr distributed-IDF analog). Stored
@@ -67,8 +67,6 @@ class TermIterator:
         self.b = b
         self._bounds = None
         if stats_free and self.n_blocks:
-            if postings.blk_max_tf is None:
-                raise StatsFreeBoundsUnavailable(postings.term)
             mt = postings.blk_max_tf.astype(np.float64)
             md = postings.blk_min_dl.astype(np.float64)
             self._bounds = self.idf * mt / (
@@ -173,15 +171,14 @@ def wand_topk(
     b: float = BM25_B,
     df_override: dict | None = None,
 ) -> list[tuple[int, float]]:
-    """→ [(doc_id, score)] sorted by (score desc, doc_id asc), len ≤ k.
+    """→ [(ordinal, score)] sorted by (score desc, ordinal asc), len ≤ k.
 
     Full scoring sums per-term partials in sorted-term order — a fixed
     order makes float sums deterministic across runs and parallelism.
 
     ``df_override`` maps term → GLOBAL df (sharded search): iterators run
     in stats-free mode, recomputing block bounds from (max_tf, min_dl)
-    under the given (n_docs, avg_dl, df) — raises StatsFreeBoundsUnavailable
-    on a pre-v2 index lacking that metadata.
+    under the given (n_docs, avg_dl, df).
     """
     stats_free = df_override is not None
     its = [
@@ -194,7 +191,7 @@ def wand_topk(
         if tp.n_blocks
     ]
     its = [it for it in its if not it.exhausted]
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
+    heap: list[tuple[float, int]] = []  # (score, -ordinal) min-heap
 
     def theta() -> float:
         return heap[0][0] if len(heap) >= k else -math.inf
@@ -278,14 +275,13 @@ def wand_topk(
 
 def term_rows_scores(
     tp,
-    global_docs: np.ndarray,
     n_docs: int,
     avg_dl: float,
     df_t: int,
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """One term's (global_row, bm25 score) arrays under the given stats,
+    """One term's (ordinal, bm25 score) arrays under the given stats,
     cached on the TermPostings (the index is immutable — Lucene-query-cache
     style). The small per-stats-key LRU lets a node serving BOTH
     shard-local and global-stats (sharded) traffic keep one entry per key
@@ -299,29 +295,9 @@ def term_rows_scores(
         # LRU refresh: re-insert so eviction removes the stalest key
         cache[stats_key] = cache.pop(stats_key)
         return cached
-    ids, tfs, dls, _, _ = tp.decode_full()
+    rows, tfs, dls, _, _ = tp.decode_full()
     idf = math.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
     scores = idf * tfs / (tfs + k1 * (1.0 - b + b * dls / avg_dl))
-    rows = np.searchsorted(global_docs, ids)
-    if global_docs.size <= np.iinfo(np.int32).max:
-        # int32 row indices (r7): exact for any per-node index (row <
-        # n_docs < 2^31), and the cached (rows, scores) pair is the
-        # scorer's per-worker hot set — 16 → 12 B/posting shrinks the
-        # freshly-touched pages the batch path re-faults in degraded
-        # windows. numpy fancy-indexing accepts int32 unchanged.
-        rows = rows.astype(np.int32)
-    # validate the mapping once per term: if the docs table and the
-    # postings drifted (stale-shard merge, docs read from a different
-    # build), searchsorted would scatter scores into the WRONG doc rows
-    # silently — fail loudly instead.
-    if rows.size and (
-        int(rows.max()) >= global_docs.size
-        or not np.array_equal(global_docs[rows], ids)
-    ):
-        raise RuntimeError(
-            f"postings/docs drift: term {tp.term!r} has doc ids "
-            "absent from the docs table — index dirs out of sync"
-        )
     if len(cache) >= 4:  # bounded: stats keys are few and stable
         cache.pop(next(iter(cache)))  # evict LRU entry only
     cache[stats_key] = (rows, scores)
@@ -329,11 +305,13 @@ def term_rows_scores(
 
 
 def dense_row_topk(
-    acc: np.ndarray, global_docs: np.ndarray, k: int
+    acc: np.ndarray, k: int, ords: np.ndarray | None = None
 ) -> list[tuple[int, float]]:
     """Tie-safe top-k extraction from one dense accumulator row →
-    [(doc_id, score)] by (score desc, doc_id asc). Matched docs are exactly
-    the nonzero entries (bm25 partials are strictly positive).
+    [(ordinal, score)] by (score desc, ordinal asc), where entry i is
+    ordinal ``ords[i]`` (ascending), or ordinal i itself when ``ords`` is
+    None. Matched docs are exactly the nonzero entries (bm25 partials are
+    strictly positive).
 
     Tie handling never sorts the full hit set: argpartition over the hits
     yields the true k-th score (the k largest VALUES are exact; only their
@@ -346,8 +324,8 @@ def dense_row_topk(
     if hit.size == 0:
         return []
     if hit.size <= k:
-        top = hit[np.lexsort((hit, -acc[hit]))]
-        return [(int(global_docs[i]), float(acc[i])) for i in top]
+        cand = hit[np.lexsort((hit, -acc[hit]))]
+        return _pairs(acc, cand, ords)
     sub = acc[hit]
     if hit.size > 2 * k:
         # ascending partition at size-k: tail 2k ⊇ the k largest values
@@ -366,12 +344,17 @@ def dense_row_topk(
         idx = np.nonzero(ge)[0]
         order = np.lexsort((idx, -acc[idx]))[:k]
         cand = idx[order]
-    return [(int(global_docs[i]), float(acc[i])) for i in cand]
+    return _pairs(acc, cand, ords)
+
+
+def _pairs(acc, cand, ords) -> list[tuple[int, float]]:
+    docs = cand if ords is None else ords[cand]
+    return list(zip(docs.tolist(), acc[cand].tolist()))
 
 
 def bm25_global_topk(
     term_postings: dict,
-    global_docs: np.ndarray,
+    size: int,
     n_docs: int,
     avg_dl: float,
     k: int,
@@ -379,9 +362,10 @@ def bm25_global_topk(
     b: float = BM25_B,
     df_override: dict | None = None,
 ) -> list[tuple[int, float]]:
-    """Global-accumulator exhaustive BM25: per-term (global_row, score)
+    """Global-accumulator exhaustive BM25: per-term (ordinal, score)
     arrays are computed ONCE per term (term_rows_scores cache), then a
-    query is one scatter-add per term into a dense float array + arg-top-k.
+    query is one scatter-add per term into a dense float array of the
+    index's ordinal-space ``size`` (its doc count) + arg-top-k.
 
     Summation order per doc = sorted-term order (one add per term, in
     term order) — identical float results to wand_topk / the oracle.
@@ -389,17 +373,15 @@ def bm25_global_topk(
     ``df_override`` maps term → GLOBAL df for sharded search (Solr
     distributed-IDF analog): scores become comparable across shards.
     """
-    acc = np.zeros(global_docs.size, dtype=np.float64)
+    acc = np.zeros(size, dtype=np.float64)
     for term in sorted(term_postings):
         tp = term_postings[term]
         if not tp.n_blocks:
             continue
         df_t = df_override.get(term, tp.df) if df_override else tp.df
-        rows, scores = term_rows_scores(
-            tp, global_docs, n_docs, avg_dl, df_t, k1, b
-        )
+        rows, scores = term_rows_scores(tp, n_docs, avg_dl, df_t, k1, b)
         acc[rows] += scores  # rows are unique per term → plain fancy add
-    return dense_row_topk(acc, global_docs, k)
+    return dense_row_topk(acc, k)
 
 
 def bm25_dense_topk(
@@ -443,4 +425,4 @@ def bm25_dense_topk(
     uniq, inv = np.unique(ids, return_inverse=True)
     acc = np.zeros(uniq.size, dtype=np.float64)
     np.add.at(acc, inv, sc)
-    return dense_row_topk(acc, uniq, k)
+    return dense_row_topk(acc, k, uniq)

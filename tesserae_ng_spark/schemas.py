@@ -58,9 +58,13 @@ TERM_DOC_SCHEMA = T.StructType(
 )
 
 # Compressed postings blocks (Lucene block-postings analog, 128 docs/block;
-# delta+varint doc ids, varint tfs, varint dls, delta+varint positions).
-# Blocks for one term are ordered by (salt, block_id); salts are doc-range
-# buckets so concatenation in salt order preserves global docID order.
+# delta+varint doc ordinals, varint tfs, varint dls, delta+varint
+# positions). Postings format 3: ``doc_ids``, ``block_first_doc`` and
+# ``block_last_doc`` hold doc ORDINALS — a doc's rank in the index's sorted,
+# unique doc_id list (``shards/docs``) — not doc_ids. The rank is monotone
+# in doc_id, so every doc-order rule below holds in either space. Blocks for
+# one term are ordered by (salt, block_id); salts are doc-range buckets so
+# concatenation in salt order preserves global doc order.
 POSTINGS_SCHEMA = T.StructType(
     [
         T.StructField("term", T.StringType(), False),
@@ -84,6 +88,10 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("positions", T.BinaryType(), True),
     ]
 )
+
+# stats.json's ``postings_format``: readers refuse any other value, so an
+# index written in an older layout is rebuilt, never misdecoded
+POSTINGS_FORMAT = 3
 
 DICTIONARY_SCHEMA = T.StructType(
     [

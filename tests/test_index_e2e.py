@@ -85,6 +85,73 @@ def test_dictionary_df_exact(spark, index_dir, oracle_parts):
     assert got == want
 
 
+def test_postings_store_dense_doc_ordinals(index_dir):
+    """Postings format 3: every block's decoded doc_ids are strictly
+    increasing ranks in [0, len(docs)) whose first/last are the block's
+    block_first_doc/block_last_doc; over a term's blocks in (salt,
+    block_id) order they keep increasing, and docs[ords] gives back the
+    stage-A doc ids of that term."""
+    import numpy as np
+    import pyarrow.dataset as ds
+
+    from tesserae_ng_spark.index.codec import (
+        concat_decode_ords,
+        delta_decode_ids,
+    )
+    from tesserae_ng_spark.index.manifest import sorted_doc_ids
+
+    docs = sorted_doc_ids(index_dir)
+    assert docs.size == 500
+    want = {}
+    stage_a = ds.dataset(f"{index_dir}/shards/postings", partitioning="hive")
+    for r in stage_a.to_table(columns=["term", "doc_ids"]).to_pylist():
+        want.setdefault(r["term"], []).extend(
+            delta_decode_ids(r["doc_ids"]).tolist()
+        )
+    cols = ["term", "salt", "block_id", "n_docs", "block_first_doc",
+            "block_last_doc", "doc_ids"]
+    final = ds.dataset(f"{index_dir}/postings", partitioning="hive")
+    got = {}
+    for r in sorted(
+        final.to_table(columns=cols).to_pylist(),
+        key=lambda r: (r["term"], r["salt"], r["block_id"]),
+    ):
+        o = concat_decode_ords([r["doc_ids"]], [r["n_docs"]])
+        assert o.size == r["n_docs"]
+        assert 0 <= o[0] and o[-1] < docs.size
+        assert (np.diff(o) > 0).all()
+        assert (o[0], o[-1]) == (r["block_first_doc"], r["block_last_doc"])
+        got.setdefault(r["term"], []).extend(o.tolist())
+    assert got.keys() == want.keys()
+    for t, ords in got.items():
+        ords = np.array(ords)
+        assert (np.diff(ords) > 0).all(), t
+        assert docs[ords].tolist() == sorted(want[t]), t
+
+
+def test_reader_refuses_other_postings_format(index_dir, tmp_path):
+    """An index whose stats.json lacks ``postings_format: 3`` (written
+    before doc ordinals, or by a later layout) must not open: its doc_ids
+    would decode as ordinals silently."""
+    import json
+
+    from tesserae_ng_spark.query.reader import IndexReader
+
+    with open(f"{index_dir}/stats.json") as f:
+        stats = json.load(f)
+    assert stats["postings_format"] == 3
+    IndexReader(index_dir)
+    for fmt in (None, 2, 4):
+        old = dict(stats, postings_format=fmt)
+        if fmt is None:
+            del old["postings_format"]
+        d = tmp_path / f"fmt{fmt}"
+        d.mkdir()
+        (d / "stats.json").write_text(json.dumps(old))
+        with pytest.raises(ValueError, match="rebuild the index"):
+            IndexReader(str(d))
+
+
 def test_batch_search_matches_single(spark, index_dir):
     searcher = Searcher(index_dir)
     queries = [

@@ -15,6 +15,7 @@ import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from tesserae_ng_spark.index.codec import delta_decode_ids
 from tesserae_ng_spark.index.encode import encode_term_group
 from tesserae_ng_spark.index.merge import (
     merge_batch_arrow,
@@ -92,6 +93,14 @@ def _shard_blocks(rng, terms, docs_per_term, with_pos, shard_block=16):
     ).reset_index(drop=True)
 
 
+def _doc_list(routed: pd.DataFrame) -> np.ndarray:
+    """The index's sorted, unique doc ids: every doc of the stage-A blocks
+    (the merge writes each posting's rank in this list)."""
+    return np.unique(np.concatenate(
+        [delta_decode_ids(bytes(b)) for b in routed["doc_ids"]]
+    ))
+
+
 def _canon(df: pd.DataFrame) -> list[tuple]:
     cols = [
         "term", "salt", "block_id", "n_docs", "block_first_doc",
@@ -129,10 +138,13 @@ def test_merge_arrow_equals_reference(seed, with_pos, block_size):
     terms = [f"t{chr(97 + i)}" for i in range(nterms)]
     docs_per_term = [int(rng.randint(1, 120)) for _ in range(nterms)]
     routed = _shard_blocks(rng, terms, docs_per_term, with_pos)
+    docs = _doc_list(routed)
 
     want = pd.concat(
         [
-            merge_group_reference(g, N_DOCS, AVG_DL, block_size=block_size)
+            merge_group_reference(
+                g, N_DOCS, AVG_DL, docs, block_size=block_size
+            )
             for _, g in routed.groupby(["term", "salt"], sort=True)
         ],
         ignore_index=True,
@@ -141,6 +153,7 @@ def test_merge_arrow_equals_reference(seed, with_pos, block_size):
         pa.Table.from_pandas(routed, preserve_index=False),
         float(N_DOCS),
         AVG_DL,
+        docs,
         block_size=block_size,
     )
     got = got_rb.to_pandas() if got_rb is not None else pd.DataFrame(
@@ -154,6 +167,7 @@ def test_merge_arrow_slice_offset():
     into binary buffers must honor the slice."""
     rng = np.random.RandomState(3)
     routed = _shard_blocks(rng, ["aa", "bb", "cc"], [40, 60, 30], True)
+    docs = _doc_list(routed)
     tbl = pa.Table.from_pandas(routed, preserve_index=False)
     # slice at a (term, salt) group boundary: first group's row count
     g0 = (routed["term"] == routed["term"].iloc[0]) & (
@@ -162,15 +176,35 @@ def test_merge_arrow_slice_offset():
     cut = int(g0.sum())
     want = pd.concat(
         [
-            merge_group_reference(g, N_DOCS, AVG_DL)
+            merge_group_reference(g, N_DOCS, AVG_DL, docs)
             for _, g in routed.iloc[cut:].groupby(
                 ["term", "salt"], sort=True
             )
         ],
         ignore_index=True,
     )
-    got = merge_batch_arrow(tbl.slice(cut), float(N_DOCS), AVG_DL).to_pandas()
+    got = merge_batch_arrow(
+        tbl.slice(cut), float(N_DOCS), AVG_DL, docs
+    ).to_pandas()
     assert _canon(got) == _canon(want)
+
+
+def test_merge_rejects_doc_missing_from_doc_list():
+    """A posting whose doc id is not in the index's doc list has no
+    ordinal: both merges fail instead of writing a wrong rank."""
+    import pytest
+
+    rng = np.random.RandomState(4)
+    routed = _shard_blocks(rng, ["aa", "bb"], [30, 50], False)
+    short = np.delete(_doc_list(routed), 7)
+    with pytest.raises(RuntimeError, match="postings/docs mismatch"):
+        merge_batch_arrow(
+            pa.Table.from_pandas(routed, preserve_index=False),
+            float(N_DOCS), AVG_DL, short,
+        )
+    with pytest.raises(RuntimeError, match="postings/docs mismatch"):
+        for _, g in routed.groupby(["term", "salt"], sort=True):
+            merge_group_reference(g, N_DOCS, AVG_DL, short)
 
 
 def test_merge_chunking_invariant(spark, monkeypatch):

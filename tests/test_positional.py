@@ -20,6 +20,10 @@ docs_strategy = st.dictionaries(
 
 
 def index_from_token_docs(docs):
+    """Postings over doc ordinals (ranks into the sorted doc list, as a
+    built index stores them); the doc list comes back last."""
+    doc_list = np.array(sorted(docs), dtype=np.int64)
+    rank = {d: i for i, d in enumerate(doc_list.tolist())}
     postings = {}
     dls = {}
     for doc_id, toks in docs.items():
@@ -28,14 +32,21 @@ def index_from_token_docs(docs):
         for i, t in enumerate(toks):
             per.setdefault(t, []).append(i)
         for t, ps in per.items():
-            postings.setdefault(t, []).append((doc_id, len(ps), len(toks), ps))
+            postings.setdefault(t, []).append(
+                (rank[doc_id], len(ps), len(toks), ps)
+            )
     n = len(docs)
     avg = sum(dls.values()) / n
     tps = {
         t: build_term_postings(t, ps, n, avg, block_size=4)
         for t, ps in postings.items()
     }
-    return tps, n, avg
+    return tps, n, avg, doc_list
+
+
+def to_ids(doc_list, got):
+    """Scorer output (ordinal, score) → (doc_id, score)."""
+    return [(int(doc_list[o]), s) for o, s in got]
 
 
 def brute_phrase(docs, phrase):
@@ -62,10 +73,10 @@ def brute_min_span(toks, a, b):
 @given(docs=docs_strategy, p1=st.sampled_from(VOCAB), p2=st.sampled_from(VOCAB))
 @settings(max_examples=300, deadline=None)
 def test_phrase_matches_brute(docs, p1, p2):
-    tps, n, avg = index_from_token_docs(docs)
+    tps, n, avg, doc_list = index_from_token_docs(docs)
     if p1 not in tps or p2 not in tps:
         return
-    got = phrase_topk([tps[p1], tps[p2]], n, avg, k=10_000)
+    got = to_ids(doc_list, phrase_topk([tps[p1], tps[p2]], n, avg, k=10_000))
     want = brute_phrase(docs, (p1, p2))
     assert {d for d, _ in got} == set(want)
     # tf drives the score: re-derive tf from score ordering indirectly by
@@ -84,10 +95,12 @@ def test_phrase_matches_brute(docs, p1, p2):
 def test_proximity_matches_brute(docs, p1, p2, window):
     if p1 == p2:
         return
-    tps, n, avg = index_from_token_docs(docs)
+    tps, n, avg, doc_list = index_from_token_docs(docs)
     if p1 not in tps or p2 not in tps:
         return
-    got = {d: s for d, s in proximity_topk([tps[p1], tps[p2]], window, k=10_000)}
+    got = {d: s for d, s in to_ids(
+        doc_list, proximity_topk([tps[p1], tps[p2]], window, k=10_000)
+    )}
     for d, toks in docs.items():
         span = brute_min_span(toks, p1, p2)
         if span is not None and span <= window:
@@ -102,8 +115,10 @@ def test_proximity_matches_brute(docs, p1, p2, window):
 
 def test_three_term_phrase():
     docs = {1: ["a", "b", "c", "a", "b", "c"], 2: ["a", "b", "a", "c"], 3: ["c", "b", "a"]}
-    tps, n, avg = index_from_token_docs(docs)
-    got = phrase_topk([tps["a"], tps["b"], tps["c"]], n, avg, k=10)
+    tps, n, avg, doc_list = index_from_token_docs(docs)
+    got = to_ids(
+        doc_list, phrase_topk([tps["a"], tps["b"], tps["c"]], n, avg, k=10)
+    )
     assert [d for d, _ in got] == [1]
 
 
@@ -117,10 +132,12 @@ def test_multiterm_proximity_matches_brute(docs, terms, window):
     """3+-term proximity (vectorized cover-span sweep) vs per-doc brute."""
     from tesserae_ng_spark.query.search import _min_cover_span
 
-    tps, n, avg = index_from_token_docs(docs)
+    tps, n, avg, doc_list = index_from_token_docs(docs)
     if any(t not in tps for t in terms):
         return
-    got = {d: s for d, s in proximity_topk([tps[t] for t in sorted(set(terms))], window, k=10_000)}
+    got = {d: s for d, s in to_ids(doc_list, proximity_topk(
+        [tps[t] for t in sorted(set(terms))], window, k=10_000
+    ))}
     for d, toks in docs.items():
         pos_lists = [
             np.array([i for i, x in enumerate(toks) if x == t])
@@ -181,10 +198,11 @@ def test_position_overflow_falls_back_to_per_doc():
         2: {"a": [5], "b": [6]},                   # normal doc
         3: {"a": [big], "b": [big + 500]},         # far apart at huge offsets
     }
+    doc_list = np.array(sorted(docs_pos), dtype=np.int64)
     postings = {
         t: [
-            (d, len(per[t]), sum(len(v) for v in per.values()), per[t])
-            for d, per in docs_pos.items()
+            (o, len(per[t]), sum(len(v) for v in per.values()), per[t])
+            for o, per in enumerate(docs_pos[d] for d in doc_list.tolist())
             if t in per
         ]
         for t in ("a", "b")
@@ -194,9 +212,13 @@ def test_position_overflow_falls_back_to_per_doc():
         t: build_term_postings(t, ps, n, avg, block_size=4)
         for t, ps in postings.items()
     }
-    got_phrase = {d for d, _ in phrase_topk([tps["a"], tps["b"]], n, avg, k=10)}
+    got_phrase = {d for d, _ in to_ids(
+        doc_list, phrase_topk([tps["a"], tps["b"]], n, avg, k=10)
+    )}
     assert got_phrase == {1, 2}
-    got_prox = {d for d, _ in proximity_topk([tps["a"], tps["b"]], 5, k=10)}
+    got_prox = {d for d, _ in to_ids(
+        doc_list, proximity_topk([tps["a"], tps["b"]], 5, k=10)
+    )}
     assert got_prox == {1, 2}
 
 
@@ -214,10 +236,11 @@ def test_phrase_underflow_at_position_cap_boundary():
         2: {"a": [50], "b": [0]},             # b at pos 0 → underflow bait
         3: {"a": [3], "b": [4]},              # real "a b" at 3
     }
+    doc_list = np.array(sorted(docs_pos), dtype=np.int64)
     postings = {
         t: [
-            (d, len(per[t]), sum(len(v) for v in per.values()), per[t])
-            for d, per in docs_pos.items()
+            (o, len(per[t]), sum(len(v) for v in per.values()), per[t])
+            for o, per in enumerate(docs_pos[d] for d in doc_list.tolist())
             if t in per
         ]
         for t in ("a", "b")
@@ -227,7 +250,9 @@ def test_phrase_underflow_at_position_cap_boundary():
         t: build_term_postings(t, ps, n, avg, block_size=4)
         for t, ps in postings.items()
     }
-    got = {d for d, _ in phrase_topk([tps["a"], tps["b"]], n, avg, k=10)}
+    got = {d for d, _ in to_ids(
+        doc_list, phrase_topk([tps["a"], tps["b"]], n, avg, k=10)
+    )}
     assert got == {3}
 
 
@@ -242,7 +267,7 @@ def test_candidate_positions_sparse_and_bulk_match_full_decode():
     for d in range(n_docs):
         tf = int(rng.randint(1, 5))
         pos = np.sort(rng.choice(500, size=tf, replace=False))
-        postings.append((d * 13 - 1000, tf, int(rng.randint(tf, 600)), pos))
+        postings.append((d, tf, int(rng.randint(tf, 600)), pos))
     tp = build_term_postings("t", postings, n_docs, 80.0, block_size=8)
     ids_all, tfs_all, dls_all, pos_flat_all, pos_offs_all = tp.decode_full(
         with_positions=True
@@ -289,7 +314,7 @@ def test_candidate_positions_density_sweep(
     for d in range(n_docs):
         tf = int(rng.randint(1, 4))
         pos = np.sort(rng.choice(50, size=tf, replace=False))
-        postings.append((d * 7 - 50, tf, int(rng.randint(tf, 80)), pos))
+        postings.append((d, tf, int(rng.randint(tf, 80)), pos))
     tp = build_term_postings("t", postings, n_docs, 40.0, block_size=block_size)
     ids_all, tfs_all, dls_all, pos_flat_all, pos_offs_all = tp.decode_full(
         with_positions=True

@@ -15,17 +15,26 @@ from tesserae_ng_spark.query.wand import (
 
 
 def make_index(corpus, dls, block_size):
+    """Postings over doc ordinals, as a built index stores them: each doc's
+    rank in the sorted corpus doc list ``docs`` (returned last)."""
     n_docs = len(corpus)
     avg_dl = sum(dls.values()) / n_docs
+    docs = np.array(sorted(corpus), dtype=np.int64)
+    rank = {d: i for i, d in enumerate(docs.tolist())}
     terms = {}
     for doc_id, tfs in corpus.items():
         for t, tf in tfs.items():
-            terms.setdefault(t, []).append((doc_id, tf, dls[doc_id]))
+            terms.setdefault(t, []).append((rank[doc_id], tf, dls[doc_id]))
     tps = {
         t: build_term_postings(t, ps, n_docs, avg_dl, block_size)
         for t, ps in terms.items()
     }
-    return tps, n_docs, avg_dl
+    return tps, n_docs, avg_dl, docs
+
+
+def to_ids(docs, got):
+    """Scorer output (ordinal, score) → (doc_id, score)."""
+    return [(int(docs[o]), s) for o, s in got]
 
 
 corpus_strategy = st.dictionaries(
@@ -54,15 +63,16 @@ def test_wand_equals_exhaustive(corpus, qsize, k, block_size, seed):
     vocab = [f"t{i}" for i in range(8)]
     query = [vocab[i] for i in rng.choice(8, size=qsize, replace=False)]
     dls = {d: sum(tfs.values()) for d, tfs in corpus.items()}
-    tps, n_docs, avg_dl = make_index(corpus, dls, block_size)
+    tps, n_docs, avg_dl, docs = make_index(corpus, dls, block_size)
     fetched = {t: tps[t] for t in set(query) if t in tps}
 
     want = exhaustive_topk(corpus, dls, query, k, avg_dl)
-    global_docs = np.array(sorted(corpus), dtype=np.int64)
     results = [
-        ("wand", wand_topk(fetched, n_docs, avg_dl, k)),
-        ("dense", bm25_dense_topk(fetched, n_docs, avg_dl, k)),
-        ("global", bm25_global_topk(fetched, global_docs, n_docs, avg_dl, k)),
+        ("wand", to_ids(docs, wand_topk(fetched, n_docs, avg_dl, k))),
+        ("dense", to_ids(docs, bm25_dense_topk(fetched, n_docs, avg_dl, k))),
+        ("global", to_ids(
+            docs, bm25_global_topk(fetched, docs.size, n_docs, avg_dl, k)
+        )),
     ]
     for name, got in results:
         assert [d for d, _ in got] == [d for d, _ in want], name
@@ -73,9 +83,9 @@ def test_wand_equals_exhaustive(corpus, qsize, k, block_size, seed):
 def test_wand_absent_and_empty():
     corpus = {1: {"a": 2}, 2: {"a": 1, "b": 1}}
     dls = {1: 2, 2: 2}
-    tps, n, avg = make_index(corpus, dls, 128)
+    tps, n, avg, docs = make_index(corpus, dls, 128)
     assert wand_topk({}, n, avg, 5) == []
-    got = wand_topk({"b": tps["b"]}, n, avg, 5)
+    got = to_ids(docs, wand_topk({"b": tps["b"]}, n, avg, 5))
     assert [d for d, _ in got] == [2]
 
 
@@ -83,8 +93,8 @@ def test_wand_tie_break_doc_id_asc():
     # identical tf/dl → identical scores → lower doc_id ranks first
     corpus = {10: {"x": 1}, 3: {"x": 1}, 7: {"x": 1}}
     dls = {10: 1, 3: 1, 7: 1}
-    tps, n, avg = make_index(corpus, dls, 2)
-    got = wand_topk(tps, n, avg, 2)
+    tps, n, avg, docs = make_index(corpus, dls, 2)
+    got = to_ids(docs, wand_topk(tps, n, avg, 2))
     assert [d for d, _ in got] == [3, 7]
 
 
@@ -110,7 +120,7 @@ def test_wand_stats_free_bounds_equal_exhaustive(
     vocab = [f"t{i}" for i in range(8)]
     query = [vocab[i] for i in rng.choice(8, size=qsize, replace=False)]
     dls = {d: sum(tfs.values()) for d, tfs in corpus.items()}
-    tps, n_docs, avg_dl = make_index(corpus, dls, block_size)
+    tps, n_docs, avg_dl, _ = make_index(corpus, dls, block_size)
     fetched = {t: tps[t] for t in set(query) if t in tps}
 
     g_n = n_docs + extra_docs
@@ -123,20 +133,6 @@ def test_wand_stats_free_bounds_equal_exhaustive(
         assert math.isclose(gs, ws, rel_tol=0, abs_tol=1e-9), (gd, gs, ws)
 
 
-def test_wand_stats_free_raises_without_metadata():
-    from tesserae_ng_spark.query.wand import StatsFreeBoundsUnavailable
-
-    corpus = {d: {"a": 1 + d % 3} for d in range(20)}
-    dls = {d: sum(t.values()) for d, t in corpus.items()}
-    tps, n, avg = make_index(corpus, dls, 4)
-    tps["a"].blk_max_tf = None  # simulate a pre-v2 index
-    tps["a"].blk_min_dl = None
-    import pytest
-
-    with pytest.raises(StatsFreeBoundsUnavailable):
-        wand_topk(tps, n + 5, avg, 5, df_override={"a": tps["a"].df})
-
-
 def test_global_topk_stats_cache_evicts_lru_only():
     # 5 alternating stats keys on a 4-entry cache: eviction must drop the
     # single least-recently-used entry, not wipe the cache (a node serving
@@ -144,26 +140,26 @@ def test_global_topk_stats_cache_evicts_lru_only():
     # each alternation)
     corpus = {d: {"a": 1 + d % 4} for d in range(50)}
     dls = {d: sum(t.values()) for d, t in corpus.items()}
-    tps, n, avg = make_index(corpus, dls, 8)
+    tps, n, avg, docs = make_index(corpus, dls, 8)
     tp = tps["a"]
-    global_docs = np.array(sorted(corpus), dtype=np.int64)
+    size = docs.size
     misses = []
     orig = tp.decode_full
     tp.decode_full = lambda *a, **k: (misses.append(1), orig(*a, **k))[1]
 
     stats = [(n + i, avg + i) for i in range(5)]  # 5 distinct stats keys
     for nd, ad in stats[:4]:
-        bm25_global_topk({"a": tp}, global_docs, nd, ad, 5)
+        bm25_global_topk({"a": tp}, size, nd, ad, 5)
     assert len(misses) == 4
     for nd, ad in stats[:4]:  # all four still cached
-        bm25_global_topk({"a": tp}, global_docs, nd, ad, 5)
+        bm25_global_topk({"a": tp}, size, nd, ad, 5)
     assert len(misses) == 4
-    bm25_global_topk({"a": tp}, global_docs, *stats[4], 5)  # evicts stats[0]
+    bm25_global_topk({"a": tp}, size, *stats[4], 5)  # evicts stats[0]
     assert len(misses) == 5
     for nd, ad in stats[1:5]:  # survivors stay cached (clear() would miss)
-        bm25_global_topk({"a": tp}, global_docs, nd, ad, 5)
+        bm25_global_topk({"a": tp}, size, nd, ad, 5)
     assert len(misses) == 5
-    bm25_global_topk({"a": tp}, global_docs, *stats[0], 5)  # truly evicted
+    bm25_global_topk({"a": tp}, size, *stats[0], 5)  # truly evicted
     assert len(misses) == 6
 
 
@@ -176,7 +172,7 @@ def test_skip_heavy_case():
         if d % 97 == 0:
             corpus[d]["rare"] = 5
     dls = {d: sum(t.values()) for d, t in corpus.items()}
-    tps, n, avg = make_index(corpus, dls, 8)
-    got = wand_topk(tps, n, avg, 10)
+    tps, n, avg, docs = make_index(corpus, dls, 8)
+    got = to_ids(docs, wand_topk(tps, n, avg, 10))
     want = exhaustive_topk(corpus, dls, ["common", "rare"], 10)
     assert got == want
