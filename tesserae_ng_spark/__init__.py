@@ -9,12 +9,13 @@ comparison — see SURVEY.md) as an idiomatic PySpark engine:
   with per-block max-score metadata (Lucene block-postings analog)
 - salted repartition-and-sort to defeat head-term (Zipf) skew
 - checkpoint-resumable builds via per-partition lineage manifests
-- query-time block-max WAND top-k with a bounded min-heap
+- query-time block-max (MaxScore) top-k, vectorized over numpy
 - phrase / proximity / Tesserae-pair scoring via positional postings
 
 Everything relational is declared through the DataFrame API so Catalyst /
 AQE handle pushdown, pruning, join strategy and skew; the custom physics
-(codec, WAND) live inside Arrow UDF bodies and pure-Python query executors.
+(codec, block-max scoring) live inside Arrow UDF bodies and pure-Python
+query executors.
 """
 
 __version__ = "0.1.0"

@@ -10,10 +10,11 @@ and a 32-worker cold wave repeats it 32×). This drop-in daemon module
 (``spark.python.daemon.module``) performs those imports ONCE in the daemon
 before the first fork, so workers start with a warm interpreter.
 
-Failure posture: every pre-import is best-effort — a missing optional
-library must not kill the daemon (worker-side imports would then fail
-with their own, clearer error). The daemon protocol itself is delegated
-verbatim to ``pyspark.daemon.manager``.
+Failure posture: a pre-import that raises ``ImportError`` must not kill
+the daemon (worker-side imports would then fail with their own, clearer
+error), but it is not silent either: the module name and the error go to
+stderr. Any other exception propagates. The daemon protocol itself is
+delegated verbatim to ``pyspark.daemon.manager``.
 """
 
 from __future__ import annotations
@@ -44,8 +45,9 @@ def _preimport() -> None:
         for mod in PREIMPORTS:
             try:
                 __import__(mod)
-            except Exception:
-                pass
+            except ImportError as e:
+                print(f"daemon pre-import of {mod} failed: {e!r}",
+                      file=sys.stderr)
 
 
 if __name__ == "__main__":

@@ -2,8 +2,8 @@
 
 Lucene-analog block postings (SURVEY.md §2.11 `block_encode`; Ding & Suel,
 SIGIR'11 block-max metadata): 128 docs per block, per-block
-(first_doc, last_doc, max_score, n_docs) metadata enabling block skipping
-in block-max WAND.
+(first_doc, last_doc, max_score, n_docs) metadata enabling block pruning
+in the block-max scorer (query/wand.py).
 
 Layout per block (each field its own BinaryType column — columnar at rest):
   doc_ids  : varint( first, delta_1, delta_2, ... )  # non-negative deltas

@@ -159,6 +159,30 @@ def dedup_exact(spark, sf):
     )
 
 
+def bucket_pairs(bands):
+    """(band, bucket, doc_id) rows → one (a, b) row, a < b, per pair of
+    docs sharing a bucket (a pair sharing several bands repeats once per
+    band; callers take ``distinct``).
+
+    ONE groupBy + in-bucket expansion instead of the former band self-join
+    (r7, guide §4.4/§2.4): the self-join evaluated the minhash UDF on BOTH
+    branches and shuffled the bands table twice. Each bucket's sorted doc
+    list pairs PER ELEMENT: ``posexplode`` gives every doc its own row,
+    which pairs with the docs after it (``slice(ids, pos + 2, …)``), so no
+    row holds more than O(m) pairs of an m-doc bucket — building all
+    m(m−1)/2 pair structs inside one row concentrated a hot bucket's
+    O(m²) memory in a single expression."""
+    return (
+        bands.groupBy("band", "bucket")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
+        .filter(F.size("ids") > 1)
+        .select("ids", F.posexplode("ids").alias("pos", "a"))
+        .select(
+            "a", F.explode(F.expr("slice(ids, pos + 2, size(ids))")).alias("b")
+        )
+    )
+
+
 def minhash_lsh_pairs(spark, sf):
     """MinHash+LSH near-dup candidate pairs with exact-Jaccard verification.
 
@@ -188,31 +212,7 @@ def minhash_lsh_pairs(spark, sf):
             )
         ).alias("band", "bucket"),
     )
-    # candidate pairs via ONE groupBy + in-bucket combination expansion
-    # instead of the former band self-join (r7, guide §4.4/§2.4): the
-    # self-join evaluated the minhash UDF on BOTH branches (two full
-    # ArrowEvalPython passes over every document) and shuffled the bands
-    # table twice. Grouping by (band, bucket) computes signatures once;
-    # each bucket's sorted doc list expands to its (a < b) pairs with a
-    # JVM higher-order expression. Pair SET is identical: same docs share
-    # a bucket, array_sort gives the same a < b orientation, and the
-    # cross-band distinct is unchanged.
-    cand = (
-        bands.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), "
-                    "y -> struct(x AS a, y AS b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-        .distinct()
-    )
+    cand = bucket_pairs(bands).distinct()
     # exact verify on candidates only (token-set Jaccard ≥ 0.5)
     tok_sets = docs.select(
         "doc_id",

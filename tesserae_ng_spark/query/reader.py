@@ -44,7 +44,8 @@ import pyarrow.parquet as pq
 
 from tesserae_ng_spark.index.codec import (
     concat_decode_ords,
-    decode_positions,
+    concat_decode_varints,
+    expand_segment_values,
     varint_decode,
 )
 from tesserae_ng_spark.index.manifest import sorted_doc_ids
@@ -63,14 +64,13 @@ class TermPostings:
     lazily. Doc values (payload ids, ``blk_first``/``blk_last``) are doc
     ordinals.
 
-    VERDICT r5 #5: block metadata used to be a list of per-block Python
-    dataclass objects constructed row-at-a-time at fetch. A web-scale
-    head term has ~10^5 blocks (1 per 128 docs), so every fetch paid
-    O(n_blocks) Python object constructions and every metadata walk
-    (WAND shallow-advance, stats-free bound recompute) touched Python
-    attributes per block. With the struct-of-arrays store, fetch is a
-    handful of numpy slices per term, bound recompute is one vectorized
-    expression, and WAND block-skips are a searchsorted over ``blk_last``.
+    A web-scale head term has ~10^5 blocks (1 per 128 docs), so nothing
+    here is per-block Python: fetch is a handful of numpy slices per term,
+    block bounds under any stats are one vectorized expression, and
+    finding the blocks that hold given docs is one searchsorted over
+    ``blk_last``. ``decode_blocks`` decodes any subset of blocks, loading
+    only their payloads, so a pruning scorer reads just the blocks it
+    keeps.
     """
 
     # no __slots__: scorers attach per-term caches (_rows_scores) and
@@ -92,7 +92,7 @@ class TermPostings:
         self.blk_first = blk_first
         self.blk_last = blk_last
         self.blk_max_score = blk_max_score
-        # stats-free bound ingredients (WAND bounds under overridden stats)
+        # stats-free bound ingredients (block bounds under any query stats)
         self.blk_max_tf = blk_max_tf
         self.blk_min_dl = blk_min_dl
         n = int(blk_id.size)
@@ -132,34 +132,34 @@ class TermPostings:
             self._keys = (self.blk_salt << 32) | self.blk_id
         return self._keys
 
+    def decode_blocks(self, idxs=None):
+        """→ (ids, tfs, dls) of block indices ``idxs`` (default: all),
+        concatenated in the given order. Payloads not yet read load first
+        (one read for all of them); each column then decodes in one
+        concatenated pass. Not cached: ``decode_block`` and
+        ``decode_full`` cache their own results."""
+        self.ensure_payloads(idxs)
+        if idxs is None:
+            ids_b, tfs_b, dls_b = self._ids_b, self._tfs_b, self._dls_b
+            counts = self.blk_n_docs
+        else:
+            sel = np.asarray(idxs, dtype=np.int64)
+            at = sel.tolist()
+            ids_b = [self._ids_b[i] for i in at]
+            tfs_b = [self._tfs_b[i] for i in at]
+            dls_b = [self._dls_b[i] for i in at]
+            counts = self.blk_n_docs[sel]
+        ids = concat_decode_ords(ids_b, counts)
+        tfs = concat_decode_varints(tfs_b).view(np.int64)  # < 2^63
+        dls = concat_decode_varints(dls_b).view(np.int64)
+        return ids, tfs, dls
+
     def decode_block(self, bi: int):
-        """→ (ids, tfs, dls) of block ``bi``, loading (with segment
-        readahead) and decoding lazily — WAND-skipped blocks never cost
-        I/O or decode (VERDICT r2 #4)."""
+        """→ (ids, tfs, dls) of block ``bi``, decoded once and cached."""
         d = self._dec[bi]
         if d is None:
-            if self._ids_miss[bi]:
-                self.ensure_payloads(
-                    np.array([bi], dtype=np.int64), segment=True
-                )
-            ids = concat_decode_ords(
-                [self._ids_b[bi]], self.blk_n_docs[bi : bi + 1]
-            )
-            tfs = varint_decode(self._tfs_b[bi]).view(np.int64)  # < 2^63
-            dls = varint_decode(self._dls_b[bi]).view(np.int64)
-            d = self._dec[bi] = (ids, tfs, dls)
+            d = self._dec[bi] = self.decode_blocks([bi])
         return d
-
-    def decode_block_positions(self, bi: int):
-        """Per-doc position arrays of block ``bi`` (diagnostic shape)."""
-        _, tfs, _ = self.decode_block(bi)
-        if self._pos_miss[bi]:
-            self.ensure_payloads(
-                np.array([bi], dtype=np.int64),
-                with_positions=True, segment=True,
-            )
-        p = self._pos_b[bi]
-        return None if p is None else decode_positions(p, tfs)
 
     def positions_flat(self, bi: int):
         """→ (pos_flat int32, per-posting offsets) for block ``bi``,
@@ -169,15 +169,10 @@ class TermPostings:
         if pf is not None:
             return pf
         _, tfs, _ = self.decode_block(bi)
-        if self._pos_miss[bi]:
-            self.ensure_payloads(
-                np.array([bi], dtype=np.int64),
-                with_positions=True, segment=True,
-            )
+        self.ensure_payloads([bi], with_positions=True)
         p = self._pos_b[bi]
         if p is None:
             return None
-        from tesserae_ng_spark.index.codec import expand_segment_values
 
         d = varint_decode(p).view(np.int64)
         glob = np.cumsum(d)
@@ -202,12 +197,9 @@ class TermPostings:
                 self._ld_pos = True
         return ok
 
-    def ensure_payloads(
-        self, idxs=None, with_positions: bool = False, segment: bool = False
-    ) -> None:
+    def ensure_payloads(self, idxs=None, with_positions: bool = False) -> None:
         """Load the compressed payload bytes for block indices ``idxs``
-        (default: all) if not yet read. ``segment`` turns a single-block
-        demand into a readahead window (IndexReader._load_payloads)."""
+        (default: all) that are not yet read, in one read."""
         if idxs is None:
             if self.payloads_loaded(with_positions):
                 return
@@ -229,7 +221,7 @@ class TermPostings:
             raise RuntimeError(
                 f"term {self.term!r}: payload bytes missing and no loader"
             )
-        self._loader(self, need, with_positions, segment)
+        self._loader(self, need, with_positions)
 
     def candidate_positions(self, cand_ids):
         """Positions for a SORTED subset of this term's doc ordinals, decoding
@@ -241,16 +233,14 @@ class TermPostings:
         (the bulk of its bytes) load and decode for a handful of blocks
         instead of all of them (decode_full(with_positions=True) was 42% of
         a mixed 2000-query batch)."""
-        import numpy as _np
-
         n_blocks = self.n_blocks
-        cand_ids = _np.asarray(cand_ids, dtype=_np.int64)
+        cand_ids = np.asarray(cand_ids, dtype=np.int64)
         bulk = self._full is not None and self._full[3] is not None
         needed = None
         if not bulk:
             # blk_last IS the skip list — no per-block Python array build
-            bi = _np.searchsorted(self.blk_last, cand_ids)
-            needed = _np.unique(bi)
+            bi = np.searchsorted(self.blk_last, cand_ids)
+            needed = np.unique(bi)
             # rent-or-buy across a BATCH's queries: once this term's
             # queries have cumulatively touched > 1/4 of its blocks
             # (or one query does — head∧head conjunction), pay the full
@@ -271,23 +261,20 @@ class TermPostings:
             ids, tfs, dls, pos_flat, pos_offs = self.decode_full(
                 with_positions=True
             )
-            from tesserae_ng_spark.index.codec import expand_segment_values
-
-            sel = _np.searchsorted(ids, cand_ids)
+            sel = np.searchsorted(ids, cand_ids)
             tfs_out = tfs[sel]
             dls_out = dls[sel]
-            out_offs = _np.cumsum(tfs_out) - tfs_out
+            out_offs = np.cumsum(tfs_out) - tfs_out
             total = int(tfs_out.sum())
             gather = expand_segment_values(
                 pos_offs[sel] - out_offs, out_offs, total
-            ) + _np.arange(total, dtype=_np.int64)
+            ) + np.arange(total, dtype=np.int64)
             return tfs_out, dls_out, pos_flat[gather], out_offs
 
-        self.ensure_payloads(needed, with_positions=True, segment=False)
-        from tesserae_ng_spark.index.codec import expand_segment_values
+        self.ensure_payloads(needed, with_positions=True)
 
-        tfs_out = _np.empty(cand_ids.size, dtype=_np.int64)
-        dls_out = _np.empty(cand_ids.size, dtype=_np.int64)
+        tfs_out = np.empty(cand_ids.size, dtype=np.int64)
+        dls_out = np.empty(cand_ids.size, dtype=np.int64)
         parts: list = []
         for i in needed:
             ids, tfs, dls = self.decode_block(i)
@@ -297,9 +284,9 @@ class TermPostings:
             flat, offs = flat_offs
             # bi is sorted (cand_ids sorted, blocks in doc order): this
             # block's candidates are one contiguous slice
-            lo = int(_np.searchsorted(bi, i, "left"))
-            hi = int(_np.searchsorted(bi, i, "right"))
-            local = _np.searchsorted(ids, cand_ids[lo:hi])
+            lo = int(np.searchsorted(bi, i, "left"))
+            hi = int(np.searchsorted(bi, i, "right"))
+            local = np.searchsorted(ids, cand_ids[lo:hi])
             tf_sel = tfs[local]
             tfs_out[lo:hi] = tf_sel
             dls_out[lo:hi] = dls[local]
@@ -307,19 +294,19 @@ class TermPostings:
             # pass (offset-delta expand + arange), not per-candidate
             # Python slices (VERDICT r5 #7: the per-li loop was the last
             # per-row Python on the positional read path)
-            out_offs = _np.cumsum(tf_sel) - tf_sel
+            out_offs = np.cumsum(tf_sel) - tf_sel
             total = int(out_offs[-1] + tf_sel[-1]) if tf_sel.size else 0
             if total:
                 gather = expand_segment_values(
                     offs[local] - out_offs, out_offs, total
-                ) + _np.arange(total, dtype=_np.int64)
+                ) + np.arange(total, dtype=np.int64)
                 parts.append(flat[gather])
         pos_flat = (
-            _np.concatenate(parts)
+            np.concatenate(parts)
             if parts
-            else _np.empty(0, dtype=_np.int32)
+            else np.empty(0, dtype=np.int32)
         )
-        pos_offs = _np.cumsum(tfs_out) - tfs_out
+        pos_offs = np.cumsum(tfs_out) - tfs_out
         return tfs_out, dls_out, pos_flat, pos_offs
 
     def decode_full(self, with_positions: bool = False) -> tuple:
@@ -329,32 +316,23 @@ class TermPostings:
         gather with vectorized indexing instead of touching millions of
         per-doc objects. pos_flat/pos_offsets are None unless requested.
         Cached."""
-        import numpy as _np
-
-        from tesserae_ng_spark.index.codec import concat_decode_varints
-
-        need_pos = with_positions
-        if self._full is not None and (not need_pos or self._full[3] is not None):
-            return self._full
-        self.ensure_payloads(with_positions=need_pos)
-        counts = self.blk_n_docs
-        ids = concat_decode_ords(self._ids_b, counts)
-        tfs = concat_decode_varints(self._tfs_b).view(_np.int64)
-        dls = concat_decode_varints(self._dls_b).view(_np.int64)
+        full = self._full
+        if full is not None and (not with_positions or full[3] is not None):
+            return full
+        self.ensure_payloads(with_positions=with_positions)
+        ids, tfs, dls = full[:3] if full is not None else self.decode_blocks()
         pos_flat = None
         pos_offs = None
-        if need_pos:
+        if with_positions:
             if any(p is None for p in self._pos_b):
                 raise RuntimeError("index built without positions")
-            from tesserae_ng_spark.index.codec import expand_segment_values
-
-            d = concat_decode_varints(self._pos_b).view(_np.int64)
+            d = concat_decode_varints(self._pos_b).view(np.int64)
             # undo per-doc delta: global cumsum minus per-segment base
-            offs = _np.cumsum(tfs) - tfs
-            glob = _np.cumsum(d)
+            offs = np.cumsum(tfs) - tfs
+            glob = np.cumsum(d)
             seg_base = glob[offs] - d[offs]
             base = expand_segment_values(seg_base, offs, d.size)
-            pos_flat = (glob - base).astype(_np.int32)
+            pos_flat = (glob - base).astype(np.int32)
             pos_offs = offs
         self._full = (ids, tfs, dls, pos_flat, pos_offs)
         return self._full
@@ -365,11 +343,6 @@ _META_COLS = (
     "block_last_doc", "block_max_score", "block_max_tf", "block_min_dl",
 )
 _PAYLOAD_COLS = ("doc_ids", "tfs", "dls")
-
-# single-block demand loads are expanded to this many contiguous blocks
-# (readahead): WAND's next advance usually lands nearby, and one pyarrow
-# read per block would drown selective queries in per-read fixed costs
-PAYLOAD_SEGMENT_BLOCKS = 32
 
 # footer-index key of the dictionary (postings buckets are keyed by int)
 _DICT = "dictionary"
@@ -488,8 +461,8 @@ class IndexReader:
             tbl = self._dict_ds.to_table()
             self._dict_cache = {r["term"]: r for r in tbl.to_pylist()}
         # instrumentation: blocks whose payload bytes were actually read /
-        # payload scans issued (tests pin that WAND-skipped blocks never
-        # materialize; ops can watch I/O amplification)
+        # payload scans issued (tests pin that blocks a scorer prunes are
+        # never read; ops can watch I/O amplification)
         self.payload_blocks_loaded = 0
         self.payload_scans = 0
         # payload rows the scans actually returned: equals the requested
@@ -614,9 +587,9 @@ class IndexReader:
     def _fetch_uncached(self, terms: list[str]) -> dict[str, TermPostings]:
         """METADATA-ONLY block fetch: no payload (binary) columns are
         read. A head term's postings are GBs at web scale — eagerly pulling
-        them made skipping pointless (block-max WAND skipped the *decode*
-        but the I/O had already happened). Payloads load on demand via
-        ensure_payloads/_load_payloads."""
+        them would make pruning pointless (a pruned block's decode is
+        skipped, but its I/O would already have happened). Payloads load on
+        demand via ensure_payloads/_load_payloads."""
         dic = self.lookup(terms)
         if not dic:
             return {}
@@ -679,38 +652,16 @@ class IndexReader:
         return out
 
     def _load_payloads(
-        self, tp: TermPostings, idxs: np.ndarray, with_positions: bool,
-        segment: bool,
+        self, tp: TermPostings, idxs: np.ndarray, with_positions: bool
     ) -> None:
         """One footer-pruned read for the requested block indices' payload
-        bytes.
-
-        ``segment``: expand each demanded block to a PAYLOAD_SEGMENT_BLOCKS
-        readahead window of its neighbors (list-position aligned) — WAND's
-        next landing is usually nearby, and per-block reads would pay the
-        per-read fixed cost hundreds of times per term."""
-        n = tp.n_blocks
-        if segment and n > idxs.size:
-            wstarts = np.unique(idxs // PAYLOAD_SEGMENT_BLOCKS)
-            want = (
-                wstarts[:, None] * PAYLOAD_SEGMENT_BLOCKS
-                + np.arange(PAYLOAD_SEGMENT_BLOCKS, dtype=np.int64)
-            ).ravel()
-            want = want[want < n]
-            m = tp._ids_miss[want]
-            if with_positions:
-                m = m | tp._pos_miss[want]
-            idxs = want[m]
-        if idxs.size == 0:
-            # nothing left to load (callers usually pre-filter to unloaded
-            # blocks, but an empty set must not fall through to `& sel`
-            # with sel=None — ADVICE r4)
-            return
+        bytes (``TermPostings.ensure_payloads`` passes only unread,
+        non-empty sets)."""
         # per-salt block sets, not salt × block_id ranges: the cross product
         # pulled same-numbered blocks from EVERY listed salt, reading
-        # payload bytes the window never asked for (ADVICE r3 / VERDICT r3
+        # payload bytes the request never asked for (ADVICE r3 / VERDICT r3
         # #6). Each salt's block range also prunes row groups, so a head
-        # term spanning many row groups reads only the window's.
+        # term spanning many row groups reads only the requested blocks'.
         s_arr = tp.blk_salt[idxs]
         b_arr = tp.blk_id[idxs]
         where = {
@@ -783,8 +734,8 @@ class IndexReader:
         """Match ``rows`` of the scan to ``tp``'s blocks by packed key —
         one searchsorted against the term's (cached) sorted block keys;
         Python touches only the matched rows' final attribute writes.
-        Scan rows a fetch doesn't track (readahead windows, stale rows)
-        drop out in the validity mask, same as the old dict .get."""
+        Scan rows a fetch doesn't track (stale rows) drop out in the
+        validity mask."""
         if not tp.n_blocks:
             return
         bkeys = tp.blk_keys()
@@ -823,7 +774,7 @@ class IndexReader:
         path (a slice's union of query terms, or an exhaustive scorer
         touching every block anyway). ``max_df`` skips huge terms so a
         batch prefetch can stay lazy on exactly the head terms where
-        block-max skipping pays."""
+        block-max pruning pays."""
         need = [
             tp
             for tp in tps

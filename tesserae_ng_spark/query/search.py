@@ -2,8 +2,9 @@
 
 Single-query path (SURVEY.md §3.2): runs fully in-process — analyze the
 query with the SAME chain used at index time (plain-Python functions),
-pyarrow-fetch the terms' dictionary rows + posting blocks, run block-max
-WAND. No Spark session needed (the reference's always-warm Solr core
+pyarrow-fetch the terms' dictionary rows + posting block metadata, then
+score with one of three exhaustive-equivalent scorers (``Searcher.search``).
+No Spark session needed (the reference's always-warm Solr core
 analog). Batch path (``search_batch``): the one-shard case of the one
 distributed executor, ``sharded.search_sharded`` — executors open the same
 immutable index (local FS here, object store at scale) and score their
@@ -42,15 +43,14 @@ from tesserae_ng_spark.schemas import BM25_B, BM25_K1
 # are sharded across executors in batch mode anyway
 GLOBAL_ACC_MAX_DOCS = 100_000_000
 
-# below this many total postings, vectorized exhaustive scoring beats the
-# skip-capable doc-at-a-time loop: selective (low-df) queries are small
-# enough to score outright, while huge head-term unions are exactly where
-# block-max skipping pays. ~16M postings ≈ the numpy/WAND crossover here.
+# above this many total postings a query runs the block-max pruning scorer
+# (wand_topk), which reads and decodes only the blocks it cannot prune;
+# below it the exhaustive scorers decode everything in one bulk read
 DENSE_POSTINGS_CUTOFF = 1 << 24
 
 # batch prefetch loads payload bytes eagerly only for terms up to this df;
-# heavier terms stay metadata-only so block-max WAND's lazy per-segment
-# payload loads skip real I/O exactly where postings are GBs
+# heavier terms stay metadata-only so the pruning scorer reads only the
+# blocks it keeps, exactly where postings are GBs
 PREFETCH_MAX_DF = 1 << 20
 
 
@@ -74,10 +74,10 @@ class Searcher:
 
     def prefetch(self, terms) -> None:
         """One metadata scan + one payload scan for a batch's terms (their
-        union); head terms past PREFETCH_MAX_DF stay lazy so WAND can skip
-        their blocks without the I/O having happened. Positions are never
-        prefetched — positional queries load them candidate-only
-        (TermPostings.candidate_positions)."""
+        union); head terms past PREFETCH_MAX_DF stay lazy so the pruning
+        scorer can skip their blocks without the I/O having happened.
+        Positions are never prefetched — positional queries load them
+        candidate-only (TermPostings.candidate_positions)."""
         if terms:
             fetched = self.reader.fetch(sorted(terms))
             self.reader.ensure_payloads(
@@ -90,10 +90,10 @@ class Searcher:
         distributed-IDF analog): {"n_docs": int, "avg_dl": float,
         "df": {term: global df}}. Scores become comparable across shards so
         a driver-side merge of per-shard top-k is rank-identical to one
-        global index. Block-max WAND runs under overridden stats too: the
-        index stores stats-free per-block (max_tf, min_dl) and bounds are
-        recomputed under the query's (n_docs, avg_dl, df) — see
-        TermIterator.
+        global index. The block-max scorer runs under overridden stats
+        too: the index stores stats-free per-block (max_tf, min_dl), and
+        ``wand_topk`` computes every bound under the query's (n_docs,
+        avg_dl, df).
 
         The scorers return doc ordinals; the top-k maps through the
         reader's doc list into the ``Hit``s' doc_ids (k gathers)."""
@@ -113,9 +113,8 @@ class Searcher:
                 avg_dl = self.reader.avg_dl
                 dfo = None
             # three exhaustive-equivalent scorers, picked by shape:
-            # - block-max WAND: huge unions where skipping pays. Under
-            #   overridden (sharded/global) stats it runs on stats-free
-            #   bounds recomputed from per-block (max_tf, min_dl).
+            # - block-max MaxScore (wand_topk): huge unions, where pruning
+            #   whole blocks pays; it loads only the blocks it keeps
             # - global accumulator: dense postings + index fits a per-node
             #   accumulator over its ordinal space (scatter-add per term,
             #   per-term work cached)

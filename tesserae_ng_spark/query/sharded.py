@@ -10,9 +10,9 @@ shape (public Solr semantics — the reference's deployment model):
     per-term df (shards partition docs disjointly, so sums are exact).
   phase 2 (distributed): every (shard × query-slice) task scores its shard
     with the GLOBAL stats so scores are comparable across shards; per-shard
-    top-k candidates flow back. bm25 runs block-max WAND on stats-free
-    bounds (TermIterator recomputes per-block bounds from max_tf/min_dl
-    under the global stats).
+    top-k candidates flow back. bm25's block-max scorer computes its
+    per-block bounds from the stored (max_tf, min_dl) under the global
+    stats.
   driver cut: per query, rank candidates by (score desc, doc_id asc) and
     keep k — rank- and score-identical to a single index over the union of
     the shards (pinned by tests/test_sharded.py for bm25 AND phrase AND
@@ -194,8 +194,8 @@ def _query_topk(searcher, q, k: int, gs: dict | None):
     top-k_q, so the driver cut at the same k_q is exact.
 
     ``gs is None`` (one shard): the shard's own stats are the global stats,
-    so the plain per-query path returns final scores (bm25 keeps WAND on
-    the stored block bounds, phrase multiplies its own idf in). Otherwise
+    so the plain per-query path returns final scores (bm25 under the
+    shard's own stats, phrase multiplies its own idf in). Otherwise
     score under the GLOBAL stats; phrase returns tf-parts plus this shard's
     match count, and the driver multiplies the global idf in. The match
     primitives work in the shard's doc ordinals (the cut at k is the same
@@ -259,6 +259,12 @@ def cut_topk(payloads: list[tuple], n_docs: float) -> dict:
     the same libm call in the same idf·(tf/den) order as ``phrase_topk`` —
     bit-identical to a single union index. The result does not depend on
     payload order (rows equal in every sort key are equal rows).
+
+    Size: a shard's task returns at most k_q candidates per query, so the
+    driver holds at most Σ_shards Σ_q k_q candidate rows (plus one match
+    row per phrase query and shard), and the result has exactly
+    Σ_q min(k_q, candidates_q) rows — pinned at 10^5 queries × 4 shards by
+    tests/test_topk_cut.py.
 
     → {"query_id", "rank" (1-based, int32), "doc_id", "score"} arrays,
     sorted by (query_id, rank)."""

@@ -1,9 +1,11 @@
-"""Block-max WAND top-k over compressed postings (SURVEY.md §2.11).
+"""Block-max top-k over compressed postings (SURVEY.md §2.11).
 
-Algorithm: Broder et al. CIKM'03 (WAND) + Ding & Suel SIGIR'11 (block-max
-refinement). Lucene 4 — the reference's engine — had neither; BMW is a
-contract requirement (BASELINE.json north_star); Lucene 8+ adopted the
-same algorithm, so its public semantics are the behavioral target.
+Algorithm: MaxScore (Turtle & Flood 1995) with per-block upper bounds (the
+block-max refinement of Ding & Suel SIGIR'11), run term-at-a-time over
+numpy arrays: no per-posting Python. Lucene 4 — the reference's engine —
+had no block-max pruning; it is a contract requirement (BASELINE.json
+north_star), and Lucene 8+ prunes with the same per-block bounds, so its
+public semantics are the behavioral target.
 
 Guarantee: EXHAUSTIVE-EQUIVALENT top-k — identical (doc, score) lists,
 including the deterministic tie-break (score desc, doc asc) — property-
@@ -16,17 +18,20 @@ tie-break; callers map the final top-k through the reader's doc list.
 
 Pruning discipline for exactness:
 - prune only when upper_bound < threshold - EPS (never on ==): a candidate
-  tying the heap minimum may still win the doc_id tie-break;
-- EPS absorbs float-addition rounding between the bound sum and the real
-  score sum;
-- per-posting scores are recomputed from (tf, dl) with the exact oracle
-  formula in float64, and block_max_score was stored as the max of those
-  same float64 values at merge time, so bounds are true upper bounds.
+  tying the k-th score may still win the doc_id tie-break;
+- EPS absorbs float-addition rounding between bound sums and real score
+  sums;
+- a block's bound is idf·f(max_tf, min_dl) under the query's own stats
+  (local, or global under ``df_override``): BM25's tf-part f(tf, dl) =
+  tf/(tf + k1·(1−b + b·dl/avg_dl)) is monotone ↑ in tf and ↓ in dl, so
+  the bound is ≥ the score of every posting in the block;
+- scores are recomputed from (tf, dl) with the exact oracle formula in
+  float64 and summed per doc in sorted-term order from 0.0, one add per
+  term present, in every scorer — so all three are bit-identical.
 """
 
 from __future__ import annotations
 
-import heapq
 import math
 
 import numpy as np
@@ -36,130 +41,29 @@ from tesserae_ng_spark.schemas import BM25_B, BM25_K1
 EPS = 1e-12
 
 
-class TermIterator:
-    """Cursor over one term's blocks (blocks arrive in doc order: salts are
-    contiguous doc ranges, so (salt, block_id) order == doc order).
+def _idf(n_docs: int, df: int) -> float:
+    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
-    ``df`` overrides the stored document frequency (sharded/distributed
-    search under GLOBAL stats — the Solr distributed-IDF analog). Stored
-    ``block_max_score`` was computed under the index's own merge-time
-    (n_docs, avg_dl, df) and is NOT a valid bound under any other stats, so
-    when ``stats_free`` is set, per-block bounds are recomputed from the
-    stored (max_tf, min_dl): BM25's tf-part f(tf, dl) = tf/(tf + k1·(1−b +
-    b·dl/avg_dl)) is monotone ↑ in tf and ↓ in dl, hence idf·f(max_tf,
-    min_dl) ≥ idf·f(tf_i, dl_i) for every posting i of the block — a true
-    (slightly looser) upper bound under the query's stats."""
 
-    def __init__(self, postings, n_docs: int, avg_dl: float,
-                 k1: float = BM25_K1, b: float = BM25_B,
-                 df: int | None = None, stats_free: bool = False):
-        self.term = postings.term
-        df_t = postings.df if df is None else df
-        self.idf = math.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
-        self.tp = postings
-        # struct-of-arrays metadata (VERDICT r5 #5): block skips index
-        # numpy arrays / searchsorted instead of per-block Python objects
-        self._last = postings.blk_last
-        self._first = postings.blk_first
-        self.n_blocks = postings.n_blocks
-        self.avg_dl = avg_dl
-        self.k1 = k1
-        self.b = b
-        self._bounds = None
-        if stats_free and self.n_blocks:
-            mt = postings.blk_max_tf.astype(np.float64)
-            md = postings.blk_min_dl.astype(np.float64)
-            self._bounds = self.idf * mt / (
-                mt + k1 * (1.0 - b + b * md / avg_dl)
-            )
-            self.max_score = float(self._bounds.max())
-        else:
-            self._bounds_stored = postings.blk_max_score
-            self.max_score = postings.max_score
-        self.exhausted = not self.n_blocks
-        self.bi = 0
-        self.pi = 0
-        self._ids = None
-        self._scores = None
-        if not self.exhausted:
-            self._load(0)
+def _bm25(idf: float, tfs, dls, avg_dl: float, k1: float, b: float):
+    """Per-posting BM25 scores (or, from (max_tf, min_dl), block bounds)."""
+    return idf * tfs / (tfs + k1 * (1.0 - b + b * dls / avg_dl))
 
-    def _load(self, bi: int) -> None:
-        """Move the block cursor — METADATA ONLY. Decompression happens
-        lazily on first posting access (_ensure_decoded), so skip-heavy
-        queries advance over blocks without ever decoding them (the actual
-        block-max WAND payoff; Ding & Suel §4)."""
-        self.bi = bi
-        self.pi = 0
-        self._ids = None
-        self._scores = None
 
-    def _ensure_decoded(self) -> None:
-        if self._ids is None:
-            ids, tfs, dls = self.tp.decode_block(self.bi)
-            self._ids = ids
-            self._scores = self.idf * tfs / (
-                tfs + self.k1 * (1.0 - self.b + self.b * dls / self.avg_dl)
-            )
+def _kth_largest(x: np.ndarray, k: int) -> float:
+    """k-th largest entry of ``x``, or −∞ when it has fewer than k."""
+    if x.size < k:
+        return -math.inf
+    return float(np.partition(x, x.size - k)[x.size - k])
 
-    def cur_doc(self) -> int:
-        if self._ids is None:
-            if self.pi == 0:
-                # block metadata knows its first doc — no decode needed
-                return int(self._first[self.bi])
-            self._ensure_decoded()
-        return int(self._ids[self.pi])
 
-    def cur_score(self) -> float:
-        self._ensure_decoded()
-        return float(self._scores[self.pi])
-
-    def cur_block_max(self) -> float:
-        if self._bounds is not None:
-            return float(self._bounds[self.bi])
-        return float(self._bounds_stored[self.bi])
-
-    def cur_block_last(self) -> int:
-        return int(self._last[self.bi])
-
-    def _seek_block(self, target: int) -> bool:
-        """Block cursor → first block whose last_doc >= target, via ONE
-        searchsorted over the blk_last skip array (the old per-block
-        Python while-loop was O(blocks skipped) per seek — a head term at
-        web scale has ~10^5 blocks). Never seeks backwards."""
-        if int(self._last[self.bi]) >= target:
-            return True
-        bi = int(np.searchsorted(self._last, target))
-        if bi >= self.n_blocks:
-            self.exhausted = True
-            return False
-        self._load(bi)
-        return True
-
-    def advance_to(self, target: int) -> bool:
-        """Seek to the first posting with doc >= target. Intermediate blocks
-        are skipped on metadata alone; only the landing block decodes."""
-        if not self._seek_block(target):
-            return False
-        self._ensure_decoded()
-        self.pi = int(np.searchsorted(self._ids[self.pi:], target)) + self.pi
-        return True
-
-    def next(self) -> bool:
-        self._ensure_decoded()
-        self.pi += 1
-        if self.pi < self._ids.size:
-            return True
-        if self.bi + 1 >= self.n_blocks:
-            self.exhausted = True
-            return False
-        self._load(self.bi + 1)
-        return True
-
-    def shallow_advance(self, target: int) -> bool:
-        """Advance the block cursor until the current block may contain
-        target — metadata only, nothing decodes."""
-        return self._seek_block(target)
+def _add(acc: np.ndarray, cand: np.ndarray, ids: np.ndarray, scores):
+    """acc[i] += the score of doc cand[i] wherever the sorted, non-empty
+    ``ids`` hold it: one search per candidate, so a long posting list
+    costs O(|cand| · log |ids|)."""
+    pos = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
+    hit = ids[pos] == cand
+    acc[hit] += scores[pos[hit]]
 
 
 def wand_topk(
@@ -173,104 +77,112 @@ def wand_topk(
 ) -> list[tuple[int, float]]:
     """→ [(ordinal, score)] sorted by (score desc, ordinal asc), len ≤ k.
 
-    Full scoring sums per-term partials in sorted-term order — a fixed
-    order makes float sums deterministic across runs and parallelism.
+    Vectorized block-max MaxScore:
 
-    ``df_override`` maps term → GLOBAL df (sharded search): iterators run
-    in stats-free mode, recomputing block bounds from (max_tf, min_dl)
-    under the given (n_docs, avg_dl, df).
+    1. every block's bound is idf·f(max_tf, min_dl) under the query's
+       stats; a term's bound is its largest block bound;
+    2. θ is the k-th largest per-doc partial sum over the highest-bound
+       blocks that hold at least k postings (``_threshold``) — a partial
+       sum never exceeds the doc's full score;
+    3. the lowest-bound terms whose bound sum stays < θ − EPS are
+       NON-ESSENTIAL: a doc in none of the other (essential) terms cannot
+       reach θ. Candidates are the union of the essential terms' docs,
+       scored whole by ``term_rows_scores`` (cached per term);
+    4. θ rises to the k-th largest essential partial sum. A candidate
+       whose partial sum plus the bounds of the non-essential blocks that
+       may hold it stays < θ − EPS drops out;
+    5. each non-essential term loads and decodes only the blocks holding a
+       surviving candidate. Scores add in sorted-term order and
+       ``dense_row_topk`` cuts.
+
+    ``df_override`` maps term → GLOBAL df (sharded search): bounds and
+    scores both use it.
     """
-    stats_free = df_override is not None
-    its = [
-        TermIterator(
-            tp, n_docs, avg_dl, k1, b,
-            df=(df_override or {}).get(tp.term),
-            stats_free=stats_free,
-        )
-        for tp in term_postings.values()
-        if tp.n_blocks
+    terms = sorted(t for t, tp in term_postings.items() if tp.n_blocks)
+    if not terms:
+        return []
+    tps = [term_postings[t] for t in terms]
+    dfs = [
+        df_override.get(t, tp.df) if df_override else tp.df
+        for t, tp in zip(terms, tps)
     ]
-    its = [it for it in its if not it.exhausted]
-    heap: list[tuple[float, int]] = []  # (score, -ordinal) min-heap
+    idfs = [_idf(n_docs, df) for df in dfs]
+    bounds = [
+        _bm25(idf, tp.blk_max_tf, tp.blk_min_dl, avg_dl, k1, b)
+        for idf, tp in zip(idfs, tps)
+    ]
+    theta = _threshold(tps, idfs, bounds, k, avg_dl, k1, b)
 
-    def theta() -> float:
-        return heap[0][0] if len(heap) >= k else -math.inf
+    term_max = np.array([bd.max() for bd in bounds])
+    order = np.argsort(term_max, kind="stable")
+    n_non = int(np.count_nonzero(np.cumsum(term_max[order]) < theta - EPS))
+    # at least one term stays essential (the bound sum covers θ unless
+    # rounding says otherwise)
+    non = set(order[: min(n_non, len(terms) - 1)].tolist())
+    ess = {
+        i: term_rows_scores(tps[i], n_docs, avg_dl, dfs[i], k1, b)
+        for i in range(len(terms)) if i not in non
+    }
+    if len(ess) == 1:
+        ((cand, part),) = ess.values()  # 0.0 + s == s: no copy needed
+    else:
+        cand, inv = np.unique(
+            np.concatenate([r for r, _ in ess.values()]), return_inverse=True
+        )
+        # bincount adds sequentially: per doc, in sorted-term order
+        part = np.bincount(
+            inv, weights=np.concatenate([sc for _, sc in ess.values()])
+        )
+    if not non:
+        return dense_row_topk(part, k, cand)
 
-    while its:
-        its.sort(key=lambda x: x.cur_doc())
-        th = theta()
-        acc = 0.0
-        pivot_idx = -1
-        for i, it in enumerate(its):
-            acc += it.max_score
-            if acc >= th - EPS:
-                pivot_idx = i
-                break
-        if pivot_idx < 0:
-            break  # even all terms together cannot reach the threshold
-        pivot_doc = its[pivot_idx].cur_doc()
-        # include every iterator already sitting on pivot_doc: they
-        # contribute to its real score, so they belong in the bound
-        while (
-            pivot_idx + 1 < len(its)
-            and its[pivot_idx + 1].cur_doc() == pivot_doc
-        ):
-            pivot_idx += 1
-
-        # block-max refinement: tighter bound from the leaders' current blocks
-        leaders = its[: pivot_idx + 1]
-        ok = True
-        bound = 0.0
-        for it in leaders:
-            if not it.shallow_advance(pivot_doc):
-                ok = False
-                break
-            bound += it.cur_block_max()
-        if not ok:
-            its = [x for x in its if not x.exhausted]
+    theta = max(theta, _kth_largest(part, k))
+    ub = part.copy()
+    held = {}  # non-essential term → (its block per candidate, may hold it)
+    for i in non:
+        tp = tps[i]
+        bi = np.minimum(np.searchsorted(tp.blk_last, cand), tp.n_blocks - 1)
+        inside = (tp.blk_first[bi] <= cand) & (cand <= tp.blk_last[bi])
+        ub[inside] += bounds[i][bi[inside]]
+        held[i] = (bi, inside)
+    keep = ub >= theta - EPS
+    cand = cand[keep]
+    acc = np.zeros(cand.size, dtype=np.float64)
+    for i in range(len(terms)):  # sorted-term order
+        if i in ess:
+            _add(acc, cand, *ess[i])
             continue
-        if bound < th - EPS:
-            # skip past the earliest block boundary among leaders, bounded
-            # by the next non-leader's current doc (Ding & Suel GetNewCandidate)
-            nxt = min(it.cur_block_last() for it in leaders) + 1
-            if pivot_idx + 1 < len(its):
-                nxt = min(nxt, its[pivot_idx + 1].cur_doc())
-            nxt = max(nxt, pivot_doc + 1)
-            for it in leaders:
-                it.advance_to(nxt)
-            its = [x for x in its if not x.exhausted]
-            continue
+        bi, inside = held[i]
+        need = np.unique(bi[keep & inside])
+        if need.size:
+            ids, tfs, dls = tps[i].decode_blocks(need)
+            _add(acc, cand, ids, _bm25(idfs[i], tfs, dls, avg_dl, k1, b))
+    return dense_row_topk(acc, k, cand)
 
-        # shallow_advance may have moved a leader's cursor PAST pivot_doc
-        # (block switch resets to the next block's first doc): re-sort and
-        # re-pivot on the fresh state — progress was made, no livelock.
-        if any(it.cur_doc() > pivot_doc for it in leaders):
-            continue
 
-        # aligned ⟺ every leader sits on pivot_doc (leaders are ≤ pivot_doc
-        # after the guard above; non-leaders are ≥ pivot_doc by sort order)
-        if min(it.cur_doc() for it in leaders) == pivot_doc:
-            aligned = [it for it in its if it.cur_doc() == pivot_doc]
-            score = 0.0
-            for it in sorted(aligned, key=lambda x: x.term):
-                score += it.cur_score()
-            item = (score, -pivot_doc)
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-            for it in aligned:
-                it.next()
-            its = [x for x in its if not x.exhausted]
-        else:
-            # advance a strictly-lagging iterator (largest term bound first)
-            lagging = [it for it in leaders if it.cur_doc() < pivot_doc]
-            lag = max(lagging, key=lambda x: x.max_score)
-            lag.advance_to(pivot_doc)
-            its = [x for x in its if not x.exhausted]
-
-    out = sorted(heap, key=lambda item: (-item[0], -item[1]))
-    return [(-negid, s) for (s, negid) in out]
+def _threshold(tps, idfs, bounds, k, avg_dl, k1, b) -> float:
+    """θ for wand_topk: the k-th largest per-doc partial sum over the
+    highest-bound blocks that together hold at least k postings, or −∞
+    when they hold fewer than k docs. Every block holds ≥ 1 posting, so
+    the k highest bounds suffice (one partition, no full sort)."""
+    all_b = np.concatenate(bounds)
+    m = min(k, all_b.size)
+    top = np.argpartition(-all_b, m - 1)[:m]
+    top = top[np.argsort(-all_b[top], kind="stable")]
+    n_post = np.concatenate([tp.blk_n_docs for tp in tps])[top]
+    top = top[: int(np.searchsorted(np.cumsum(n_post), k)) + 1]
+    # global block index → (term, block within the term)
+    sizes = np.array([bd.size for bd in bounds])
+    ends = np.cumsum(sizes)
+    term_of = np.searchsorted(ends, top, side="right")
+    blk = top - (ends - sizes)[term_of]
+    ords, scores = [], []
+    for t in np.unique(term_of).tolist():
+        ids, tfs, dls = tps[t].decode_blocks(np.sort(blk[term_of == t]))
+        ords.append(ids)
+        scores.append(_bm25(idfs[t], tfs, dls, avg_dl, k1, b))
+    _, inv = np.unique(np.concatenate(ords), return_inverse=True)
+    return _kth_largest(np.bincount(inv, weights=np.concatenate(scores)), k)
 
 
 def term_rows_scores(
@@ -296,8 +208,7 @@ def term_rows_scores(
         cache[stats_key] = cache.pop(stats_key)
         return cached
     rows, tfs, dls, _, _ = tp.decode_full()
-    idf = math.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
-    scores = idf * tfs / (tfs + k1 * (1.0 - b + b * dls / avg_dl))
+    scores = _bm25(_idf(n_docs, df_t), tfs, dls, avg_dl, k1, b)
     if len(cache) >= 4:  # bounded: stats keys are few and stable
         cache.pop(next(iter(cache)))  # evict LRU entry only
     cache[stats_key] = (rows, scores)
@@ -395,15 +306,13 @@ def bm25_dense_topk(
 ) -> list[tuple[int, float]]:
     """Vectorized exhaustive BM25 top-k — the dense-postings fast path.
 
-    WAND's doc-at-a-time Python loop wins when it can SKIP (selective
-    terms, huge N); with dense postings (head-term queries, small
-    vocabularies) it degenerates to visiting everything at ~1 µs/doc.
-    This path decodes whole blocks into numpy and scores every posting
-    vectorized (~50× faster when no skipping is possible).
+    Decodes every block into numpy and scores every posting vectorized:
+    for small posting unions that beats computing bounds and thresholds
+    first (wand_topk), which pays only when whole blocks can be pruned.
 
     EXHAUSTIVE-EQUIVALENT to wand_topk bit-for-bit: terms are accumulated
     in sorted-term order (np.add.at is sequential and unbuffered), so each
-    doc's float-addition order matches WAND's full-score order. Every
+    doc's float-addition order matches wand_topk's. Every
     entry of ``acc`` is a matched doc with a strictly positive score
     (idf > 0, tf ≥ 1), so dense_row_topk's nonzero = hit rule holds.
     """
@@ -414,10 +323,9 @@ def bm25_dense_topk(
         if not tp.n_blocks:
             continue
         df_t = df_override.get(term, tp.df) if df_override else tp.df
-        idf = math.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
         ids, tfs, dls, _, _ = tp.decode_full()
         ids_parts.append(ids)
-        score_parts.append(idf * tfs / (tfs + k1 * (1.0 - b + b * dls / avg_dl)))
+        score_parts.append(_bm25(_idf(n_docs, df_t), tfs, dls, avg_dl, k1, b))
     if not ids_parts:
         return []
     ids = np.concatenate(ids_parts)

@@ -77,9 +77,9 @@ POSTINGS_SCHEMA = T.StructType(
         # stats-FREE bound ingredients: max tf and min dl over the block's
         # postings. BM25's tf-part is monotone ↑ in tf and ↓ in dl, so
         # idf(df)·f(max_tf, min_dl) is a true per-block upper bound under
-        # ANY (n_docs, avg_dl, df) — this is what lets block-max WAND skip
-        # under sharded/global IDF, where the stored block_max_score
-        # (computed under merge-time shard-local stats) is not a valid bound.
+        # ANY (n_docs, avg_dl, df), so the block-max scorer (query/wand.py)
+        # uses it under local and sharded/global IDF alike; the stored
+        # block_max_score holds only under merge-time shard-local stats.
         T.StructField("block_max_tf", T.IntegerType(), False),
         T.StructField("block_min_dl", T.IntegerType(), False),
         T.StructField("doc_ids", T.BinaryType(), False),

@@ -123,6 +123,26 @@ def test_lsh_bands_find_planted_neardups(spark, sf_dir, tmp_path):
     assert all((b - a) == 1 and a % 2 == 0 for a, b in got)
 
 
+def test_bucket_pairs_all_duplicates_bucket(spark):
+    """One bucket holding every doc (a mass near-duplicate cluster) yields
+    each of its m(m-1)/2 pairs exactly once, oriented a < b; a singleton
+    bucket and another band's bucket add only their own pairs."""
+    from itertools import combinations
+
+    from tesserae_ng_spark.operators.dedup import bucket_pairs
+
+    rng = np.random.RandomState(3)
+    ids = np.arange(40, dtype=np.int64) * 982_451_653 - 10**10  # distinct
+    rows = [(0, 7, int(d)) for d in rng.permutation(ids)]
+    rows += [(0, 8, 1), (1, 7, int(ids[0])), (1, 7, int(ids[1]))]
+    bands = spark.createDataFrame(rows, "band int, bucket int, doc_id long")
+    got = [(r["a"], r["b"]) for r in bucket_pairs(bands).collect()]
+    hot = list(combinations(sorted(int(d) for d in ids), 2))
+    other = [tuple(sorted((int(ids[0]), int(ids[1]))))]
+    assert sorted(got) == sorted(hot + other)
+    assert all(a < b for a, b in got)
+
+
 def test_simhash_hamming_orders_similarity():
     near_a = "the quick brown fox jumps over the lazy dog " * 5
     near_b = "the quick brown fox jumps over the lazy cat " * 5

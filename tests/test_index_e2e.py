@@ -232,16 +232,13 @@ def test_phrase_and_proximity(spark, index_dir, corpus):
     assert got_prox == want_prox
 
 
-def test_lazy_payload_skipped_blocks_never_read(index_dir, monkeypatch):
-    """Cold fetch is metadata-only; a block that is never landed on must
+def test_lazy_payload_skipped_blocks_never_read(index_dir):
+    """Cold fetch is metadata-only; a block that is never decoded must
     never have its payload bytes read (VERDICT r2: eager whole-term fetch
-    made WAND skipping pointless at GB-scale postings). Segment readahead
-    is shrunk so the 28-block test term doesn't fit one window."""
-    from tesserae_ng_spark.query import reader as reader_mod
+    made block pruning pointless at GB-scale postings)."""
     from tesserae_ng_spark.query.reader import IndexReader
     from tesserae_ng_spark.query.wand import bm25_dense_topk, wand_topk
 
-    monkeypatch.setattr(reader_mod, "PAYLOAD_SEGMENT_BLOCKS", 4)
     r = IndexReader(index_dir)
     fetched = r.fetch(["the"])  # head term: every doc → many 16-doc blocks
     tp = fetched["the"]
@@ -249,11 +246,9 @@ def test_lazy_payload_skipped_blocks_never_read(index_dir, monkeypatch):
     assert total > 8
     assert r.payload_blocks_loaded == 0, "fetch() must not read payloads"
 
-    tp.decode_block(0)  # land on the first block only
-    assert 0 < r.payload_blocks_loaded <= 4, "readahead window exceeded"
-    assert tp._ids_miss[
-        4:
-    ].all(), "blocks beyond the landed segment were materialized"
+    tp.decode_block(0)  # decode the first block only
+    assert r.payload_blocks_loaded == 1, "a block beyond it was read"
+    assert tp._ids_miss[1:].all(), "undecoded blocks were materialized"
 
     # WAND through the lazy reader == dense through an eager reader
     fetched = r.fetch(["the", "window"])
@@ -265,36 +260,51 @@ def test_lazy_payload_skipped_blocks_never_read(index_dir, monkeypatch):
     assert got == bm25_dense_topk(f2, r2.n_docs, r2.avg_dl, 3)
 
 
-def test_payload_scan_selection_is_tight(index_dir, monkeypatch):
+def test_head_and_rare_wand_reads_few_head_blocks(index_dir):
+    """A head-term ∧ rare-term query through the pruning scorer: the rare
+    term's postings set the threshold, the head term's bound cannot reach
+    it alone, so only the head blocks that may hold a rare-term doc are
+    read — fewer than all of them — and the top-k equals the exhaustive
+    scorer's bit for bit."""
+    from tesserae_ng_spark.query.reader import IndexReader
+    from tesserae_ng_spark.query.wand import bm25_dense_topk, wand_topk
+
+    k = 3
+    r = IndexReader(index_dir)
+    rare = min((row["df"], t) for t, row in r._dict_cache.items())[1]
+    fetched = r.fetch(["the", rare])
+    head = fetched["the"]
+    got = wand_topk(fetched, r.n_docs, r.avg_dl, k)
+    head_loaded = int((~head._ids_miss).sum())
+    assert 0 < head_loaded < head.n_blocks
+    assert r.payload_blocks_loaded < head.n_blocks + fetched[rare].n_blocks
+
+    r2 = IndexReader(index_dir)
+    f2 = r2.fetch(["the", rare])
+    r2.ensure_payloads(f2.values())
+    assert got == bm25_dense_topk(f2, r2.n_docs, r2.avg_dl, k)
+    assert len(got) == k
+
+
+def test_payload_scan_selection_is_tight(index_dir):
     """_load_payloads must scan EXACTLY the requested blocks: per-salt
     block-range predicates, not the old salt.isin × block_id.isin cross
     product that pulled same-numbered blocks from every listed salt
     (ADVICE r3). Pinned via the payload_rows_scanned counter on a head
     term spanning multiple salts."""
-    from tesserae_ng_spark.query import reader as reader_mod
     from tesserae_ng_spark.query.reader import IndexReader
 
     import numpy as np
 
-    monkeypatch.setattr(reader_mod, "PAYLOAD_SEGMENT_BLOCKS", 4)
     r = IndexReader(index_dir)
     tp = r.fetch(["the"])["the"]
     salts, first_idx = np.unique(tp.blk_salt, return_index=True)
     assert salts.size > 1, "fixture must span multiple salts"
-    # demand one block from EACH salt in a single non-segment load: the
+    # demand one block from EACH salt in a single load: the
     # old cross product would scan |salts| × |distinct block ids| rows
     before = r.payload_rows_scanned
     tp.ensure_payloads(first_idx)
     assert r.payload_rows_scanned - before == first_idx.size
-    # segment readahead: the scan returns exactly the windowed blocks
-    tail = np.flatnonzero(tp._ids_miss)
-    assert tail.size, "some blocks must remain unloaded"
-    before = r.payload_rows_scanned
-    was_missing = tp._ids_miss.copy()
-    tp.ensure_payloads(tail[:1], segment=True)
-    loaded_now = int((was_missing & ~tp._ids_miss).sum())
-    assert r.payload_rows_scanned - before == loaded_now
-    assert 0 < loaded_now <= 4
 
 
 def test_dictionary_pushdown_fallback_matches_pinned(index_dir):
@@ -579,17 +589,15 @@ def small_rg_dir(index_dir, tmp_path_factory):
     return out, head_bucket, moved
 
 
-def test_footer_pruned_reads_small_row_groups(index_dir, small_rg_dir,
-                                              monkeypatch):
+def test_footer_pruned_reads_small_row_groups(index_dir, small_rg_dir):
     """Footer pruning on an index of many small row groups: results equal
     the original index's, a single-term fetch reads only the row groups
-    whose term range covers the term, a head-term segment load reads only
-    the row groups whose (term, salt, block_id) ranges meet the readahead
-    window, and a row group without statistics is read whenever its
-    bucket is touched."""
+    whose term range covers the term, a head-term payload load of a block
+    window reads only the row groups whose (term, salt, block_id) ranges
+    meet the window, and a row group without statistics is read whenever
+    its bucket is touched."""
     import numpy as np
 
-    from tesserae_ng_spark.query import reader as reader_mod
     from tesserae_ng_spark.query.reader import IndexReader
 
     small, head_bucket, moved = small_rg_dir
@@ -630,9 +638,8 @@ def test_footer_pruned_reads_small_row_groups(index_dir, small_rg_dir,
     assert fallback.row_groups_read == sum(covers(st, probe) for st in dstats)
     assert fallback.row_groups_read < len(dstats)
 
-    # head-term segment load: the window's (salt, block_id) ranges prune
+    # head-term window load: the window's (salt, block_id) ranges prune
     # the head term's own row groups
-    monkeypatch.setattr(reader_mod, "PAYLOAD_SEGMENT_BLOCKS", 4)
     r = IndexReader(small)
     tp = r.fetch(["the"])["the"]
     assert tp.n_blocks > 8
@@ -653,7 +660,7 @@ def test_footer_pruned_reads_small_row_groups(index_dir, small_rg_dir,
     want = sum(covers(st, "the") and meets_window(st) for st in stats)
     assert n_nostats < want < head_groups
     before = r.row_groups_read
-    tp.decode_block(int(bi))
+    tp.ensure_payloads(window)
     assert r.row_groups_read - before == want
     assert r.payload_rows_scanned == window.size
     assert not tp._ids_miss[window].any()

@@ -52,6 +52,16 @@ def test_preimport_prints_go_to_stderr(tmp_path, monkeypatch, capsys):
     assert "imported the stub" in captured.err
 
 
+def test_preimport_reports_missing_module_on_stderr(monkeypatch, capsys):
+    missing = "tng_no_such_module_stub"
+    monkeypatch.setattr(daemon, "PREIMPORTS", (missing, "json"))
+    daemon._preimport()  # a missing module does not stop the others
+    captured = capsys.readouterr()
+    assert captured.out == ""
+    assert missing in captured.err
+    assert "ModuleNotFoundError" in captured.err
+
+
 # deployment settings (session, daemon): the only environment the
 # package may read. Engine behaviour is set by arguments.
 ENV_ALLOWLIST = {

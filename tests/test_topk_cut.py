@@ -131,3 +131,37 @@ def test_cut_ties_and_phrase_idf_by_hand():
             (7, 2, 4, 1.5.hex())]
     assert _rows(cut_topk([a, b], N_DOCS)) == want
     assert _rows(cut_topk([b, a], N_DOCS)) == want
+
+
+def test_cut_of_a_100k_query_batch():
+    # 10^5 queries × 4 shards at k = 10: the driver-side input is at most
+    # Σ shards × Σ_q k_q rows and the cut keeps Σ_q min(k_q, candidates_q)
+    n_q, n_shards, k = 100_000, 4, 10
+    rng = np.random.default_rng(11)
+    levels = rng.random(4) * 3.0
+    phrase = rng.random(n_q) < 0.1
+    payloads, per_q = [], np.zeros(n_q, dtype=np.int64)
+    for shard in range(n_shards):
+        n = rng.integers(0, k + 1, size=n_q)  # this shard's candidates
+        per_q += n
+        qid = np.repeat(np.arange(n_q, dtype=np.int64), n)
+        within = np.arange(qid.size) - np.repeat(np.cumsum(n) - n, n)
+        doc = shard + n_shards * (qid * (k + 1) + within)  # disjoint
+        mq = np.flatnonzero(phrase & (n > 0)).astype(np.int64)
+        payloads.append((
+            qid, doc, rng.choice(levels, size=qid.size),
+            np.full(qid.size, k, dtype=np.int64),
+            mq, (n[mq] + rng.integers(0, 50, size=mq.size)).astype(np.float64),
+        ))
+    assert sum(p[0].size for p in payloads) <= n_shards * n_q * k
+    out = cut_topk(payloads, N_DOCS)
+    assert out["query_id"].size == int(np.minimum(per_q, k).sum())
+
+    sample = np.sort(rng.choice(n_q, size=300, replace=False))
+    sub = []
+    for qid, doc, val, kq, mq, mc in payloads:
+        r, m = np.isin(qid, sample), np.isin(mq, sample)
+        sub.append((qid[r], doc[r], val[r], kq[r], mq[m], mc[m]))
+    mine = np.isin(out["query_id"], sample)
+    got = _rows({c: a[mine] for c, a in out.items()})
+    assert got == _reference(sub, N_DOCS)

@@ -78,6 +78,8 @@ def test_wand_equals_exhaustive(corpus, qsize, k, block_size, seed):
         assert [d for d, _ in got] == [d for d, _ in want], name
         for (gd, gs), (wd, ws) in zip(got, want):
             assert math.isclose(gs, ws, rel_tol=0, abs_tol=1e-9), (name, gd, gs, ws)
+    # bit identity between the scorers (union ≡ sharded rests on it)
+    assert results[0][1] == results[1][1] == results[2][1]
 
 
 def test_wand_absent_and_empty():
@@ -131,6 +133,7 @@ def test_wand_stats_free_bounds_equal_exhaustive(
     assert [d for d, _ in got] == [d for d, _ in want]
     for (gd, gs), (wd, ws) in zip(got, want):
         assert math.isclose(gs, ws, rel_tol=0, abs_tol=1e-9), (gd, gs, ws)
+    assert got == want  # bit identity, not only closeness
 
 
 def test_global_topk_stats_cache_evicts_lru_only():
