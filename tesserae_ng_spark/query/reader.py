@@ -15,10 +15,17 @@ open and seeks straight to a term's blocks:
   footer index). Blocks were written sorted by term within each bucket,
   so a term's rows sit in the few row groups whose term range covers it;
 - every later read prunes row groups on that index (term set, and for
-  payload loads the requested (salt, block_id) windows), reads the
-  survivors from the open handles and filters their rows — no dataset
+  payload loads the requested (salt, block_id) windows) — no dataset
   scan per cache miss. The dictionary is one term-sorted file and is
-  pruned the same way when it is too large to pin.
+  pruned the same way when it is too large to pin;
+- a surviving row group is read from its open handle once and stays
+  resident, decoded, in a per-reader LRU bounded by bytes
+  (``ROW_GROUP_CACHE_BYTES``): a term-cache miss on a term whose row
+  group is resident filters it instead of re-reading and decompressing
+  it, and a read that needs columns the resident group lacks (metadata,
+  then payloads, then positions) reads only those. A term's rows are
+  picked out of the group by the same ``term IN terms`` filter as a
+  fresh read.
 
 Doc space: the postings store doc ORDINALS (postings format 3, see
 index/codec.py) — ranks into the index's sorted, unique doc_id list — so
@@ -35,6 +42,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import OrderedDict
 
 import numpy as np
 import pyarrow as pa
@@ -347,6 +355,47 @@ _PAYLOAD_COLS = ("doc_ids", "tfs", "dls")
 # footer-index key of the dictionary (postings buckets are keyed by int)
 _DICT = "dictionary"
 
+# bytes of decoded row groups one reader keeps resident (``_RowGroup``,
+# LRU). The builder writes postings row groups of about 4 MB
+# (parquet.block.size, as written), so some 16 of them stay resident, and
+# a whole sf0.1 index (1.9 MB decoded) many times over. The bound is per
+# reader: a sharded executor worker opens one reader per shard, so it may
+# hold shards × 64 MB (256 MB at 4 shards, 512 MB at 8) in each Python
+# worker.
+# An entry larger than the bound (a web-scale dictionary's row group) is
+# read per miss and not kept.
+ROW_GROUP_CACHE_BYTES = 64 << 20
+
+
+class _RowGroup:
+    """One decoded row group, resident in a reader: the columns read so
+    far (file order, their names in ``names``) and, once a payload load
+    asks, the packed (salt, block_id) key of every row. ``nbytes`` counts
+    the Arrow buffers."""
+
+    __slots__ = ("table", "names", "nbytes", "_keys")
+
+    def __init__(self, tbl: pa.Table):
+        self.table = tbl
+        self.names = set(tbl.column_names)
+        self.nbytes = tbl.nbytes
+        self._keys = None
+
+    def add(self, tbl: pa.Table) -> None:
+        """Append more columns of the same row group (their fields kept:
+        a name alone would make them nullable, and a read that joins this
+        group with a fresh one could not concatenate the two)."""
+        for field, col in zip(tbl.schema, tbl.columns):
+            self.table = self.table.append_column(field, col)
+        self.names.update(tbl.column_names)
+        self.nbytes += tbl.nbytes
+
+    def keys(self) -> np.ndarray:
+        """Packed (salt, block_id) of every row (computed once)."""
+        if self._keys is None:
+            self._keys = IndexReader._row_keys(self.table)
+        return self._keys
+
 
 class _Footers:
     """Row-group index of one part of the index (a postings bucket or the
@@ -420,14 +469,20 @@ def _meets(vals: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
 
 
 class IndexReader:
+    """Reads one index directory: its dictionary (pinned in memory when
+    small), term postings metadata per ``fetch`` (a term LRU), payload
+    bytes on demand, and the decoded Parquet row groups all of these
+    come from, which stay resident up to ``ROW_GROUP_CACHE_BYTES``.
+    The counters ``row_groups_read`` (Parquet reads, i.e. resident-group
+    misses), ``payload_scans``, ``payload_rows_scanned`` and
+    ``payload_blocks_loaded`` report the reads it made."""
+
     def __init__(self, index_dir: str, term_cache_size: int = 65_536,
                  dict_pin_max_terms: int = 1_000_000):
         self.index_dir = index_dir
         # term → TermPostings LRU (the Solr/Lucene query-cache analog,
         # SURVEY.md §4): the index is immutable, so cached postings never
         # invalidate; capacity bounds memory on web-scale vocabularies.
-        from collections import OrderedDict
-
         self._term_cache: OrderedDict[str, TermPostings] = OrderedDict()
         self._term_cache_size = term_cache_size
         with open(os.path.join(index_dir, "stats.json")) as f:
@@ -451,6 +506,9 @@ class IndexReader:
             b = int(os.path.basename(os.path.dirname(f)).partition("=")[2])
             self._files.setdefault(b, []).append(f)
         self._footers: dict = {}
+        # (part, row group) → _RowGroup, least recently used first
+        self._groups: OrderedDict = OrderedDict()
+        self._group_bytes = 0
         self._global_docs = None  # the doc list, read on first use
         # small dictionaries (≤ dict_pin_max_terms) are cheaper to pin in
         # memory than to read per query; web-scale vocabularies fall back
@@ -468,8 +526,10 @@ class IndexReader:
         # payload rows the scans actually returned: equals the requested
         # block count when selection is tight (tests pin no over-select)
         self.payload_rows_scanned = 0
-        # parquet row groups read by any read (dictionary, metadata,
-        # payloads): tests pin that footer pruning skips the rest
+        # parquet row-group reads by any read (dictionary, metadata,
+        # payloads), counting one per read that adds columns to a group:
+        # resident groups serve the rest, and footer pruning skips the
+        # groups no read needs (tests pin both)
         self.row_groups_read = 0
 
     def warm_top_terms(self, budget_mb: float = 64.0) -> dict:
@@ -527,11 +587,12 @@ class IndexReader:
     ) -> pa.Table:
         """Rows of ``terms`` in the given parts (postings buckets or
         ``_DICT``) → one table of ``columns``. Row groups are pruned on the
-        parts' footer index (loaded on first touch), read from the open
-        handles and filtered to ``term IN terms`` and, with ``where``
-        ({salt: sorted block ids}), to exactly those (salt, block_id)
-        pairs. The filter columns are read along and kept."""
-        tarr = np.array(sorted(terms), dtype=object)
+        parts' footer index (loaded on first touch), served from the
+        reader's resident row groups (``_row_group``) and filtered to
+        ``term IN terms`` and, with ``where`` ({salt: sorted block ids}),
+        to exactly those (salt, block_id) pairs. The filter columns are
+        returned along."""
+        tarr = np.array(sorted(set(terms)), dtype=object)
         cols = list(dict.fromkeys(
             ["term", *(("salt", "block_id") if where is not None else ()),
              *columns]
@@ -548,20 +609,49 @@ class IndexReader:
             if fi is None:
                 fi = self._footers[p] = _Footers(self._files.get(p, []))
             for g in fi.select(tarr, where):
-                pf, rg = fi.groups[g]
-                tbl = pf.read_row_group(rg, columns=cols, use_threads=False)
-                self.row_groups_read += 1
-                mask = pc.is_in(tbl.column("term"), value_set=tset)
+                rg = self._row_group(p, fi, g, cols)
+                mask = pc.is_in(rg.table.column("term"), value_set=tset)
+                rows = np.flatnonzero(mask.to_numpy(zero_copy_only=False))
                 if want is not None:
-                    mask = pa.array(
-                        mask.to_numpy(zero_copy_only=False)
-                        & np.isin(self._row_keys(tbl), want)
-                    )
-                parts_out.append(tbl.filter(mask))
+                    rows = rows[np.isin(rg.keys()[rows], want)]
+                if rows.size == 0:
+                    continue
+                tbl = rg.table.select(cols)
+                if rows[-1] - rows[0] + 1 == rows.size:  # one run: no copy
+                    parts_out.append(tbl.slice(int(rows[0]), rows.size))
+                else:
+                    parts_out.append(tbl.take(rows))
         if not parts_out:
             schema = (self._dict_ds if _DICT in parts else self._post_ds).schema
             parts_out.append(pa.schema([schema.field(c) for c in cols]).empty_table())
         return pa.concat_tables(parts_out)
+
+    def _row_group(self, part, fi: _Footers, g: int, cols: list) -> _RowGroup:
+        """Row group ``g`` of ``part`` holding at least ``cols``: from the
+        resident LRU when it is there, with only the columns it lacks read
+        from Parquet and added. ``row_groups_read`` counts those reads.
+        Kept while the resident bytes stay ≤ ``ROW_GROUP_CACHE_BYTES``,
+        evicting the least recently used groups."""
+        key = (part, g)
+        rg = self._groups.pop(key, None)
+        if rg is not None:
+            self._group_bytes -= rg.nbytes
+        lack = cols if rg is None else [c for c in cols if c not in rg.names]
+        if lack:
+            pf, i = fi.groups[g]
+            tbl = pf.read_row_group(i, columns=lack, use_threads=False)
+            self.row_groups_read += 1
+            if rg is None:
+                rg = _RowGroup(tbl)
+            else:
+                rg.add(tbl)
+        if rg.nbytes <= ROW_GROUP_CACHE_BYTES:
+            self._groups[key] = rg
+            self._group_bytes += rg.nbytes
+            while self._group_bytes > ROW_GROUP_CACHE_BYTES:
+                _, old = self._groups.popitem(last=False)
+                self._group_bytes -= old.nbytes
+        return rg
 
     def fetch(self, terms: list[str]) -> dict[str, TermPostings]:
         """postings blocks for terms, metadata-sorted, lazily decodable."""

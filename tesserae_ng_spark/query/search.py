@@ -96,9 +96,10 @@ class Searcher:
         avg_dl, df).
 
         The scorers return doc ordinals; the top-k maps through the
-        reader's doc list into the ``Hit``s' doc_ids (k gathers)."""
+        reader's doc list into the ``Hit``s' doc_ids (k gathers). k < 1
+        returns [] in every mode."""
         terms = analyze_query(query_text, self.lang)
-        if not terms:
+        if not terms or k < 1:
             return []
         fetched = self.reader.fetch(terms)
         if not fetched:

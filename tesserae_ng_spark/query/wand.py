@@ -75,7 +75,8 @@ def wand_topk(
     b: float = BM25_B,
     df_override: dict | None = None,
 ) -> list[tuple[int, float]]:
-    """→ [(ordinal, score)] sorted by (score desc, ordinal asc), len ≤ k.
+    """→ [(ordinal, score)] sorted by (score desc, ordinal asc), len ≤ k
+    (empty for k < 1).
 
     Vectorized block-max MaxScore:
 
@@ -99,7 +100,7 @@ def wand_topk(
     scores both use it.
     """
     terms = sorted(t for t, tp in term_postings.items() if tp.n_blocks)
-    if not terms:
+    if not terms or k < 1:
         return []
     tps = [term_postings[t] for t in terms]
     dfs = [
@@ -221,8 +222,8 @@ def dense_row_topk(
     """Tie-safe top-k extraction from one dense accumulator row →
     [(ordinal, score)] by (score desc, ordinal asc), where entry i is
     ordinal ``ords[i]`` (ascending), or ordinal i itself when ``ords`` is
-    None. Matched docs are exactly the nonzero entries (bm25 partials are
-    strictly positive).
+    None; empty for k < 1. Matched docs are exactly the nonzero entries
+    (bm25 partials are strictly positive).
 
     Tie handling never sorts the full hit set: argpartition over the hits
     yields the true k-th score (the k largest VALUES are exact; only their
@@ -232,7 +233,7 @@ def dense_row_topk(
     corpora with duplicated docs (score runs ⇒ kth almost always tied) and
     was the dominant per-query cost at head-term hit counts."""
     hit = np.nonzero(acc)[0]
-    if hit.size == 0:
+    if hit.size == 0 or k < 1:
         return []
     if hit.size <= k:
         cand = hit[np.lexsort((hit, -acc[hit]))]

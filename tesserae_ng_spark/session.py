@@ -3,7 +3,10 @@
 from __future__ import annotations
 
 import os
+import sys
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
 
@@ -104,5 +107,11 @@ def _warm_jvm(spark) -> None:
             .limit(1)
             .collect()
         )
-    except Exception:
-        pass  # warm-up is best-effort, never session-fatal
+    except (Py4JError, PySparkException) as e:
+        # warm-up is best-effort, never session-fatal; the cost it moves
+        # then lands in the first real query, so say so
+        print(
+            f"tesserae_ng_spark: JVM warm-up query failed, first query "
+            f"pays the warm-up: {type(e).__name__}: {e}",
+            file=sys.stderr,
+        )

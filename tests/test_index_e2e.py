@@ -185,6 +185,25 @@ def test_batch_search_matches_single(spark, index_dir):
     assert n_hits == len(batch)
 
 
+def test_k_zero_returns_no_rows(spark, index_dir):
+    """A k = 0 query returns [] in every mode, and in a batch it yields
+    no rows while the batch's other queries answer as single queries."""
+    searcher = Searcher(index_dir)
+    for mode in ("bm25", "phrase", "proximity"):
+        assert searcher.search("the", k=0, mode=mode) == [], mode
+        assert searcher.search("sort merge join", k=0, mode=mode) == [], mode
+    queries = [
+        {"query_id": 0, "query_text": "the", "k": 0},
+        {"query_id": 1, "query_text": "sort merge", "k": 0, "mode": "phrase"},
+        {"query_id": 2, "query_text": "sort merge join", "k": 5},
+    ]
+    rows = search_batch(spark, index_dir, queries, k=5).collect()
+    assert {r["query_id"] for r in rows} == {2}
+    want = [(h.rank, h.doc_id, h.score)
+            for h in searcher.search("sort merge join", k=5)]
+    assert sorted((r["rank"], r["doc_id"], r["score"]) for r in rows) == want
+
+
 def test_phrase_and_proximity(spark, index_dir, corpus):
     """Cross-check positional modes against brute-force over raw tokens."""
     from tesserae_ng_spark.functions.analysis import analyze
@@ -706,3 +725,204 @@ def test_no_dataset_scan_after_open(index_dir, monkeypatch):
         s.reader, s.lang = r, "en"
         for (q, mode), hits in want.items():
             assert _hits(s, q, mode) == hits, (q, mode)
+
+
+def _mate_in_same_groups(r, term):
+    """A dictionary term of ``term``'s bucket (not ``term`` itself) whose
+    footer-selected row groups are all among ``term``'s."""
+    import numpy as np
+
+    b = r.lookup([term])[term]["bucket"]
+    r.fetch([term])  # loads the bucket's footer index
+    fi = r._footers[b]
+
+    def groups(t):
+        return set(fi.select(np.array([t], dtype=object), None).tolist())
+
+    own = groups(term)
+    return next(
+        t for t, row in sorted(r._dict_cache.items())
+        if row["bucket"] == b and t != term and groups(t) <= own
+    )
+
+
+def test_bucket_mate_fetch_reads_no_row_group(index_dir):
+    """After fetching a term, a term-cache miss on a bucket-mate in the
+    same row groups is served from the resident row groups: no Parquet
+    read, and the same block metadata as a fresh reader's."""
+    import numpy as np
+
+    from tesserae_ng_spark.query.reader import IndexReader
+
+    r = IndexReader(index_dir)
+    mate = _mate_in_same_groups(r, "the")
+    before = r.row_groups_read
+    assert before > 0
+    got = r.fetch([mate])[mate]
+    assert r.row_groups_read == before
+    want = IndexReader(index_dir).fetch([mate])[mate]
+    for f in ("blk_salt", "blk_id", "blk_n_docs", "blk_first", "blk_last",
+              "blk_max_tf", "blk_min_dl"):
+        assert np.array_equal(getattr(got, f), getattr(want, f)), f
+
+
+def test_payload_load_adds_only_payload_columns(index_dir, monkeypatch):
+    """A payload load after a metadata fetch of the same row groups reads
+    each group once more, for the payload columns only; a positions load
+    after that reads only ``positions``. Decoded postings equal a fresh
+    reader's."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from tesserae_ng_spark.query.reader import IndexReader
+
+    reads = []
+    real = pq.ParquetFile.read_row_group
+
+    def spy(self, i, columns=None, **kw):
+        reads.append((id(self), i, tuple(columns)))
+        return real(self, i, columns=columns, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", spy)
+    r = IndexReader(index_dir)
+    tp = r.fetch(["the"])["the"]
+    meta = list(reads)
+    assert meta and all("doc_ids" not in c for _, _, c in meta)
+
+    tp.ensure_payloads()
+    pay = reads[len(meta):]
+    assert pay
+    assert {c for _, _, c in pay} == {("doc_ids", "tfs", "dls")}
+    groups = [(f, i) for f, i, _ in pay]
+    assert len(set(groups)) == len(groups)
+    assert set(groups) <= {(f, i) for f, i, _ in meta}
+
+    tp.ensure_payloads(with_positions=True)
+    pos = reads[len(meta) + len(pay):]
+    assert {c for _, _, c in pos} == {("positions",)}
+    assert {(f, i) for f, i, _ in pos} <= set(groups)
+
+    want = IndexReader(index_dir).fetch(["the"])["the"].decode_full(True)
+    for a, b in zip(tp.decode_full(True), want):
+        assert np.array_equal(a, b)
+
+
+def test_zero_row_group_bound_reads_every_time(index_dir, monkeypatch):
+    """With the resident bound at 0 no row group is kept: hits equal the
+    default reader's, and a repeated term-cache miss reads Parquet
+    again."""
+    from tesserae_ng_spark.query import reader as reader_mod
+
+    ref = Searcher(index_dir)
+    want = {
+        (q, mode): _hits(ref, q, mode)
+        for q, mode in [(q, "bm25") for q in QUERIES] + POSITIONAL
+    }
+    monkeypatch.setattr(reader_mod, "ROW_GROUP_CACHE_BYTES", 0)
+    s = Searcher(index_dir)
+    for (q, mode), hits in want.items():
+        assert _hits(s, q, mode) == hits, (q, mode)
+    assert not s.reader._groups
+
+    r = reader_mod.IndexReader(index_dir)
+    mate = _mate_in_same_groups(r, "the")
+    n = r.row_groups_read
+    r.fetch([mate])
+    assert r.row_groups_read > n
+    n = r.row_groups_read
+    r._term_cache.clear()
+    r.fetch(["the"])
+    assert r.row_groups_read > n
+
+
+def test_row_group_bound_evicts_least_recent(index_dir, monkeypatch):
+    """With a bound below the index's decoded size, resident row groups
+    are evicted: the resident bytes never exceed the bound and hits equal
+    the default reader's."""
+    from tesserae_ng_spark.query import reader as reader_mod
+
+    ref = Searcher(index_dir)
+    cases = [(q, "bm25") for q in QUERIES] + POSITIONAL
+    want = {c: _hits(ref, *c) for c in cases}
+    sizes = [rg.nbytes for rg in ref.reader._groups.values()]
+    bound = 2 * max(sizes)
+    assert sum(sizes) > bound, "fixture must not fit under the bound"
+    monkeypatch.setattr(reader_mod, "ROW_GROUP_CACHE_BYTES", bound)
+    s = Searcher(index_dir)
+    for c in cases:
+        assert _hits(s, *c) == want[c], c
+        groups = s.reader._groups.values()
+        assert s.reader._group_bytes == sum(rg.nbytes for rg in groups)
+        assert s.reader._group_bytes <= bound
+    assert s.reader.row_groups_read > ref.reader.row_groups_read
+
+
+def test_ensure_payloads_repeated_term_scans_each_row_once(index_dir):
+    """A term listed twice in one bulk payload load (a phrase that repeats
+    a term) scans each of its rows once: rows scanned == blocks loaded."""
+    from tesserae_ng_spark.query.reader import IndexReader
+
+    r = IndexReader(index_dir)
+    tps = r.fetch(analyze_query("sort merge"))
+    assert len(tps) == 2
+    a, b = tps.values()
+    r.ensure_payloads([a, b, a])
+    assert r.payload_scans == 1
+    assert r.payload_blocks_loaded == a.n_blocks + b.n_blocks
+    assert r.payload_rows_scanned == r.payload_blocks_loaded
+
+
+def test_unpinned_dictionary_with_a_very_long_term(spark, corpus, tmp_path):
+    """The analyzer keeps any [a-z0-9]+ run, so a 20,000-character token
+    reaches the dictionary. The unpinned lookup keeps the dictionary's row
+    group resident at its Arrow size (no per-term index as wide as the
+    longest term) and answers like the pinned lookup."""
+    from tesserae_ng_spark.query.reader import IndexReader
+
+    long_tok = "q" * 20_000
+    src = corpus.orderBy("url").limit(40).withColumn(
+        "text", F.concat_ws(" ", F.col("text"), F.lit(long_tok))
+    )
+    out = str(tmp_path / "idx")
+    build_index(spark, src, out, n_parts=1, n_buckets=2, block_size=16,
+                use_stored_text=True)
+    pinned = IndexReader(out)
+    fallback = IndexReader(out, dict_pin_max_terms=0)
+    assert fallback._dict_cache is None
+    long_term = max(pinned._dict_cache, key=len)
+    assert len(long_term) == len(long_tok)
+    terms = [long_term, "the", "totallyabsentterm"]
+    assert fallback.lookup(terms) == pinned.lookup(terms)
+    assert 0 < fallback._group_bytes < 1 << 20
+
+    s = Searcher.__new__(Searcher)
+    s.reader, s.lang = fallback, "en"
+    for q in (long_term, f"the {long_term}"):
+        assert _hits(s, q) == _hits(Searcher(out), q), q
+    assert len(_hits(s, long_term)) == 10
+
+
+def test_fetch_joins_extended_and_fresh_row_groups(index_dir):
+    """A row group first filled by a payload load (as after an eviction)
+    gains the metadata columns on the next fetch; a fetch that reads it
+    together with a freshly read group returns the same blocks as a fresh
+    reader."""
+    import numpy as np
+
+    from tesserae_ng_spark.query.reader import IndexReader
+
+    r = IndexReader(index_dir)
+    b = r.lookup(["the"])["the"]["bucket"]
+    other = next(t for t, row in sorted(r._dict_cache.items())
+                 if row["bucket"] != b)
+    tp = r.fetch(["the"])["the"]
+    r._groups.clear()  # as if evicted
+    r._group_bytes = 0
+    tp.ensure_payloads()
+    r._term_cache.clear()
+    got = r.fetch(["the", other])
+    fresh = IndexReader(index_dir).fetch(["the", other])
+    for t in ("the", other):
+        for f in ("blk_salt", "blk_id", "blk_n_docs", "blk_first",
+                  "blk_last", "blk_max_tf", "blk_min_dl"):
+            assert np.array_equal(getattr(got[t], f), getattr(fresh[t], f))

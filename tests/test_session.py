@@ -62,6 +62,32 @@ def test_preimport_reports_missing_module_on_stderr(monkeypatch, capsys):
     assert "ModuleNotFoundError" in captured.err
 
 
+def test_warm_jvm_failure_is_named_on_stderr(monkeypatch, capsys):
+    """A failing warm-up query does not fail the session; the error is
+    named on stderr. Errors that are not Spark's propagate."""
+    import pytest
+    from py4j.protocol import Py4JError
+
+    from tesserae_ng_spark import session
+
+    class Stub:
+        def __init__(self, err):
+            self.err = err
+
+        def range(self, n):
+            raise self.err
+
+    monkeypatch.setattr(session, "_JVM_WARMED", False)
+    session._warm_jvm(Stub(Py4JError("gateway gone")))
+    captured = capsys.readouterr()
+    assert captured.out == ""
+    assert "Py4JError" in captured.err and "gateway gone" in captured.err
+
+    monkeypatch.setattr(session, "_JVM_WARMED", False)
+    with pytest.raises(ZeroDivisionError):
+        session._warm_jvm(Stub(ZeroDivisionError("not spark's")))
+
+
 # deployment settings (session, daemon): the only environment the
 # package may read. Engine behaviour is set by arguments.
 ENV_ALLOWLIST = {

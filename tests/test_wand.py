@@ -91,6 +91,17 @@ def test_wand_absent_and_empty():
     assert [d for d, _ in got] == [2]
 
 
+def test_k_zero_returns_empty():
+    """k = 0 asks for no hits: every scorer returns [] instead of
+    failing on an empty cut."""
+    corpus = {1: {"a": 2}, 2: {"a": 1, "b": 1}, 3: {"b": 3}}
+    dls = {1: 2, 2: 2, 3: 3}
+    tps, n, avg, docs = make_index(corpus, dls, 2)
+    assert wand_topk(tps, n, avg, 0) == []
+    assert bm25_dense_topk(tps, n, avg, 0) == []
+    assert bm25_global_topk(tps, docs.size, n, avg, 0) == []
+
+
 def test_wand_tie_break_doc_id_asc():
     # identical tf/dl → identical scores → lower doc_id ranks first
     corpus = {10: {"x": 1}, 3: {"x": 1}, 7: {"x": 1}}

@@ -11,7 +11,7 @@ BASELINE.json north_rule). Writes BENCH/BASELINE.md with throughput at
 both levels and efficiency = (thr_4N/thr_N) / 4 per metric, graded on
 per-level medians over interleaved attempts.
 
-Usage: python tools/bench_scaling.py [sf_dir]
+Usage: python tools/bench_scaling.py [sf_dir]   (-h/--help: this text)
 """
 
 from __future__ import annotations
@@ -73,24 +73,11 @@ def run_level(cpus: int, sf_dir: str, zpath: str) -> dict:
             v = [int(x) for x in f.readline().split()[1:]]
         return sum(v), (v[7] if len(v) > 7 else 0)
 
-    # concurrent host-speed probe (tools/spin_probe.py): this host
-    # throttles 40× in ways steal% does NOT see (measured — see
-    # BENCH/BASELINE.md "host noise"), so each attempt records an
-    # independent trace of how fast the box actually was in its window
-    probe_file = f"/tmp/tng_spin_probe_{cpus}_{int(time.time())}.jsonl"
-    probe_proc = subprocess.Popen(
-        [sys.executable, os.path.join(REPO, "tools", "spin_probe.py"), probe_file],
-        stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
-    )
     t0 = time.time()
     c0, s0 = _cpu_stat()
-    try:
-        out = subprocess.run(
-            cmd, env=env, capture_output=True, text=True, timeout=3600
-        )
-    finally:
-        probe_proc.terminate()
-        probe_proc.wait()
+    out = subprocess.run(
+        cmd, env=env, capture_output=True, text=True, timeout=3600
+    )
     c1, s1 = _cpu_stat()
     wall = time.time() - t0
     line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
@@ -100,30 +87,13 @@ def run_level(cpus: int, sf_dir: str, zpath: str) -> dict:
     # 2-3× wall swings between byte-identical runs; steal% tells whether
     # an outlier was the box, not the engine)
     res["_steal_pct"] = round(100.0 * (s1 - s0) / max(c1 - c0, 1), 2)
-    try:
-        with open(probe_file) as f:
-            recs = [json.loads(l) for l in f if l.strip()]
-        ms = sorted(r["ms"] for r in recs)
-        fault = sorted(r["fault_ms"] for r in recs if "fault_ms" in r)
-        os.unlink(probe_file)
-        if ms:
-            res["_probe"] = {
-                "n": len(ms),
-                "min_ms": ms[0],
-                "med_ms": ms[len(ms) // 2],
-                "p90_ms": ms[int(len(ms) * 0.9)],
-                "max_ms": ms[-1],
-            }
-        if fault:
-            res["_probe"]["fault_med_ms"] = fault[len(fault) // 2]
-            res["_probe"]["fault_p90_ms"] = fault[int(len(fault) * 0.9)]
-            res["_probe"]["fault_max_ms"] = fault[-1]
-    except Exception:
-        pass
     return res
 
 
 def main():
+    if sys.argv[1:2] in (["-h"], ["--help"]):
+        print(__doc__)
+        return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     zpath = make_pyfiles_zip()
     # best-of-N per level, attempts INTERLEAVED across levels: host-neighbor
@@ -201,24 +171,6 @@ def main():
     qshard_w = eff("queries_per_sec_sharded_warm")
     nlarge = levels[2].get("large_batch_n", 2000)
     shards = (levels[2].get("n_shards"), levels[8].get("n_shards"))
-    # memory-system control: synthetic ceilings measured with NO engine
-    # code (tools/membw_probe.py) so the residual query-scaling gap can be
-    # attributed — LLC-capacity sharing vs DRAM bandwidth vs compute
-    def _probe(script, arg=None):
-        try:
-            cmd = [sys.executable, os.path.join(REPO, "tools", script)]
-            if arg:
-                cmd.append(arg)
-            return json.loads(
-                subprocess.run(
-                    cmd, capture_output=True, text=True, timeout=900
-                ).stdout.strip().splitlines()[-1]
-            )
-        except Exception:
-            return None
-
-    probe = _probe("membw_probe.py")
-    host = _probe("host_probe.py")
     # prior-round medians from the archived r4 protocol runs, for the
     # absolute-throughput comparison
     import glob as _glob
@@ -341,16 +293,11 @@ def main():
         "from different attempts can overstate efficiency); best-of-N "
         "efficiency is disclosed as supplementary in parentheses.",
         "",
-        "**Host fingerprint** (tools/host_probe.py) — the sandbox box "
-        "CHANGES between rounds AND between windows, so absolute numbers "
-        "are not comparable across rounds (round 5: 260 MiB L3, ~57 GiB/s "
-        "8-proc stream; round 6: 105 MiB L3, ~42 GiB/s; the block device "
-        "measured ~6 MB/s sustained fsync in early round-6 windows — why "
-        "bench index/scratch dirs moved to tmpfs — but hundreds of MB/s "
-        "in others; the JSON below is the protocol-time measurement):",
-        "",
-        f"```json\n{json.dumps(host)}\n```" if host else
-        "(host probe unavailable this run)",
+        "The sandbox box CHANGES between rounds AND between windows, so "
+        "absolute numbers are not comparable across rounds (round 5: "
+        "260 MiB L3, ~57 GiB/s 8-proc stream; round 6: 105 MiB L3, "
+        "~42 GiB/s). The round-6 host fingerprints are in this report's "
+        "git history.",
         "",
         "Direct DRAM-saturation evidence (concurrent-probe residual "
         "bandwidth, symmetric-steal control, bytes/doc accounting): see "
@@ -442,9 +389,10 @@ def main():
         "GiB/s — 0.3% of the ceiling (BENCH/SATURATION_r6.md). The build",
         "is COMPUTE-bound. Host steal is also excluded when the",
         "per-attempt traces are quiet: each raw line below carries",
-        "`_steal_pct` AND `_probe` (a concurrent fixed-workload spin,",
-        "tools/spin_probe.py) — when both are flat across levels, the",
-        "residual gap is real engine behavior on this box. The",
+        "`_steal_pct`, and the archived round-6 runs B–H also carry",
+        "`_probe` (a concurrent fixed-workload spin) — when both are",
+        "flat across levels, the residual gap is real engine behavior",
+        "on this box. The",
         "share-nothing process controls of the build's own bodies",
         "(tools/encode_probe.py, tools/build_cpu_probe.py; deleted once",
         "answered, git keeps them) are in this report's git history.",
@@ -464,35 +412,15 @@ def main():
         "",
         "## Where the residual query-scaling gap comes from (controls)",
         "",
-        "Synthetic 2→8-process controls with NO engine code "
-        "(`tools/membw_probe.py`, spawn-pool, per-process workloads, "
-        "warm-up outside the timed window):",
-        "",
-        "| workload | agg @2proc | agg @8proc | 2→8 efficiency |",
-        "|---|---|---|---|",
-    ] + ([
-        f"| streaming triad (DRAM bandwidth) | {probe['stream']['agg_2proc']} GiB/s | {probe['stream']['agg_8proc']} GiB/s | {probe['stream']['eff_2_to_8']} |",
-        f"| register/ALU loop (compute) | {probe['compute']['agg_2proc']} | {probe['compute']['agg_8proc']} | {probe['compute']['eff_2_to_8']} |",
-        f"| random gather, 8 MiB/proc working set (LLC-share shape) | {probe['gather_8mb']['agg_2proc']} M/s | {probe['gather_8mb']['agg_8proc']} M/s | **{probe['gather_8mb']['eff_2_to_8']}** |",
-        f"| random gather, 64 MiB/proc working set (DRAM-resident) | {probe['gather_64mb']['agg_2proc']} M/s | {probe['gather_64mb']['agg_8proc']} M/s | {probe['gather_64mb']['eff_2_to_8']} |",
-    ] if probe else ["(probe unavailable this run)"]) + [
-        "",
-        "Streaming bandwidth and pure compute both scale ~1.0 on this box,",
-        "so neither is the limiter. The one workload that does NOT scale is",
-        "a random gather whose per-process hot set fits the 2-process SHARE",
+        "Round 6's synthetic 2→8-process controls with NO engine code",
+        "(streaming triad, ALU loop, random gathers) are in this report's",
+        "git history. Streaming bandwidth and pure compute both scaled",
+        "~1.0 on this box; the one workload that did NOT scale was a",
+        "random gather whose per-process hot set fits the 2-process SHARE",
         "of the last-level cache but not the 8-process share — the exact",
-        "shape of BM25 scoring (posting gathers + accumulator",
-        "scatter-adds over per-shard hot sets of a few MB). The engine's",
-        "warm sharded row lands on the same ceiling as that control, i.e.",
-        "the residual is LLC-CAPACITY SHARING among co-located processes —",
-        "a single-box artifact. Real N→4N EXECUTORS (the north rule's",
-        "deployment) hold per-executor LLC and DRAM constant as the",
-        "cluster grows; the per-executor working set here is constant by",
-        "construction (each task scores against its own shard), so this",
-        "penalty does not exist on a real cluster. A Spark-free control of",
-        "the exact task bodies (8 shard-scoring processes via",
-        "multiprocessing) measured the same ceiling, ruling out the Spark",
-        "layer.",
+        "shape of BM25 scoring. The residual is LLC-CAPACITY SHARING among",
+        "co-located processes, a single-box artifact: real N→4N executors",
+        "hold per-executor LLC and DRAM constant as the cluster grows.",
         "",
         "## Which query row is the production shape (and why three rows)",
         "",

@@ -5,7 +5,7 @@ stage A on the bench corpus (Arrow boundary crossings, the persist
 read/write, the explode, the encoded block bytes, parquet out) and
 multiplies by the observed parts-phase docs/sec to get an implied
 DRAM-traffic rate, compared against the box's measured streaming
-ceiling (tools/membw_probe.py).
+ceiling (round 6's membw_probe; deleted once answered, git keeps it).
 
 The sum is labelled per-component as MEASURED (computed from the actual
 corpus / staged index bytes) or ESTIMATED (Python/numpy-internal churn
