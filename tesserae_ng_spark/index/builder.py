@@ -1,4 +1,4 @@
-"""Index build orchestration: one keyed stage-A pass + salted merge.
+"""Index build orchestration: one keyed stage-A pass + one keyed merge.
 
 Layout under an index dir:
     shards/postings/part=i/   stage-A block rows (tf/dl, unscored)
@@ -18,12 +18,15 @@ Spark pass over the corpus: analyze each doc once, key it by
 ``pmod(doc_id, n_keys)`` (doc_id = xxhash64(url)), encode
 partition-locally, write through a staging dir with ``partitionBy``,
 move each key's dirs to its destination ``(index_dir, part)`` and commit
-its manifest. Stage B (``_merge_all``) merges one index dir's parts.
-The three callers differ only in where the keys go:
+its manifest. Stage B (``_merge_all``) is ONE salted merge over a list
+of index dirs, keyed by dir the same way: groups are (key, term, salt),
+each key brings its own n_docs, avg_dl and doc list, and the lineage
+gate, stats.json and merge manifest stay per dir. The callers differ
+only in where the keys go:
 
 - ``build_index``: key = part, every part goes to ``out_dir``;
 - ``build_sharded_indexes`` (index/sharded_build.py): key = shard, each
-  shard goes to its own dir as part 0;
+  shard goes to its own dir as part 0, and one merge serves every dir;
 - the streaming batch writer (streaming/incremental.py): one key.
 
 Because a url maps to exactly one key, the as-of latest-crawl dedupe is
@@ -40,8 +43,11 @@ the orchestration, manifests, and merge are unchanged.
 
 from __future__ import annotations
 
+import functools
+import glob
 import json
 import os
+import re
 import shutil
 import tempfile
 import time
@@ -56,7 +62,7 @@ from tesserae_ng_spark.index.build import (
     prepare_docs,
     term_doc_table,
 )
-from tesserae_ng_spark.index.encode import encode_blocks_local
+from tesserae_ng_spark.index.encode import SHARD_BLOCK_SCHEMA, encode_blocks_local
 from tesserae_ng_spark.index.manifest import (
     all_manifests,
     partition_done,
@@ -64,7 +70,12 @@ from tesserae_ng_spark.index.manifest import (
     write_manifest,
 )
 from tesserae_ng_spark.index.merge import build_dictionary, merge_shard_blocks
-from tesserae_ng_spark.schemas import BLOCK_SIZE, POSTINGS_FORMAT
+from tesserae_ng_spark.schemas import (
+    BLOCK_SIZE,
+    DICTIONARY_SCHEMA,
+    POSTINGS_FORMAT,
+    POSTINGS_SCHEMA,
+)
 from tesserae_ng_spark.sources.corpus import load_corpus
 
 
@@ -80,9 +91,8 @@ class BuildResult:
     skipped_parts: list[int]
     wall_s: float
     # wall per build phase (parts = stage A incl. UDF analysis;
-    # merge_postings = global block merge + bucketed write; merge_dict =
-    # dictionary build + stats) — scaling-protocol observability: the
-    # serial fraction at 4N hides here, not in the per-doc work
+    # merge_postings = block merge + bucketed write; merge_dict =
+    # dictionary build + stats), shared by every dir of one build
     phases: dict = None
 
 
@@ -120,11 +130,9 @@ def _move_partition(staging_root: str, key: int, dst: str) -> bool:
 
 
 def _write_empty(schema, dst: str) -> None:
-    """Empty-key edge (tiny corpora): write an empty parquet dir with
-    the given Spark schema so downstream readers see a valid (0-row)
-    table. Written via pyarrow — a zero-row Spark write can emit no data
-    files at all (just _SUCCESS), which breaks schema inference on
-    read-back."""
+    """Empty-key edge (tiny corpora): a 0-row parquet dir with the given
+    Spark schema, via pyarrow — a zero-row Spark write can emit no data
+    files at all, which breaks schema inference on read-back."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -135,34 +143,12 @@ def _write_empty(schema, dst: str) -> None:
     )
 
 
-def _finalize_empty(out_dir: str, n_buckets: int) -> BuildResult:
-    """Valid 0-doc index: empty dictionary/postings + zeroed stats, same
-    layout the merge would produce (Searcher/global_shard_stats open it
-    like any other index). A 0-row Spark write emits no data files, so
-    the merge cannot produce these itself."""
-    from tesserae_ng_spark.schemas import DICTIONARY_SCHEMA, POSTINGS_SCHEMA
-
-    for sub in ("postings", "dictionary"):
-        shutil.rmtree(os.path.join(out_dir, sub), ignore_errors=True)
+def _finalize_empty(out_dir: str) -> None:
+    """0-row dictionary/postings for an index without postings, in the
+    merge's layout (Searcher/global_shard_stats open it like any other)."""
+    shutil.rmtree(os.path.join(out_dir, "dictionary"), ignore_errors=True)
     _write_empty(POSTINGS_SCHEMA, os.path.join(out_dir, "postings", "bucket=0"))
     _write_empty(DICTIONARY_SCHEMA, os.path.join(out_dir, "dictionary"))
-    stats = {
-        "n_docs": 0, "avg_dl": 0.0, "total_tokens": 0,
-        "n_terms": 0, "n_blocks": 0, "n_buckets": n_buckets,
-        "postings_format": POSTINGS_FORMAT,
-    }
-    with open(os.path.join(out_dir, "stats.json"), "w") as f:
-        json.dump(stats, f, sort_keys=True)
-    write_manifest(
-        out_dir, 99999,
-        {"status": "done", "stage": "merge", "input_fingerprint": "merge",
-         **stats},
-    )
-    return BuildResult(
-        out_dir=out_dir, n_docs=0, avg_dl=0.0, total_tokens=0, n_terms=0,
-        n_blocks=0, built_parts=[], skipped_parts=[], wall_s=0.0,
-        phases={"merge_postings_s": 0.0, "merge_dict_s": 0.0},
-    )
 
 
 def _stage_a(
@@ -351,10 +337,9 @@ def build_index(
         resume=resume, fail_after_part=fail_after_part,
     )
     t_parts = time.time() - t_start
-    result = _merge_all(
-        spark, out_dir, target_postings_per_salt, n_buckets, block_size,
-        expected=expected,
-        merge_width=spark.sparkContext.defaultParallelism,
+    (result,) = _merge_all(
+        spark, [out_dir], target_postings_per_salt, n_buckets, block_size,
+        expected=[expected],
     )
     result.built_parts = built
     result.skipped_parts = skipped
@@ -363,120 +348,149 @@ def build_index(
     return result
 
 
-def _merge_all(
-    spark, out_dir: str, target_postings_per_salt: int, n_buckets: int,
-    block_size: int, expected: dict[int, str] | None = None,
-    merge_width: int | None = None,
-) -> BuildResult:
+def _merge_manifests(out_dir: str, expected: dict[int, str] | None) -> list[dict]:
+    """The done stage-A manifests the merge consumes for ``out_dir``."""
     manifests = [
         m
         for m in all_manifests(out_dir)
         if m.get("status") == "done" and m.get("stage") != "merge"
     ]
-    if expected is not None:
-        # lineage gate: the merge consumes EXACTLY the current build's
-        # shards. Stale part dirs (different n_parts/params/source reusing
-        # this out_dir) would silently duplicate postings or skew
-        # n_docs/avg_dl — fail loudly instead.
-        by_part = {m["partition_id"]: m for m in manifests}
-        missing = sorted(p for p in expected if p not in by_part)
-        mismatched = sorted(
-            p for p, fp in expected.items()
-            if p in by_part and by_part[p].get("input_fingerprint") != fp
+    if expected is None:
+        return manifests
+    # lineage gate: the merge consumes EXACTLY the current build's
+    # shards. Stale part dirs (different n_parts/params/source reusing
+    # this out_dir) would silently duplicate postings or skew
+    # n_docs/avg_dl — fail loudly instead.
+    by_part = {m["partition_id"]: m for m in manifests}
+    missing = sorted(p for p in expected if p not in by_part)
+    mismatched = sorted(
+        p for p, fp in expected.items()
+        if p in by_part and by_part[p].get("input_fingerprint") != fp
+    )
+    extra = sorted(p for p in by_part if p not in expected)
+    stray = sorted({
+        int(m.group(1))
+        for d in glob.glob(f"{out_dir}/shards/postings/part=*")
+        if (m := re.search(r"part=(\d+)$", d))
+    } - set(expected))
+    if missing or mismatched or extra or stray:
+        raise ValueError(
+            f"merge lineage mismatch in {out_dir}: missing manifests "
+            f"{missing}, fingerprint mismatches {mismatched}, manifests "
+            f"outside this build {extra}, stray shard dirs {stray} — "
+            "the out_dir holds shards from a different build "
+            "(n_parts/params/source changed?); use a fresh out_dir or "
+            "delete the stale parts"
         )
-        extra = sorted(p for p in by_part if p not in expected)
-        import glob as _glob
-        import re as _re
+    return [by_part[p] for p in expected]
 
-        disk_parts = set()
-        for d in _glob.glob(f"{out_dir}/shards/postings/part=*"):
-            m = _re.search(r"part=(\d+)$", d)
-            if m:
-                disk_parts.add(int(m.group(1)))
-        stray = sorted(disk_parts - set(expected))
-        if missing or mismatched or extra or stray:
-            raise ValueError(
-                f"merge lineage mismatch in {out_dir}: missing manifests "
-                f"{missing}, fingerprint mismatches {mismatched}, manifests "
-                f"outside this build {extra}, stray shard dirs {stray} — "
-                "the out_dir holds shards from a different build "
-                "(n_parts/params/source changed?); use a fresh out_dir or "
-                "delete the stale parts"
+
+def _merge_all(
+    spark, out_dirs: list[str], target_postings_per_salt: int,
+    n_buckets: int, block_size: int,
+    expected: list[dict[int, str]] | None = None,
+) -> list[BuildResult]:
+    """Stage B: ONE keyed merge of every index dir in ``out_dirs`` (key =
+    the dir's position; ``expected[i]`` maps dir i's parts to their
+    fingerprints for the lineage gate). Returns one BuildResult per dir;
+    all carry the shared merge's walls."""
+    manifests = [
+        _merge_manifests(d, None if expected is None else expected[i])
+        for i, d in enumerate(out_dirs)
+    ]
+    n_docs = [sum(m["row_count"] for m in ms) for ms in manifests]
+    tokens = [sum(m["total_tokens"] for m in ms) for ms in manifests]
+    # dirs with docs merge under keys 0..L-1 (keys[dir index]); 0-doc
+    # dirs get the empty layout without a merge
+    live = [i for i, n in enumerate(n_docs) if n]
+    keys = {i: k for k, i in enumerate(live)}
+
+    t_merge = t_dict = time.time()
+    os.makedirs(out_dirs[0], exist_ok=True)
+    staging = tempfile.mkdtemp(prefix="_merge_", dir=out_dirs[0])
+    try:
+        if live:
+            # explicit schemas: reading N dirs starts no schema-inference
+            # job per dir
+            blocks = functools.reduce(DataFrame.union, [
+                spark.read.schema(SHARD_BLOCK_SCHEMA)
+                .parquet(f"{out_dirs[i]}/shards/postings")
+                .select(*SHARD_BLOCK_SCHEMA.fieldNames(), F.lit(k).alias("key"))
+                for k, i in enumerate(live)
+            ])
+            # the merge output is already in sink layout (merge.py)
+            postings = merge_shard_blocks(
+                blocks, [n_docs[i] for i in live],
+                [tokens[i] / n_docs[i] for i in live],
+                target_postings_per_salt, block_size=block_size,
+                n_buckets=n_buckets,
+                docs=[sorted_doc_ids(out_dirs[i]) for i in live],
+            ).withColumn(
+                "bucket",
+                F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"),
             )
-        manifests = [by_part[p] for p in expected]
-    n_docs = sum(m["row_count"] for m in manifests)
-    if n_docs == 0:
-        return _finalize_empty(out_dir, n_buckets)
-    total_tokens = sum(m["total_tokens"] for m in manifests)
-    avg_dl = total_tokens / n_docs
+            # small row groups: parquet min/max stats prune `term IN
+            # (...)` per row group, so a query reads ~its terms' bytes
+            # instead of decompressing a whole 128 MB default row group
+            # per bucket (measured: 86 s → sub-second cold fetch). Rows
+            # arrive term-clustered from the merge, so row-group stats
+            # stay tight without a sort here.
+            (
+                postings.write.mode("overwrite")
+                .option("parquet.block.size", 4 << 20)
+                .partitionBy("key", "bucket")
+                .parquet(f"{staging}/postings")
+            )
 
-    t_merge = time.time()
-    shard_blocks = spark.read.parquet(f"{out_dir}/shards/postings")
-    # the merge exchange partitions by the FINAL bucket (n_buckets), so
-    # its output is already in sink layout — complete term groups per
-    # partition, (term, salt, block_id)-ordered — and writes directly:
-    # one shuffle for the whole stage instead of the former two (the
-    # old path re-shuffled + re-sorted every final posting into buckets;
-    # round-6 profile showed that second JVM pass was ~half the phase)
-    postings = merge_shard_blocks(
-        shard_blocks,
-        n_docs=n_docs,
-        avg_dl=avg_dl,
-        target_postings_per_salt=target_postings_per_salt,
-        block_size=block_size,
-        n_buckets=n_buckets,
-        docs=sorted_doc_ids(out_dir),
-        # widen the merge exchange past n_buckets when cores allow (the
-        # sharded per-shard merges run many _merge_alls concurrently and
-        # pass no width — their combined tasks already fill the cores)
-        merge_width=merge_width,
-    )
-    postings = postings.withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-    )
-    # small row groups: parquet min/max stats prune `term IN (...)` per
-    # row group, so a query reads ~its terms' bytes instead of
-    # decompressing a whole 128 MB default row group per bucket
-    # (measured: 86 s → sub-second cold fetch). Rows arrive term-
-    # clustered from the merge, so row-group stats stay tight without a
-    # sort here.
-    (
-        postings.write.mode("overwrite")
-        .option("parquet.block.size", 4 << 20)
-        .partitionBy("bucket")
-        .parquet(f"{out_dir}/postings")
-    )
+            t_dict = time.time()
+            # dictionary = ONE scan of the final postings (cf decoded from
+            # the tf payloads — see merge.build_dictionary); one
+            # term-sorted file per key, which the reader's footer pruning
+            # relies on
+            final_posts = spark.read.schema(POSTINGS_SCHEMA).parquet(
+                f"{staging}/postings"
+            )
+            (
+                build_dictionary(final_posts, n_buckets)
+                .repartition("key")
+                .sortWithinPartitions("key", "term")
+                .write.mode("overwrite")
+                .partitionBy("key")
+                .parquet(f"{staging}/dictionary")
+            )
+        results = []
+        for i, d in enumerate(out_dirs):
+            # _move_partition clears the old postings either way
+            if _move_partition(f"{staging}/postings", keys.get(i), f"{d}/postings"):
+                _move_partition(f"{staging}/dictionary", keys[i], f"{d}/dictionary")
+            else:
+                _finalize_empty(d)  # no docs, or docs without a term
+            results.append(_commit_merge(d, n_docs[i], tokens[i], n_buckets))
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    phases = {
+        "merge_postings_s": round(t_dict - t_merge, 3),
+        "merge_dict_s": round(time.time() - t_dict, 3),
+    }
+    for r in results:
+        r.phases = dict(phases)
+    return results
 
-    t_dict = time.time()
-    final_posts = spark.read.parquet(f"{out_dir}/postings")
-    # r7: dictionary = ONE scan of the final postings (cf decoded from the
-    # tf payloads — see merge.build_dictionary) and the n_terms/n_blocks
-    # stats ride the SAME write job as an Observation: the old path paid a
-    # second shards-postings scan + join for cf plus a dictionary
-    # read-back job for stats (3 extra actions per merge; ×9 per bench run
-    # counting the 8 sharded merges).
-    from pyspark.sql import Observation
 
-    dict_obs = Observation(f"dict-{os.path.basename(out_dir)}")
-    dictionary = build_dictionary(final_posts, n_buckets).observe(
-        dict_obs,
-        F.count(F.lit(1)).alias("terms"),
-        F.sum("n_blocks").alias("blocks"),
-    )
-    dictionary.coalesce(1).sortWithinPartitions("term").write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/dictionary")
+def _commit_merge(
+    out_dir: str, n_docs: int, total_tokens: int, n_buckets: int,
+) -> BuildResult:
+    """``out_dir``'s stats.json and merge manifest; n_terms and n_blocks
+    are the row counts in its final dictionary's and postings' footers.
+    The docs stay in shards/docs/part=*, where the doc list is read."""
+    import pyarrow.dataset as ds
 
-    # docs stay where the shards wrote them (shards/docs/part=*): the
-    # doc list (manifest.sorted_doc_ids) is read from there by the merge
-    # above and by readers; re-copying doc metadata buys nothing
-    dagg = dict_obs.get
     stats = {
         "n_docs": n_docs,
-        "avg_dl": avg_dl,
+        "avg_dl": total_tokens / n_docs if n_docs else 0.0,
         "total_tokens": total_tokens,
-        "n_terms": int(dagg["terms"] or 0),
-        "n_blocks": int(dagg["blocks"] or 0),
+        "n_terms": ds.dataset(f"{out_dir}/dictionary").count_rows(),
+        "n_blocks": ds.dataset(f"{out_dir}/postings").count_rows(),
         "n_buckets": n_buckets,
         "postings_format": POSTINGS_FORMAT,
     }
@@ -485,17 +499,8 @@ def _merge_all(
     write_manifest(out_dir, 99999, {"status": "done", "stage": "merge",
                                     "input_fingerprint": "merge", **stats})
     return BuildResult(
-        out_dir=out_dir,
-        n_docs=n_docs,
-        avg_dl=avg_dl,
-        total_tokens=total_tokens,
-        n_terms=stats["n_terms"],
-        n_blocks=stats["n_blocks"],
-        built_parts=[],
-        skipped_parts=[],
+        out_dir=out_dir, n_docs=n_docs, avg_dl=stats["avg_dl"],
+        total_tokens=total_tokens, n_terms=stats["n_terms"],
+        n_blocks=stats["n_blocks"], built_parts=[], skipped_parts=[],
         wall_s=0.0,
-        phases={
-            "merge_postings_s": round(t_dict - t_merge, 3),
-            "merge_dict_s": round(time.time() - t_dict, 3),
-        },
     )

@@ -33,6 +33,10 @@ sorted, unique doc list (``manifest.sorted_doc_ids``) — into ``doc_ids``,
 doc_id, so the (salt, block_id) order and block ranges keep their meaning,
 and a doc id missing from the doc list fails the build
 (``doc_ordinals``).
+
+One merge serves several indexes at once: a ``key`` column on the input
+names each block's index, every group and bucket is per key, and each
+key brings its own n_docs, avg_dl and doc list (``merge_shard_blocks``).
 """
 
 from __future__ import annotations
@@ -43,6 +47,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tesserae_ng_spark.index.codec import (
     concat_decode_ids,
@@ -94,8 +99,8 @@ def doc_ordinals(docs: np.ndarray, ids: np.ndarray) -> np.ndarray:
 
 def merge_shard_blocks(
     shard_blocks: DataFrame,
-    n_docs: int,
-    avg_dl: float,
+    n_docs,
+    avg_dl,
     target_postings_per_salt: int = 1 << 20,
     max_salt: int = 1 << 10,
     block_size: int = BLOCK_SIZE,
@@ -103,26 +108,29 @@ def merge_shard_blocks(
     b: float = BM25_B,
     *,
     n_buckets: int,
-    docs: np.ndarray | None = None,
-    merge_width: int | None = None,
+    docs,
 ) -> DataFrame:
     """shard block rows → final POSTINGS_SCHEMA rows (scored, re-blocked),
-    doc ordinals into ``docs`` (the index's sorted, unique doc_ids). An
-    index build passes its ``shards/docs`` list, which also holds docs
-    without postings; without one, ``docs`` is the blocks' own doc ids
-    (``block_doc_ids``, one extra job).
+    doc ordinals into ``docs``, the index's sorted, unique doc_ids
+    (``manifest.sorted_doc_ids``). When ``n_docs``, ``avg_dl`` and
+    ``docs`` are lists, entry k belongs to the blocks whose int ``key``
+    column is k: groups are (key, term, salt) and every output row keeps
+    its ``key``. Otherwise they are one index's, and any ``key`` column is
+    ignored and not output.
 
-    ``n_buckets`` is required: the merge exchange partitions by the FINAL
-    storage bucket ``pmod(xxhash64(term), n_buckets)``, so the output is
-    already in sink layout — complete term groups per partition,
-    (term, salt, block_id)-ordered — and the caller writes it directly
-    with NO second shuffle and NO sort. At cluster scale ``n_buckets``
-    must grow with the cluster (it caps merge/write parallelism unless
-    ``merge_width`` sub-splits each bucket); per-GROUP working sets stay
-    salt-bounded either way."""
-    if docs is None:
-        docs = block_doc_ids(shard_blocks)
-    term_stats = shard_blocks.groupBy("term").agg(
+    The exchange partitions by (key, FINAL storage bucket
+    ``pmod(xxhash64(term), n_buckets)``), so the output is already in
+    sink layout — complete groups per partition — and the caller writes
+    it with NO second shuffle. Per-GROUP working sets stay salt-bounded."""
+    keyed = isinstance(docs, list)
+    if not keyed:
+        shard_blocks = shard_blocks.withColumn("key", F.lit(0))
+        n_docs, avg_dl, docs = [n_docs], [avg_dl], [docs]
+    # one doc list ships with the tasks (8 B/doc); key k's is
+    # all_docs[off[k]:off[k + 1]]
+    off = np.cumsum([0] + [len(d) for d in docs])
+    all_docs = np.concatenate(docs)
+    term_stats = shard_blocks.groupBy("key", "term").agg(
         F.sum("n_docs").alias("df"),
         F.sum("tf_sum").alias("cf"),
     )
@@ -138,48 +146,56 @@ def merge_shard_blocks(
     # route each block to every salt its doc range covers (straddlers are
     # rare: only blocks crossing a range boundary duplicate)
     routed = (
-        shard_blocks.join(term_stats, "term")
+        shard_blocks.join(term_stats, ["key", "term"])
         .withColumn("salt_lo", salt_expr(F.col("block_first_doc"), F.col("nsalt")))
         .withColumn("salt_hi", salt_expr(F.col("block_last_doc"), F.col("nsalt")))
         .withColumn("salt", F.explode(F.sequence("salt_lo", "salt_hi")))
         .drop("salt_lo", "salt_hi")
     )
 
-    n_docs_f = float(n_docs)
-    avg_dl_f = float(avg_dl)
-
     def merge_batch(tbl):
-        return merge_batch_arrow(
-            tbl, n_docs_f, avg_dl_f, docs,
-            block_size=block_size, k1=k1, b=b,
-        )
+        # rows arrive key-sorted: one merge_batch_arrow per key run
+        import pyarrow as pa
+
+        keys = tbl.column("key").to_numpy()
+        starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+        for s, e in zip(starts, np.append(starts[1:], keys.size)):
+            k = int(keys[s])
+            out = merge_batch_arrow(
+                tbl.slice(s, e - s), float(n_docs[k]), float(avg_dl[k]),
+                all_docs[off[k]:off[k + 1]],
+                block_size=block_size, k1=k1, b=b,
+            )
+            if out is not None:
+                yield pa.RecordBatch.from_arrays(
+                    out.columns
+                    + [pa.array(np.full(out.num_rows, k, dtype=np.int32))],
+                    names=out.schema.names + ["key"],
+                )
 
     routed = routed.withColumn(
         "_bucket",
         F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"),
     )
-    part_cols = ["_bucket"]
-    n_parts = n_buckets
-    if merge_width and merge_width > n_buckets:
-        # n_buckets caps merge parallelism (it IS the exchange key);
-        # when the caller has more cores than buckets, sub-split each
-        # bucket with an INDEPENDENT term hash (same-hash mod would
-        # correlate with _bucket and collapse the combinations) — the
-        # write still lands rows in their bucket dir, just as a few
-        # files per bucket instead of one (r7, guide §2.5: more
-        # distinct partition values than partitions)
-        sub = -(-merge_width // n_buckets)  # ceil
+    part_cols = ["key", "_bucket"]
+    n_parts = len(docs) * n_buckets
+    width = shard_blocks.sparkSession.sparkContext.defaultParallelism
+    if width > n_parts:
+        # more cores than (key, bucket) pairs: sub-split each pair by an
+        # INDEPENDENT term hash (a same-hash mod would correlate with
+        # _bucket) — a few files per bucket dir instead of one (r7)
+        sub = -(-width // n_parts)  # ceil
         routed = routed.withColumn(
             "_sub",
             F.pmod(
                 F.xxhash64(F.col("term"), F.lit(1)), F.lit(sub)
             ).cast("int"),
         )
-        part_cols = ["_bucket", "_sub"]
-        n_parts = merge_width
+        part_cols.append("_sub")
+        n_parts = width
     # one exchange + partition-sorted Arrow-native batch merge:
     # decode/score/re-encode run ONCE per Arrow batch over many complete
-    # (term, salt) groups, with no per-group or per-row Python
+    # (key, term, salt) groups, with no per-group or per-row Python
     # (merge_group_reference below is the per-group spec; equivalence is
     # pinned bit-exactly in tests/test_merge_arrow.py).
     # max_rows bounds the per-call working set: a merge input row carries
@@ -189,34 +205,15 @@ def merge_shard_blocks(
     # few tens of MB whatever the allocator, while batch amortization
     # stays intact (measured on a host with lazily-backed memory: stage
     # 117 s → 9 s cold).
-    return _grouped_arrow_sorted(
-        routed, ["term", "salt"], merge_batch, POSTINGS_SCHEMA,
+    out = _grouped_arrow_sorted(
+        routed, ["key", "term", "salt"], merge_batch,
+        T.StructType(
+            POSTINGS_SCHEMA.fields + [T.StructField("key", T.IntegerType(), False)]
+        ),
         n_parts=n_parts, partition_cols=part_cols,
         max_rows=MERGE_BATCH_MAX_ROWS,
     )
-
-
-def block_doc_ids(shard_blocks: DataFrame) -> np.ndarray:
-    """Sorted, unique doc ids of stage-A block rows (decoded on the
-    executors, collected as one Arrow column)."""
-
-    def decode(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            ids = concat_decode_ids(
-                rb.column("doc_ids").to_pylist(),
-                rb.column("n_docs").to_numpy(zero_copy_only=False),
-            )
-            yield pa.RecordBatch.from_arrays([pa.array(ids)], ["doc_id"])
-
-    tbl = (
-        shard_blocks.select("doc_ids", "n_docs")
-        .mapInArrow(decode, "doc_id long")
-        .distinct()
-        .toArrow()
-    )
-    return np.sort(tbl.column("doc_id").to_numpy())
+    return out if keyed else out.drop("key")
 
 
 def _arrow_key_codes(tbl, keys: list[str]) -> list[np.ndarray]:
@@ -247,13 +244,14 @@ def _grouped_arrow_sorted(
 ) -> DataFrame:
     """Arrow-native grouped batch map: hash-partition by
     ``partition_cols``, partition-sort by ``keys``, then ``mapInArrow``
-    where ``batch_fn(pa.Table) -> pa.RecordBatch | None`` receives
-    COMPLETE key groups (the trailing, possibly batch-straddling group is
+    where ``batch_fn(pa.Table)`` receives COMPLETE key groups and yields
+    RecordBatches (the trailing, possibly batch-straddling group is
     carried into the next batch). Zero per-row Python objects: binary
     payload columns stay Arrow buffers end to end.
 
     ``partition_cols`` must be a function of a prefix of ``keys`` (here
-    the final storage bucket, a deterministic function of ``term``), so
+    the key and the final storage bucket, a deterministic function of
+    ``term``), so
     every group lands in exactly one partition and the exchange doubles
     as the sink's partitioning.
 
@@ -267,9 +265,7 @@ def _grouped_arrow_sorted(
     def _call_chunked(t):
         n = t.num_rows
         if n <= max_rows:
-            out = batch_fn(t)
-            if out is not None and out.num_rows:
-                yield out
+            yield from batch_fn(t)
             return
         cols = _arrow_key_codes(t, keys)
         change = np.zeros(n, dtype=bool)
@@ -284,9 +280,7 @@ def _grouped_arrow_sorted(
             if nxt <= pos:
                 nxt_i = np.searchsorted(gstarts, pos, "right")
                 nxt = gstarts[nxt_i] if nxt_i < gstarts.size else n
-            out = batch_fn(t.slice(pos, nxt - pos))
-            if out is not None and out.num_rows:
-                yield out
+            yield from batch_fn(t.slice(pos, nxt - pos))
             pos = nxt
 
     def runner(batches):
@@ -604,7 +598,8 @@ def merge_batch_arrow(
 def build_dictionary(postings: DataFrame, n_buckets: int) -> DataFrame:
     """final blocks → DICTIONARY_SCHEMA rows in ONE scan of the final
     postings (guide §2.3/§2.4: aggregate before the shuffle; no second
-    scan of the shard postings and no join).
+    scan of the shard postings and no join). Postings of a keyed merge
+    (a ``key`` column) give one dictionary per key, keyed the same way.
 
     cf per term is recovered by decoding the blocks' tf varints: one
     decode of an Arrow batch's joined ``tfs`` bytes, summed per block with
@@ -622,7 +617,8 @@ def build_dictionary(postings: DataFrame, n_buckets: int) -> DataFrame:
         starts = np.cumsum(counts) - counts
         return pd.Series(np.add.reduceat(vals, starts), dtype="int64")
 
-    d = postings.groupBy("term").agg(
+    keys = ["key", "term"] if "key" in postings.columns else ["term"]
+    d = postings.groupBy(*keys).agg(
         F.sum("n_docs").alias("df"),
         F.sum(_tf_sum("tfs", "n_docs")).alias("cf"),
         F.count("*").cast("int").alias("n_blocks"),
@@ -630,5 +626,5 @@ def build_dictionary(postings: DataFrame, n_buckets: int) -> DataFrame:
     )
     return (
         d.withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
-        .select("term", "df", "cf", "max_score", "n_blocks", "bucket")
+        .select(*keys, "df", "cf", "max_score", "n_blocks", "bucket")
     )

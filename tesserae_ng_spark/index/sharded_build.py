@@ -7,26 +7,28 @@ into independent shard indexes. Building them as N separate
 — the per-doc analyzer chain plus a full corpus scan to filter its slice
 — and N small merges serialize per-job fixed costs.
 
-``build_sharded_indexes`` is the shard-keyed case of the build's one
-stage-A pass (index/builder.py ``_stage_a``): analysis runs ONCE over
-the corpus, each shard's stage-A dirs land in its own index dir as part
-0, and the existing stage-B merge runs per shard. Per-shard outputs are
-BYTE-IDENTICAL to independent ``build_index`` runs over the filtered
-corpus (pinned in tests/test_sharded_build.py): stage B is the same
-deterministic merge, invariant to stage-A fragmentation.
+``build_sharded_indexes`` runs the build's two keyed stages
+(index/builder.py) once for all shards, key = shard: stage A
+(``_stage_a``) analyzes the corpus ONCE and lands each shard's stage-A
+dirs in its own index dir as part 0; stage B (``_merge_all``) is ONE
+merge over every shard's blocks, grouped by (shard, term, salt) and
+partitioned by (shard, bucket), each shard with its own n_docs, avg_dl
+and doc list. Per-shard outputs are BYTE-IDENTICAL to independent
+``build_index`` runs over the filtered corpus (pinned in
+tests/test_sharded_build.py): every merge group is one shard's, merged
+deterministically, invariant to stage-A fragmentation.
 
 At 10^12 docs this is the natural build topology: shards are a STORAGE
 layout (constant per cluster), so one corpus pass fans out to all of them
-— no extra shuffle, no repeated scans, and the merge work per shard is
-what the independent builds would have done anyway. Resume is per shard:
-a rerun analyzes only the shards whose manifest is missing or stale and
-then runs every shard's merge.
+— no extra shuffle, no repeated scans, and a sharded build runs the same
+Spark jobs as a union build. Resume is per shard: a rerun analyzes only
+the shards whose manifest is missing or stale and then runs the one
+merge for every shard.
 """
 
 from __future__ import annotations
 
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 
@@ -81,19 +83,10 @@ def build_sharded_indexes(
     )
     t_parts = time.time() - t_start
 
-    # stage B: the per-index merge — concurrent submissions overlap
-    # per-job fixed costs (distinct output paths). 8-wide: per-shard
-    # merge jobs are small (a few tasks each), so the limit is
-    # driver-side plan/scheduling latency — overlapping more of them
-    # collapses two 4-merge waves into one (r7)
-    def _merge(i: int) -> BuildResult:
-        return _merge_all(
-            spark, out_dirs[i], target_postings_per_salt, n_buckets,
-            block_size, expected={0: fps[i]},
-        )
-
-    with ThreadPoolExecutor(max_workers=min(8, n_shards)) as pool:
-        results = list(pool.map(_merge, range(n_shards)))
+    results = _merge_all(
+        spark, out_dirs, target_postings_per_salt, n_buckets, block_size,
+        expected=[{0: fps[i]} for i in range(n_shards)],
+    )
     wall = time.time() - t_start
     for i, r in enumerate(results):
         r.built_parts = [0] if i in built else []

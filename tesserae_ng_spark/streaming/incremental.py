@@ -60,8 +60,9 @@ def incremental_index_stream(
 ):
     """Start the incremental build stream; returns the StreamingQuery.
 
-    Callers refresh the queryable index by running stage B
-    (index.builder._merge_all) after any number of committed batches.
+    Callers refresh the queryable index by running stage B over its one
+    dir (``index.builder._merge_all(spark, [out_dir], ...)``) after any
+    number of committed batches.
     """
     stream = (
         spark.readStream.schema(CORPUS_SCHEMA)

@@ -1,5 +1,6 @@
 """M1 end-to-end slice: corpus → extraction → postings → BM25 oracle."""
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from tesserae_ng_spark.index.build import (
@@ -118,11 +119,13 @@ def test_merged_postings_invariant_to_stage_a_fragmentation(
     keyed = td.withColumn("key", F.lit(0))
     n_docs = prepared.count()
     avg_dl = prepared.agg(F.avg("dl")).collect()[0][0]
+    docs = np.unique(prepared.select("doc_id").toPandas()["doc_id"].to_numpy())
 
     def final_rows(stage_a):
         out = merge_shard_blocks(
             stage_a, n_docs=n_docs, avg_dl=avg_dl,
             target_postings_per_salt=64, block_size=16, n_buckets=4,
+            docs=docs,
         ).collect()
         return sorted(
             (

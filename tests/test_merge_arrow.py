@@ -236,6 +236,7 @@ def test_merge_chunking_invariant(spark, monkeypatch):
         out = M.merge_shard_blocks(
             sdf, n_docs=N_DOCS, avg_dl=AVG_DL,
             target_postings_per_salt=24, block_size=8, n_buckets=3,
+            docs=_doc_list(blocks_only),
         ).collect()
         return sorted(
             (

@@ -2,7 +2,7 @@
 
 build_sharded_indexes runs the analyzer chain once over the full corpus
 and fans stage-A artifacts out to N standalone shard dirs through one
-(shard, term)-keyed exchange; stage B is the unchanged per-index merge.
+(shard, term)-keyed exchange; stage B is one merge keyed by shard.
 The pin here is strong: per-shard FINAL POSTINGS AND DICTIONARY ROWS are
 equal to an independent build_index over the filtered corpus, and
 search_sharded over the fused dirs is rank+score-identical to a single
@@ -12,6 +12,7 @@ union index.
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -195,7 +196,73 @@ def test_fused_empty_shard(spark, corpus, tmp_path_factory, entry):
     assert sum(
         json.load(open(f"{d}/stats.json"))["n_docs"] for d in dirs
     ) == expect
+    for d in dirs:
+        # the reader's footer pruning needs ONE term-sorted dictionary file
+        files = [
+            f for f in os.listdir(f"{d}/dictionary")
+            if not f.startswith((".", "_"))
+        ]
+        assert len(files) == 1
+        terms = pq.read_table(f"{d}/dictionary/{files[0]}").column("term")
+        assert terms.to_pylist() == sorted(terms.to_pylist())
+    if entry == "sharded":
+        # empty, one-doc and multi-doc shards share the one keyed merge;
+        # each must equal an independent build of its own docs
+        cols = [
+            "term", "salt", "block_id", "n_docs", "block_first_doc",
+            "block_last_doc", "doc_ids", "tfs", "dls", "positions",
+            "block_max_score", "block_max_tf", "block_min_dl",
+        ]
+        dcols = ["term", "df", "cf", "max_score", "n_blocks", "bucket"]
+        for i, d in enumerate(dirs):
+            indep = str(base / f"indep{i}")
+            build_index(
+                spark, small.filter(F.pmod(F.xxhash64("url"), F.lit(7)) == i),
+                indep, n_parts=1, **KW,
+            )
+            for path, c, order in (
+                ("postings", cols, cols[:3]), ("dictionary", dcols, ["term"]),
+            ):
+                assert _rows(spark, f"{d}/{path}", c, order) == _rows(
+                    spark, f"{indep}/{path}", c, order
+                )
+            with open(f"{d}/stats.json") as f1, open(f"{indep}/stats.json") as f2:
+                assert json.load(f1) == json.load(f2)
     queries = [dict(query_id=0, query_text="join hash", mode="bm25", k=5)]
     rows = search_sharded(spark, dirs, queries, k=5).collect()
     # global stats over the 3-doc corpus drive whatever matches exist
     assert all(r["rank"] >= 1 for r in rows)
+
+
+def _marker_job_id(spark, tag):
+    """Id of a one-task job run now. Spark numbers jobs from every thread
+    in one sequence, so the gap between two markers counts every job in
+    between, including those stage A submits from its thread pool."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    (jid,) = sc.statusTracker().getJobIdsForGroup(tag)
+    return jid
+
+
+def test_fused_build_job_count(spark, corpus, tmp_path_factory):
+    # one keyed merge for every shard: a 3-shard build runs about the
+    # Spark jobs of a 3-part union build, not one merge's worth per shard
+    base = tmp_path_factory.mktemp("fusedjobs")
+
+    def jobs(tag, build):
+        before = _marker_job_id(spark, f"{tag}-before")
+        build()
+        return _marker_job_id(spark, f"{tag}-after") - before - 1
+
+    union = jobs("union", lambda: build_index(
+        spark, corpus, str(base / "union"), n_parts=N_SHARDS, **KW
+    ))
+    sharded = jobs("sharded", lambda: build_sharded_indexes(
+        spark, corpus, [str(base / f"s{i}") for i in range(N_SHARDS)], **KW
+    ))
+    assert 0 < union and sharded <= union + 2, (union, sharded)

@@ -30,8 +30,8 @@ def test_incremental_stream_builds_queryable_index(spark, corpus, tmp_path):
     total_rows = sum(m["row_count"] for m in parts)
     assert corpus.select("url").distinct().count() <= total_rows <= corpus.count()
 
-    res = _merge_all(spark, out, target_postings_per_salt=64, n_buckets=2,
-                     block_size=16)
+    (res,) = _merge_all(spark, [out], target_postings_per_salt=64,
+                        n_buckets=2, block_size=16)
     assert res.n_docs == sum(m["row_count"] for m in parts)
 
     searcher = Searcher(out)
@@ -138,8 +138,8 @@ def test_streaming_index_matches_batch_results(spark, corpus, tmp_path):
 
     q = incremental_index_stream(spark, src, sidx, ckpt, max_files_per_trigger=2)
     q.awaitTermination(300)
-    res_s = _merge_all(spark, sidx, target_postings_per_salt=64,
-                       n_buckets=2, block_size=16)
+    (res_s,) = _merge_all(spark, [sidx], target_postings_per_salt=64,
+                          n_buckets=2, block_size=16)
     build_index(spark, deduped, bidx, n_parts=2, block_size=16, n_buckets=2,
                 target_postings_per_salt=64)
 
