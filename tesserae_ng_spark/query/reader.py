@@ -896,10 +896,3 @@ class IndexReader:
         if self._global_docs is None:
             self._global_docs = sorted_doc_ids(self.index_dir)
         return self._global_docs
-
-    def doc_urls(self, doc_ids: list[int]) -> dict[int, str]:
-        d = ds.dataset(os.path.join(self.index_dir, "shards", "docs"))
-        tbl = d.to_table(
-            columns=["doc_id", "url"], filter=pc.field("doc_id").isin(doc_ids)
-        )
-        return dict(zip(tbl.column("doc_id").to_pylist(), tbl.column("url").to_pylist()))

@@ -690,8 +690,6 @@ def affinity_slices(
     return [[queries[qi] for qi in b] for b in bins if b]
 
 
-
-
 def search_batch(
     spark,
     index_dir: str,

@@ -45,7 +45,7 @@ one packed numpy payload (per candidate: query_id, doc_id, value, k_q; per
 phrase query with matches: query_id, match count), and the driver runs one
 vectorized cut over all of them (``cut_topk``) — Solr's coordinator merge
 of per-shard top-k, without a shuffle stage for it (a merge stage cost
-about as much as the scoring: a Spark job that does no work takes ~0.5 s
+about as much as the scoring: a Spark job that does no work takes ~0.2 s
 of wall on a 4-core host, about the whole 60-query batch).
 Driver memory: at most shards × Σk_q candidate rows of 32 B each — the
 result size with one shard, under 4 MB for 2000 queries on 4 shards at
