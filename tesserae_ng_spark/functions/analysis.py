@@ -16,11 +16,14 @@ every other character (incl. non-ASCII) is a separator. Positions are
 
 Both a pure-Python path (query analysis, in-process, no Spark) and an
 Arrow-vectorized pandas UDF path (bulk indexing) are provided; they are
-the SAME function, so index terms and query terms always agree.
+the SAME function, so index terms and query terms always agree. Every
+caller stems through one bounded, process-wide memo (``_stem_memo``):
+a token is stemmed once per process, not once per call or per batch.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 
 import pandas as pd
@@ -48,24 +51,32 @@ def tokenize(text: str | None) -> list[tuple[str, int]]:
     return [(m.group(0), i) for i, m in enumerate(_TOKEN_RE.finditer(text.lower()))]
 
 
-def analyze(text: str | None, lang: str | None = "en", *, _memo: dict | None = None) -> list[tuple[str, int]]:
-    """Full chain: tokenize then stem (Porter iff lang == 'en').
+# The stem memo: token → Porter stem, shared by query analysis and the
+# build UDFs of one process. Terms are Zipf-distributed, so a bounded LRU
+# keeps the head resident (hit rates near 1 on a query batch) while a
+# web-scale vocabulary's tail evicts. Tokens longer than
+# STEM_MEMO_MAX_TOKEN skip it: the memo lives as long as the process
+# (a reused Python worker), and would otherwise pin long junk tokens
+# (URLs, base64 runs) for that long.
+STEM_MEMO_SIZE = 1 << 16
+STEM_MEMO_MAX_TOKEN = 32
 
-    ``_memo`` lets batch callers share a term→stem cache across rows —
-    Zipf distribution means the cache hit rate is very high.
-    """
+
+@functools.lru_cache(maxsize=STEM_MEMO_SIZE)
+def _stem_memo(term: str) -> str:
+    return porter_stem(term)
+
+
+def analyze(text: str | None, lang: str | None = "en") -> list[tuple[str, int]]:
+    """Full chain: tokenize then stem (Porter iff lang == 'en'), through
+    the process-wide stem memo."""
     toks = tokenize(text)
     if lang != "en" or not toks:
         return toks
-    memo = _memo if _memo is not None else {}
-    out = []
-    for term, pos in toks:
-        s = memo.get(term)
-        if s is None:
-            s = porter_stem(term)
-            memo[term] = s
-        out.append((s, pos))
-    return out
+    return [
+        (_stem_memo(t) if len(t) <= STEM_MEMO_MAX_TOKEN else porter_stem(t), p)
+        for t, p in toks
+    ]
 
 
 def analyze_query(query_text: str, lang: str = "en") -> list[str]:
@@ -74,8 +85,9 @@ def analyze_query(query_text: str, lang: str = "en") -> list[str]:
 
 
 # ---------------------------------------------------------------------------
-# Arrow-vectorized UDFs (bulk indexing path). Per-batch stem memo exploits
-# the Zipf head: one porter_stem call per distinct term per Arrow batch.
+# Arrow-vectorized UDFs (bulk indexing path). They stem through the same
+# process-wide memo as queries, so a reused Python worker stems the Zipf
+# head once for all its batches, not once per Arrow batch.
 # ---------------------------------------------------------------------------
 
 
@@ -86,14 +98,11 @@ def tokenize_udf(text: pd.Series) -> pd.Series:
 
 def analyze_udf_factory():
     """Build the (text, lang) → tokens UDF. Factory so each Spark plan gets
-    a fresh closure (the memo dict lives per-executor-batch)."""
+    a fresh closure."""
 
     @F.pandas_udf(TOKEN_STRUCT)
     def _analyze(text: pd.Series, lang: pd.Series) -> pd.Series:
-        memo: dict[str, str] = {}
-        return pd.Series(
-            [analyze(t, lg, _memo=memo) for t, lg in zip(text, lang)]
-        )
+        return pd.Series([analyze(t, lg) for t, lg in zip(text, lang)])
 
     return _analyze
 
@@ -128,10 +137,10 @@ DOC_TERMS_STRUCT = T.ArrayType(
 )
 
 
-def doc_terms(text: str | None, lang: str | None = "en",
-              _memo: dict | None = None) -> list[tuple[str, int, list[int]]]:
+def doc_terms(text: str | None,
+              lang: str | None = "en") -> list[tuple[str, int, list[int]]]:
     """Per-doc term vector: sorted [(term, tf, positions)], positions asc."""
-    toks = analyze(text, lang, _memo=_memo)
+    toks = analyze(text, lang)
     agg: dict[str, list[int]] = {}
     for term, pos in toks:
         agg.setdefault(term, []).append(pos)
@@ -141,10 +150,7 @@ def doc_terms(text: str | None, lang: str | None = "en",
 def doc_terms_udf_factory():
     @F.pandas_udf(DOC_TERMS_STRUCT)
     def _doc_terms(text: pd.Series, lang: pd.Series) -> pd.Series:
-        memo: dict[str, str] = {}
-        return pd.Series(
-            [doc_terms(t, lg, _memo=memo) for t, lg in zip(text, lang)]
-        )
+        return pd.Series([doc_terms(t, lg) for t, lg in zip(text, lang)])
 
     return _doc_terms
 
@@ -179,11 +185,10 @@ def _varint_delta_into(ps: list[int], out: bytearray) -> None:
         out.append(v)
 
 
-def doc_vector(text: str | None, lang: str | None = "en",
-               _memo: dict | None = None) -> tuple:
+def doc_vector(text: str | None, lang: str | None = "en") -> tuple:
     """Flat per-doc term vector: (terms, tfs, offs, lens, pos_stream, dl),
     terms sorted; per-term positions occupy pos_stream[offs[i]:offs[i]+lens[i]]."""
-    toks = analyze(text, lang, _memo=_memo)
+    toks = analyze(text, lang)
     agg: dict[str, list[int]] = {}
     for term, pos in toks:
         agg.setdefault(term, []).append(pos)
@@ -214,8 +219,7 @@ def doc_vector_udf_factory():
     # rather than kept as dead code; see SURVEY §perf notes.
     @F.pandas_udf(DOC_VECTOR_STRUCT)
     def _doc_vec(text: pd.Series, lang: pd.Series) -> pd.DataFrame:
-        memo: dict[str, str] = {}
-        rows = [doc_vector(t, lg, _memo=memo) for t, lg in zip(text, lang)]
+        rows = [doc_vector(t, lg) for t, lg in zip(text, lang)]
         return pd.DataFrame(
             rows, columns=["terms", "tfs", "offs", "lens", "pos", "dl"]
         )
@@ -240,11 +244,7 @@ def doc_vector_from_html_udf_factory():
 
     @F.pandas_udf(DOC_VECTOR_STRUCT)
     def _doc_vec_html(html: pd.Series, lang: pd.Series) -> pd.DataFrame:
-        memo: dict[str, str] = {}
-        rows = [
-            doc_vector(extract_text(h), lg, _memo=memo)
-            for h, lg in zip(html, lang)
-        ]
+        rows = [doc_vector(extract_text(h), lg) for h, lg in zip(html, lang)]
         return pd.DataFrame(
             rows, columns=["terms", "tfs", "offs", "lens", "pos", "dl"]
         )

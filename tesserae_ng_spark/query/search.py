@@ -54,6 +54,10 @@ DENSE_POSTINGS_CUTOFF = 1 << 24
 PREFETCH_MAX_DF = 1 << 20
 
 
+# no hits: (doc_ids, scores)
+_NO_HITS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
+
+
 @dataclass
 class Hit:
     rank: int
@@ -95,15 +99,28 @@ class Searcher:
         ``wand_topk`` computes every bound under the query's (n_docs,
         avg_dl, df).
 
-        The scorers return doc ordinals; the top-k maps through the
-        reader's doc list into the ``Hit``s' doc_ids (k gathers). k < 1
-        returns [] in every mode."""
+        Analysis, then ``_search_terms`` (the entry point for terms
+        already analyzed with this searcher's ``lang``: the batch
+        executor's tasks score through it from the driver's analysis),
+        then one ``Hit`` per (doc_id, score). k < 1 returns [] in every
+        mode."""
         terms = analyze_query(query_text, self.lang)
+        docs, scores = self._search_terms(terms, k, mode, window, global_stats)
+        return [
+            Hit(rank=i + 1, doc_id=d, score=sc)
+            for i, (d, sc) in enumerate(zip(docs.tolist(), scores.tolist()))
+        ]
+
+    def _search_terms(self, terms: list[str], k: int, mode: str = "bm25",
+                      window: int = 5, global_stats: dict | None = None):
+        """``search`` from analyzed ``terms`` → (doc_ids int64, scores
+        float64), best first. The scorers return doc ordinals; the top-k
+        maps through the reader's doc list (k gathers)."""
         if not terms or k < 1:
-            return []
+            return _NO_HITS
         fetched = self.reader.fetch(terms)
         if not fetched:
-            return []
+            return _NO_HITS
         if mode == "bm25":
             if global_stats is not None:
                 n_docs = global_stats["n_docs"]
@@ -145,7 +162,7 @@ class Searcher:
         elif mode == "phrase":
             ordered = [fetched[t] for t in terms if t in fetched]
             if len(ordered) < len(terms):
-                return []  # a phrase term missing from the corpus → no match
+                return _NO_HITS  # a phrase term missing from the corpus
             # ids/tfs/dls only — positions load candidate-only inside
             # phrase_match_arrays (_candidate_decoded)
             self.reader.ensure_payloads(ordered)
@@ -153,17 +170,19 @@ class Searcher:
         elif mode == "proximity":
             uniq = sorted(set(terms))
             if any(t not in fetched for t in uniq):
-                return []
+                return _NO_HITS
             tps = [fetched[t] for t in uniq]
             self.reader.ensure_payloads(tps)  # positions load candidate-only
             top = proximity_topk(tps, window, k)
         else:
             raise ValueError(f"unknown mode {mode!r}")
-        docs = self.reader.global_doc_ids()
-        return [
-            Hit(rank=i + 1, doc_id=int(docs[o]), score=s)
-            for i, (o, s) in enumerate(top)
-        ]
+        if not top:
+            return _NO_HITS
+        ords, scores = zip(*top)
+        return (
+            self.reader.global_doc_ids()[np.array(ords, dtype=np.int64)],
+            np.array(scores, dtype=np.float64),
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -611,6 +630,7 @@ def affinity_slices(
     n_slices: int,
     lang: str = "en",
     df: dict[str, int] | None = None,
+    terms: list[list[str]] | None = None,
 ) -> list[list[dict]]:
     """Partition a query batch into ≤ ``n_slices`` slices by TERM AFFINITY:
     queries sharing their heaviest (max-df) term land in the same slice.
@@ -634,6 +654,11 @@ def affinity_slices(
     occurrence count across the batch is the proxy (Zipf head terms are
     frequent in real query logs too).
 
+    ``terms``: each query's analyzed terms, aligned with ``queries`` (what
+    ``analyze_query(q["query_text"], lang)`` returns), for a caller that
+    has analyzed the batch already; without it the queries are analyzed
+    here with ``lang``.
+
     Balance: greedy LPT over anchor groups with an estimated cost of
     (per-query Σ df) + (group union df); groups costlier than 2× the
     average bin are split first so one hot anchor cannot serialize the
@@ -642,7 +667,9 @@ def affinity_slices(
     n = len(queries)
     if n == 0 or n_slices <= 1:
         return [list(queries)] if n else []
-    qterms = [analyze_query(q.get("query_text", ""), lang) for q in queries]
+    qterms = terms if terms is not None else [
+        analyze_query(q.get("query_text", ""), lang) for q in queries
+    ]
     if df is None:
         from collections import Counter
 

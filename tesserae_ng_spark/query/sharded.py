@@ -10,9 +10,11 @@ shape (public Solr semantics — the reference's deployment model):
     per-term df (shards partition docs disjointly, so sums are exact).
   phase 2 (distributed): every (shard × query-slice) task scores its shard
     with the GLOBAL stats so scores are comparable across shards; per-shard
-    top-k candidates flow back. bm25's block-max scorer computes its
-    per-block bounds from the stored (max_tf, min_dl) under the global
-    stats.
+    top-k candidates flow back. Tasks receive each query's terms as the
+    driver analyzed them for phase 1 (one analysis per query per batch),
+    so they prefetch and score without analyzing. bm25's block-max scorer
+    computes its per-block bounds from the stored (max_tf, min_dl) under
+    the global stats.
   driver cut: per query, rank candidates by (score desc, doc_id asc) and
     keep k — rank- and score-identical to a single index over the union of
     the shards (pinned by tests/test_sharded.py for bm25 AND phrase AND
@@ -187,32 +189,26 @@ def global_shard_stats(
     }
 
 
-def _query_topk(searcher, q, k: int, gs: dict | None):
-    """ONE query on ONE shard → (doc_ids int64, values float64, phrase
-    match count or None), ordered by (value desc, doc_id asc) and cut at
-    ``k`` — the query's own k_q. Any global top-k_q doc is in its shard's
-    top-k_q, so the driver cut at the same k_q is exact.
+def _query_topk(searcher, terms: list[str], mode: str, window: int, k: int,
+                gs: dict | None):
+    """ONE query, analyzed into ``terms``, on ONE shard → (doc_ids int64,
+    values float64, phrase match count or None), ordered by (value desc,
+    doc_id asc) and cut at ``k`` — the query's own k_q. Any global top-k_q
+    doc is in its shard's top-k_q, so the driver cut at the same k_q is
+    exact.
 
     ``gs is None`` (one shard): the shard's own stats are the global stats,
-    so the plain per-query path returns final scores (bm25 under the
-    shard's own stats, phrase multiplies its own idf in). Otherwise
-    score under the GLOBAL stats; phrase returns tf-parts plus this shard's
-    match count, and the driver multiplies the global idf in. The match
-    primitives work in the shard's doc ordinals (the cut at k is the same
-    in doc_id order); only the kept top-k maps to doc_ids."""
-    mode = q.get("mode", "bm25")
+    so the per-query path (``Searcher._search_terms``) returns final
+    scores (bm25 under the shard's own stats, phrase multiplies its own
+    idf in). Otherwise score under the GLOBAL stats; phrase returns
+    tf-parts plus this shard's match count, and the driver multiplies the
+    global idf in. The match primitives work in the shard's doc ordinals
+    (the cut at k is the same in doc_id order); only the kept top-k maps
+    to doc_ids."""
     if gs is None or mode == "bm25":
-        hits = searcher.search(
-            q["query_text"], k=k, mode=mode, window=q.get("window", 5),
-            global_stats=gs,
-        )
-        return (
-            np.array([h.doc_id for h in hits], dtype=np.int64),
-            np.array([h.score for h in hits], dtype=np.float64),
-            None,
-        )
+        docs, vals = searcher._search_terms(terms, k, mode, window, gs)
+        return docs, vals, None
     none = (_NO_DOCS, _NO_VALS, None)
-    terms = analyze_query(q["query_text"], searcher.lang)
     if not terms:
         return none
     fetched = searcher.reader.fetch(terms)
@@ -238,7 +234,7 @@ def _query_topk(searcher, q, k: int, gs: dict | None):
         if any(t not in fetched for t in uniq):
             return none
         docs, scores = proximity_match_arrays(
-            [fetched[t] for t in uniq], q.get("window", 5)
+            [fetched[t] for t in uniq], window
         )
         top = np.lexsort((docs, -scores))[:k]
         return searcher.reader.global_doc_ids()[docs[top]], scores[top], None
@@ -394,6 +390,10 @@ def search_sharded(
     and silently fall back to shard-local df, breaking cross-shard score
     comparability).
 
+    Each query is analyzed once, here on the driver: its terms feed phase
+    1, the slicing and its tasks, which score from them
+    (``Searcher._search_terms``) and analyze nothing.
+
     Eager: the batch's one scoring job (one stage, one task per shard ×
     query slice) runs before this returns, and the per-task payloads are
     cut to each query's k on the driver (``cut_topk``; at most shards ×
@@ -404,10 +404,12 @@ def search_sharded(
     from tesserae_ng_spark.query import search as search_mod
 
     sc = spark.sparkContext
-    all_terms: set[str] = set()
-    for q in queries:
-        all_terms.update(analyze_query(q["query_text"], lang))
-    stats = global_shard_stats(index_dirs, sorted(all_terms), sc=sc, lang=lang)
+    # the batch's one analysis pass: phase 1, slicing and every task use
+    # these terms, so no task analyzes a query
+    qterms = [analyze_query(q["query_text"], lang) for q in queries]
+    stats = global_shard_stats(
+        index_dirs, sorted({t for ts in qterms for t in ts}), sc=sc, lang=lang
+    )
 
     n_slices = max(
         1,
@@ -420,9 +422,20 @@ def search_sharded(
     # — queries sharing a head term decode its postings on one worker per
     # shard instead of on every worker
     slices = search_mod.affinity_slices(
-        queries, n_slices, lang, df=stats.get("df")
+        queries, n_slices, lang, df=stats.get("df"), terms=qterms
     )
-    tasks = [(d, s) for d in index_dirs for s in slices if s]
+    # what a task needs of a query: (query_id, k_q, mode, window, terms);
+    # slices hold the caller's query dicts, so their identity finds each
+    work = {
+        id(q): (
+            q["query_id"], int(q.get("k", k)), q.get("mode", "bm25"),
+            q.get("window", 5), ts,
+        )
+        for q, ts in zip(queries, qterms)
+    }
+    tasks = [
+        (d, [work[id(q)] for q in s]) for d in index_dirs for s in slices if s
+    ]
     # one shard: its own stats are the global stats (see _query_topk); the
     # stats ride the task closure — PySpark broadcasts a pickled command
     # over 1 MB by itself
@@ -431,20 +444,18 @@ def search_sharded(
     def run_task(task):
         index_dir, qs = task
         searcher = get_searcher(index_dir, lang)
-        terms: set[str] = set()
-        for q in qs:
-            terms.update(analyze_query(q["query_text"], searcher.lang))
-        searcher.prefetch(terms)
+        searcher.prefetch({t for *_, terms in qs for t in terms})
         qid, doc, val, kq, mq, mc = [], [], [], [], [], []
-        for q in qs:
-            k_q = int(q.get("k", k))
-            docs, vals, matches = _query_topk(searcher, q, k_q, gs)
-            qid.append(np.full(docs.size, q["query_id"], dtype=np.int64))
+        for query_id, k_q, mode, window, terms in qs:
+            docs, vals, matches = _query_topk(
+                searcher, terms, mode, window, k_q, gs
+            )
+            qid.append(np.full(docs.size, query_id, dtype=np.int64))
             doc.append(docs)
             val.append(vals)
             kq.append(np.full(docs.size, k_q, dtype=np.int64))
             if matches is not None:
-                mq.append(q["query_id"])
+                mq.append(query_id)
                 mc.append(matches)
         return (
             np.concatenate(qid), np.concatenate(doc), np.concatenate(val),

@@ -127,6 +127,78 @@ def test_analyze_lang_gate():
 
 
 # ---------------------------------------------------------------------------
+# The process-wide stem memo
+# ---------------------------------------------------------------------------
+def _memo_free(text, lang="en"):
+    """The chain without the memo: porter_stem on every token."""
+    toks = tokenize(text)
+    return [(porter_stem(t), p) for t, p in toks] if lang == "en" else toks
+
+
+def test_memoized_analysis_equals_memo_free_chain():
+    """Repeated, distinct, non-en and over-long tokens: the memoized chain
+    returns exactly what stemming every token afresh does, on a cold and
+    on a warm memo."""
+    from tesserae_ng_spark.functions import analysis
+
+    long_tok = "relational" * (analysis.STEM_MEMO_MAX_TOKEN // 10 + 1)
+    text = (
+        "Running runs RUNNING connections connection generalizations "
+        f"caresses ponies 42 {long_tok} running {long_tok}s Running"
+    )
+    analysis._stem_memo.cache_clear()
+    for lang in ("en", "en", "es", None):
+        want = _memo_free(text, lang)
+        assert analyze(text, lang) == want
+        assert analyze_query(text, lang) == [t for t, _ in want]
+    assert analyze(text, "es") == tokenize(text)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.text(alphabet="abcdefgiklmnorstuyz0 -", max_size=200))
+def test_memoized_analysis_property(text):
+    assert analyze(text) == _memo_free(text)
+
+
+def test_stem_memo_is_bounded_and_skips_long_tokens():
+    """The memo's bound is a module constant, and a token longer than
+    STEM_MEMO_MAX_TOKEN is stemmed without entering it (a 20,000-character
+    token, as the long-term index tests write, must not stay pinned)."""
+    from tesserae_ng_spark.functions import analysis
+
+    assert analysis._stem_memo.cache_info().maxsize == analysis.STEM_MEMO_SIZE
+    assert analysis.STEM_MEMO_SIZE == 1 << 16
+    analysis._stem_memo.cache_clear()
+    long_tok = "x" * 20_000
+    at_bound = "generalizations" + "s" * (analysis.STEM_MEMO_MAX_TOKEN - 15)
+    assert analyze_query(long_tok) == [porter_stem(long_tok)]
+    info = analysis._stem_memo.cache_info()
+    assert (info.hits, info.misses, info.currsize) == (0, 0, 0)
+    assert analyze_query(f"{at_bound} {at_bound}") == [porter_stem(at_bound)] * 2
+    info = analysis._stem_memo.cache_info()
+    assert (info.hits, info.misses, info.currsize) == (1, 1, 1)
+
+
+def test_analyze_udf_rows_equal_memo_free_chain(spark):
+    """The ``stem`` key's UDF returns the memo-free chain's rows."""
+    from tesserae_ng_spark.functions.analysis import analyze_udf
+
+    texts = [
+        ("Running runs RUNNING connections", "en"),
+        ("Running runs", "es"),
+        ("x" * 20_000 + " ponies", "en"),
+        ("", "en"),
+        (None, "en"),
+    ]
+    df = spark.createDataFrame(texts, "text string, lang string")
+    got = [
+        [(r["term"], r["pos"]) for r in row["toks"]]
+        for row in df.select(analyze_udf("text", "lang").alias("toks")).collect()
+    ]
+    assert got == [_memo_free(t, lg) for t, lg in texts]
+
+
+# ---------------------------------------------------------------------------
 # HTML extractor — spec cases + generator round-trip property
 # ---------------------------------------------------------------------------
 def test_extract_basic():

@@ -348,6 +348,33 @@ def test_dictionary_pushdown_fallback_matches_pinned(index_dir):
     ]
 
 
+def test_pinned_lookup_rows_equal_unpinned_with_types(index_dir):
+    """The pinned dictionary builds a term's row only on lookup; every row
+    equals the unpinned reader's (the Parquet row as ``to_pylist`` gives
+    it), key order and Python value types included."""
+    import pyarrow.dataset as pds
+
+    from tesserae_ng_spark.query.reader import IndexReader
+
+    pinned = IndexReader(index_dir)
+    fallback = IndexReader(index_dir, dict_pin_max_terms=0)
+    every = pds.dataset(os.path.join(index_dir, "dictionary")).to_table()
+    terms = every.column("term").to_pylist()
+    assert len(pinned._dict_cache) == len(terms)
+    ask = terms[::3] + ["totallyabsentterm"]
+    got, want = pinned.lookup(ask), fallback.lookup(ask)
+    assert list(got) == list(want) == sorted(set(terms[::3]))
+    for t, row in want.items():
+        assert list(got[t].items()) == list(row.items())
+        assert [type(v) for v in got[t].values()] == [
+            type(v) for v in row.values()
+        ]
+    assert [type(v) for v in row.values()] == [str, int, int, float, int, int]
+    assert {r["term"]: r for r in every.to_pylist()} == dict(
+        pinned._dict_cache.items()
+    )
+
+
 def test_resume_skips_done_partitions(spark, corpus, tmp_path):
     out = str(tmp_path / "idx")
     # first attempt dies after partition 0

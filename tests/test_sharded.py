@@ -10,6 +10,7 @@ over the union of the shards.
 
 import uuid
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -311,3 +312,90 @@ def test_one_job_one_stage_per_batch(spark, indexes):
     assert sharded and sorted(map(tuple, sharded)) == sorted(
         map(tuple, union)
     )
+
+
+def _hundred_queries():
+    texts = [
+        "sort merge join", "hash", "scan scan join", "table hash",
+        "window", "zzmissing join", "running quickly", "the fast key",
+    ]
+    modes = ["bm25", "bm25", "bm25", "phrase", "proximity"]
+    return [
+        dict(query_id=i, query_text=texts[i % len(texts)],
+             mode=modes[i % len(modes)], k=(1, 10, 100)[i % 3])
+        for i in range(100)
+    ]
+
+
+@pytest.mark.parametrize("layout", ["union", "sharded"])
+def test_driver_analyzes_each_query_once(spark, indexes, monkeypatch, layout):
+    """A batch analyzes each query once on the driver: phase 1, the
+    slicing and the tasks all use those terms (the executor analyzed each
+    query twice on the driver before: once for phase 1, once to slice)."""
+    from tesserae_ng_spark.query import search as search_mod
+    from tesserae_ng_spark.query import sharded as sharded_mod
+
+    shard_dirs, union_dir = indexes
+    calls = []
+    slices = []
+
+    def counted(module):
+        real = module.analyze_query
+
+        def analyze_query(text, lang="en"):
+            calls.append(text)
+            return real(text, lang)
+
+        monkeypatch.setattr(module, "analyze_query", analyze_query)
+
+    counted(search_mod)
+    counted(sharded_mod)
+    real_slices = search_mod.affinity_slices
+
+    def affinity_slices(*args, **kwargs):
+        out = real_slices(*args, **kwargs)
+        slices.append(len(out))
+        return out
+
+    monkeypatch.setattr(search_mod, "affinity_slices", affinity_slices)
+    queries = _hundred_queries()
+    if layout == "union":
+        got = search_batch(spark, union_dir, queries, k=10).collect()
+    else:
+        got = search_sharded(spark, shard_dirs, queries, k=10).collect()
+    assert slices and slices[0] > 1
+    assert len(calls) == len(queries)
+    assert got
+
+
+def test_terms_entry_point_equals_search(indexes):
+    """``Searcher._search_terms`` from analyzed terms returns what
+    ``search`` does from the text, for every mode, under the shard's own
+    stats and under global stats."""
+    from tesserae_ng_spark.functions.analysis import analyze_query
+
+    shard_dirs, union_dir = indexes
+    cases = [
+        ("sort merge join", "bm25"), ("hash", "bm25"), ("zzmissing", "bm25"),
+        ("hash join", "phrase"), ("sort merge", "phrase"),
+        ("join zzmissing", "phrase"), ("hash join", "proximity"),
+        ("sort merge join", "proximity"), ("", "bm25"),
+    ]
+    gs = global_shard_stats(
+        shard_dirs,
+        sorted({t for text, _ in cases for t in analyze_query(text)}),
+    )
+    for d, stats in [(union_dir, None), (shard_dirs[0], None),
+                     (shard_dirs[1], gs)]:
+        s = Searcher(d)
+        for text, mode in cases:
+            for k in (0, 1, 10):
+                want = s.search(text, k=k, mode=mode, window=8,
+                                global_stats=stats)
+                docs, scores = s._search_terms(
+                    analyze_query(text), k, mode, 8, stats
+                )
+                assert docs.dtype == np.int64 and scores.dtype == np.float64
+                assert list(zip(docs.tolist(), scores.tolist())) == [
+                    (h.doc_id, h.score) for h in want
+                ], (d, text, mode, k)
