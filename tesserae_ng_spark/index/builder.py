@@ -3,7 +3,7 @@
 Layout under an index dir:
     shards/postings/part=i/   stage-A block rows (tf/dl, unscored)
     shards/docs/part=i/       (doc_id, url, lang, dl) per part
-    manifests/part-i.json     per-part lineage (status/metrics/checksum)
+    manifests/part-i.json     per-part lineage + metrics (read from its files)
     postings/bucket=b/        final scored blocks (partitioned by term bucket)
     dictionary/               term → df/cf/max_score/n_blocks/bucket
     stats.json                corpus stats + build metrics + postings_format
@@ -65,6 +65,7 @@ from tesserae_ng_spark.index.build import (
 from tesserae_ng_spark.index.encode import SHARD_BLOCK_SCHEMA, encode_blocks_local
 from tesserae_ng_spark.index.manifest import (
     all_manifests,
+    part_metrics,
     partition_done,
     sorted_doc_ids,
     write_manifest,
@@ -132,7 +133,9 @@ def _move_partition(staging_root: str, key: int, dst: str) -> bool:
 def _write_empty(schema, dst: str) -> None:
     """Empty-key edge (tiny corpora): a 0-row parquet dir with the given
     Spark schema, via pyarrow — a zero-row Spark write can emit no data
-    files at all, which breaks schema inference on read-back."""
+    files at all. Spark reads shards with explicit schemas (the merge
+    uses ``SHARD_BLOCK_SCHEMA``); the one empty file keeps the dir a
+    readable pyarrow dataset for ``part_metrics`` and ``sorted_doc_ids``."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -152,7 +155,6 @@ def _finalize_empty(out_dir: str) -> None:
 
 
 def _stage_a(
-    spark: SparkSession,
     corpus: DataFrame,
     dests: dict[int, tuple[str, int]],
     fingerprints: dict[int, str],
@@ -171,7 +173,8 @@ def _stage_a(
     (when ``resume``); the corpus is filtered to the remaining keys
     BEFORE the analyzer runs, so done keys cost no UDF time. Each built
     key's dirs are moved into place and its manifest committed in key
-    order; a key with no rows gets schema-only dirs. Returns
+    order, with metrics read from the moved files (``part_metrics``); a
+    key with no rows gets schema-only dirs. Returns
     ``(built, skipped)`` key lists."""
     t0 = time.time()
     n_keys = len(dests)
@@ -200,8 +203,8 @@ def _stage_a(
             # cluster by key before the partitionBy write (small files
             # hurt twice): without it every one of the
             # 2×cores analysis tasks writes a file into EVERY key dir,
-            # and the metric read-back + per-index merge scans each
-            # re-pay the file-open cost. The extra exchange moves compact
+            # and the part metrics and the merge scan each re-pay the
+            # file-open cost. The extra exchange moves compact
             # rows (docs) / compressed blocks, not html.
             docs = docs_table(prepared).withColumn("key", key_of)
             td = term_doc_table(prepared).withColumn("key", key_of)
@@ -211,17 +214,17 @@ def _stage_a(
             # sort + fragment encode — the merges re-block
             # deterministically
             blocks = encode_blocks_local(td, block_size=block_size)
-            # schemas captured from the DataFrames (not read-back): an
+            # schemas captured from the DataFrames, not the files: an
             # ALL-empty corpus writes no data files at all
             docs_schema = docs_table(prepared).schema
             posts_schema = blocks.drop("key").schema
 
-            # the three actions share the persisted `prepared` and are
-            # independent — submit them concurrently: the
-            # cache's per-block locks make whichever job arrives first
-            # materialize each partition while the others wait, so the
-            # analyzer chain runs exactly once and the small jobs
-            # back-fill the big one's straggler tail.
+            # the two writes share the persisted `prepared` and are
+            # independent — submit them concurrently: the cache's
+            # per-block locks make whichever job arrives first
+            # materialize each partition while the other waits, so the
+            # analyzer chain runs exactly once and the smaller job
+            # back-fills the bigger one's straggler tail.
             def _write(df, table):
                 (
                     df.repartition(n_keys, "key")
@@ -230,68 +233,24 @@ def _stage_a(
                     .parquet(f"{staging}/{table}")
                 )
 
-            def _doc_metrics():
-                # from the persisted per-doc vectors — no staging
-                # read-back
-                return {
-                    r["key"]: r
-                    for r in docs.groupBy("key")
-                    .agg(
-                        F.count(F.lit(1)).alias("n_docs"),
-                        F.sum("dl").alias("tokens"),
-                    )
-                    .collect()
-                }
-
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                f_docs = pool.submit(_write, docs, "docs")
-                f_blocks = pool.submit(_write, blocks, "postings")
-                f_dmet = pool.submit(_doc_metrics)
-                f_docs.result()
-                f_blocks.result()
-                dmet = f_dmet.result()
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                list(pool.map(_write, (docs, blocks), ("docs", "postings")))
         finally:
             prepared.unpersist()
 
-        # per-key block metrics from one grouped pass over the staging
-        # postings. A partitionBy write of 0 rows emits no key dirs —
-        # guard the read-back so the all-empty corpus degrades to empty
-        # metrics instead of an AnalysisException.
-        posts_root = f"{staging}/postings"
-        bmet = (
-            {
-                r["key"]: r
-                for r in spark.read.parquet(posts_root)
-                .groupBy("key")
-                .agg(
-                    F.count(F.lit(1)).alias("blocks"),
-                    F.approx_count_distinct("term").alias("terms"),
-                    F.sum(F.crc32(F.col("doc_ids"))).alias("crc"),
-                )
-                .collect()
-            }
-            if os.path.isdir(posts_root)
-            and any(e.startswith("key=") for e in os.listdir(posts_root))
-            else {}
-        )
         for k in built:
             out_dir, part = dests[k]
             for table, schema in (("docs", docs_schema), ("postings", posts_schema)):
                 dst = f"{out_dir}/shards/{table}/part={part}"
                 if not _move_partition(f"{staging}/{table}", k, dst):
                     _write_empty(schema, dst)
-            d, b = dmet.get(k), bmet.get(k)
             write_manifest(
                 out_dir,
                 part,
                 {
                     "status": "done",
                     "input_fingerprint": fingerprints[k],
-                    "row_count": int(d["n_docs"]) if d else 0,
-                    "total_tokens": int(d["tokens"] or 0) if d else 0,
-                    "term_count": int(b["terms"]) if b else 0,
-                    "block_count": int(b["blocks"]) if b else 0,
-                    "checksum": str(b["crc"]) if b else "0",
+                    **part_metrics(out_dir, part),
                     "wall_ms": int((time.time() - t0) * 1000),
                     "fused": n_keys,
                 },
@@ -332,7 +291,7 @@ def build_index(
         for part in range(n_parts)
     }
     built, skipped = _stage_a(
-        spark, corpus, {part: (out_dir, part) for part in expected},
+        corpus, {part: (out_dir, part) for part in expected},
         expected, lang, use_stored_text, with_positions, block_size,
         resume=resume, fail_after_part=fail_after_part,
     )

@@ -11,7 +11,8 @@ Analog: Lucene's commit points / segments_N file — a segment exists only
 once the commit metadata names it.
 
 Also here: the index's doc list (``sorted_doc_ids``), the ordinal space
-of the final postings, read by both the merge and the reader.
+of the final postings, read by both the merge and the reader, and a
+part's metrics (``part_metrics``), read from the files it just wrote.
 """
 
 from __future__ import annotations
@@ -81,3 +82,29 @@ def sorted_doc_ids(index_dir: str) -> np.ndarray:
         .column("doc_id").to_numpy()
         for f in files
     ] or [np.empty(0, dtype=np.int64)]))
+
+
+def part_metrics(index_dir: str, part: int) -> dict:
+    """A stage-A part's manifest metrics, read with pyarrow from its own
+    ``shards/docs/part=i`` and ``shards/postings/part=i`` files:
+    ``row_count`` and ``block_count`` from the footers, ``total_tokens``
+    = the sum of the docs ``dl`` column, ``term_count`` = the exact
+    number of distinct postings terms. A part written empty gives zeros.
+    Cost at scale: the driver reads one ``dl`` per doc and one ``term``
+    per stage-A block of the part, as ``sorted_doc_ids`` already reads
+    every doc id on the driver for the merge."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    docs, posts = (
+        ds.dataset(os.path.join(index_dir, "shards", table, f"part={part}"))
+        for table in ("docs", "postings")
+    )
+    dl = docs.to_table(columns=["dl"])["dl"]
+    terms = posts.to_table(columns=["term"])["term"]
+    return {
+        "row_count": docs.count_rows(),
+        "total_tokens": pc.sum(dl).as_py() or 0,
+        "block_count": posts.count_rows(),
+        "term_count": pc.count_distinct(terms).as_py(),
+    }

@@ -78,7 +78,7 @@ def build_sharded_indexes(
         for i in range(n_shards)
     }
     built, _ = _stage_a(
-        spark, corpus, {i: (sd, 0) for i, sd in enumerate(out_dirs)}, fps,
+        corpus, {i: (sd, 0) for i, sd in enumerate(out_dirs)}, fps,
         lang, use_stored_text, with_positions, block_size, resume=resume,
     )
     t_parts = time.time() - t_start

@@ -112,19 +112,6 @@ CORPUS_STATS_SCHEMA = T.StructType(
     ]
 )
 
-# Per-partition lineage manifest row (checkpoint-resume; SURVEY.md §2.11).
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),  # done | failed
-        T.StructField("row_count", T.LongType(), False),
-        T.StructField("term_count", T.LongType(), False),
-        T.StructField("checksum", T.StringType(), False),
-        T.StructField("input_fingerprint", T.StringType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-    ]
-)
-
 # Query fixtures (FIXTURES.md §2)
 QUERIES_SCHEMA = T.StructType(
     [

@@ -56,14 +56,13 @@ def get_spark(
     # importers every task re-read (a warm no-op 4-task job: 0.3-0.6 s
     # with them, 0.15-0.22 s without; 4-core host).
     # Local mode only; cluster deployments keep the stock daemon unless
-    # they ship the package and opt in themselves. TNG_FAST_DAEMON=0
-    # disables. The package's parent reaches the daemon (so `python -m
-    # tesserae_ng_spark.daemon` resolves) through spark.executorEnv, which
-    # Spark merges into its python workers' PYTHONPATH — this process's
-    # own environment stays untouched.
-    if master.startswith("local") and os.environ.get(
-        "TNG_FAST_DAEMON", "1"
-    ).strip().lower() not in ("0", "false", "no", "off"):
+    # they ship the package and opt in themselves. extra_conf is applied
+    # last, so {"spark.python.daemon.module": "pyspark.daemon"} selects
+    # the stock daemon. The package's parent reaches the daemon (so
+    # `python -m tesserae_ng_spark.daemon` resolves) through
+    # spark.executorEnv, which Spark merges into its python workers'
+    # PYTHONPATH — this process's own environment stays untouched.
+    if master.startswith("local"):
         pkg_parent = os.path.dirname(
             os.path.dirname(os.path.abspath(__file__))
         )

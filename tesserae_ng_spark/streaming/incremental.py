@@ -41,7 +41,7 @@ def _process_batch(batch_df: DataFrame, batch_id: int, out_dir: str,
     # a replayed batch (checkpoint recovery) finds its manifest done and
     # is skipped → idempotent
     _stage_a(
-        batch_df.sparkSession, batch_df,
+        batch_df,
         {0: (out_dir, STREAM_PART_BASE + int(batch_id))},
         {0: f"stream-batch={batch_id}"},
         lang=lang, use_stored_text=False, with_positions=True,

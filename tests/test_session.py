@@ -194,14 +194,13 @@ def test_warm_jvm_failure_is_named_on_stderr(monkeypatch, capsys):
         session._warm_jvm(Stub(ZeroDivisionError("not spark's")))
 
 
-# deployment settings (session, daemon): the only environment the
+# deployment settings (session): the only environment the
 # package may read. Engine behaviour is set by arguments.
 ENV_ALLOWLIST = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_MASTER",
     "SPARK_DRIVER_MEM",
     "SPARK_GRAFT_LOCAL_DIR",
-    "TNG_FAST_DAEMON",
 }
 
 

@@ -12,6 +12,7 @@ union index.
 import json
 import os
 
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -48,6 +49,28 @@ def independent(spark, corpus, tmp_path_factory):
     return dirs
 
 
+def _assert_manifests_count_their_files(dirs):
+    """Every stage-A manifest's metrics equal pyarrow counts over its
+    part's own files, terms counted exactly; none carries a checksum."""
+    for d in dirs:
+        parts = [m for m in all_manifests(d) if m.get("stage") != "merge"]
+        assert parts, d
+        for m in parts:
+            p = m["partition_id"]
+            dl = pq.read_table(f"{d}/shards/docs/part={p}", columns=["dl"])["dl"]
+            terms = pq.read_table(
+                f"{d}/shards/postings/part={p}", columns=["term"]
+            )["term"]
+            assert "checksum" not in m, m
+            assert (
+                m["row_count"], m["total_tokens"],
+                m["block_count"], m["term_count"],
+            ) == (
+                len(dl), pc.sum(dl).as_py() or 0,
+                len(terms), len(set(terms.to_pylist())),
+            ), (d, p)
+
+
 def _rows(spark, path, cols, order):
     df = spark.read.parquet(path).select(*cols).orderBy(*order)
     return [tuple(r) for r in df.collect()]
@@ -71,6 +94,11 @@ def test_fused_postings_identical_to_independent(spark, fused, independent):
         )
         with open(f"{fd}/stats.json") as f1, open(f"{idp}/stats.json") as f2:
             assert json.load(f1) == json.load(f2)
+
+
+def test_fused_manifests_count_their_files(fused):
+    fdirs, _ = fused
+    _assert_manifests_count_their_files(fdirs)
 
 
 def test_fused_search_identical_per_shard(fused, independent):
@@ -161,6 +189,7 @@ def _build_layout(entry, spark, corpus, base, n):
         if m.get("stage") != "merge"
     ]
     assert len(rows) == n
+    _assert_manifests_count_their_files(dirs)
     return dirs, rows
 
 
@@ -266,3 +295,17 @@ def test_fused_build_job_count(spark, corpus, tmp_path_factory):
         spark, corpus, [str(base / f"s{i}") for i in range(N_SHARDS)], **KW
     ))
     assert 0 < union and sharded <= union + 2, (union, sharded)
+
+
+# Spark jobs of a 3-part union build of the tests' corpus, as measured
+UNION_BUILD_JOBS = 14
+
+
+def test_union_build_job_count(spark, corpus, tmp_path_factory):
+    # stage A is its two writes: no metrics job, no read-back of the
+    # staging output
+    out = str(tmp_path_factory.mktemp("unionjobs") / "union")
+    before = _marker_job_id(spark, "unionpin-before")
+    build_index(spark, corpus, out, n_parts=N_SHARDS, **KW)
+    jobs = _marker_job_id(spark, "unionpin-after") - before - 1
+    assert 0 < jobs <= UNION_BUILD_JOBS, jobs
